@@ -99,18 +99,14 @@ object ChunkStore {
     // storage pressure at 100 TB — the wrong side of §5.) REBALANCE
     // sizes output files by bytes instead of landing one file per scan
     // task (§6).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      Future(c.groupBy("h", "len", "x")
+    graft.Par.all(Seq(
+      () => c.groupBy("h", "len", "x")
         .agg(first(col("chunk_text")).as("chunk_text"))
         .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$dir/chunks")),
-      Future(c.select("doc_id", "idx", "h", "len", "x")
+        .write.mode("overwrite").parquet(s"$dir/chunks"),
+      () => c.select("doc_id", "idx", "h", "len", "x")
         .hint("rebalance")
         .write.mode("overwrite").parquet(s"$dir/manifest")))
-    writes.foreach(Await.result(_, Duration.Inf))
     st.publishBootstrap(s) // the commit point: [[bootstrapped]] flips here
   }
 

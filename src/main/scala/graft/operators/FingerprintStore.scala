@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.BatchStore
+import graft.operators.TrainPrep.{pinTracked, unpinTracked}
 
 /** Persisted, incrementally-maintained catalog of media FINGERPRINTS —
   * the [[graft.io.BatchStore]] commit discipline applied to the
@@ -158,8 +159,7 @@ object FingerprintStore {
     // ONE media scan decodes every kind; the pinned rows are digests
     // (≤ 3 longs/row, never pixels), consumed by the three catalog
     // writes AND the ledger join (the hammingNearDupPairs rationale)
-    val (all, allIds) = pinTracked(s,
-      fusedDigests(s, media, audioBits))
+    val (all, allIds) = pinTracked(fusedDigests(s, media, audioBits))
     try {
       val (imgP, audP, vidP) = splitDigests(all)
       // REBALANCE before every catalog write (guide §6): the pinned
@@ -177,44 +177,19 @@ object FingerprintStore {
       // the four catalog writes are INDEPENDENT jobs over the same
       // pinned digest frame — submit them concurrently so the write
       // commits overlap instead of serializing four small jobs (guide
-      // §2.6; measured ~1 s per write job at bench SF). Concurrent
-      // actions on one SparkSession are supported; failures propagate
-      // through Await.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(
-          java.util.concurrent.Executors.newFixedThreadPool(4))
-      val writes = Seq(
-        Future(land(imgP, "image")), Future(land(audP, "audio")),
-        Future(land(vidP, "video")),
-        Future(land(ledgerOf(ids, imgP, audP, vidP), "ledger")))
-      try writes.foreach(Await.result(_, Duration.Inf))
-      finally ec.asInstanceOf[
-        scala.concurrent.ExecutionContextExecutorService].shutdown()
+      // §2.6; measured ~1 s per write job at bench SF). Par.all drains
+      // every write before a failure propagates, so the unpin below
+      // never pulls blocks from under a still-running write.
+      graft.Par.all(Seq(
+        () => land(imgP, "image"), () => land(audP, "audio"),
+        () => land(vidP, "video"),
+        () => land(ledgerOf(ids, imgP, audP, vidP), "ledger")))
     } finally unpinTracked(s, allIds) // catalogs landed; drop the pin —
     // a repeated in-process bootstrap (the bench re-runs q_mm10 per
     // pass) must not accumulate digest blocks in executor storage
     st.publishBootstrap(s)
     fsOf(s, dir).create(new org.apache.hadoop.fs.Path(
       s"$dir/_audiobits-$audioBits"), true).close()
-  }
-
-  /** localCheckpoint + the persistent-RDD registry diff that identifies
-    * its blocks, so a bounded-lifetime pin can be dropped when its
-    * consumers are done (the connectedComponents hygiene pattern —
-    * `Dataset.unpersist` can't reach a LogicalRDD's blocks).
-    */
-  private def pinTracked(s: SparkSession,
-      df: DataFrame): (DataFrame, Set[Int]) = {
-    val before = s.sparkContext.getPersistentRDDs.keySet.toSet
-    val out = df.localCheckpoint()
-    (out, s.sparkContext.getPersistentRDDs.keySet.toSet -- before)
-  }
-
-  private def unpinTracked(s: SparkSession, ids: Set[Int]): Unit = {
-    val live = s.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
   }
 
   /** The ledger frame for a batch given its PINNED catalogs. A doc_id
@@ -278,7 +253,7 @@ object FingerprintStore {
           media.join(broadcast(newIds), Seq("doc_id"), "left_semi")
         else media.join(newIds, Seq("doc_id"), "left_semi")
       // one batch scan decodes every kind (the bootstrap discipline)
-      val (all, allIds) = pinTracked(s, fusedDigests(s, fresh, audioBits))
+      val (all, allIds) = pinTracked(fusedDigests(s, fresh, audioBits))
       try {
         val (imgP, audP, vidP) = splitDigests(all)
         st.landBatchFiles(s, imgP, "image", tag)

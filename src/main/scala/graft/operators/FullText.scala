@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Par, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -184,17 +184,13 @@ object FullText {
     // concurrently so the dense pass back-fills executors the sparse
     // pass's tail leaves idle (guide §2.6), instead of serializing two
     // full pipelines; each collect is ≤ k rows
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val sparseF = Future(
-      bm25(Tables.documents(s, d), Seq("data", "join", "filter"))
-        .select("doc_id").collect().map(_.getLong(0)))
-    val denseF = Future(
-      Similarity.qL02(s, d).select("vec_id").collect().map(_.getLong(0)))
-    val sparse = Await.result(sparseF, Duration.Inf).zipWithIndex
+    val Seq(sparseIds, denseIds) = Par.all(Seq(
+      () => bm25(Tables.documents(s, d), Seq("data", "join", "filter"))
+        .select("doc_id").collect().map(_.getLong(0)),
+      () => Similarity.qL02(s, d).select("vec_id").collect().map(_.getLong(0))))
+    val sparse = sparseIds.zipWithIndex
       .map { case (id, i) => (id, i + 1L) }.toSeq.toDF("doc_id", "r_sparse")
-    val dense = Await.result(denseF, Duration.Inf).zipWithIndex
+    val dense = denseIds.zipWithIndex
       .map { case (id, i) => (id, i + 1L) }.toSeq.toDF("doc_id", "r_dense")
     rrfFuse(sparse, dense)
   }

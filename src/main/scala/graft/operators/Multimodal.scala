@@ -793,7 +793,9 @@ object Multimodal {
     * byte — and candidate fan-out is bounded per band-key bucket, the
     * qL05/qL06 scale posture. Exact Hamming verify (bit_count of xor)
     * filters candidates; output is (doc_a, doc_b, hamming), doc_a <
-    * doc_b, distinct.
+    * doc_b. Precondition: `hashes` holds ONE row per doc_id — each pair
+    * is emitted once only under it (duplicate doc_id rows emit duplicate
+    * pairs; nothing deduplicates the output).
     */
   def hammingNearDupPairs(hashes: DataFrame, hashCol: String,
       hashBits: Int, maxHamming: Int, pinCatalog: Boolean = true,

@@ -62,22 +62,6 @@ object TrainPrep {
       reliable: Boolean = false, hopsPerRound: Int = 1): DataFrame = {
     require(hopsPerRound >= 1, s"hopsPerRound $hopsPerRound")
     val spark = edges.sparkSession
-    // snapshot-diff of the public persistent-RDD registry identifies the
-    // blocks a checkpoint just pinned, so they can be dropped precisely
-    // when superseded (Dataset.unpersist can't reach them: the returned
-    // frame's plan is a LogicalRDD, not a CacheManager entry). Caveat:
-    // the diff assumes no OTHER thread persists RDDs during the (eager,
-    // blocking) checkpoint call — run concurrent persisting work outside
-    // this loop or its blocks could be mis-attributed and dropped
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val out = if (reliable) df.checkpoint() else df.localCheckpoint()
-      (out, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def unpersistTracked(ids: Set[Int]): Unit = {
-      val live = spark.sparkContext.getPersistentRDDs
-      ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-    }
     // no distinct(): duplicate edges change message volume, never the
     // min-aggregate's result — and the input (verified pair sets) is
     // already deduplicated, so the extra shuffle would buy nothing.
@@ -87,19 +71,19 @@ object TrainPrep {
     // pipeline (three banded near-dup joins, in the mixed-media case)
     // twice — exchange reuse shares the joins' exchanges across the
     // branches but the final pair aggregates still re-run (r20, §2.4).
-    val (bidir, bidirIds) = checkpointTracked(
+    val (bidir, bidirIds) = pinTracked(
       edges.select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")))
+        .select(col("e.src").as("src"), col("e.dst").as("dst")), reliable)
     // fused first round: instead of identity labels (which make round 1's
     // join a pure relabeling), every vertex STARTS at min(own id, min
     // neighbor id) — one aggregate over bidir, no join, and the loop
     // below begins where the identity-init version's round 1 ended
     // (one fewer join round + checkpoint + convergence probe; r20, §2.4)
-    var (labels, labelIds) = checkpointTracked(
+    var (labels, labelIds) = pinTracked(
       bidir.groupBy(col("src").as("id"))
-        .agg(min(least(col("src"), col("dst"))).as("comp")))
+        .agg(min(least(col("src"), col("dst"))).as("comp")), reliable)
     // convergence via the label-sum invariant: min-propagation can only
     // DECREASE labels, so an unchanged sum(comp) is exactly a fixpoint —
     // one cheap scalar aggregate per round instead of a change-detection
@@ -111,14 +95,7 @@ object TrainPrep {
     def labelSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head()
         .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    def dbgT[A](name: String)(f: => A): A =
-      if (!dbg) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[cc] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-    var prevSum = dbgT("init labelSum")(labelSum(labels))
+    var prevSum = labelSum(labels)
     var iter = 0
     var converged = false
     try {
@@ -134,12 +111,11 @@ object TrainPrep {
         }
         // localCheckpoint is eager: `next`'s blocks exist once this
         // returns, so the previous round's snapshot is safe to drop
-        val (next, nextIds) = dbgT(s"round $iter checkpoint")(checkpointTracked(
-          cur))
-        val nextSum = dbgT(s"round $iter labelSum")(labelSum(next))
+        val (next, nextIds) = pinTracked(cur, reliable)
+        val nextSum = labelSum(next)
         converged = nextSum.compareTo(prevSum) == 0
         prevSum = nextSum
-        unpersistTracked(labelIds)
+        unpinTracked(spark, labelIds)
         labels = next
         labelIds = nextIds
         iter += 1
@@ -148,13 +124,32 @@ object TrainPrep {
     } catch { case t: Throwable =>
       // a failed round (or non-convergence) must not strand corpus-scale
       // edge/label blocks in executor storage for the session lifetime
-      unpersistTracked(labelIds ++ bidirIds)
+      unpinTracked(spark, labelIds ++ bidirIds)
       throw t
     }
     // the edge list is dead once the fixpoint is reached; only the final
     // labels stay pinned (the caller's frame reads them)
-    unpersistTracked(bidirIds)
+    unpinTracked(spark, bidirIds)
     labels
+  }
+
+  /** Checkpoint `df` (local unless `reliable`) plus the persistent-RDD
+    * registry diff that identifies its blocks, so [[unpinTracked]] can
+    * drop a bounded-lifetime pin (`Dataset.unpersist` can't reach a
+    * LogicalRDD's blocks). Caveat: no OTHER thread may persist RDDs
+    * during the eager checkpoint, or its blocks could be dropped too.
+    */
+  private[graft] def pinTracked(df: DataFrame,
+      reliable: Boolean = false): (DataFrame, Set[Int]) = {
+    val sc = df.sparkSession.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = if (reliable) df.checkpoint() else df.localCheckpoint()
+    (out, sc.getPersistentRDDs.keySet.toSet -- before)
+  }
+
+  private[graft] def unpinTracked(s: SparkSession, ids: Set[Int]): Unit = {
+    val live = s.sparkContext.getPersistentRDDs
+    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
   }
 
   /** Q-L19 — near-duplicate cluster resolution: the verified Jaccard

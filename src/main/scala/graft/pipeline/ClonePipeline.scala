@@ -1,13 +1,9 @@
 package graft.pipeline
 
-import graft.Tables
+import graft.{Par, Tables}
 import graft.ddl.DdlRenderer
 import graft.io.Writers
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-
-import java.util.concurrent.Executors
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
 
 /** Clone orchestration — the reference's `CloneDatabase`
   * (/root/reference/Program.cs:56-112) re-architected for Spark.
@@ -16,9 +12,11 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * materializing each table in driver memory. Here:
   *   - DDL is rendered from schema metadata (pure, driver-side, tiny);
   *   - data movement is N independent distributed jobs, submitted
-  *     concurrently (the per-table loop at Program.cs:76-79 is
-  *     embarrassingly parallel — each table is its own Spark job, and the
-  *     scheduler interleaves their tasks across the cluster);
+  *     concurrently through [[graft.Par.all]] (the per-table loop at
+  *     Program.cs:76-79 is embarrassingly parallel — each table is its
+  *     own Spark job, and the scheduler interleaves their tasks across
+  *     the cluster). A failed table surfaces only after every other
+  *     table's job has finished, so no write outlives the call;
   *   - load-then-constrain ordering is preserved: constraint/index scripts
   *     are returned for application *after* the data phase, matching
   *     Program.cs:74-110.
@@ -122,55 +120,47 @@ object ClonePipeline {
         "pick another column")
   }
 
-  /** Clone every table from srcDir to tgtDir, tables in parallel
-    * (excludeSchemas mirrors the reference's dead schema filter,
-    * Program.cs:155-157, as a real config).
+  /** Clone every table from srcDir to tgtDir, tables concurrently
+    * ([[graft.Par.all]]; excludeSchemas mirrors the reference's dead
+    * schema filter, Program.cs:155-157, as a real config).
     */
   def clone(spark: SparkSession, srcDir: String, tgtDir: String,
       tables: Seq[String] = Tables.names,
       excludeTables: Set[String] = Set.empty,
-      parallelism: Int = 4,
       layouts: Map[String, TableLayout] = Map.empty): CloneReport = {
     val work = tables.filterNot(excludeTables)
-    val pool = Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = work.map { t =>
-        Future {
-          val df = Tables.table(spark, srcDir, t)
-          val path = s"$tgtDir/$t.parquet"
-          // empty-table short circuit (Program.cs:612-616) is a no-op for
-          // parquet writes, so we just write; count is read from the
-          // written files' footers (no second scan of the source). The
-          // whole per-table layout decision lives in this ONE match: the
-          // clustered write AND the footer-only manifest (persisted NEXT
-          // TO the table, registered so this session's ManifestPruneRule
-          // prunes immediately) come from the same TableLayout.
-          val manifestDir = layouts.get(t) match {
-            case None =>
-              Writers.parquet(df, path)
-              None
-            case Some(l) =>
-              if (l.zOrder) Writers.zOrderedN(df, path, l.clusterCols, l.numFiles)
-              else Writers.rangeClustered(df, path, l.clusterCols, l.numFiles)
-              val mDir = s"$tgtDir/$t.manifest"
-              val statCols =
-                if (l.statCols.nonEmpty) l.statCols
-                else l.clusterCols.filterNot(l.stringStatCols.contains)
-              val m = graft.io.StatsManifest.build(spark, path, statCols,
-                l.stringStatCols, l.bandWidth)
-              m.write.mode(SaveMode.Overwrite).parquet(mDir)
-              graft.plans.ManifestRegistry.register(spark, path, m)
-              Some(mDir)
-          }
-          (t, spark.read.parquet(path).count(), manifestDir)
-        }
+    val done = Par.all(work.map { t => () =>
+      val df = Tables.table(spark, srcDir, t)
+      val path = s"$tgtDir/$t.parquet"
+      // empty-table short circuit (Program.cs:612-616) is a no-op for
+      // parquet writes, so we just write; count is read from the
+      // written files' footers (no second scan of the source). The
+      // whole per-table layout decision lives in this ONE match: the
+      // clustered write AND the footer-only manifest (persisted NEXT
+      // TO the table, registered so this session's ManifestPruneRule
+      // prunes immediately) come from the same TableLayout.
+      val manifestDir = layouts.get(t) match {
+        case None =>
+          Writers.parquet(df, path)
+          None
+        case Some(l) =>
+          if (l.zOrder) Writers.zOrderedN(df, path, l.clusterCols, l.numFiles)
+          else Writers.rangeClustered(df, path, l.clusterCols, l.numFiles)
+          val mDir = s"$tgtDir/$t.manifest"
+          val statCols =
+            if (l.statCols.nonEmpty) l.statCols
+            else l.clusterCols.filterNot(l.stringStatCols.contains)
+          val m = graft.io.StatsManifest.build(spark, path, statCols,
+            l.stringStatCols, l.bandWidth)
+          m.write.mode(SaveMode.Overwrite).parquet(mDir)
+          graft.plans.ManifestRegistry.register(spark, path, m)
+          Some(mDir)
       }
-      val done = Await.result(Future.sequence(futures), Duration.Inf)
-      CloneReport(work, done.map(r => r._1 -> r._2).toMap,
-        renderDdl(spark, srcDir, work),
-        done.collect { case (t, _, Some(m)) => t -> m }.toMap)
-    } finally pool.shutdown()
+      (t, spark.read.parquet(path).count(), manifestDir)
+    })
+    CloneReport(work, done.map(r => r._1 -> r._2).toMap,
+      renderDdl(spark, srcDir, work),
+      done.collect { case (t, _, Some(m)) => t -> m }.toMap)
   }
 
   final case class SyncReport(sourceRows: Long, deltaRows: Long, targetRows: Long)

@@ -4,13 +4,17 @@ import graft.functions.{ContentChunks, CosineSim, LshBuckets, NGramGenerator, Po
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, ExpressionInfo, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.graft.PlanBridge
 
 /** Session wiring for graft's Catalyst extensions: custom expressions as
   * SQL functions, the [[GroupTopKStrategy]] planner strategy, and the
-  * [[SimilarityJoinRewrite]] optimizer rule.
+  * optimizer rules ([[SimilarityJoinRewrite]] and the rest).
   *
-  * Two registration paths, same components:
+  * Two registration paths, same components ([[Graft.plannerStrategies]],
+  * [[Graft.optimizerRules]]):
   *   - `SparkSession.builder().withExtensions(new GraftExtensions)` (or
   *     `spark.sql.extensions=graft.plans.GraftExtensions`) at build time;
   *   - [[Graft.ensureRegistered]] on a live session (Verify/Bench receive
@@ -23,16 +27,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.plans.Graft", name), builder))
     }
-    ext.injectPlannerStrategy(_ => GroupTopKStrategy)
-    ext.injectOptimizerRule(_ => SimilarityJoinRewrite)
-    // MetaCountRule must see the Aggregate-over-Filter shape BEFORE
-    // ManifestPruneRule swaps the scan's file index (a pruned index's
-    // roots no longer match the registry, so metacount could never fire
-    // after); rules run in injection order within the batch, and both
-    // are independently opt-in
-    ext.injectOptimizerRule(_ => MetaCountRule)
-    ext.injectOptimizerRule(_ => ManifestPruneRule)
-    ext.injectOptimizerRule(_ => RoundTripElisionRule)
+    Graft.plannerStrategies.foreach(st => ext.injectPlannerStrategy(_ => st))
+    Graft.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }
 
@@ -88,27 +84,29 @@ object Graft {
     },
   )
 
+  /** graft's planner strategies, as both registration paths inject them. */
+  val plannerStrategies: Seq[SparkStrategy] = Seq(GroupTopKStrategy)
+
+  /** graft's optimizer rules in injection order, which is the order they
+    * run in within the batch. MetaCountRule must see the
+    * Aggregate-over-Filter shape BEFORE ManifestPruneRule swaps the
+    * scan's file index (a pruned index's roots no longer match the
+    * registry, so metacount could never fire after); both are
+    * independently opt-in.
+    */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(SimilarityJoinRewrite,
+    MetaCountRule, ManifestPruneRule, RoundTripElisionRule)
+
   /** Post-hoc registration on a live session. Safe to call per query. */
   def ensureRegistered(spark: SparkSession): Unit = synchronized {
     sqlFunctions.foreach { case (name, builder) =>
       PlanBridge.registerFunction(spark, name, builder)
     }
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupTopKStrategy
-    if (!spark.experimental.extraOptimizations.contains(SimilarityJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SimilarityJoinRewrite
-    // metacount precedes prune — see GraftExtensions for why order matters
-    if (!spark.experimental.extraOptimizations.contains(MetaCountRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MetaCountRule
-    if (!spark.experimental.extraOptimizations.contains(ManifestPruneRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ManifestPruneRule
-    if (!spark.experimental.extraOptimizations.contains(RoundTripElisionRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RoundTripElisionRule
+    val x = spark.experimental
+    x.extraStrategies = x.extraStrategies ++
+      plannerStrategies.filterNot(x.extraStrategies.contains)
+    x.extraOptimizations = x.extraOptimizations ++
+      optimizerRules.filterNot(x.extraOptimizations.contains)
   }
 
   /** Load a PERSISTED stats manifest (e.g. one a clone-layout opt-in or

@@ -8,6 +8,23 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionSpec extends AnyFunSuite with SparkFixture {
 
+  test("both registration paths inject the same ordered component list, " +
+      "and ensureRegistered is idempotent") {
+    import org.apache.spark.sql.GraftSpecBridge
+    val (strategies, rules) =
+      GraftSpecBridge.injected(new GraftExtensions, spark)
+    val fresh = spark.newSession()
+    Graft.ensureRegistered(fresh)
+    val x = fresh.experimental
+    assert(x.extraStrategies == strategies)
+    assert(x.extraOptimizations == rules)
+    assert(rules == Seq(SimilarityJoinRewrite, MetaCountRule,
+      ManifestPruneRule, RoundTripElisionRule))
+    Graft.ensureRegistered(fresh)
+    assert(x.extraStrategies == strategies)
+    assert(x.extraOptimizations == rules)
+  }
+
   test("group_top_k matches the window row_number formulation exactly") {
     val o = Tables.orders(spark, sfDir)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
