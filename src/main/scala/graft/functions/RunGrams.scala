@@ -31,31 +31,36 @@ import org.apache.spark.unsafe.types.UTF8String
   * ONE gram — the whole token array space-joined. n = 1 folds over the
   * tokens themselves (the max-token-frequency signal). Sort order is
   * UTF8String binary order — exactly `array_sort`'s StringType ordering.
+  * Null elements are skipped: the grams are those of the non-null tokens.
   */
 private[functions] object RunGrams {
 
+  /** The non-null tokens of `arr`, in order. */
+  def tokensOf(arr: ArrayData): Array[UTF8String] = {
+    val out = Array.newBuilder[UTF8String]
+    var i = 0
+    while (i < arr.numElements()) {
+      if (!arr.isNullAt(i)) out += arr.getUTF8String(i)
+      i += 1
+    }
+    out.result()
+  }
+
   /** The sorted gram array for (tokens, n) — shared kernel. */
   def sortedGrams(arr: ArrayData, n: Int): Array[UTF8String] = {
-    val m = arr.numElements()
+    val toks = tokensOf(arr)
+    val m = toks.length
     val grams =
-      if (n <= 1) {
-        val out = new Array[UTF8String](m)
-        var i = 0
-        while (i < m) { out(i) = arr.getUTF8String(i); i += 1 }
-        out
-      } else if (m < n) {
+      if (n <= 1) toks
+      else if (m < n) {
         // short doc: one gram = all tokens space-joined (array_join)
-        val parts = new Array[UTF8String](m)
-        var i = 0
-        while (i < m) { parts(i) = arr.getUTF8String(i); i += 1 }
-        Array(UTF8String.concatWs(UTF8String.fromString(" "), parts: _*))
+        Array(UTF8String.concatWs(UTF8String.fromString(" "), toks: _*))
       } else {
         val out = new Array[UTF8String](m - n + 1)
         val window = new Array[UTF8String](n)
         var i = 0
         while (i < out.length) {
-          var j = 0
-          while (j < n) { window(j) = arr.getUTF8String(i + j); j += 1 }
+          System.arraycopy(toks, i, window, 0, n)
           out(i) = UTF8String.concatWs(UTF8String.fromString(" "), window: _*)
           i += 1
         }
@@ -197,7 +202,7 @@ case class CountIn(child: Expression, values: Seq[String])
     var cnt = 0
     var i = 0
     while (i < n) {
-      if (set.contains(arr.getUTF8String(i))) cnt += 1
+      if (!arr.isNullAt(i) && set.contains(arr.getUTF8String(i))) cnt += 1
       i += 1
     }
     cnt

@@ -2,7 +2,9 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 
 /** Sink writers (SURVEY §2.A A18-A20).
   *
@@ -161,8 +163,16 @@ object Writers {
   def zOrderedN(df: DataFrame, path: String, clusterCols: Seq[String],
       numFiles: Int = 32, bits: Int = 16,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val aggs = clusterCols.flatMap(c =>
-      Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
+    // an order-preserving long per key: days for DATE, microseconds (read
+    // in UTC) for TIMESTAMP and TIMESTAMP_NTZ; a plain cast nulls or
+    // rejects them
+    def asLong(c: String): Column = df.select(c).schema.head.dataType match {
+      case DateType => unix_date(col(c)).cast("long")
+      case TimestampType | TimestampNTZType => unix_micros(ColumnBridge.column(
+        Cast(ColumnBridge.expression(col(c)), TimestampType, Some("UTC"))))
+      case _ => col(c).cast("long")
+    }
+    val aggs = clusterCols.flatMap(c => Seq(min(asLong(c)), max(asLong(c))))
     val mm = df.agg(aggs.head, aggs.tail: _*).head()
     // empty input OR an all-null key column: no meaningful bounds to
     // normalize against — write unclustered rather than NPE on null stats
@@ -178,7 +188,7 @@ object Writers {
       else ((c.cast("double") - lit(lo.toDouble)) / lit((hi - lo).toDouble) *
         lit(((1L << bits) - 1).toDouble)).cast("long")
     val dims = clusterCols.zipWithIndex.map { case (c, i) =>
-      norm(col(c), mm.getLong(2 * i), mm.getLong(2 * i + 1))
+      norm(asLong(c), mm.getLong(2 * i), mm.getLong(2 * i + 1))
     }
     df.withColumn("_z", zValueN(dims, bits))
       .repartitionByRange(numFiles, col("_z"))

@@ -280,25 +280,22 @@ object FingerprintStore {
     * [[Multimodal.audioNearDupPairs]] / [[Multimodal.videoNearDupPairs]],
     * parity spec-pinned) with zero decode work: the joins read persisted
     * digests, so their cost is the banding/Jaccard exchange alone.
-    * pinCatalog = false throughout — the catalogs' lineage is a parquet
-    * scan, not a decode.
     */
   def imageNearDupPairs(s: SparkSession, dir: String,
       maxHamming: Int = 6, ordered: Boolean = true): DataFrame =
     Multimodal.hammingNearDupPairs(imageHashes(s, dir), "dhash", 64,
-      maxHamming, pinCatalog = false, ordered = ordered)
+      maxHamming, ordered = ordered)
 
   def audioNearDupPairs(s: SparkSession, dir: String,
       maxHamming: Int = 3, ordered: Boolean = true): DataFrame =
     Multimodal.hammingNearDupPairs(audioFingerprints(s, dir), "afp",
-      audioBitsOf(s, dir), maxHamming, pinCatalog = false,
-      ordered = ordered)
+      audioBitsOf(s, dir), maxHamming, ordered = ordered)
 
   def videoNearDupPairs(s: SparkSession, dir: String,
       minJaccard: Double = 0.8, maxVideosPerFrame: Int = 0,
       ordered: Boolean = true): DataFrame =
     Multimodal.videoJaccardPairs(videoPostings(s, dir), minJaccard,
-      maxVideosPerFrame, pinPostings = false, ordered = ordered)
+      maxVideosPerFrame, ordered = ordered)
 
   /** Fold the per-batch file sprawl — [[graft.io.BatchStore.compact]]. */
   def compact(s: SparkSession, dir: String): Unit = store(dir).compact(s)

@@ -181,29 +181,33 @@ object LLMOps {
     docs.select(col("doc_id"), explode(ShingleHash(col("text"), 3)).as("h"))
       .distinct()
 
-  /** MinHash band keys per doc (16 hashes, bands of 4) from the postings. */
-  def minhashBands(postings: DataFrame, numHashes: Int = 16, r: Int = 4): DataFrame = {
-    val minAggs = (0 until numHashes).map { k =>
+  /** MinHash band-key array per doc (16 hashes, bands of 4) from the
+    * postings: (doc_id, band_keys, n_sh), position b of band_keys holding
+    * band b's key — the [[Banded]] input shape — and n_sh the doc's
+    * posting count, free from the same aggregate.
+    */
+  def minhashBandArray(postings: DataFrame): DataFrame = {
+    val minAggs = (0 until 16).map { k =>
       min((lit(31L + 17L * k) * col("h") + lit(7L + 11L * k)) % P).as(s"m$k")
     }
-    val sig = postings.groupBy("doc_id").agg(minAggs.head, minAggs.tail: _*)
-    val bandCols = (0 until numHashes / r).map { b =>
-      concat_ws(":", (lit(b) +: (0 until r).map(j => col(s"m${b * r + j}")))
+    val sig = postings.groupBy("doc_id")
+      .agg(count(lit(1)).as("n_sh"), minAggs: _*)
+    val bandCols = (0 until 4).map { b =>
+      concat_ws(":", (lit(b) +: (0 until 4).map(j => col(s"m${b * 4 + j}")))
         .map(_.cast("string")): _*)
     }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("band_key"))
+    sig.select(col("doc_id"), array(bandCols: _*).as("band_keys"), col("n_sh"))
   }
 
-  /** LSH candidate pairs (doc_a < doc_b, distinct). */
-  def minhashCandidates(postings: DataFrame): DataFrame = {
-    val bands = minhashBands(postings)
-    val a = bands.select(col("band_key"), col("doc_id").as("doc_a"))
-    val b = bands.select(col("band_key"), col("doc_id").as("doc_b"))
-    a.join(b, Seq("band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
-  }
+  /** (doc_id, band_key) rows, the persisted [[MinhashSnapshot]] format. */
+  def minhashBands(postings: DataFrame): DataFrame =
+    minhashBandArray(postings)
+      .select(col("doc_id"), explode(col("band_keys")).as("band_key"))
+
+  /** LSH candidate pairs (doc_a < doc_b) via [[Banded.selfPairs]]. */
+  def minhashCandidates(postings: DataFrame): DataFrame =
+    Banded.selfPairs(minhashBandArray(postings), "doc_id", "band_keys")
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
 
   // ------------------------------------------- incremental (delta) dedup
 
@@ -232,13 +236,21 @@ object LLMOps {
     */
   def deltaDedupCandidates(s: SparkSession, newDocs: DataFrame,
       snapshotDir: String): DataFrame = {
-    // fresh is referenced twice below (union + join left side): without
-    // lineage truncation the batch would be shingled and minhashed TWICE
-    // per invocation — bands are ~64 B/doc, so the checkpoint is cheap
+    // fresh is referenced twice in deltaPairs: without lineage truncation
+    // the batch would be shingled and minhashed TWICE per invocation —
+    // bands are ~64 B/doc, so the checkpoint is cheap
     val fresh = minhashBands(shinglePostingsOf(newDocs)).localCheckpoint()
-    val snap = MinhashSnapshot.bands(s, snapshotDir)
-      .select("doc_id", "band_key")
-    val all = snap.unionByName(fresh)
+    deltaPairs(fresh, MinhashSnapshot.bands(s, snapshotDir))
+  }
+
+  /** The delta band join: distinct (doc_a < doc_b) pairs between the
+    * (doc_id, band_key) rows of `fresh` and those of `history ∪ fresh`.
+    * It stays outside [[Banded]] because persisted snapshot rows carry no
+    * per-doc band array to find a pair's first agreeing band, so a pair
+    * colliding in several bands is collapsed by a distinct instead.
+    */
+  def deltaPairs(fresh: DataFrame, history: DataFrame): DataFrame = {
+    val all = history.select("doc_id", "band_key").unionByName(fresh)
     fresh.select(col("band_key"), col("doc_id").as("id_a"))
       .join(all.select(col("band_key"), col("doc_id").as("id_b")), Seq("band_key"))
       .filter(col("id_a") =!= col("id_b"))
@@ -324,19 +336,16 @@ object LLMOps {
     */
   def qL05(s: SparkSession, d: String): DataFrame = {
     val postings = shinglePostings(s, d)
-    val cand = minhashCandidates(postings)
-    val sizes = postings.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val inter = cand
+    // each doc's shingle count rides through the band join with its id,
+    // so no per-document size frame is joined back onto the pairs
+    Banded.selfPairs(minhashBandArray(postings), "doc_id", "band_keys",
+        carry = Seq("n_sh"))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        col("n_sh_a").as("n_a"), col("n_sh_b").as("n_b"))
       .join(postings.select(col("doc_id").as("doc_a"), col("h")), Seq("doc_a"))
       .join(postings.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h"))
-      .groupBy("doc_a", "doc_b")
+      .groupBy("doc_a", "doc_b", "n_a", "n_b")
       .agg(count(lit(1)).as("inter"))
-    // sizes has one row per DOCUMENT — unbounded at corpus scale, so no
-    // broadcast hint: let AQE pick (it will broadcast at small SF and
-    // shuffle-join at large, where a broadcast would OOM the driver)
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         (col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")).cast("double"))
           .as("jaccard"))

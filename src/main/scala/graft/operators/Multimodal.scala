@@ -788,86 +788,43 @@ object Multimodal {
     * perceptual hashes of decoded media). The `hashBits`-bit hash splits
     * into bands of 8 bits; two hashes within Hamming distance
     * `maxHamming` < bands must agree on ≥ 1 band (pigeonhole), so the
-    * band equi-join has FULL recall and the all-pairs comparison never
-    * exists. Shuffles carry (band, key, doc_id, hash) — 3 longs and a
-    * byte — and candidate fan-out is bounded per band-key bucket, the
-    * qL05/qL06 scale posture. Exact Hamming verify (bit_count of xor)
-    * filters candidates; output is (doc_a, doc_b, hamming), doc_a <
-    * doc_b. Precondition: `hashes` holds ONE row per doc_id — each pair
-    * is emitted once only under it (duplicate doc_id rows emit duplicate
-    * pairs; nothing deduplicates the output).
+    * band equi-join ([[Banded.selfPairs]], which states the one-row-per-
+    * doc_id precondition) has FULL recall and the all-pairs comparison
+    * never exists. Exact Hamming verify (bit_count of xor) filters
+    * candidates; output is (doc_a, doc_b, hamming), doc_a < doc_b. The
+    * join never pins `hashes`: a decode-side caller checkpoints its own
+    * catalog, a persisted one is re-scanned.
     */
   def hammingNearDupPairs(hashes: DataFrame, hashCol: String,
-      hashBits: Int, maxHamming: Int, pinCatalog: Boolean = true,
-      ordered: Boolean = true): DataFrame = {
+      hashBits: Int, maxHamming: Int, ordered: Boolean = true): DataFrame = {
     require(hashBits % 8 == 0 && hashBits >= 16 && hashBits <= 64,
       s"hammingNearDupPairs: hashBits must be a multiple of 8 in [16,64], got $hashBits")
     val bands = hashBits / 8
     require(maxHamming >= 0 && maxHamming < bands,
       s"hammingNearDupPairs: $bands bands of 8 bits give full recall only " +
         s"for maxHamming < $bands, got $maxHamming")
-    // localCheckpoint (the qL19 pattern): the catalog is referenced by
-    // BOTH self-join sides, and its lineage is the media DECODE — without
-    // pinning, each exchange re-decodes the corpus (measured ~2x the
-    // whole join's cost on the mp4 family); the pinned rows are 2 longs
-    // per item, never pixels. A catalog already PERSISTED (the
-    // FingerprintStore serving path) passes pinCatalog = false — its
-    // lineage is a parquet scan, and materializing a store-sized copy to
-    // executor disk would cost more than the re-scan it avoids.
-    val cat0 = if (pinCatalog) hashes.localCheckpoint() else hashes
-    // EXPLICIT parallelism for the banded explosion: the catalog is tiny
-    // (2 longs per item) so a scan or AQE-coalesced exchange feeds the
-    // band self-join from one or two partitions — and the join's work is
-    // the per-bucket candidate fan-out, orders of magnitude larger than
-    // its input bytes. A fixed-width round-robin spread (scale-adaptive:
-    // defaultParallelism) keeps the quadratic term on every core;
-    // ReuseExchange shares the one exchange across both join sides.
-    val cat = cat0.repartition(
-      cat0.sparkSession.sparkContext.defaultParallelism)
-    val banded = cat.select(col("doc_id"), col(hashCol).as("h64"),
-        explode(array((0 until bands).map(b => struct(lit(b).as("band"),
-          shiftrightunsigned(col(hashCol), b * 8).bitwiseAND(lit(255L))
-            .as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("h64"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    // Emit each pair from its FIRST agreeing band only (the x02 rewrite's
-    // keep-at-first-colliding-table discipline): a pair colliding in k
-    // bands used to surface k times and be collapsed by a pair-sized
-    // distinct — a full exchange + aggregate over the candidate set. The
-    // first agreeing band is computable from the hashes the join row
-    // already carries (lowest zero byte of the xor), so the dedup becomes
-    // a codegen filter inside the join and the distinct disappears
-    // outright (r20, §2.4). Requires the catalog to hold one row per
-    // doc_id — true for every caller (decode catalogs are one row per
-    // decoded doc; the store's ledger anti-join keeps serving catalogs
-    // unique).
-    val xor = col("a.h64").bitwiseXOR(col("b.h64"))
-    val firstBand = (0 until bands)
-      .foldRight(lit(bands): org.apache.spark.sql.Column)((b, rest) =>
-      when(shiftrightunsigned(xor, b * 8).bitwiseAND(lit(255L)) === 0L,
-        lit(b)).otherwise(rest))
-    val pairs = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id") && col("a.band") === firstBand)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.h64").bitwiseXOR(col("b.h64"))).as("hamming"))
+    val keyed = hashes.select(col("doc_id"), col(hashCol).as("h64"),
+      array((0 until bands).map(b =>
+        shiftrightunsigned(col(hashCol), b * 8).bitwiseAND(lit(255L))): _*)
+        .as("keys"))
+    val pairs = Banded.selfPairs(keyed, "doc_id", "keys", carry = Seq("h64"))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        bit_count(col("h64_a").bitwiseXOR(col("h64_b"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
     // ordered = false for ORDER-INSENSITIVE consumers (connected
-    // components, keeper ranking): a global orderBy's range exchange
-    // SAMPLES its child before shuffling it, re-running the dedup
-    // aggregate over the full candidate exchange a second time —
-    // measured at a third of the whole banded join's cost. The declared
-    // pair queries keep the deterministic total order.
+    // components, keeper ranking); the declared pair queries keep the
+    // deterministic total order
     if (ordered) pairs.orderBy("doc_a", "doc_b") else pairs
   }
 
   /** Image near-dup pairs: [[hammingNearDupPairs]] over the [[imageDHash]]
-    * catalog (8 bands — full recall to Hamming 7).
+    * catalog (8 bands — full recall to Hamming 7). The decoded catalog is
+    * pinned (2 longs per item) so that no re-run stage repeats the decode.
     */
   def imageNearDupPairs(spark: SparkSession, media: DataFrame,
       maxHamming: Int = 6): DataFrame =
-    hammingNearDupPairs(imageDHash(spark, media), "dhash", 64, maxHamming)
+    hammingNearDupPairs(imageDHash(spark, media).localCheckpoint(), "dhash",
+      64, maxHamming)
 
   /** `bits`-bit audio energy fingerprint (the dHash analog for sound,
     * the shape acoustic fingerprints like Chromaprint reduce to): decode
@@ -932,7 +889,8 @@ object Multimodal {
 
   /** Audio near-dup pairs: [[hammingNearDupPairs]] over the `bits`-bit
     * fingerprints (bits/8 bands — full recall to Hamming bits/8 - 1;
-    * the default 32/4 serves Hamming ≤ 3).
+    * the default 32/4 serves Hamming ≤ 3), the decoded catalog pinned as
+    * in [[imageNearDupPairs]].
     */
   def audioNearDupPairs(spark: SparkSession, media: DataFrame,
       maxHamming: Int = 3, bits: Int = 32,
@@ -945,8 +903,8 @@ object Multimodal {
       s"audioNearDupPairs: the banded Hamming join needs a fingerprint " +
         s"width that is a multiple of 8 in [16,64], got $bits " +
         s"(audioFingerprintOf alone accepts any width in [1,64])")
-    hammingNearDupPairs(audioFingerprint(spark, media, bits), "afp", bits,
-      maxHamming, ordered = ordered)
+    hammingNearDupPairs(audioFingerprint(spark, media, bits).localCheckpoint(),
+      "afp", bits, maxHamming, ordered = ordered)
   }
 
   /** Per-frame dHash list of an mp4 payload: ISO-BMFF demux, each frame's
@@ -1018,24 +976,21 @@ object Multimodal {
   def videoNearDupPairs(spark: SparkSession, media: DataFrame,
       minJaccard: Double = 0.8, maxVideosPerFrame: Int = 0,
       ordered: Boolean = true): DataFrame =
-    // localCheckpoint (the qL19 pattern): posts feeds both self-join
-    // sides AND the per-video size aggregate — pinning the (doc_id,
+    // localCheckpoint (the qL19 pattern): the postings feed both self-join
+    // sides AND the per-video size aggregate — pinning the (doc_id, frame,
     // dhash) longs runs the demux + per-frame PNG decode ONCE instead of
     // once per consumer exchange
-    videoJaccardPairs(videoFrameDHash(spark, media), minJaccard,
-      maxVideosPerFrame, pinPostings = true, ordered = ordered)
+    videoJaccardPairs(videoFrameDHash(spark, media).localCheckpoint(),
+      minJaccard, maxVideosPerFrame, ordered = ordered)
 
   /** The frame-set Jaccard join over ANY (doc_id, …, dhash) postings
     * frame — the decode-free half of [[videoNearDupPairs]], shared with
-    * the [[FingerprintStore]] serving path (whose postings are already
-    * parquet-persisted, so pinning would materialize a store-sized copy
-    * for nothing — pinPostings = false there).
+    * the [[FingerprintStore]] serving path. It never pins `postings`.
     */
   private[operators] def videoJaccardPairs(postings: DataFrame,
       minJaccard: Double, maxVideosPerFrame: Int,
-      pinPostings: Boolean, ordered: Boolean = true): DataFrame = {
-    val dedup = postings.select("doc_id", "dhash").distinct()
-    val raw = if (pinPostings) dedup.localCheckpoint() else dedup
+      ordered: Boolean = true): DataFrame = {
+    val raw = postings.select("doc_id", "dhash").distinct()
     // BOILERPLATE-FRAME cap (the sourceOverlap(maxSourcesPerShingle)
     // discipline, applied to the video family): a frame hash shared by
     // thousands of videos — black frames, channel intros, logo cards at

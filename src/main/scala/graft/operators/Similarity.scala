@@ -55,14 +55,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Random-hyperplane LSH bucket id (SimHash over the embedding): sign bits
-    * of dot products with `bits` pseudo-random hyperplanes derived from
-    * xxhash64 — deterministic, data-independent, no stored model. At scale
-    * this turns the O(n²) all-pairs problem into a per-bucket problem.
-    */
-  def lshBucket(emb: Column, bits: Int, seed: Int = 0): Column =
-    element_at(LshBuckets(emb, bits, tables = 1, seed = seed.toLong), 1)
-
   /** ANN via multi-table LSH: candidates share the query's bucket in ANY
     * of `tables` hash tables (OR-amplified recall, same construction as
     * [[nearDupPairs]]); exact cosine re-ranks the distinct candidate set.
@@ -124,46 +116,19 @@ object Similarity {
     * if it collides in ANY table (OR-amplification — one table of b bits
     * has per-pair recall (1-θ/π)^b, which at cosine ~0.5 is a few percent;
     * L tables lift it to 1-(1-p)^L). Candidates get an exact cosine
-    * confirm above the threshold. No O(n²) cross product at any stage; at
-    * corpus scale each table's bucket join is an independent shuffle.
+    * confirm above the threshold. No O(n²) cross product at any stage.
     * Defaults are production-shaped (0.9+ near-dups, 8-bit tables);
     * bucket width should track corpus size — bits ≈ log2(n / desired
-    * bucket size) — or bucket joins go quadratic.
+    * bucket size) — or bucket joins go quadratic. Candidates come from
+    * [[Banded.selfPairs]] over the per-table bucket arrays, so the join
+    * carries ids and buckets, never the embeddings; the exact-cosine
+    * verify rejoins the embeddings by id once per unique candidate.
     */
   def nearDupPairs(s: SparkSession, d: String, threshold: Double = 0.9,
       bits: Int = 8, tables: Int = 6): DataFrame = {
     val e = Tables.embeddings(s, d)
-    // Bucket join carries ids + the per-table bucket array (8·(tables+2)
-    // bytes/row — never the embedding arrays, whose width grows with
-    // vector dimension at scale), and each candidate pair is emitted
-    // ONLY at its first colliding table: the first-equal position over
-    // the two bucket arrays the join row already carries (the x02
-    // rewrite's bag-mode discipline, codegen FirstEqualIndex). The
-    // pair-sized distinct this replaces was a full exchange + aggregate
-    // over one row per (pair × colliding table) — at the saturated
-    // q_l13 config (2-bit tables) that is orders of magnitude more rows
-    // than the corpus (r20, §2.4). The exact-cosine verify still runs
-    // once per unique candidate pair after re-joining the embeddings by
-    // id. Parallelism for the bucket explosion is EXPLICIT
-    // (defaultParallelism, scale-adaptive): the pre-join rows are
-    // kilobytes but fan out quadratically per bucket, and AQE — sizing
-    // from the pre-join bytes — would coalesce the exchange to one
-    // partition and run the whole bucket scan single-threaded (the
-    // hammingNearDupPairs/videoJaccardPairs lesson, §2.6).
-    val withBuckets = e.select(col("vec_id"),
-        LshBuckets(col("embedding"), bits, tables).as("bks"))
-      .select(col("vec_id"), col("bks"),
-        explode(col("bks")).as("bucket"))
-      .repartition(s.sparkContext.defaultParallelism, col("bucket"))
-    val l = withBuckets.select(col("bucket"), col("vec_id").as("id_a"),
-      col("bks").as("bks_a"))
-    val r = withBuckets.select(col("bucket").as("bucket_b"),
-      col("vec_id").as("id_b"), col("bks").as("bks_b"))
-    val cand = l.join(r,
-        col("bucket") === col("bucket_b") && col("id_a") < col("id_b") &&
-          graft.functions.FirstEqualIndex(col("bks_a"), col("bks_b")) ===
-            shiftright(col("bucket"), 32) + 1L)
-      .select("id_a", "id_b")
+    val cand = Banded.selfPairs(e.select(col("vec_id"),
+      LshBuckets(col("embedding"), bits, tables).as("bks")), "vec_id", "bks")
     cand
       .join(e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a")), Seq("id_a"))
       .join(e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b")), Seq("id_b"))

@@ -545,13 +545,10 @@ object TrainPrep {
     * whole-doc exact hashes entirely miss.
     *
     * Shape: the same two-stage discipline as the LLMOps dedup family —
-    * MinHash band keys on BOTH sides, candidates from the band-key
-    * equi-join (never corpus × benchmark), then the exact
-    * shingle-intersection Jaccard confirms ≥ `threshold`. At 100 TB the
-    * benchmark side is eval-suite-sized (thousands of docs): its band
-    * keys broadcast, so candidate generation adds no corpus shuffle
-    * beyond the per-doc signature aggregate, and the verify join touches
-    * only candidate documents' postings.
+    * MinHash band keys on BOTH sides, candidates from the banded join
+    * ([[Banded.crossPairs]], never corpus × benchmark), then the exact
+    * shingle-intersection Jaccard confirms ≥ `threshold`; the verify join
+    * touches only candidate documents' postings.
     *
     * `docs` needs (doc_id, text); `bench` needs (bench_id, text). Returns
     * (doc_id, bench_id, jaccard) for confirmed matches — the drop list a
@@ -575,23 +572,12 @@ object TrainPrep {
   def fuzzyDecontamAgainst(docs: DataFrame, benchPosts: DataFrame,
       threshold: Double = 0.5): DataFrame = {
     val cp = LLMOps.shinglePostingsOf(docs)
-    val bp = benchPosts.select(col("bench_id").as("doc_id"), col("h"))
-    val cand = LLMOps.minhashBands(cp)
-      .join(LLMOps.minhashBands(bp)
-        .select(col("band_key"), col("doc_id").as("bench_id")), Seq("band_key"))
-      .select("doc_id", "bench_id")
-      .distinct()
-    val szC = cp.groupBy("doc_id").agg(count(lit(1)).as("n_c"))
-    val szB = bp.groupBy("doc_id").agg(count(lit(1)).as("n_b"))
-      .withColumnRenamed("doc_id", "bench_id")
-    val inter = cand
+    val bp = benchPosts.select("bench_id", "h")
+    decontamCandidates(cp, bp.withColumnRenamed("bench_id", "doc_id"))
       .join(cp, Seq("doc_id"))
-      .join(bp.select(col("doc_id").as("bench_id"), col("h")),
-        Seq("bench_id", "h"))
-      .groupBy("doc_id", "bench_id")
+      .join(bp, Seq("bench_id", "h"))
+      .groupBy("doc_id", "bench_id", "n_c", "n_b")
       .agg(count(lit(1)).as("inter"))
-    // doc-cardinality size frames: no broadcast hint, AQE decides (qL05)
-    inter.join(szC, Seq("doc_id")).join(szB, Seq("bench_id"))
       .select(col("doc_id"), col("bench_id"),
         (col("inter").cast("double")
           / (col("n_c") + col("n_b") - col("inter")).cast("double"))
@@ -599,6 +585,16 @@ object TrainPrep {
       .filter(col("jaccard") >= threshold)
       .orderBy("doc_id", "bench_id")
   }
+
+  /** (doc_id, bench_id, n_c, n_b) MinHash candidates of two (doc_id, h)
+    * postings, with each side's posting count.
+    */
+  private[graft] def decontamCandidates(docPosts: DataFrame,
+      benchPosts: DataFrame): DataFrame =
+    Banded.crossPairs(LLMOps.minhashBandArray(docPosts),
+        LLMOps.minhashBandArray(benchPosts), "doc_id", "band_keys", Seq("n_sh"))
+      .select(col("id_a").as("doc_id"), col("id_b").as("bench_id"),
+        col("n_sh_a").as("n_c"), col("n_sh_b").as("n_b"))
 
   /** Q-L50 — fuzzy decontamination against a constructed benchmark: every
     * 13th document, with a fixed four-token suffix appended, stands in

@@ -809,27 +809,20 @@ object StreamOps extends Serializable {
           val snapDir = s"$baseDir/snapshot"
           val fresh = LLMOps.minhashBands(LLMOps.shinglePostingsOf(
             b.select("doc_id", "text"))).localCheckpoint()
-          val all =
+          val history =
             if (dataExists(snapDir) &&
                 StatsManifest.listParquet(s, snapDir).nonEmpty)
               s.read.parquet(snapDir).select("doc_id", "band_key")
-                .unionByName(fresh)
-            else fresh
-          fresh.select(col("band_key"), col("doc_id").as("id_a"))
-            .join(all.select(col("band_key"), col("doc_id").as("id_b")),
-              Seq("band_key"))
-            .filter(col("id_a") =!= col("id_b"))
-            .select(least(col("id_a"), col("id_b")).as("doc_a"),
-              greatest(col("id_a"), col("id_b")).as("doc_b"))
-            .distinct()
+            else fresh.limit(0)
+          LLMOps.deltaPairs(fresh, history)
             .write.mode("overwrite")
             .parquet(s"$baseDir/pairs/ingest_batch=$batchId")
           // merge the batch's keys into the snapshot (materialized first:
-          // `all` reads the directory being overwritten). distinct makes
+          // it reads the directory being overwritten). distinct makes
           // the merge idempotent under partial-failure replay — a batch
           // whose bands already landed before the crash must not stack a
           // second copy of every key into the snapshot forever
-          val merged = all.distinct().localCheckpoint()
+          val merged = history.unionByName(fresh).distinct().localCheckpoint()
           merged.write.mode("overwrite").parquet(snapDir)
 
           writeMarker(fs, marker, batchId)

@@ -1835,15 +1835,28 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(fe(Seq(1L, 2L), Seq(1L, 2L)) == 1L)
     assert(fe(Seq(1L, 2L), Seq(3L, 4L)) == 0L)          // never agree
     assert(fe(Seq.empty, Seq(1L)) == 0L)                 // length mismatch
+    def fs(a: Seq[String], b: Seq[String]): Long = {
+      import spark.implicits._
+      Seq((a, b)).toDF("a", "b")
+        .select(FirstEqualIndex(col("a"), col("b")))
+        .head().getLong(0)
+    }
+    assert(fs(Seq("0:1", "1:2"), Seq("0:9", "1:2")) == 2L)
+    assert(fs(Seq("x", "y"), Seq("x", "y")) == 1L)
+    assert(fs(Seq("x", "y"), Seq("y", "x")) == 0L)
+    assert(fs(Seq(null, "y"), Seq(null, "y")) == 2L)    // null agrees with nothing
+    assert(fs(Seq("x"), Seq.empty) == 0L)
     // stays inside whole-stage codegen (range defeats constant folding)
-    val plan = spark.range(4)
-      .select(ColumnBridge.column(FirstEqualIndex(
-        ColumnBridge.expression(array(col("id"))),
-        ColumnBridge.expression(array(col("id"))))).as("f"))
-      .queryExecution.executedPlan
-    assert(plan.collect {
-      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
-    }.nonEmpty)
+    Seq(array(col("id")), array(col("id").cast("string"))).foreach { arr =>
+      val f = spark.range(4)
+        .select(ColumnBridge.column(FirstEqualIndex(
+          ColumnBridge.expression(arr),
+          ColumnBridge.expression(arr))).as("f"))
+      assert(f.queryExecution.executedPlan.collect {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+      }.nonEmpty)
+      assert(f.collect().forall(_.getLong(0) == 1L))
+    }
   }
 
   test("orc source/sink round-trips with parity to parquet") {

@@ -105,4 +105,19 @@ class RunGramsSpec extends AnyFunSuite with SparkFixture {
           t => t.isin(stop: _*))).as("want")).head()
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
+
+  test("null token elements are skipped: every fold equals its null-free twin") {
+    import spark.implicits._
+    val df = Seq((Seq("a", null, "a", "b", null), Seq("a", "a", "b")),
+        (Seq[String](null), Seq.empty[String]))
+      .toDF("w", "clean")
+    def folds(w: String) = Seq(TopRunGram(col(w), 1), TopRunGram(col(w), 2),
+      TopRunGram(col(w), 5), DupRunGramChars(col(w), 1), CountIn(col(w), Seq("a")))
+    // local relation (interpreted eval) and after an exchange (codegen)
+    Seq(df, df.repartition(1)).foreach { d =>
+      d.select(folds("w") ++ folds("clean"): _*).collect().foreach { r =>
+        assert(r.toSeq.take(5) == r.toSeq.drop(5), r)
+      }
+    }
+  }
 }
