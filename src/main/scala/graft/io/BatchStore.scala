@@ -2,6 +2,8 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.operators.TrainPrep.{pinTracked, unpinTracked}
 
 /** The exactly-once, snapshot-isolated commit discipline shared by every
   * persisted incremental store in the engine — extracted from the media
@@ -245,13 +247,19 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
 
   /** Publish snapshot 0 over whatever the catalogs currently hold — the
     * bootstrap's commit, after its mode-overwrite catalog writes.
+    * `schemas` are the written frames' schemas: a catalog given here
+    * publishes its `S` line without reading a footer (a Spark job).
     */
-  def publishBootstrap(s: SparkSession): Unit = {
+  def publishBootstrap(s: SparkSession,
+      schemas: Map[String, StructType] = Map.empty): Unit = {
     val live = catalogs.map(cat => cat ->
       StatsManifest.listParquet(s, s"$dir/$cat")
         .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet).toMap
+    // a parquet read sees every column nullable, so the line says so too
+    val ddl = schemas.map { case (cat, st) =>
+      cat -> StructType(st.fields.map(_.copy(nullable = true))).toDDL }
     publishSnapshot(s, Snapshot(0L, "bootstrap", live,
-      catalogs.map(_ -> Map.empty[String, Long]).toMap))
+      catalogs.map(_ -> Map.empty[String, Long]).toMap, ddl))
   }
 
   /** Fill any missing per-catalog schema line: carry the prior
@@ -290,20 +298,29 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     */
   def cleanRootMetadata(s: SparkSession,
       dropBatchFlags: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(s)
     // flags and watermarks are ONE unit of committed-batch history:
     // compact rolls flags INTO watermarks, so keeping flags while
     // dropping marks would silently un-commit every rolled-up id
     val globs = Seq("_maint-inprogress-*", "_snap-*", "_snapfiles-*") ++
       (if (dropBatchFlags) Seq("_batch-*", "_batchmark-*") else Nil)
-    globs.foreach { g =>
-      val hits = fs.globStatus(new Path(s"$dir/$g"))
-      if (hits != null) hits.foreach(h => fs.delete(h.getPath, false))
-    }
-    catalogs.foreach(cat =>
-      fs.delete(new Path(s"$dir/.append-staged-$cat"), true))
+    (globs :+ ".append-staged-*").foreach(deleteGlob(s, _))
   }
+
+  /** Recursively delete every root entry matching `glob`. */
+  private def deleteGlob(s: SparkSession, glob: String): Unit = {
+    val fs = fsOf(s)
+    val hits = fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/$glob"))
+    if (hits != null) hits.foreach(h => fs.delete(h.getPath, true))
+  }
+
+  /** Read `files` of `cat` with the persisted `S` schema when the
+    * snapshot has one — inferring it would cost a footer-reading job.
+    */
+  private def scan(s: SparkSession, snap: Option[Snapshot], cat: String,
+      files: Seq[String]): DataFrame =
+    snap.flatMap(_.schemas.get(cat))
+      .fold(s.read)(ddl => s.read.schema(StructType.fromDDL(ddl)))
+      .parquet(files: _*)
 
   /** The files a fresh read of `cat` scans: the current snapshot's live
     * list, plus `batch<tag>-*` files appended after it whose tag's flag
@@ -375,7 +392,9 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
 
   /** Snapshot-resolved catalog read — retired-but-retained files are
     * invisible the instant the new snapshot commits, and a post-snapshot
-    * batch file is invisible until its flag commits. A snapshot whose
+    * batch file is invisible until its flag commits. The read carries
+    * the snapshot's persisted `S` schema, so planning it runs no Spark
+    * job. A snapshot whose
     * live set is EMPTY (a vacuum that killed every row of the catalog)
     * reads as an empty frame with the catalog's schema off the
     * snapshot's persisted `S` line — inferring off the raw listing there
@@ -387,7 +406,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
   def readCat(s: SparkSession, cat: String): DataFrame = {
     val snap = currentSnapshot(s)
     val files = liveFilesIn(s, snap, loadFlags(s), cat)
-    if (files.nonEmpty) return s.read.parquet(files: _*)
+    if (files.nonEmpty) return scan(s, snap, cat, files)
     snap match {
       case Some(sn) =>
         sn.schemas.get(cat) match {
@@ -528,6 +547,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     import org.apache.hadoop.fs.Path
     val fs = fsOf(s)
     val (token, k, live) = beginMaintenance(s)
+    val snap = currentSnapshot(s)
     val newLive = scala.collection.mutable.Map[String, Set[String]]()
     val newRetired = scala.collection.mutable.Map[String, Set[String]]()
     catalogs.foreach { cat =>
@@ -540,7 +560,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
       val target = math.max(1, (bytes / (128L << 20)).toInt)
       if (files.length > target) {
         val staged = s"$dir/.compact-staged-$cat"
-        s.read.parquet(files: _*).coalesce(target)
+        scan(s, snap, cat, files).coalesce(target)
           .write.mode("overwrite").parquet(staged)
         val folded = foldStagedIn(s, staged, cat, token)
         newLive(cat) = folded.toSet
@@ -566,11 +586,8 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
   def recover(s: SparkSession): Boolean = {
     import org.apache.hadoop.fs.Path
     val fs = fsOf(s)
-    catalogs.foreach { cat =>
-      Seq(s"$dir/.append-staged-$cat", s"$dir/.compact-staged-$cat",
-        s"$dir/.vacuum-staged-$cat")
-        .foreach(p => fs.delete(new Path(p), true))
-    }
+    Seq("append", "compact", "vacuum")
+      .foreach(kind => deleteGlob(s, s".$kind-staged-*"))
     val markers = fs.globStatus(new Path(s"$dir/_maint-inprogress-*"))
     if (markers == null || markers.isEmpty) return false
     val committedToken = currentSnapshot(s).map(_.token)
@@ -598,10 +615,16 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     * forces it eagerly when the deletion SLA demands).
     */
   def vacuumByDocId(s: SparkSession, liveDocs: DataFrame): VacuumStats = {
+    val (live, liveIds) = pinTracked(liveDocs.select("doc_id").distinct())
+    try vacuumAgainst(s, live)
+    finally unpinTracked(s, liveIds)
+  }
+
+  private def vacuumAgainst(s: SparkSession, live: DataFrame): VacuumStats = {
     import org.apache.hadoop.fs.Path
     val fs = fsOf(s)
-    val live = liveDocs.select("doc_id").distinct().localCheckpoint(true)
     val (token, k, liveF) = beginMaintenance(s)
+    val snap = currentSnapshot(s)
     var dropped = 0L
     var rewritten = 0
     var untouched = 0
@@ -614,7 +637,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
       if (allFiles.nonEmpty) {
         // ONE ids-only pass yields the dead total and the dirty file
         // list together (the ChunkStore.vacuum shape)
-        val deadPerFile = s.read.parquet(allFiles: _*)
+        val deadPerFile = scan(s, snap, cat, allFiles)
           .withColumn("f", StatsManifest.normalizedInputFile())
           .select("doc_id", "f")
           .join(live, Seq("doc_id"), "left_anti")
@@ -629,7 +652,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
           // the input_file_name-derived column over the full-store frame
           // would read every clean file's pages too (UDF filters don't
           // push down)
-          s.read.parquet(dirty.toSeq: _*)
+          scan(s, snap, cat, dirty.toSeq)
             .join(live, Seq("doc_id"), "left_semi")
             .write.mode("overwrite").parquet(staged)
           val folded = foldStagedIn(s, staged, cat, token)

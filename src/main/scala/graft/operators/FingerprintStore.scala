@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.BatchStore
-import graft.operators.TrainPrep.{pinTracked, unpinTracked}
+import graft.operators.TrainPrep.{pinCounted, unpinTracked}
 
 /** Persisted, incrementally-maintained catalog of media FINGERPRINTS —
   * the [[graft.io.BatchStore]] commit discipline applied to the
@@ -19,27 +19,39 @@ import graft.operators.TrainPrep.{pinTracked, unpinTracked}
   * the whole perceptual-dedup family is O(new media per day), not
   * O(corpus) per analysis.
   *
-  * Layout under `dir` (all parquet, flat per catalog):
-  *   - `ledger/` — one row per INGESTED media item: (doc_id, format,
-  *     decoded). Every batch row lands here — including items whose
+  * Layout under `dir`: ONE parquet catalog, `digests/`, of
+  * (doc_id, kind, frame, digest, format, decoded) rows. `kind` says what
+  * a row is:
+  *   - 0 — the 64-bit perceptual dHash of a png/bmp item
+  *     ([[Multimodal.imageDHash]]); frame = −1.
+  *   - 1 — the `audioBits`-bit energy-gradient fingerprint of a wav item
+  *     ([[Multimodal.audioFingerprint]]); frame = −1. The width is fixed
+  *     at bootstrap and recorded in a root `_audiobits-<b>` marker (the
+  *     Ivf `_watermark-` idiom): fingerprints of different widths don't
+  *     compare, so append and serving both read the marker instead of
+  *     trusting a caller-supplied width.
+  *   - 2 — one per-frame dHash posting of an mp4 item
+  *     ([[Multimodal.videoFrameDHash]]), frame = its index: the video
+  *     identity is its frame-hash set, kept at frame granularity so
+  *     frame-level analyses read the same rows the pair join does.
+  *   - −1 — the LEDGER row, one per INGESTED item, carrying `format` and
+  *     `decoded` (digest rows leave both null; the ledger row leaves
+  *     `digest` null). Every batch item gets one — including items whose
   *     bytes failed their format's decoder (decoded = false), so a
   *     corrupt item is quarantined ONCE and never re-attempted on later
   *     appends (re-ingesting a FIXED payload needs a new doc_id, which a
   *     content-derived id gives for free). The ledger is the append
   *     anti-join's store side: ids only, never blobs.
-  *   - `image/` — (doc_id, dhash): 64-bit perceptual dHash of png/bmp
-  *     rows ([[Multimodal.imageDHash]]).
-  *   - `audio/` — (doc_id, afp): `audioBits`-bit energy-gradient
-  *     fingerprint of wav rows ([[Multimodal.audioFingerprint]]). The
-  *     width is fixed at bootstrap and recorded in a root
-  *     `_audiobits-<b>` marker (the Ivf `_watermark-` idiom): fingerprints
-  *     of different widths don't compare, so append and serving both
-  *     read the marker instead of trusting a caller-supplied width.
-  *   - `video/` — (doc_id, frame, dhash): per-frame dHash postings of
-  *     mp4 rows ([[Multimodal.videoFrameDHash]]) — the video identity is
-  *     its frame-hash set, kept at frame granularity so frame-level
-  *     analyses (splice detection, boilerplate-frame audits) read the
-  *     same catalog the pair join does.
+  *
+  * One decode pass ([[fusedDigests]]) yields every row of a batch, so
+  * [[bootstrap]] is one write and [[append]] one batch landing. The
+  * per-kind readers ([[imageHashes]], [[audioFingerprints]],
+  * [[videoPostings]], [[ledger]]) are kind-filtered, column-pruned views
+  * with the column names and types of the per-kind catalogs this layout
+  * replaced. The layout is a persisted format: a store in that older
+  * layout (`image/ audio/ video/ ledger/`, no `digests/`) is refused by
+  * [[append]] and the readers, and [[bootstrap]] over it removes the old
+  * directories.
   *
   * Concurrency, append idempotence (namespaced `_batch-<tag>` flags +
   * the compact-maintained watermark), reader snapshot isolation
@@ -65,9 +77,27 @@ object FingerprintStore {
     */
   private val BroadcastIdCap = 4000000L
 
-  private val Catalogs = Seq("image", "audio", "video", "ledger")
+  private val Digests = "digests"
 
-  private def store(dir: String) = BatchStore(dir, Catalogs)
+  /** The per-kind catalog directories of the layout `digests` replaced. */
+  private val LegacyCatalogs = Seq("image", "audio", "video", "ledger")
+
+  private val LedgerKind = -1
+
+  private def store(dir: String) = BatchStore(dir, Seq(Digests))
+
+  /** [[store]], refusing a store still in the legacy per-kind layout —
+    * reading it as `digests` would serve an empty catalog.
+    */
+  private def opened(s: SparkSession, dir: String): BatchStore = {
+    val fs = fsOf(s, dir)
+    def has(sub: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$sub"))
+    if (!has(Digests) && LegacyCatalogs.exists(has))
+      throw new IllegalStateException(s"fingerprint store at $dir has the " +
+        "legacy per-kind layout (image/ audio/ video/ ledger/, no digests/); " +
+        "re-bootstrap it with FingerprintStore.bootstrap")
+    store(dir)
+  }
 
   private def fsOf(s: SparkSession, dir: String) =
     new org.apache.hadoop.fs.Path(dir)
@@ -95,18 +125,17 @@ object FingerprintStore {
   def commitBatchFlag(s: SparkSession, dir: String, batchId: Long): Unit =
     store(dir).commitFlag(s, batchId.toString)
 
-  /** Decode one media frame into ALL THREE digest kinds in a single
-    * partition-parallel pass: (doc_id, kind, frame, digest) rows, kind
-    * 0 = image dHash, 1 = audio fingerprint, 2 = per-frame video dHash
-    * (frame = −1 for the single-digest kinds). The per-format kernels
-    * and quarantine policy are exactly the Multimodal catalog builders'
+  /** Decode each media item ONCE into its `digests` rows in a single
+    * partition-parallel pass: the item's digest rows (kind 0 = image
+    * dHash, 1 = audio fingerprint, 2 = per-frame video dHash; frame = −1
+    * for the single-digest kinds) followed by its ledger row (kind −1,
+    * decoded = whether any digest came out). The per-format kernels and
+    * quarantine policy are exactly the Multimodal catalog builders'
     * ([[Multimodal.dHashOf]] / [[Multimodal.audioFingerprintOf]] /
     * [[Multimodal.videoFrameDHashes]] over the same disjoint format
     * slices — parity spec-pinned); fusing them means ingest reads the
-    * media bytes ONCE instead of once per kind (the three separate
-    * catalog scans each re-read the whole file tree, since the format
-    * filter is a path expression no source can push down; at 100 TB
-    * that is 3× the ingest I/O for identical decode work — r20, §6).
+    * media bytes once instead of once per kind, and the ledger needs no
+    * join against the digests.
     */
   private[operators] def fusedDigests(s: SparkSession, media: DataFrame,
       audioBits: Int): DataFrame = {
@@ -114,40 +143,32 @@ object FingerprintStore {
     media.select(col("doc_id"), col("meta.format").as("format"), col("blob"))
       .as[(Long, String, Array[Byte])]
       .mapPartitions(rows => rows.flatMap { case (id, fmt, blob) =>
-        fmt match {
+        val digests: Array[(Int, Int, Long)] = fmt match {
           case "png" | "bmp" =>
-            Multimodal.dHashOf(blob).iterator.map(h => (id, 0, -1, h))
+            Multimodal.dHashOf(blob).toArray.map(h => (0, -1, h))
           case "wav" =>
-            Multimodal.audioFingerprintOf(blob, audioBits).iterator
-              .map(h => (id, 1, -1, h))
+            Multimodal.audioFingerprintOf(blob, audioBits).toArray
+              .map(h => (1, -1, h))
           case "mp4" =>
-            Multimodal.videoFrameDHashes(blob).iterator.flatMap(hs =>
-              hs.iterator.zipWithIndex.map { case (h, f) => (id, 2, f, h) })
-          case _ => Iterator.empty
+            Multimodal.videoFrameDHashes(blob).toArray.flatMap(hs =>
+              hs.zipWithIndex.map { case (h, f) => (2, f, h) })
+          case _ => Array.empty
         }
+        digests.iterator.map { case (k, f, h) =>
+          (id, k, f, Option(h), null: String, Option.empty[Boolean])
+        } ++ Iterator.single(
+          (id, LedgerKind, -1, Option.empty[Long], fmt, Option(digests.nonEmpty)))
       })
-      .toDF("doc_id", "kind", "frame", "digest")
+      .toDF("doc_id", "kind", "frame", "digest", "format", "decoded")
   }
-
-  /** The three per-kind catalog frames off a PINNED fused digest frame —
-    * column names/types identical to the Multimodal catalog builders'
-    * output (the store parquet schema readers depend on).
-    */
-  private def splitDigests(all: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) =
-    (all.filter(col("kind") === 0)
-        .select(col("doc_id"), col("digest").as("dhash")),
-      all.filter(col("kind") === 1)
-        .select(col("doc_id"), col("digest").as("afp")),
-      all.filter(col("kind") === 2)
-        .select(col("doc_id"), col("frame"), col("digest").as("dhash")))
 
   /** Build the store from scratch over `media` ((doc_id, blob, meta) —
     * the [[graft.io.Readers.binaryMedia]] / [[Multimodal.withMedia]]
-    * shape). Decodes every row once. Commits by publishing snapshot 0
-    * and (LAST) the `_audiobits` marker — a crash anywhere before the
-    * marker re-runs bootstrap idempotently (all catalog writes are
-    * mode-overwrite).
+    * shape): one decode pass, one write. Commits by publishing snapshot
+    * 0 and (LAST) the `_audiobits` marker — a crash anywhere before the
+    * marker re-runs bootstrap idempotently (the write is
+    * mode-overwrite). A legacy-layout store's per-kind directories are
+    * removed first.
     */
   def bootstrap(s: SparkSession, media: DataFrame, dir: String,
       audioBits: Int = 32): Unit = {
@@ -156,62 +177,24 @@ object FingerprintStore {
         "of 8 in [16,64]")
     val st = store(dir)
     st.cleanRootMetadata(s)
-    // ONE media scan decodes every kind; the pinned rows are digests
-    // (≤ 3 longs/row, never pixels), consumed by the three catalog
-    // writes AND the ledger join (the hammingNearDupPairs rationale)
-    val (all, allIds) = pinTracked(fusedDigests(s, media, audioBits))
-    try {
-      val (imgP, audP, vidP) = splitDigests(all)
-      // REBALANCE before every catalog write (guide §6): the pinned
-      // digest frame inherits the media scan's partitioning (one
-      // partition per ~file-listing split), so a bare write lands one
-      // near-empty parquet file per scan task — at bench SF that is
-      // ~50 files per catalog and the write jobs dominate bootstrap
-      // (measured 3.9 s of its 6.1 s); at 100 TB it is the small-files
-      // problem verbatim. The AQE rebalance exchange sizes output
-      // partitions by bytes (advisoryPartitionSizeInBytes), so file
-      // count follows data volume at any scale with no tuned constant.
-      def land(df: DataFrame, cat: String): Unit =
-        df.hint("rebalance").write.mode("overwrite").parquet(s"$dir/$cat")
-      val ids = media.select(col("doc_id"), col("meta.format").as("format"))
-      // the four catalog writes are INDEPENDENT jobs over the same
-      // pinned digest frame — submit them concurrently so the write
-      // commits overlap instead of serializing four small jobs (guide
-      // §2.6; measured ~1 s per write job at bench SF). Par.all drains
-      // every write before a failure propagates, so the unpin below
-      // never pulls blocks from under a still-running write.
-      graft.Par.all(Seq(
-        () => land(imgP, "image"), () => land(audP, "audio"),
-        () => land(vidP, "video"),
-        () => land(ledgerOf(ids, imgP, audP, vidP), "ledger")))
-    } finally unpinTracked(s, allIds) // catalogs landed; drop the pin —
-    // a repeated in-process bootstrap (the bench re-runs q_mm10 per
-    // pass) must not accumulate digest blocks in executor storage
-    st.publishBootstrap(s)
+    LegacyCatalogs.foreach(cat => fsOf(s, dir)
+      .delete(new org.apache.hadoop.fs.Path(s"$dir/$cat"), true))
+    val rows = fusedDigests(s, media, audioBits)
+    // REBALANCE before the write: the digest rows inherit the media
+    // scan's partitioning (one partition per ~file-listing split), so a
+    // bare write lands one near-empty parquet file per scan task — the
+    // small-files problem. The AQE rebalance exchange sizes output
+    // partitions by bytes (advisoryPartitionSizeInBytes), so file count
+    // follows data volume at any scale with no tuned constant.
+    rows.hint("rebalance").write.mode("overwrite").parquet(s"$dir/$Digests")
+    st.publishBootstrap(s, Map(Digests -> rows.schema))
     fsOf(s, dir).create(new org.apache.hadoop.fs.Path(
       s"$dir/_audiobits-$audioBits"), true).close()
   }
 
-  /** The ledger frame for a batch given its PINNED catalogs. A doc_id
-    * that produced no catalog row failed its format's decoder —
-    * decoded = false is the quarantine: ledgered (never re-tried on
-    * later appends), fingerprint-less. Deriving decoded-ness this way
-    * re-reads pinned digests, never blobs, and every join side is
-    * ids-only.
-    */
-  private def ledgerOf(ids: DataFrame, img: DataFrame, aud: DataFrame,
-      vid: DataFrame): DataFrame = {
-    val okIds = img.select("doc_id")
-      .unionByName(aud.select("doc_id"))
-      .unionByName(vid.select("doc_id")).distinct()
-    ids.join(okIds.withColumn("decoded", lit(true)), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("format"),
-        coalesce(col("decoded"), lit(false)).as("decoded"))
-  }
-
   /** Incrementally ingest a batch: decode ONLY media whose doc_id the
-    * ledger has never seen, append their digests and ledger rows.
-    * History is read ids-only (the ledger's doc_id column) and never
+    * ledger has never seen, and land their digest and ledger rows as one
+    * batch. History is read ids-only (the ledger rows' doc_id) and never
     * rewritten; a batch overlapping already-ingested ids costs one
     * key-sized anti-join, zero decodes for the overlap.
     *
@@ -226,7 +209,7 @@ object FingerprintStore {
     */
   def append(s: SparkSession, media: DataFrame, dir: String,
       batchId: Long = -1L): Unit = {
-    val st = store(dir)
+    val st = opened(s, dir)
     val flags = st.loadFlags(s)
     val tag = st.resolveTag(flags, batchId)
     if (flags.committed(tag)) return // committed batch replayed: no-op
@@ -240,40 +223,34 @@ object FingerprintStore {
     // neither duplicates digests nor skips re-decoding its own rows
     st.removeRemnants(s, tag)
     val audioBits = audioBitsOf(s, dir)
-    val seen = st.readCat(s, "ledger").select("doc_id")
-    // ids-only anti-join first (key-sized exchange), so the blob column
-    // stays out of every store-sized plan edge
-    val newIds = media.select("doc_id").distinct()
-      .join(seen, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // materialized once: sized below AND reused
-    val n = newIds.count()
-    if (n > 0L) {
-      val fresh =
-        if (n <= BroadcastIdCap)
-          media.join(broadcast(newIds), Seq("doc_id"), "left_semi")
-        else media.join(newIds, Seq("doc_id"), "left_semi")
-      // one batch scan decodes every kind (the bootstrap discipline)
-      val (all, allIds) = pinTracked(fusedDigests(s, fresh, audioBits))
-      try {
-        val (imgP, audP, vidP) = splitDigests(all)
-        st.landBatchFiles(s, imgP, "image", tag)
-        st.landBatchFiles(s, audP, "audio", tag)
-        st.landBatchFiles(s, vidP, "video", tag)
-        val ids = fresh.select(col("doc_id"), col("meta.format").as("format"))
-        st.landBatchFiles(s, ledgerOf(ids, imgP, audP, vidP), "ledger", tag)
-      } finally unpinTracked(s, allIds)
-    }
+    // materialized once, counted by the pinning job, reused below
+    val (newIds, newIdPins, n) = pinCounted(media.select("doc_id").distinct()
+      .join(kind(st, s, LedgerKind).select("doc_id"), Seq("doc_id"), "left_anti"))
+    try {
+      if (n > 0L) {
+        val fresh =
+          if (n <= BroadcastIdCap)
+            media.join(broadcast(newIds), Seq("doc_id"), "left_semi")
+          else media.join(newIds, Seq("doc_id"), "left_semi")
+        st.landBatchFiles(s, fusedDigests(s, fresh, audioBits), Digests, tag)
+      }
+    } finally unpinTracked(s, newIdPins)
     st.commitFlag(s, tag) // the commit point — everything landed
   }
 
+  /** The kind-`k` rows of the store's `digests` catalog. */
+  private def kind(st: BatchStore, s: SparkSession, k: Int): DataFrame =
+    st.readCat(s, Digests).filter(col("kind") === k)
+
   def imageHashes(s: SparkSession, dir: String): DataFrame =
-    store(dir).readCat(s, "image")
+    kind(opened(s, dir), s, 0).select(col("doc_id"), col("digest").as("dhash"))
   def audioFingerprints(s: SparkSession, dir: String): DataFrame =
-    store(dir).readCat(s, "audio")
+    kind(opened(s, dir), s, 1).select(col("doc_id"), col("digest").as("afp"))
   def videoPostings(s: SparkSession, dir: String): DataFrame =
-    store(dir).readCat(s, "video")
+    kind(opened(s, dir), s, 2).select(col("doc_id"), col("frame"),
+      col("digest").as("dhash"))
   def ledger(s: SparkSession, dir: String): DataFrame =
-    store(dir).readCat(s, "ledger")
+    kind(opened(s, dir), s, LedgerKind).select("doc_id", "format", "decoded")
 
   /** The near-dup joins, SERVED FROM THE STORE — hash-identical to their
     * decode-path twins ([[Multimodal.imageNearDupPairs]] /
@@ -298,9 +275,9 @@ object FingerprintStore {
       maxVideosPerFrame, ordered = ordered)
 
   /** Fold the per-batch file sprawl — [[graft.io.BatchStore.compact]]. */
-  def compact(s: SparkSession, dir: String): Unit = store(dir).compact(s)
+  def compact(s: SparkSession, dir: String): Unit = opened(s, dir).compact(s)
 
-  /** Count of live data files per catalog — the [[compact]] trigger a
+  /** Count of live data files — the [[compact]] trigger a
     * live ingest loop polls.
     */
   def dataFileCount(s: SparkSession, dir: String): Int =
@@ -324,7 +301,7 @@ object FingerprintStore {
     */
   def vacuum(s: SparkSession, dir: String,
       liveDocs: DataFrame): VacuumStats =
-    store(dir).vacuumByDocId(s, liveDocs)
+    opened(s, dir).vacuumByDocId(s, liveDocs)
 
   /** Eagerly reap retired files — [[graft.io.BatchStore.reapRetired]]. */
   def reapRetired(s: SparkSession, dir: String): Int =

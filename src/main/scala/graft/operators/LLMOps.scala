@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.{PolyHash, ShingleHash}
+import graft.functions.{MinhashBands, PolyHash, ShingleHash}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -184,20 +184,15 @@ object LLMOps {
   /** MinHash band-key array per doc (16 hashes, bands of 4) from the
     * postings: (doc_id, band_keys, n_sh), position b of band_keys holding
     * band b's key — the [[Banded]] input shape — and n_sh the doc's
-    * posting count, free from the same aggregate.
+    * posting count, free from the same aggregate. The keys are the
+    * [[graft.functions.MinhashBands]] kernel over each doc's collected
+    * postings, the formula [[qL05]] evaluates on its per-doc sets.
     */
-  def minhashBandArray(postings: DataFrame): DataFrame = {
-    val minAggs = (0 until 16).map { k =>
-      min((lit(31L + 17L * k) * col("h") + lit(7L + 11L * k)) % P).as(s"m$k")
-    }
-    val sig = postings.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_sh"), minAggs: _*)
-    val bandCols = (0 until 4).map { b =>
-      concat_ws(":", (lit(b) +: (0 until 4).map(j => col(s"m${b * 4 + j}")))
-        .map(_.cast("string")): _*)
-    }
-    sig.select(col("doc_id"), array(bandCols: _*).as("band_keys"), col("n_sh"))
-  }
+  def minhashBandArray(postings: DataFrame): DataFrame =
+    postings.groupBy("doc_id")
+      .agg(collect_list(col("h")).as("hs"), count(lit(1)).as("n_sh"))
+      .select(col("doc_id"), MinhashBands(col("hs")).as("band_keys"),
+        col("n_sh"))
 
   /** (doc_id, band_key) rows, the persisted [[MinhashSnapshot]] format. */
   def minhashBands(postings: DataFrame): DataFrame =
@@ -330,24 +325,32 @@ object LLMOps {
 
   /** Q-L05 — exact n-gram Jaccard verification of the MinHash-LSH
     * candidates: the two-stage dedup pipeline (candidate generation never
-    * compares all pairs; the exact set-intersection join touches only
+    * compares all pairs; the exact set intersection touches only
     * candidate docs). Confirmed pairs have J ≥ 0.2 over distinct shingle
     * hashes — the DuckDB oracle reproduces the identical hash math.
+    *
+    * Set-based, nothing shuffles postings: each doc's distinct shingle
+    * hashes stay one array on one row (`doc_id` is the documents key, so
+    * one row per id — [[Banded]]'s precondition), band keys are computed
+    * row-locally by the [[graft.functions.MinhashBands]] kernel, the band
+    * join carries ids only, and verification rejoins the two sets by id
+    * and intersects them in place.
     */
   def qL05(s: SparkSession, d: String): DataFrame = {
-    val postings = shinglePostings(s, d)
-    // each doc's shingle count rides through the band join with its id,
-    // so no per-document size frame is joined back onto the pairs
-    Banded.selfPairs(minhashBandArray(postings), "doc_id", "band_keys",
-        carry = Seq("n_sh"))
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        col("n_sh_a").as("n_a"), col("n_sh_b").as("n_b"))
-      .join(postings.select(col("doc_id").as("doc_a"), col("h")), Seq("doc_a"))
-      .join(postings.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h"))
-      .groupBy("doc_a", "doc_b", "n_a", "n_b")
-      .agg(count(lit(1)).as("inter"))
+    val sets = Tables.documents(s, d)
+      .select(col("doc_id"), array_distinct(ShingleHash(col("text"), 3)).as("sh"))
+    def side(x: String) =
+      sets.select(col("doc_id").as(s"doc_$x"), col("sh").as(s"sh_$x"))
+    Banded.selfPairs(sets.select(col("doc_id"),
+        MinhashBands(col("sh")).as("band_keys")), "doc_id", "band_keys")
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+      .join(side("a"), Seq("doc_a"))
+      .join(side("b"), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        (col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")).cast("double"))
+        size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"),
+        (size(col("sh_a")) + size(col("sh_b"))).as("n_ab"))
+      .select(col("doc_a"), col("doc_b"),
+        (col("inter").cast("double") / (col("n_ab") - col("inter")).cast("double"))
           .as("jaccard"))
       .filter(col("jaccard") >= 0.2)
       .orderBy("doc_a", "doc_b")

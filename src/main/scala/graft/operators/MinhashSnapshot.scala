@@ -51,8 +51,9 @@ object MinhashSnapshot {
   def bootstrap(s: SparkSession, docs: DataFrame, dir: String): Unit = {
     val st = store(dir)
     st.cleanRootMetadata(s, dropBatchFlags = true)
-    bandsOf(docs).write.mode("overwrite").parquet(s"$dir/bands")
-    st.publishBootstrap(s)
+    val bands = bandsOf(docs)
+    bands.write.mode("overwrite").parquet(s"$dir/bands")
+    st.publishBootstrap(s, Map("bands" -> bands.schema))
   }
 
   /** Exactly-once batch append of `newDocs`' band keys. `batchId` ≥ 0 =

@@ -1375,14 +1375,15 @@ object Multimodal {
 
   /** Bump whenever the fixture CONTENT recipe changes — the synthetic
     * encoders, the twin mutations, the corrupt plant, the shard layout,
-    * or any DIGEST kernel a staged store downstream of the tree derives
-    * from (q_l59's `mm10s` store is staged behind the same version) —
+    * or any DIGEST kernel or store layout a staged store downstream of
+    * the tree derives from (q_l59's `mm10s` store is staged behind the
+    * same version; v2 = the one-catalog `digests` layout) —
     * so stale staged trees and stores invalidate. The staged tree is
     * keyed on (tag, dataset dir + a documents.parquet file fingerprint,
     * this version): a dataset REGENERATED at the same path invalidates
     * automatically; a code change is this constant's job.
     */
-  private[graft] val MediaFixtureVersion = "v1"
+  private[graft] val MediaFixtureVersion = "v2"
 
   /** Listing fingerprint of the dataset's documents table (names, sizes,
     * mtimes) — the staged-fixture key's defense against a dataset
@@ -1494,8 +1495,8 @@ object Multimodal {
     * formats (png/bmp/wav/mp4, plus planted twins per modality and one
     * corrupt payload) → [[graft.io.Readers.binaryMedia]] ingestion →
     * [[FingerprintStore.bootstrap]] (every blob decodes EXACTLY ONCE
-    * into the three digest catalogs; the corrupt row quarantines in the
-    * ledger) → all three near-dup families SERVED FROM THE STORE
+    * into the store's one `digests` catalog; the corrupt row quarantines
+    * in the ledger) → all three near-dup families SERVED FROM THE STORE
     * (image banded-Hamming, audio banded-Hamming, video frame-set
     * Jaccard — zero decode work, blobs never in any join plan) → ONE
     * connected-components pass over the unified pair set (modalities
@@ -1570,12 +1571,8 @@ object Multimodal {
       .unionByName(FingerprintStore.videoNearDupPairs(s, store,
         ordered = false)
         .select("doc_a", "doc_b"))
-    // hopsPerRound = 3: this graph's low-entropy fixture hashes chain
-    // clusters to diameter ~15 (r20 measurement), so batching hops cuts
-    // the round barriers ~3x (TrainPrep.connectedComponents class doc)
     val comp = TrainPrep.connectedComponents(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-      hopsPerRound = 3)
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
     val rich = ingested.select(col("doc_id").as("id"),
       when(col("meta.format").isin("png", "bmp"), lit("image"))
         .when(col("meta.format") === "wav", lit("audio"))

@@ -12,86 +12,94 @@ import org.apache.spark.sql.functions._
   * splitting, sequence packing into fixed token budgets, and a C4-style
   * quality-filter funnel.
   *
-  * Everything is declarative DataFrame code (codegen'd built-ins, no UDFs);
-  * the one iterative operator (connected components) loops a bounded number
-  * of distributed rounds with lineage truncation — never a driver-side
+  * Everything is declarative DataFrame code (codegen'd built-ins, no UDFs)
+  * except connected components, which reduces each partition's edges to a
+  * spanning forest and finishes a small forest in one union-find task
+  * (bounded distributed rounds above a size gate) — never a driver-side
   * traversal.
   */
 object TrainPrep {
 
-  /** Connected components by min-label propagation: each vertex starts
-    * labeled with its own id, and every round adopts the minimum label of
-    * its neighborhood; a fixpoint labels every member of a component with
-    * the component's global minimum id.
+  /** Connected components: (id, component) for every vertex with at
+    * least one edge, the component labeled by its minimum id. `edges`
+    * needs `src`/`dst` long columns; undirectedness is enforced here.
+    * Isolated docs are their own singleton cluster by definition and
+    * never enter the edge list.
     *
-    * Scale shape: each hop is one equi-join + one aggregate (both
-    * shuffle on vertex id — AQE coalesces as components collapse), and
-    * `localCheckpoint` truncates the plan once per round so the lineage
-    * doesn't grow with the hop count. Hops needed = graph diameter.
-    * Near-dup TEXT clusters are band-join cliques with diameter ≤ ~2
-    * (keep the default hopsPerRound = 1: the loop ends after 1-2
-    * rounds); the mixed-media perceptual graph chains to diameter ~15
-    * (r20 measurement), so its caller batches `hopsPerRound = 3` hops
-    * per checkpointed round — same total message volume, a third of the
-    * round barriers / checkpoints / convergence probes, at the price of
-    * ≤ hopsPerRound−1 no-op hop subplans in the confirming round.
-    * (Pointer-jumping and Kiveris et al.'s large-star/small-star were
-    * both simulated on the r20 media graph first: its alternating-id
-    * chains keep the label forest at depth 1, so neither cuts the hop
-    * count — see OPTIMIZATION_r20.md.)
+    * Local work first, then a small global merge (the filtering idea of
+    * Lattanzi et al., SPAA 2011):
+    *  1. Forest. Each partition reduces its edges to a spanning forest
+    *     with a local union-find in `mapPartitions`: every non-root vertex
+    *     links to its local root (the min id of its local component), and
+    *     a self-loop-only vertex keeps one self edge. Connectivity and the
+    *     vertex set are preserved, and the edge count drops to at most
+    *     |V| − (local components). The forest is pinned, and an
+    *     `Observation` on the pinning job counts it.
+    *  2. At or below the gate (a private constant of ~1M rows, a few tens
+    *     of MB), the forest coalesces to ONE task that runs union-find
+    *     with min-id roots — no rounds, nothing collected to the driver.
+    *     The returned frame reads the pinned forest, so that pin stays.
+    *  3. Above the gate, min-label propagation runs over the forest:
+    *     every vertex starts at min(own id, min neighbor id), then each
+    *     round adopts its neighborhood's minimum label (one join + one
+    *     aggregate, checkpointed so lineage does not grow), until the
+    *     label sum stops falling. Rounds needed = the forest's diameter;
+    *     superseded label snapshots are unpinned as soon as the next one
+    *     materializes, and only the final labels stay pinned.
     *
-    * `edges` needs `src`/`dst` long columns; undirectedness is enforced
-    * here. Returns (id, component) for every vertex with at least one
-    * edge — isolated docs are their own singleton cluster by definition
-    * and never enter the edge list.
-    *
-    * Checkpoint hygiene (r5, advisor item): each round's localCheckpoint
-    * pins its blocks in executor storage, so superseded label snapshots
-    * are UNPERSISTED as soon as the next round materializes — storage
-    * holds at most (bidir + current labels + one round in flight) for the
-    * loop's lifetime, not one snapshot per round. `localCheckpoint` is
-    * deliberate for the dedup-cluster topology (2-3 rounds, executor-local
-    * blocks, no HDFS round-trip) but is NOT fault-tolerant: losing an
-    * executor mid-loop fails the job. For long multi-round runs on a real
-    * cluster, set `spark.sparkContext.setCheckpointDir(...)` and pass
-    * `reliable = true` to use replicated reliable checkpoints instead
-    * (checkpoint files are cleaned by the context cleaner when
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` is on).
+    * Both paths give the same labels. `localCheckpoint` is NOT
+    * fault-tolerant: losing an executor mid-call fails the job. On a real
+    * cluster with long propagation runs, set a checkpoint dir and pass
+    * `reliable = true` to use reliable checkpoints instead.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      reliable: Boolean = false, hopsPerRound: Int = 1): DataFrame = {
-    require(hopsPerRound >= 1, s"hopsPerRound $hopsPerRound")
+      reliable: Boolean = false): DataFrame =
+    components(edges, maxIter, reliable, LocalGate)
+
+  /** Forests of at most this many rows finish in one union-find task. */
+  private val LocalGate = 1L << 20
+
+  /** [[connectedComponents]] with the local-path gate as a parameter, so
+    * specs can force either path.
+    */
+  private[graft] def components(edges: DataFrame, maxIter: Int,
+      reliable: Boolean, gate: Long): DataFrame = {
     val spark = edges.sparkSession
-    // no distinct(): duplicate edges change message volume, never the
-    // min-aggregate's result — and the input (verified pair sets) is
-    // already deduplicated, so the extra shuffle would buy nothing.
+    import spark.implicits._
+    val (forest, forestIds, rows) = pinCounted(
+      edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
+        .as[(Long, Long)]
+        .mapPartitions(it => UnionFind(it).forest)
+        .toDF("src", "dst"), reliable)
+    if (rows <= gate)
+      forest.coalesce(1).as[(Long, Long)]
+        .mapPartitions(it => UnionFind(it).labels)
+        .toDF("id", "comp")
+    else try propagate(forest, maxIter, reliable)
+    finally unpinTracked(spark, forestIds)
+  }
+
+  /** Min-label propagation over `edges` — the above-gate path. */
+  private def propagate(edges: DataFrame, maxIter: Int,
+      reliable: Boolean): DataFrame = {
+    val spark = edges.sparkSession
     // Symmetrization is ONE explode pass over the edge frame, not a
-    // union of two selects of it: the union form duplicates the edge
-    // subtree, so materializing bidir re-ran the caller's whole pair
-    // pipeline (three banded near-dup joins, in the mixed-media case)
-    // twice — exchange reuse shares the joins' exchanges across the
-    // branches but the final pair aggregates still re-run (r20, §2.4).
+    // union of two selects of it (a union duplicates the edge subtree)
     val (bidir, bidirIds) = pinTracked(
       edges.select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst")), reliable)
-    // fused first round: instead of identity labels (which make round 1's
-    // join a pure relabeling), every vertex STARTS at min(own id, min
-    // neighbor id) — one aggregate over bidir, no join, and the loop
-    // below begins where the identity-init version's round 1 ended
-    // (one fewer join round + checkpoint + convergence probe; r20, §2.4)
+    // fused first round: every vertex STARTS at min(own id, min neighbor
+    // id) — one aggregate over bidir, no join
     var (labels, labelIds) = pinTracked(
       bidir.groupBy(col("src").as("id"))
         .agg(min(least(col("src"), col("dst"))).as("comp")), reliable)
     // convergence via the label-sum invariant: min-propagation can only
-    // DECREASE labels, so an unchanged sum(comp) is exactly a fixpoint —
-    // one cheap scalar aggregate per round instead of a change-detection
-    // join against the previous labels. Summed as decimal(38,0): a long
-    // sum overflows (silently, wrapping) once vertex count × id magnitude
-    // passes 2^63, which a 100 TB corpus with 64-bit ids does. An empty
-    // graph sums to SQL NULL — normalized to zero so the zero-edge corpus
-    // converges to zero clusters instead of NPE-ing on the comparison
+    // DECREASE labels, so an unchanged sum(comp) is exactly a fixpoint.
+    // Summed as decimal(38,0): a long sum overflows once vertex count ×
+    // id magnitude passes 2^63
     def labelSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head()
         .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
@@ -100,18 +108,14 @@ object TrainPrep {
     var converged = false
     try {
       while (!converged && iter < maxIter) {
-        // hopsPerRound propagation steps chained into ONE checkpointed
-        // plan/action — see the class doc's multi-hop note (r20, §2.4)
-        var cur = labels
-        for (_ <- 0 until hopsPerRound) {
-          val msgs = bidir
-            .join(cur.withColumnRenamed("id", "src"), Seq("src"))
-            .select(col("dst").as("id"), col("comp"))
-          cur = cur.union(msgs).groupBy("id").agg(min("comp").as("comp"))
-        }
+        val msgs = bidir
+          .join(labels.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id"), col("comp"))
         // localCheckpoint is eager: `next`'s blocks exist once this
         // returns, so the previous round's snapshot is safe to drop
-        val (next, nextIds) = pinTracked(cur, reliable)
+        val (next, nextIds) = pinTracked(
+          labels.union(msgs).groupBy("id").agg(min("comp").as("comp")),
+          reliable)
         val nextSum = labelSum(next)
         converged = nextSum.compareTo(prevSum) == 0
         prevSum = nextSum
@@ -127,10 +131,60 @@ object TrainPrep {
       unpinTracked(spark, labelIds ++ bidirIds)
       throw t
     }
-    // the edge list is dead once the fixpoint is reached; only the final
-    // labels stay pinned (the caller's frame reads them)
     unpinTracked(spark, bidirIds)
     labels
+  }
+
+  /** Union-find over one task's edges. Vertices are indexed by sorted id,
+    * and a link always hangs the larger root under the smaller, so every
+    * root is its component's minimum id. Memory is a few longs per edge.
+    */
+  private final class UnionFind(src: Array[Long], dst: Array[Long]) {
+    private val ids: Array[Long] = {
+      val all = src ++ dst
+      java.util.Arrays.sort(all)
+      all.distinct
+    }
+    private val parent = Array.tabulate(ids.length)(identity)
+
+    private def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) {
+        parent(i) = parent(parent(i)) // path halving
+        i = parent(i)
+      }
+      i
+    }
+
+    src.indices.foreach { e =>
+      val a = find(java.util.Arrays.binarySearch(ids, src(e)))
+      val b = find(java.util.Arrays.binarySearch(ids, dst(e)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+
+    /** (vertex, component) for every vertex, in id order. */
+    def labels: Iterator[(Long, Long)] =
+      ids.indices.iterator.map(i => (ids(i), ids(find(i))))
+
+    /** A spanning forest: each non-root vertex to its root, plus a self
+      * edge for a root that nothing links to (a self-loop-only vertex).
+      */
+    def forest: Iterator[(Long, Long)] = {
+      val linked = new Array[Boolean](ids.length)
+      ids.indices.foreach { i => val r = find(i); if (r != i) linked(r) = true }
+      ids.indices.iterator.collect {
+        case i if find(i) != i => (ids(i), ids(find(i)))
+        case i if !linked(i)   => (ids(i), ids(i))
+      }
+    }
+  }
+
+  private object UnionFind {
+    def apply(edges: Iterator[(Long, Long)]): UnionFind = {
+      val (src, dst) = (Array.newBuilder[Long], Array.newBuilder[Long])
+      edges.foreach { case (a, b) => src += a; dst += b }
+      new UnionFind(src.result(), dst.result())
+    }
   }
 
   /** Checkpoint `df` (local unless `reliable`) plus the persistent-RDD
@@ -145,6 +199,16 @@ object TrainPrep {
     val before = sc.getPersistentRDDs.keySet.toSet
     val out = if (reliable) df.checkpoint() else df.localCheckpoint()
     (out, sc.getPersistentRDDs.keySet.toSet -- before)
+  }
+
+  /** [[pinTracked]] plus the pinned row count, taken by an `Observation`
+    * on the pinning job itself instead of a count job over the blocks.
+    */
+  private[graft] def pinCounted(df: DataFrame,
+      reliable: Boolean = false): (DataFrame, Set[Int], Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val (out, ids) = pinTracked(df.observe(obs, count(lit(1)).as("n")), reliable)
+    (out, ids, obs.get("n").asInstanceOf[Long])
   }
 
   private[graft] def unpinTracked(s: SparkSession, ids: Set[Int]): Unit = {

@@ -517,9 +517,9 @@ object StreamOps extends Serializable {
   /** The per-batch body of [[ingestMedia]], exposed for the replay /
     * crash-window pins in StreamBatchParitySpec. With `compactEvery`
     * > 0, HOUSEKEEPING runs after the batch's flag commits (the
-    * ingestVectors policy discipline): once the four catalogs
-    * accumulate more than that many data files — every append lands
-    * ~shuffle-partitions files per catalog, so a long-lived crawl
+    * ingestVectors policy discipline): once the store's catalog
+    * accumulates more than that many data files — every append lands
+    * ~shuffle-partitions files, so a long-lived crawl
     * otherwise grows to the small-files wall — the store compacts.
     * Best-effort by design: a crash mid-compact leaves the recovery
     * marker, the NEXT batch's append rolls it back
@@ -544,7 +544,7 @@ object StreamOps extends Serializable {
       FingerprintStore.commitBatchFlag(s, storeDir, batchId)
     } else {
       // append commits the _batch flag itself (after torn-maintenance
-      // recovery, remnant-delete, catalogs, ledger), including over an
+      // recovery, remnant-delete, the batch's digest rows), including over an
       // all-overlap or empty batch
       FingerprintStore.append(s, batch, storeDir, batchId)
     }

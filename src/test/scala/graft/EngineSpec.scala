@@ -2603,12 +2603,14 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
 
     FingerprintStore.bootstrap(spark, half, dir)
     FingerprintStore.append(spark, rest, dir, batchId = 7L)
-    // CRASH SHAPE 1 — after the digest catalogs, before the ledger and
-    // flag (the r15 duplicate window): reconstruct it by deleting the
-    // batch's ledger files and its flag, then replay the batch
+    // CRASH SHAPE 1 — some of the batch's digests files landed, flag
+    // lost (the r15 duplicate window): reconstruct it by deleting the
+    // flag and all but the first of the batch's files, then replay
     fs.delete(new Path(s"$dir/_batch-7"), false)
-    fs.globStatus(new Path(s"$dir/ledger/batch7-*"))
-      .foreach(h => fs.delete(h.getPath, false))
+    val landed = fs.globStatus(new Path(s"$dir/digests/batch7-*"))
+      .map(_.getPath).sortBy(_.getName)
+    assert(landed.length > 1, "the batch must land several files")
+    landed.tail.foreach(fs.delete(_, false))
     FingerprintStore.append(spark, rest, dir, batchId = 7L)
     assert(catalogs(dir) == catalogs(ref),
       "replaying a catalogs-landed/ledger-lost batch must rewrite, not " +
@@ -2637,7 +2639,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(fs.exists(new Path(s"$dir2/_batch-m0")),
       "self-allocated batches must flag in the manual namespace")
     fs.delete(new Path(s"$dir2/_batch-m0"), false)
-    fs.globStatus(new Path(s"$dir2/ledger/batchm0-*"))
+    fs.globStatus(new Path(s"$dir2/digests/batchm0-*"))
       .foreach(h => fs.delete(h.getPath, false))
     FingerprintStore.append(spark, rest, dir2) // re-allocates tag m0
     assert(catalogs(dir2) == catalogs(ref))
@@ -2751,9 +2753,8 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     // GRACE + REAP: the retired originals are still on disk (that is
     // what isolated the pre-planned reader); an eager reap deletes them
     // and the raw listing converges on the live set
-    def rawCount() = Seq("image", "audio", "video", "ledger")
-      .map(c => graft.io.StatsManifest.listParquet(spark, s"$dir/$c").length)
-      .sum
+    def rawCount() =
+      graft.io.StatsManifest.listParquet(spark, s"$dir/digests").length
     assert(rawCount() > filesAfter,
       "displaced originals must be retained through the grace window")
     assert(FingerprintStore.reapRetired(spark, dir) > 0)
@@ -2766,7 +2767,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     // Readers never see it; recover deletes it (no restore step exists)
     val token = "torntoken"
     fs.create(new Path(s"$dir/_maint-inprogress-$token"), true).close()
-    val junk = new Path(s"$dir/audio/fold-$token-0-junk.parquet")
+    val junk = new Path(s"$dir/digests/fold-$token-0-junk.parquet")
     fs.create(junk, true).close() // zero-byte garbage: unreadable
     assert(catalogs(dir) == before,
       "uncommitted fold files must be invisible to readers")
@@ -2796,9 +2797,8 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val rest = media.filter(col("doc_id") % 2 =!= 0)
     val dir = java.nio.file.Files.createTempDirectory("graft-fps-vac").toString
     FingerprintStore.bootstrap(spark, half, dir)
-    val bootFiles = Seq("image", "audio", "video", "ledger")
-      .flatMap(c => graft.io.StatsManifest.listParquet(spark, s"$dir/$c"))
-      .toSet
+    val bootFiles =
+      graft.io.StatsManifest.listParquet(spark, s"$dir/digests").toSet
     FingerprintStore.append(spark, rest, dir)
 
     // forget every odd id (the appended batch): the bootstrap-era files
@@ -2824,9 +2824,8 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
         "vacuumed ids must vanish from every catalog")
     }
     // clean (bootstrap-era) files never moved, never rewritten
-    val after = Seq("image", "audio", "video", "ledger")
-      .flatMap(c => graft.io.StatsManifest.listParquet(spark, s"$dir/$c"))
-      .toSet
+    val after =
+      graft.io.StatsManifest.listParquet(spark, s"$dir/digests").toSet
     assert(bootFiles.subsetOf(after),
       "vacuum must not touch files holding only live rows")
     assert(stats.untouchedFiles >= bootFiles.size, stats.toString)

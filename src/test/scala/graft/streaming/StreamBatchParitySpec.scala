@@ -535,7 +535,7 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
     // batch before it still no-ops (flags survive compaction)
     val preFiles = FingerprintStore.dataFileCount(spark, s"$base/store")
     StreamOps.ingestMediaBatch( // id 99: the stream may have committed
-      media.limit(0), 99L, s"$base/store", compactEvery = 4) // a trailing empty batch
+      media.limit(0), 99L, s"$base/store", compactEvery = 2) // a trailing empty batch
     assert(catalogs(s"$base/store") == catalogs(ref),
       "compaction must not move a row")
     assert(FingerprintStore.dataFileCount(spark, s"$base/store") < preFiles,
@@ -549,7 +549,7 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
     fs.create(new org.apache.hadoop.fs.Path(
       s"$base/store/_maint-inprogress-torntest"), true).close()
     val junk = new org.apache.hadoop.fs.Path(
-      s"$base/store/ledger/fold-torntest-0-junk.parquet")
+      s"$base/store/digests/fold-torntest-0-junk.parquet")
     fs.create(junk, true).close()
     assert(catalogs(s"$base/store") == catalogs(ref),
       "a torn compact's fold files must be invisible to readers")
