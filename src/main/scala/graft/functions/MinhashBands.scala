@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{array, concat_ws, lit}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -15,14 +16,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * bands of 4 and rendered `b:m0:m1:m2:m3` — position b holds band b's
   * key, the [[graft.operators.Banded]] input shape.
   *
-  * The one band-key formula of the engine: the per-doc set path
-  * ([[graft.operators.LLMOps.qL05]], which never explodes postings) and
-  * the postings path ([[graft.operators.LLMOps.minhashBandArray]], over
-  * each doc's collected postings) both evaluate it; the DuckDB oracle
-  * spells the same math with `list_min`. Null elements are skipped
-  * (as `min` skips them); a set with no hashes has no band keys. The
-  * `transform`/`aggregate` lambda formulation of the same math is
-  * interpreted per element and measured about twice the task time.
+  * The band-key formula has two spellings, both built from this object:
+  * the kernel, evaluated row-locally on per-doc sets
+  * ([[graft.operators.LLMOps.minhashCandidates]], which never explodes
+  * postings), and [[bandArray]] over 16 `min` aggregates of
+  * [[hash]] for the callers that start from (doc_id, h) postings
+  * ([[graft.operators.LLMOps.minhashBandArray]]) — those mins combine
+  * map-side, where collecting each doc's postings would ship every one.
+  * The DuckDB oracle spells the same math with `list_min`. Null
+  * elements are skipped (as `min` skips them); a set with no hashes has
+  * no band keys. The `transform`/`aggregate` lambda formulation of the
+  * same math is interpreted per element and measured about twice the
+  * task time.
   */
 case class MinhashBands(child: Expression) extends UnaryExpression {
 
@@ -49,8 +54,23 @@ case class MinhashBands(child: Expression) extends UnaryExpression {
 }
 
 object MinhashBands {
-  private final val Hashes = 16
+  final val Hashes = 16
   private final val Rows = 4
+
+  private def a(k: Int): Long = 31L + 17L * k
+  private def b(k: Int): Long = 7L + 11L * k
+
+  /** Hash k of shingle hash `h`, as a column. */
+  def hash(k: Int, h: Column): Column = (lit(a(k)) * h + lit(b(k))) % PolyHash.Mod
+
+  /** The band-key array from the 16 per-doc minima of [[hash]], in k
+    * order.
+    */
+  def bandArray(mins: Seq[Column]): Column =
+    array((0 until Hashes / Rows).map { band =>
+      concat_ws(":", (lit(band) +: mins.slice(band * Rows, band * Rows + Rows))
+        .map(_.cast("string")): _*)
+    }: _*)
 
   /** Called from both interpreted eval and generated code. */
   def keys(hs: ArrayData): ArrayData = {
@@ -63,7 +83,7 @@ object MinhashBands {
         seen = true
         var k = 0
         while (k < Hashes) {
-          val v = ((31L + 17L * k) * h + (7L + 11L * k)) % PolyHash.Mod
+          val v = (a(k) * h + b(k)) % PolyHash.Mod
           if (v < mins(k)) mins(k) = v
           k += 1
         }
@@ -73,17 +93,17 @@ object MinhashBands {
     if (!seen) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](Hashes / Rows)
     val sb = new java.lang.StringBuilder
-    var b = 0
-    while (b < out.length) {
+    var band = 0
+    while (band < out.length) {
       sb.setLength(0)
-      sb.append(b)
+      sb.append(band)
       var j = 0
       while (j < Rows) {
-        sb.append(':').append(mins(b * Rows + j))
+        sb.append(':').append(mins(band * Rows + j))
         j += 1
       }
-      out(b) = UTF8String.fromString(sb.toString)
-      b += 1
+      out(band) = UTF8String.fromString(sb.toString)
+      band += 1
     }
     new GenericArrayData(out)
   }

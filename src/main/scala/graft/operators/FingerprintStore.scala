@@ -162,6 +162,14 @@ object FingerprintStore {
       .toDF("doc_id", "kind", "frame", "digest", "format", "decoded")
   }
 
+  /** `rows` sorted by kind within each partition, so every file it
+    * writes keeps each kind in a contiguous run of row groups: the
+    * readers' and [[append]]'s `kind = k` filters then skip the other
+    * kinds by parquet row-group statistics instead of scanning every
+    * video frame's digest.
+    */
+  private def byKind(rows: DataFrame): DataFrame = rows.sortWithinPartitions("kind")
+
   /** Build the store from scratch over `media` ((doc_id, blob, meta) —
     * the [[graft.io.Readers.binaryMedia]] / [[Multimodal.withMedia]]
     * shape): one decode pass, one write. Commits by publishing snapshot
@@ -186,7 +194,7 @@ object FingerprintStore {
     // small-files problem. The AQE rebalance exchange sizes output
     // partitions by bytes (advisoryPartitionSizeInBytes), so file count
     // follows data volume at any scale with no tuned constant.
-    rows.hint("rebalance").write.mode("overwrite").parquet(s"$dir/$Digests")
+    byKind(rows.hint("rebalance")).write.mode("overwrite").parquet(s"$dir/$Digests")
     st.publishBootstrap(s, Map(Digests -> rows.schema))
     fsOf(s, dir).create(new org.apache.hadoop.fs.Path(
       s"$dir/_audiobits-$audioBits"), true).close()
@@ -232,7 +240,8 @@ object FingerprintStore {
           if (n <= BroadcastIdCap)
             media.join(broadcast(newIds), Seq("doc_id"), "left_semi")
           else media.join(newIds, Seq("doc_id"), "left_semi")
-        st.landBatchFiles(s, fusedDigests(s, fresh, audioBits), Digests, tag)
+        st.landBatchFiles(s, byKind(fusedDigests(s, fresh, audioBits)),
+          Digests, tag)
       }
     } finally unpinTracked(s, newIdPins)
     st.commitFlag(s, tag) // the commit point — everything landed

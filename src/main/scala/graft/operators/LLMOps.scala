@@ -167,9 +167,7 @@ object LLMOps {
       .select("keeper_id", "copies")
       .orderBy("keeper_id")
 
-  /** Distinct (doc_id, shingle-hash) postings — shared by candidate
-    * generation (qL06) and exact verification (qL05).
-    */
+  /** Distinct (doc_id, shingle-hash) postings of the corpus. */
   def shinglePostings(s: SparkSession, d: String): DataFrame =
     shinglePostingsOf(Tables.documents(s, d))
 
@@ -181,27 +179,49 @@ object LLMOps {
     docs.select(col("doc_id"), explode(ShingleHash(col("text"), 3)).as("h"))
       .distinct()
 
-  /** MinHash band-key array per doc (16 hashes, bands of 4) from the
-    * postings: (doc_id, band_keys, n_sh), position b of band_keys holding
-    * band b's key — the [[Banded]] input shape — and n_sh the doc's
-    * posting count, free from the same aggregate. The keys are the
-    * [[graft.functions.MinhashBands]] kernel over each doc's collected
-    * postings, the formula [[qL05]] evaluates on its per-doc sets.
+  /** Per-doc distinct shingle-hash sets (doc_id, sh) — the
+    * [[minhashCandidates]] input. `doc_id` is the documents key, so one
+    * row per id, [[Banded]]'s precondition.
     */
-  def minhashBandArray(postings: DataFrame): DataFrame =
+  def shingleSets(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"), array_distinct(ShingleHash(col("text"), 3)).as("sh"))
+
+  /** MinHash band-key array per doc (16 hashes, bands of 4) from (doc_id,
+    * h) postings: (doc_id, band_keys, n_sh), position b of band_keys
+    * holding band b's key — the [[Banded]] input shape — and n_sh the
+    * doc's posting count, free from the same aggregate. The signature is
+    * 16 `min` aggregates of [[graft.functions.MinhashBands.hash]], which
+    * combine map-side, so only per-doc minima cross the shuffle; for the
+    * callers that start from postings (the snapshot, the delta and
+    * decontamination). Equal to the kernel [[minhashCandidates]]
+    * evaluates on per-doc sets (spec-pinned).
+    */
+  def minhashBandArray(postings: DataFrame): DataFrame = {
+    val mins = (0 until MinhashBands.Hashes).map { k =>
+      min(MinhashBands.hash(k, col("h"))).as(s"m$k")
+    }
     postings.groupBy("doc_id")
-      .agg(collect_list(col("h")).as("hs"), count(lit(1)).as("n_sh"))
-      .select(col("doc_id"), MinhashBands(col("hs")).as("band_keys"),
+      .agg(count(lit(1)).as("n_sh"), mins: _*)
+      .select(col("doc_id"),
+        MinhashBands.bandArray(mins.indices.map(k => col(s"m$k"))).as("band_keys"),
         col("n_sh"))
+  }
 
   /** (doc_id, band_key) rows, the persisted [[MinhashSnapshot]] format. */
   def minhashBands(postings: DataFrame): DataFrame =
     minhashBandArray(postings)
       .select(col("doc_id"), explode(col("band_keys")).as("band_key"))
 
-  /** LSH candidate pairs (doc_a < doc_b) via [[Banded.selfPairs]]. */
-  def minhashCandidates(postings: DataFrame): DataFrame =
-    Banded.selfPairs(minhashBandArray(postings), "doc_id", "band_keys")
+  /** LSH candidate pairs (doc_a < doc_b) of per-doc shingle sets
+    * ([[shingleSets]]: (doc_id, sh), one row per id) via
+    * [[Banded.selfPairs]]: band keys come row-locally from the
+    * [[graft.functions.MinhashBands]] kernel, so no posting is exploded
+    * or shuffled, and the band join carries ids only.
+    */
+  def minhashCandidates(sets: DataFrame): DataFrame =
+    Banded.selfPairs(sets.select(col("doc_id"),
+        MinhashBands(col("sh")).as("band_keys")), "doc_id", "band_keys")
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
 
   // ------------------------------------------- incremental (delta) dedup
@@ -298,7 +318,7 @@ object LLMOps {
     // measured 24 documents scans in the uncheckpointed plan vs 3 after.
     // Candidate pairs are id-only rows bounded by the LSH collision count,
     // safe to materialize.
-    val cand = minhashCandidates(shinglePostings(s, d)).localCheckpoint()
+    val cand = minhashCandidates(shingleSets(s, d)).localCheckpoint()
     // positional (not distinct) postings, only for docs in some pair
     val pairDocs = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
@@ -329,21 +349,16 @@ object LLMOps {
     * candidate docs). Confirmed pairs have J ≥ 0.2 over distinct shingle
     * hashes — the DuckDB oracle reproduces the identical hash math.
     *
-    * Set-based, nothing shuffles postings: each doc's distinct shingle
-    * hashes stay one array on one row (`doc_id` is the documents key, so
-    * one row per id — [[Banded]]'s precondition), band keys are computed
-    * row-locally by the [[graft.functions.MinhashBands]] kernel, the band
-    * join carries ids only, and verification rejoins the two sets by id
-    * and intersects them in place.
+    * Set-based, nothing shuffles postings: [[minhashCandidates]] bands
+    * each doc's distinct shingle hashes, kept as one array on one row,
+    * and verification rejoins the two sets by id and intersects them in
+    * place.
     */
   def qL05(s: SparkSession, d: String): DataFrame = {
-    val sets = Tables.documents(s, d)
-      .select(col("doc_id"), array_distinct(ShingleHash(col("text"), 3)).as("sh"))
+    val sets = shingleSets(s, d)
     def side(x: String) =
       sets.select(col("doc_id").as(s"doc_$x"), col("sh").as(s"sh_$x"))
-    Banded.selfPairs(sets.select(col("doc_id"),
-        MinhashBands(col("sh")).as("band_keys")), "doc_id", "band_keys")
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+    minhashCandidates(sets)
       .join(side("a"), Seq("doc_a"))
       .join(side("b"), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
@@ -357,14 +372,12 @@ object LLMOps {
   }
 
   /** Q-L06 — MinHash + LSH dedup candidates (16 hashes, 4 bands of 4):
-    * explode shingles → portable hash (codegen) → 16 min-aggregates build
-    * the signature in one partial+final hash agg → band keys → bucket
-    * self-join. Signature computation is map-side combined; the only
-    * shuffles are the per-doc agg and the band-key join. This is the shape
+    * per-doc shingle sets → band keys row-locally (codegen) → bucket
+    * self-join. The only shuffles are the band-key join's. This is the shape
     * that survives 100 TB — candidate generation never compares all pairs.
     */
   def qL06(s: SparkSession, d: String): DataFrame =
-    minhashCandidates(shinglePostings(s, d)).orderBy("doc_a", "doc_b")
+    minhashCandidates(shingleSets(s, d)).orderBy("doc_a", "doc_b")
 
   /** SimHash dedup groups: explode tokens → token hash → `bits` signed
     * bit-vote sums in one partial+final hash agg → sign → bit → group by

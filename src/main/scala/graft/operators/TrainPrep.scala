@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * Everything is declarative DataFrame code (codegen'd built-ins, no UDFs)
   * except connected components, which reduces each partition's edges to a
-  * spanning forest and finishes a small forest in one union-find task
-  * (bounded distributed rounds above a size gate) — never a driver-side
-  * traversal.
+  * spanning forest and merges the forests in one union-find task — never
+  * a driver-side traversal.
   */
 object TrainPrep {
 
@@ -33,106 +32,26 @@ object TrainPrep {
     *     links to its local root (the min id of its local component), and
     *     a self-loop-only vertex keeps one self edge. Connectivity and the
     *     vertex set are preserved, and the edge count drops to at most
-    *     |V| − (local components). The forest is pinned, and an
-    *     `Observation` on the pinning job counts it.
-    *  2. At or below the gate (a private constant of ~1M rows, a few tens
-    *     of MB), the forest coalesces to ONE task that runs union-find
-    *     with min-id roots — no rounds, nothing collected to the driver.
-    *     The returned frame reads the pinned forest, so that pin stays.
-    *  3. Above the gate, min-label propagation runs over the forest:
-    *     every vertex starts at min(own id, min neighbor id), then each
-    *     round adopts its neighborhood's minimum label (one join + one
-    *     aggregate, checkpointed so lineage does not grow), until the
-    *     label sum stops falling. Rounds needed = the forest's diameter;
-    *     superseded label snapshots are unpinned as soon as the next one
-    *     materializes, and only the final labels stay pinned.
+    *     |V| − (local components) per partition.
+    *  2. Merge. The forests shuffle to ONE task, which runs union-find
+    *     with min-id roots over them — no rounds, nothing collected to the
+    *     driver. Its memory is a few longs per forest edge.
     *
-    * Both paths give the same labels. `localCheckpoint` is NOT
-    * fault-tolerant: losing an executor mid-call fails the job. On a real
-    * cluster with long propagation runs, set a checkpoint dir and pass
-    * `reliable = true` to use reliable checkpoints instead.
+    * The result is a lazy frame like any other: the forest step runs in
+    * the map stage of the one-partition shuffle and the merge in its
+    * reduce task, inside whichever job consumes the labels. A caller
+    * that reads the labels more than once pins them itself.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      reliable: Boolean = false): DataFrame =
-    components(edges, maxIter, reliable, LocalGate)
-
-  /** Forests of at most this many rows finish in one union-find task. */
-  private val LocalGate = 1L << 20
-
-  /** [[connectedComponents]] with the local-path gate as a parameter, so
-    * specs can force either path.
-    */
-  private[graft] def components(edges: DataFrame, maxIter: Int,
-      reliable: Boolean, gate: Long): DataFrame = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val (forest, forestIds, rows) = pinCounted(
-      edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .where(col("src").isNotNull && col("dst").isNotNull)
-        .as[(Long, Long)]
-        .mapPartitions(it => UnionFind(it).forest)
-        .toDF("src", "dst"), reliable)
-    if (rows <= gate)
-      forest.coalesce(1).as[(Long, Long)]
-        .mapPartitions(it => UnionFind(it).labels)
-        .toDF("id", "comp")
-    else try propagate(forest, maxIter, reliable)
-    finally unpinTracked(spark, forestIds)
-  }
-
-  /** Min-label propagation over `edges` — the above-gate path. */
-  private def propagate(edges: DataFrame, maxIter: Int,
-      reliable: Boolean): DataFrame = {
-    val spark = edges.sparkSession
-    // Symmetrization is ONE explode pass over the edge frame, not a
-    // union of two selects of it (a union duplicates the edge subtree)
-    val (bidir, bidirIds) = pinTracked(
-      edges.select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")), reliable)
-    // fused first round: every vertex STARTS at min(own id, min neighbor
-    // id) — one aggregate over bidir, no join
-    var (labels, labelIds) = pinTracked(
-      bidir.groupBy(col("src").as("id"))
-        .agg(min(least(col("src"), col("dst"))).as("comp")), reliable)
-    // convergence via the label-sum invariant: min-propagation can only
-    // DECREASE labels, so an unchanged sum(comp) is exactly a fixpoint.
-    // Summed as decimal(38,0): a long sum overflows once vertex count ×
-    // id magnitude passes 2^63
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head()
-        .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    try {
-      while (!converged && iter < maxIter) {
-        val msgs = bidir
-          .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-          .select(col("dst").as("id"), col("comp"))
-        // localCheckpoint is eager: `next`'s blocks exist once this
-        // returns, so the previous round's snapshot is safe to drop
-        val (next, nextIds) = pinTracked(
-          labels.union(msgs).groupBy("id").agg(min("comp").as("comp")),
-          reliable)
-        val nextSum = labelSum(next)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-        unpinTracked(spark, labelIds)
-        labels = next
-        labelIds = nextIds
-        iter += 1
-      }
-      require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    } catch { case t: Throwable =>
-      // a failed round (or non-convergence) must not strand corpus-scale
-      // edge/label blocks in executor storage for the session lifetime
-      unpinTracked(spark, labelIds ++ bidirIds)
-      throw t
-    }
-    unpinTracked(spark, bidirIds)
-    labels
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .as[(Long, Long)]
+      .mapPartitions(it => UnionFind(it).forest)
+      .repartition(1)
+      .mapPartitions(it => UnionFind(it).labels)
+      .toDF("id", "comp")
   }
 
   /** Union-find over one task's edges. Vertices are indexed by sorted id,
@@ -143,7 +62,12 @@ object TrainPrep {
     private val ids: Array[Long] = {
       val all = src ++ dst
       java.util.Arrays.sort(all)
-      all.distinct
+      // sorted, so duplicates are neighbours: keep each run's first
+      var n = 0
+      all.indices.foreach { i =>
+        if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+      }
+      java.util.Arrays.copyOf(all, n)
     }
     private val parent = Array.tabulate(ids.length)(identity)
 
@@ -855,9 +779,7 @@ object TrainPrep {
     * the query. That is the right default for a nightly batch run
     * (cheap executor-local blocks, no replicated-store round-trip); a
     * deployment on preemptible nodes should set a checkpoint dir and
-    * swap these pins to reliable `checkpoint()` — the
-    * [[connectedComponents]] `reliable` flag is the same trade exposed
-    * on the one operator where rounds make mid-flight loss likely.
+    * swap these pins to reliable `checkpoint()`.
     */
   def qL59(s: SparkSession, d: String): DataFrame = {
     val stop = LLMOps.stopwords

@@ -2055,7 +2055,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
       .orderBy("doc_a", "doc_b")
     // semantics: exactly the full-corpus candidates touching the new batch
     val d = delta.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val f = LLMOps.minhashCandidates(LLMOps.shinglePostings(spark, sfDir))
+    val f = LLMOps.minhashCandidates(LLMOps.shingleSets(spark, sfDir))
       .filter(col("doc_a") >= cutoff || col("doc_b") >= cutoff)
       .orderBy("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq

@@ -18,8 +18,10 @@ class MinhashBandsSpec extends AnyFunSuite with SparkFixture
   private val sf001 =
     new java.io.File(sfDir).toPath.resolveSibling("sf0.01").toString
 
-  /** The band keys as 16 min-aggregates over the postings — the spelling
-    * the kernel replaced, kept here as the reference.
+  /** The band keys as 16 min-aggregates over the postings, spelled out
+    * with literal constants: the reference both spellings (the kernel on
+    * sets, `minhashBandArray` on postings) must equal, since persisted
+    * snapshots hold these keys.
     */
   private def aggregateKeys(postings: DataFrame): DataFrame = {
     val mins = (0 until 16).map { k =>
@@ -84,19 +86,22 @@ class MinhashBandsSpec extends AnyFunSuite with SparkFixture
     assert(rows(3).isEmpty)
   }
 
-  test("qL05 verifies on per-doc sets: no aggregate keyed on a shingle " +
-      "hash and no join on one") {
-    val plan = LLMOps.qL05(spark, sfDir).queryExecution.executedPlan
+  test("qL05, qL06 and minhashCandidates band per-doc sets: no aggregate " +
+      "keyed on a shingle hash and no join on one") {
     def onH(es: Seq[Expression]) = es.exists(_.references.exists {
       a: Attribute => a.name == "h" })
-    val aggs = collect(plan) { case a: BaseAggregateExec => a }
-    assert(!aggs.exists(a => onH(a.groupingExpressions)), plan)
-    val joinKeys = collect(plan) {
-      case j: SortMergeJoinExec => j.leftKeys ++ j.rightKeys
-      case j: ShuffledHashJoinExec => j.leftKeys ++ j.rightKeys
-      case j: BroadcastHashJoinExec => j.leftKeys ++ j.rightKeys
+    for (df <- Seq(LLMOps.qL05(spark, sfDir), LLMOps.qL06(spark, sfDir),
+        LLMOps.minhashCandidates(LLMOps.shingleSets(spark, sfDir)))) {
+      val plan = df.queryExecution.executedPlan
+      val aggs = collect(plan) { case a: BaseAggregateExec => a }
+      assert(!aggs.exists(a => onH(a.groupingExpressions)), plan)
+      val joinKeys = collect(plan) {
+        case j: SortMergeJoinExec => j.leftKeys ++ j.rightKeys
+        case j: ShuffledHashJoinExec => j.leftKeys ++ j.rightKeys
+        case j: BroadcastHashJoinExec => j.leftKeys ++ j.rightKeys
+      }
+      assert(joinKeys.nonEmpty && !joinKeys.exists(onH), plan)
+      assert(plan.toString.contains("minhash_bands"), plan)
     }
-    assert(joinKeys.nonEmpty && !joinKeys.exists(onH), plan)
-    assert(plan.toString.contains("minhash_bands"), plan)
   }
 }

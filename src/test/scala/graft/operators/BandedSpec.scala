@@ -80,7 +80,8 @@ class BandedSpec extends AnyFunSuite with SparkFixture
 
   test("minhash and decontam candidates have no aggregate above the band join") {
     val posts = LLMOps.shinglePostings(spark, sfDir)
-    assertNoAggregateAboveBandJoin(LLMOps.minhashCandidates(posts))
+    assertNoAggregateAboveBandJoin(
+      LLMOps.minhashCandidates(LLMOps.shingleSets(spark, sfDir)))
     assertNoAggregateAboveBandJoin(TrainPrep.decontamCandidates(posts,
       posts.filter(col("doc_id") % 13 === 0)))
   }

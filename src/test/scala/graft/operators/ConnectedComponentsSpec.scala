@@ -3,13 +3,13 @@ package graft.operators
 import graft.SparkFixture
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Both paths of [[TrainPrep.connectedComponents]] — one union-find task
-  * (gate ∞) and propagation over the forest (gate 0, or −1 so that even
-  * the empty forest propagates) — against a driver-side union-find.
+/** [[TrainPrep.connectedComponents]] — per-partition forests merged in
+  * one union-find task — against a driver-side union-find, with the
+  * edges spread over one, three and more partitions than edges.
   */
 class ConnectedComponentsSpec extends AnyFunSuite with SparkFixture {
 
-  private val Gates = Seq(-1L, 0L, Long.MaxValue)
+  private val Partitions = Seq(1, 3, 64)
 
   /** Min-id label of every vertex with an edge. */
   private def reference(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -25,21 +25,21 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkFixture {
     parent.keys.map(v => v -> find(v)).toMap
   }
 
-  private def labels(edges: Seq[(Long, Long)], gate: Long): Map[Long, Long] = {
+  private def labels(edges: Seq[(Long, Long)], parts: Int): Map[Long, Long] = {
     import spark.implicits._
-    val df = spark.sparkContext.parallelize(edges, 3).toDF("src", "dst")
-    val got = TrainPrep.components(df, maxIter = 100, reliable = false, gate)
+    val df = spark.sparkContext.parallelize(edges, parts).toDF("src", "dst")
+    val got = TrainPrep.connectedComponents(df)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == got.map(_._1).distinct.length, "one row per vertex")
     got.toMap
   }
 
   private def check(name: String, edges: Seq[(Long, Long)]): Unit =
-    Gates.foreach { gate =>
-      assert(labels(edges, gate) == reference(edges), s"$name gate=$gate")
+    Partitions.foreach { parts =>
+      assert(labels(edges, parts) == reference(edges), s"$name parts=$parts")
     }
 
-  test("random graphs: both paths equal a driver-side union-find") {
+  test("random graphs equal a driver-side union-find") {
     val rnd = new scala.util.Random(17)
     (0 until 3).foreach { t =>
       // sparse ids, some negative, so id order is not insertion order

@@ -200,7 +200,7 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
     // candidates: no pair lost between batches, none double-counted
     val streamed = spark.read.parquet(s"$base/pairs").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = LLMOps.minhashCandidates(LLMOps.shinglePostings(spark, sfDir))
+    val batch = LLMOps.minhashCandidates(LLMOps.shingleSets(spark, sfDir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed.nonEmpty)
     assert(streamed == batch)
@@ -317,7 +317,7 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
     // when the later endpoint arrived
     val streamedPairs = spark.read.parquet(s"$base/out/pairs").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batchPairs = LLMOps.minhashCandidates(LLMOps.shinglePostings(spark, sfDir))
+    val batchPairs = LLMOps.minhashCandidates(LLMOps.shingleSets(spark, sfDir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamedPairs.nonEmpty)
     assert(streamedPairs == batchPairs)
