@@ -18,9 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The band-key formula has two spellings, both built from this object:
   * the kernel, evaluated row-locally on per-doc sets
-  * ([[graft.operators.LLMOps.minhashCandidates]], which never explodes
-  * postings), and [[bandArray]] over 16 `min` aggregates of
-  * [[hash]] for the callers that start from (doc_id, h) postings
+  * ([[graft.operators.LLMOps.minhashBandKeys]] — the candidates, the
+  * persisted snapshot and the delta — which never explodes postings),
+  * and [[bandArray]] over 16 `min` aggregates of [[hash]] for the
+  * callers that start from (doc_id, h) postings
   * ([[graft.operators.LLMOps.minhashBandArray]]) — those mins combine
   * map-side, where collecting each doc's postings would ship every one.
   * The DuckDB oracle spells the same math with `list_min`. Null

@@ -287,7 +287,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     * INSIDE a live stream's lifetime (the fingerprint store's
     * first-non-empty-batch leg) keeps `_batch-*` flags — the same
     * checkpoint that committed them is still driving; an explicit
-    * START-FRESH seeding (the MinHash snapshot's writeMinhashSnapshot)
+    * START-FRESH seeding (the MinHash snapshot's bootstrap)
     * drops them — a NEW stream with a new checkpoint restarts batch ids
     * at 0, and stale flags would silently no-op its first batches.
     *
@@ -746,4 +746,26 @@ object BatchStore {
     */
   final case class VacuumStats(droppedRows: Long, rewrittenFiles: Int,
       untouchedFiles: Int)
+
+  /** The root `entries` of a layout a store's catalogs replaced (a
+    * persisted-format change) and `hint`, the call that re-bootstraps a
+    * store still in it.
+    */
+  final case class Legacy(entries: Seq[String], hint: String) {
+    /** `st`, refused when its root holds a legacy entry and none of its
+      * catalogs — read as the current catalogs it would serve empty ones.
+      */
+    def refuse(s: SparkSession, st: BatchStore): BatchStore = {
+      def has(e: String) = st.fsOf(s).exists(new org.apache.hadoop.fs.Path(s"${st.dir}/$e"))
+      if (!st.catalogs.exists(has) && entries.exists(has))
+        throw new IllegalStateException(s"store at ${st.dir} has a legacy layout " +
+          s"(${entries.mkString("/ ")}/, no ${st.catalogs.mkString("/ ")}/); " +
+          s"re-bootstrap it with $hint")
+      st
+    }
+
+    /** Delete the legacy entries — the bootstrap leg that replaces the layout. */
+    def drop(s: SparkSession, st: BatchStore): Unit = entries.foreach(e =>
+      st.fsOf(s).delete(new org.apache.hadoop.fs.Path(s"${st.dir}/$e"), true))
+  }
 }

@@ -5,9 +5,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The banded near-duplicate kernel under every dedup surface: MinHash
-  * bands for text ([[LLMOps.minhashCandidates]], [[TrainPrep.fuzzyDecontam]]),
-  * LSH tables for embeddings ([[Similarity.nearDupPairs]]) and 8-bit hash
-  * bands for media fingerprints ([[Multimodal.hammingNearDupPairs]]).
+  * bands for text ([[LLMOps.minhashCandidates]], the delta join of a new
+  * batch against the persisted snapshot [[LLMOps.deltaDedupCandidates]],
+  * [[TrainPrep.fuzzyDecontam]]), LSH tables for embeddings
+  * ([[Similarity.nearDupPairs]]) and 8-bit hash bands for media
+  * fingerprints ([[Multimodal.hammingNearDupPairs]]).
   *
   * Each input row is one id plus `keys`, an `array<bigint>` or
   * `array<string>` whose position i holds band i's key; two rows are a

@@ -80,7 +80,8 @@ object FingerprintStore {
   private val Digests = "digests"
 
   /** The per-kind catalog directories of the layout `digests` replaced. */
-  private val LegacyCatalogs = Seq("image", "audio", "video", "ledger")
+  private val Legacy = BatchStore.Legacy(Seq("image", "audio", "video", "ledger"),
+    "FingerprintStore.bootstrap")
 
   private val LedgerKind = -1
 
@@ -89,15 +90,8 @@ object FingerprintStore {
   /** [[store]], refusing a store still in the legacy per-kind layout —
     * reading it as `digests` would serve an empty catalog.
     */
-  private def opened(s: SparkSession, dir: String): BatchStore = {
-    val fs = fsOf(s, dir)
-    def has(sub: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$sub"))
-    if (!has(Digests) && LegacyCatalogs.exists(has))
-      throw new IllegalStateException(s"fingerprint store at $dir has the " +
-        "legacy per-kind layout (image/ audio/ video/ ledger/, no digests/); " +
-        "re-bootstrap it with FingerprintStore.bootstrap")
-    store(dir)
-  }
+  private def opened(s: SparkSession, dir: String): BatchStore =
+    Legacy.refuse(s, store(dir))
 
   private def fsOf(s: SparkSession, dir: String) =
     new org.apache.hadoop.fs.Path(dir)
@@ -185,8 +179,7 @@ object FingerprintStore {
         "of 8 in [16,64]")
     val st = store(dir)
     st.cleanRootMetadata(s)
-    LegacyCatalogs.foreach(cat => fsOf(s, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/$cat"), true))
+    Legacy.drop(s, st)
     val rows = fusedDigests(s, media, audioBits)
     // REBALANCE before the write: the digest rows inherit the media
     // scan's partitioning (one partition per ~file-listing split), so a

@@ -184,8 +184,13 @@ object LLMOps {
     * row per id, [[Banded]]'s precondition.
     */
   def shingleSets(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(col("doc_id"), array_distinct(ShingleHash(col("text"), 3)).as("sh"))
+    shingleSetsOf(Tables.documents(s, d))
+
+  /** [[shingleSets(s,d)]] over an arbitrary (doc_id, text) frame — the
+    * snapshot writer and the delta shingle only the docs they are given.
+    */
+  def shingleSetsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), array_distinct(ShingleHash(col("text"), 3)).as("sh"))
 
   /** MinHash band-key array per doc (16 hashes, bands of 4) from (doc_id,
     * h) postings: (doc_id, band_keys, n_sh), position b of band_keys
@@ -193,9 +198,8 @@ object LLMOps {
     * doc's posting count, free from the same aggregate. The signature is
     * 16 `min` aggregates of [[graft.functions.MinhashBands.hash]], which
     * combine map-side, so only per-doc minima cross the shuffle; for the
-    * callers that start from postings (the snapshot, the delta and
-    * decontamination). Equal to the kernel [[minhashCandidates]]
-    * evaluates on per-doc sets (spec-pinned).
+    * callers that start from postings (decontamination). Equal to the
+    * kernel [[minhashBandKeys]] evaluates on per-doc sets (spec-pinned).
     */
   def minhashBandArray(postings: DataFrame): DataFrame = {
     val mins = (0 until MinhashBands.Hashes).map { k =>
@@ -208,76 +212,58 @@ object LLMOps {
         col("n_sh"))
   }
 
-  /** (doc_id, band_key) rows, the persisted [[MinhashSnapshot]] format. */
-  def minhashBands(postings: DataFrame): DataFrame =
-    minhashBandArray(postings)
-      .select(col("doc_id"), explode(col("band_keys")).as("band_key"))
+  /** (doc_id, band_keys) of per-doc shingle sets ([[shingleSets]]):
+    * the [[graft.functions.MinhashBands]] kernel, row-local, so no
+    * posting is exploded or shuffled. One row per input row — the
+    * [[Banded]] input shape and the persisted [[MinhashSnapshot]] row.
+    */
+  def minhashBandKeys(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), MinhashBands(col("sh")).as("band_keys"))
 
   /** LSH candidate pairs (doc_a < doc_b) of per-doc shingle sets
     * ([[shingleSets]]: (doc_id, sh), one row per id) via
-    * [[Banded.selfPairs]]: band keys come row-locally from the
-    * [[graft.functions.MinhashBands]] kernel, so no posting is exploded
-    * or shuffled, and the band join carries ids only.
+    * [[Banded.selfPairs]] over [[minhashBandKeys]]; the band join
+    * carries ids only.
     */
   def minhashCandidates(sets: DataFrame): DataFrame =
-    Banded.selfPairs(sets.select(col("doc_id"),
-        MinhashBands(col("sh")).as("band_keys")), "doc_id", "band_keys")
+    Banded.selfPairs(minhashBandKeys(sets), "doc_id", "band_keys")
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
 
   // ------------------------------------------- incremental (delta) dedup
 
-  /** Persist the MinHash band keys of `docs` as a dedup snapshot — the
-    * per-batch artifact a daily pipeline stores so dedup against history
-    * never re-reads history text. The snapshot is band keys, not raw
-    * signatures: ~64 bytes/doc regardless of document size, so 100 TB of
-    * corpus stores as a few hundred GB of snapshot. Since r17 the
-    * snapshot is a [[MinhashSnapshot]] store (the BatchStore lifecycle:
-    * exactly-once appends, compact, vacuum, recover); this is its
-    * bootstrap.
-    */
-  def writeMinhashSnapshot(docs: DataFrame, dir: String): Unit =
-    MinhashSnapshot.bootstrap(docs.sparkSession, docs, dir)
-
-  /** Delta-dedup candidates: LSH pairs touching at least one NEW doc,
-    * computed by shingling ONLY the new batch and joining its band keys
-    * against (stored snapshot ∪ the new batch itself). History's
-    * O(corpus) tokenize pass happened once, at snapshot-write time; the
-    * per-batch cost is O(batch) + a band-key join whose build side is the
-    * snapshot scan (two narrow columns). Pairs wholly inside history were
-    * emitted by earlier runs and are deliberately absent. Equals the
-    * full-corpus [[minhashCandidates]] restricted to pairs with a
-    * new-batch endpoint — which is exactly how the q_l40 oracle
-    * recomputes it from scratch.
+  /** Delta-dedup candidates: LSH pairs touching at least one NEW doc.
+    * Only the new batch is shingled; ONE [[Banded.crossPairs]] bands it
+    * against (stored snapshot ∪ itself), so the per-batch cost is O(batch)
+    * + a band join whose history side is the snapshot scan, one row per
+    * doc. Pairs wholly inside history were emitted by earlier runs and are
+    * absent. Equals the full-corpus [[minhashCandidates]] restricted to
+    * pairs with a new-batch endpoint — how the q_l40 oracle recomputes it.
+    *
+    * Precondition: no id of `newDocs` is in the snapshot yet, which the
+    * [[MinhashSnapshot]] batch contract (`beginBatch` before the pairs,
+    * `append` after) guarantees. Then each side holds one row per id, and
+    * keeping a right row only when it is history (`hist`) or
+    * `id_a < id_b` emits each pair exactly once with no distinct.
     */
   def deltaDedupCandidates(s: SparkSession, newDocs: DataFrame,
       snapshotDir: String): DataFrame = {
-    // fresh is referenced twice in deltaPairs: without lineage truncation
-    // the batch would be shingled and minhashed TWICE per invocation —
-    // bands are ~64 B/doc, so the checkpoint is cheap
-    val fresh = minhashBands(shinglePostingsOf(newDocs)).localCheckpoint()
-    deltaPairs(fresh, MinhashSnapshot.bands(s, snapshotDir))
-  }
-
-  /** The delta band join: distinct (doc_a < doc_b) pairs between the
-    * (doc_id, band_key) rows of `fresh` and those of `history ∪ fresh`.
-    * It stays outside [[Banded]] because persisted snapshot rows carry no
-    * per-doc band array to find a pair's first agreeing band, so a pair
-    * colliding in several bands is collapsed by a distinct instead.
-    */
-  def deltaPairs(fresh: DataFrame, history: DataFrame): DataFrame = {
-    val all = history.select("doc_id", "band_key").unionByName(fresh)
-    fresh.select(col("band_key"), col("doc_id").as("id_a"))
-      .join(all.select(col("band_key"), col("doc_id").as("id_b")), Seq("band_key"))
-      .filter(col("id_a") =!= col("id_b"))
+    // fresh is referenced on both sides of the join: without lineage
+    // truncation the batch would be shingled and minhashed TWICE per
+    // invocation — band keys are ~64 B/doc, so the checkpoint is cheap
+    val fresh = minhashBandKeys(shingleSetsOf(newDocs))
+      .withColumn("hist", lit(false)).localCheckpoint()
+    val all = MinhashSnapshot.bands(s, snapshotDir)
+      .withColumn("hist", lit(true)).unionByName(fresh)
+    Banded.crossPairs(fresh, all, "doc_id", "band_keys", Seq("hist"))
+      .filter(col("hist_b") || col("id_a") < col("id_b"))
       .select(least(col("id_a"), col("id_b")).as("doc_a"),
         greatest(col("id_a"), col("id_b")).as("doc_b"))
-      .distinct()
   }
 
   /** Q-L40 — incremental dedup across corpus snapshots, end-to-end: the
     * oldest 80% of the corpus (by doc_id — the stand-in for yesterday's
-    * date partitions) is snapshotted via [[writeMinhashSnapshot]], then
-    * the newest 20% dedups against history + itself via
+    * date partitions) is snapshotted via [[MinhashSnapshot.bootstrap]],
+    * then the newest 20% dedups against history + itself via
     * [[deltaDedupCandidates]] without re-shingling a single history doc
     * (plan-pinned in EngineSpec: every documents scan carries the
     * new-batch pushed filter). The DuckDB oracle recomputes the FULL
@@ -292,7 +278,7 @@ object LLMOps {
     // per-JVM, per-corpus snapshot dir (see l40SnapDir): bounded /tmp
     // use, no cross-corpus aliasing for held frames
     val snap = LLMOps.l40SnapDir(d)
-    writeMinhashSnapshot(docs.filter(col("doc_id") < cutoff), snap)
+    MinhashSnapshot.bootstrap(s, docs.filter(col("doc_id") < cutoff), snap)
     deltaDedupCandidates(s, docs.filter(col("doc_id") >= cutoff), snap)
       .orderBy("doc_a", "doc_b")
   }

@@ -4,38 +4,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.io.BatchStore
 
 /** The persisted MinHash band-key snapshot behind incremental (delta)
-  * text dedup — [[LLMOps.deltaDedupCandidates]] / q_l40 and the
-  * streaming sink [[graft.streaming.StreamOps.streamingDeltaDedup]] —
-  * run on the SAME [[graft.io.BatchStore]] lifecycle as the media
-  * fingerprint store: namespaced `_batch-<tag>` flags with
-  * remnant-delete on replay, snapshot-pointer compact with flag→
-  * watermark rollup, doc_id vacuum (a forgotten doc's band keys leave
-  * the snapshot too — dedup history is derived PII the
-  * right-to-be-forgotten path must also reclaim), and deletion-only
-  * recover.
+  * text dedup — [[LLMOps.deltaDedupCandidates]] / q_l40, the streaming
+  * sink [[graft.streaming.StreamOps.streamingDeltaDedup]] and the ingest
+  * pipeline — on the [[graft.io.BatchStore]] lifecycle: namespaced
+  * `_batch-<tag>` flags with remnant-delete on replay (a replayed batch
+  * lands exactly once, never a stacked second copy), snapshot-pointer
+  * compact with flag→watermark rollup, doc_id vacuum (dedup history is
+  * derived PII the right-to-be-forgotten path must also reclaim) and
+  * deletion-only recover. Single maintainer, snapshot-isolated readers.
   *
-  * Before this store existed the snapshot was a bare mode("append")
-  * parquet dir: a batch replayed after a crash stacked a second copy of
-  * its band keys forever — tolerable for CORRECTNESS only because
-  * duplicate bands merely produce duplicate candidates that a
-  * downstream distinct removes, but each stacked copy re-inflates the
-  * LSH bucket join's recall-side work on every later batch. Under the
-  * BatchStore discipline a replay rewrites instead: the remnants of the
-  * crashed attempt are deleted and the batch lands exactly once
-  * (append-equals-rebuild, spec-pinned in EngineSpec mirroring the
-  * media store's crash legs).
-  *
-  * One catalog: `bands/` — (doc_id, band_key) rows, ~64 B/doc regardless
-  * of document size, so 100 TB of corpus stores as a few hundred GB of
-  * snapshot. Single maintainer, snapshot-isolated readers (the
-  * BatchStore contract).
+  * One catalog: `band_keys/` — one (doc_id, band_keys: array<string>)
+  * row per doc ([[LLMOps.minhashBandKeys]], position b holding band b's
+  * key): ~64 B/doc regardless of document size, written row-locally with
+  * no shuffle, and the [[Banded]] input shape, so the delta finds each
+  * pair's first agreeing band with no distinct. The layout is a
+  * persisted format: a store that still holds the older exploded
+  * `bands/` catalog ((doc_id, band_key) rows) is refused by [[append]],
+  * [[bands]], [[compact]] and [[vacuum]], and [[bootstrap]] over it
+  * deletes `bands/`.
   */
 object MinhashSnapshot {
 
-  private def store(dir: String) = BatchStore(dir, Seq("bands"))
+  private val BandKeys = "band_keys"
+
+  private val Legacy = BatchStore.Legacy(Seq("bands"), "MinhashSnapshot.bootstrap")
+
+  private def store(dir: String) = BatchStore(dir, Seq(BandKeys))
+
+  private def opened(s: SparkSession, dir: String): BatchStore =
+    Legacy.refuse(s, store(dir))
 
   private def bandsOf(docs: DataFrame): DataFrame =
-    LLMOps.minhashBands(LLMOps.shinglePostingsOf(docs))
+    LLMOps.minhashBandKeys(LLMOps.shingleSetsOf(docs))
 
   /** Build the snapshot from scratch over `docs` (possibly empty — the
     * seed a streaming run starts from). Mode-overwrite idempotent;
@@ -51,9 +51,10 @@ object MinhashSnapshot {
   def bootstrap(s: SparkSession, docs: DataFrame, dir: String): Unit = {
     val st = store(dir)
     st.cleanRootMetadata(s, dropBatchFlags = true)
-    val bands = bandsOf(docs)
-    bands.write.mode("overwrite").parquet(s"$dir/bands")
-    st.publishBootstrap(s, Map("bands" -> bands.schema))
+    Legacy.drop(s, st)
+    val rows = bandsOf(docs)
+    rows.write.mode("overwrite").parquet(s"$dir/$BandKeys")
+    st.publishBootstrap(s, Map(BandKeys -> rows.schema))
   }
 
   /** Exactly-once batch append of `newDocs`' band keys. `batchId` ≥ 0 =
@@ -65,13 +66,13 @@ object MinhashSnapshot {
     */
   def append(s: SparkSession, newDocs: DataFrame, dir: String,
       batchId: Long = -1L): Unit = {
-    val st = store(dir)
+    val st = opened(s, dir)
     val flags = st.loadFlags(s)
     val tag = st.resolveTag(flags, batchId)
     if (flags.committed(tag)) return
     st.recover(s)
     st.removeRemnants(s, tag)
-    st.landBatchFiles(s, bandsOf(newDocs), "bands", tag)
+    st.landBatchFiles(s, bandsOf(newDocs), BandKeys, tag)
     st.commitFlag(s, tag)
   }
 
@@ -87,17 +88,18 @@ object MinhashSnapshot {
     st.removeRemnants(s, batchId.toString)
   }
 
-  /** The snapshot's band keys — snapshot-resolved ([[BatchStore.readCat]]):
-    * retired files are invisible, post-snapshot batch files included.
+  /** The snapshot's (doc_id, band_keys) rows — snapshot-resolved
+    * ([[BatchStore.readCat]]): retired files are invisible, post-snapshot
+    * batch files included.
     */
   def bands(s: SparkSession, dir: String): DataFrame =
-    store(dir).readCat(s, "bands")
+    opened(s, dir).readCat(s, BandKeys)
 
   def batchCommitted(s: SparkSession, dir: String, batchId: Long): Boolean =
     store(dir).batchCommitted(s, batchId)
 
   /** Fold per-batch file sprawl + roll flags into the watermark. */
-  def compact(s: SparkSession, dir: String): Unit = store(dir).compact(s)
+  def compact(s: SparkSession, dir: String): Unit = opened(s, dir).compact(s)
 
   def dataFileCount(s: SparkSession, dir: String): Int =
     store(dir).dataFileCount(s)
@@ -107,8 +109,5 @@ object MinhashSnapshot {
   /** Forget docs absent from `liveDocs` — band keys are derived PII. */
   def vacuum(s: SparkSession, dir: String,
       liveDocs: DataFrame): BatchStore.VacuumStats =
-    store(dir).vacuumByDocId(s, liveDocs)
-
-  def reapRetired(s: SparkSession, dir: String): Int =
-    store(dir).reapRetired(s)
+    opened(s, dir).vacuumByDocId(s, liveDocs)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -179,24 +179,16 @@ object StreamOps extends Serializable {
     * continuous pipeline. Each micro-batch of documents finds its LSH
     * duplicate-candidate pairs against everything seen so far via
     * [[graft.operators.LLMOps.deltaDedupCandidates]] (shingling ONLY the
-    * batch; history is the stored band-key snapshot in `snapshotDir`),
-    * appends the pairs to `pairsDir`, then publishes its own band keys
-    * into the snapshot so later batches dedup against it. Every candidate
-    * pair is emitted exactly once across a run — by the micro-batch that
-    * completes it — so the union of emitted pairs equals the full-corpus
-    * batch candidates (parity-checked in StreamBatchParitySpec).
-    *
-    * Exactly-once under foreachBatch replay (r17, the
-    * [[graft.operators.MinhashSnapshot]] lifecycle): the snapshot side
-    * appends under the stream's batch id — committed id replays as a
-    * no-op; a crashed attempt's half-landed bands are remnant-deleted
-    * BEFORE the replay recomputes its pairs — and the pairs side writes
-    * each batch into its own `ingest_batch=<id>` partition with
-    * OVERWRITE (the ingestTable idiom), so the replay rewrites the same
-    * subdirectory instead of appending duplicate rows. Seed
-    * `snapshotDir` with [[graft.operators.LLMOps.writeMinhashSnapshot]]
-    * (possibly of an empty frame) before starting; readers see
-    * `ingest_batch` as a trailing partition column on the pairs table.
+    * batch; history is the [[graft.operators.MinhashSnapshot]] store in
+    * `snapshotDir`), writes them to `pairsDir`, then appends its own band
+    * keys to the snapshot so later batches dedup against it. Every
+    * candidate pair is emitted exactly once across a run — by the
+    * micro-batch that completes it — so the union of emitted pairs equals
+    * the full-corpus batch candidates (parity-checked in
+    * StreamBatchParitySpec). Seed `snapshotDir` with
+    * `MinhashSnapshot.bootstrap` (possibly of an empty frame) before
+    * starting; readers see `ingest_batch` as a trailing partition column
+    * on the pairs table.
     */
   def streamingDeltaDedup(docs: DataFrame, snapshotDir: String,
       pairsDir: String, checkpoint: String)
@@ -204,21 +196,29 @@ object StreamOps extends Serializable {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{LLMOps, MinhashSnapshot}
-        val s = batch.sparkSession
-        if (!MinhashSnapshot.batchCommitted(s, snapshotDir, batchId)) {
-          // clear a torn prior attempt FIRST: its half-landed bands must
-          // not feed this replay's own pair computation
-          MinhashSnapshot.beginBatch(s, snapshotDir, batchId)
-          // pairs BEFORE publishing this batch's bands: the snapshot must
-          // hold strictly-earlier docs when the delta runs, or the batch
-          // would pair against itself through both sides
-          LLMOps.deltaDedupCandidates(s, batch, snapshotDir)
-            .write.mode("overwrite")
-            .parquet(s"$pairsDir/ingest_batch=$batchId")
-          MinhashSnapshot.append(s, batch, snapshotDir, batchId)
-        }
+        deltaDedupBatch(batch, batchId, snapshotDir, pairsDir)
       }
+
+  /** One [[streamingDeltaDedup]] micro-batch, also [[ingestPipeline]]'s
+    * step 3, exactly once under foreachBatch replay: a committed batch id
+    * no-ops; otherwise a torn attempt's half-landed bands are removed
+    * FIRST (they must not feed the replay's pairs), the pairs overwrite
+    * the batch's own `ingest_batch=<id>` partition, and the band keys
+    * land last, so the delta sees strictly-earlier docs (its
+    * precondition).
+    */
+  private def deltaDedupBatch(batch: DataFrame, batchId: Long,
+      snapshotDir: String, pairsDir: String): Unit = {
+    import graft.operators.{LLMOps, MinhashSnapshot}
+    val s = batch.sparkSession
+    if (!MinhashSnapshot.batchCommitted(s, snapshotDir, batchId)) {
+      MinhashSnapshot.beginBatch(s, snapshotDir, batchId)
+      LLMOps.deltaDedupCandidates(s, batch, snapshotDir)
+        .write.mode("overwrite")
+        .parquet(s"$pairsDir/ingest_batch=$batchId")
+      MinhashSnapshot.append(s, batch, snapshotDir, batchId)
+    }
+  }
 
   /** Streaming parquet ingest that keeps the table's stats manifest
     * ([[graft.io.StatsManifest]]) current: each micro-batch appends its
@@ -701,9 +701,10 @@ object StreamOps extends Serializable {
     *      `manifest/`  — the stats manifest incrementally republished
     *                    (only the new files get footer reads);
     *   3. `pairs/`    — near-dup candidate pairs touching this batch,
-    *                    banded against the running MinHash snapshot
-    *                    (history is never re-shingled), appended; and
-    *      `snapshot/` — the batch's band keys merged into the snapshot.
+    *                    banded against the running snapshot, and
+    *      `snapshot/` — a [[graft.operators.MinhashSnapshot]] the batch's
+    *                    band keys are then appended to (seeded empty once,
+    *                    when absent): [[streamingDeltaDedup]]'s body.
     * One checkpoint-resident `_graft_last_batch` marker skips fully
     * committed batches under foreachBatch's at-least-once replay (same
     * identity contract as [[ingestChunkStore]], documented there), and
@@ -714,12 +715,13 @@ object StreamOps extends Serializable {
     * store's append is a key-sized anti-join (already-landed chunks
     * don't re-land), the manifest append left-semi-joins the live file
     * listing (rows for overwritten files drop out), and the snapshot
-    * merge distincts (a pre-crash band copy doesn't stack). Readers of
-    * the partitioned sinks see `ingest_batch` as a trailing partition
-    * column. Accumulated `pairs/` over
-    * any batch split equals the batch q_l06 full-corpus candidate set:
-    * within-batch pairs surface when the batch arrives, cross-batch pairs
-    * when their later endpoint does — pinned in StreamBatchParitySpec.
+    * append is exactly-once under the stream's batch id — a batch lands
+    * O(batch) files, never rewriting history. Readers of the partitioned
+    * sinks see `ingest_batch` as a trailing partition column. Accumulated
+    * `pairs/` over any batch split equals the batch q_l06 full-corpus
+    * candidate set: within-batch pairs surface when the batch arrives,
+    * cross-batch pairs when their later endpoint does — pinned in
+    * StreamBatchParitySpec.
     */
   def ingestPipeline(docs: DataFrame, baseDir: String,
       checkpoint: String,
@@ -727,12 +729,20 @@ object StreamOps extends Serializable {
       decontamBench: Option[DataFrame] = None,
       decontamThreshold: Double = 0.5)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.{LLMOps, TrainPrep}
+    import graft.operators.{MinhashSnapshot, TrainPrep}
     // the static benchmark side is shingled ONCE and persisted, outside
     // the stream (the decontamGate contract): batches pay only their own
     // shingling, and a restarted stream reloads instead of re-shingling
     val benchPosts = decontamBench.map(bench =>
       persistedBenchPostings(bench, s"$baseDir/_bench_postings"))
+    // seeded only when absent: a restarted stream keeps the history its
+    // committed batches appended
+    val snapDir = s"$baseDir/snapshot"
+    val ss = docs.sparkSession
+    val snapPath = new org.apache.hadoop.fs.Path(snapDir)
+    if (!snapPath.getFileSystem(ss.sparkContext.hadoopConfiguration).exists(snapPath))
+      MinhashSnapshot.bootstrap(ss, ss.createDataFrame(ss.sparkContext.emptyRDD[Row],
+        docs.select("doc_id", "text").schema), snapDir)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -806,24 +816,7 @@ object StreamOps extends Serializable {
           updated.write.mode("overwrite").parquet(manifestDir)
 
           // 3) banded delta-dedup against the running snapshot
-          val snapDir = s"$baseDir/snapshot"
-          val fresh = LLMOps.minhashBands(LLMOps.shinglePostingsOf(
-            b.select("doc_id", "text"))).localCheckpoint()
-          val history =
-            if (dataExists(snapDir) &&
-                StatsManifest.listParquet(s, snapDir).nonEmpty)
-              s.read.parquet(snapDir).select("doc_id", "band_key")
-            else fresh.limit(0)
-          LLMOps.deltaPairs(fresh, history)
-            .write.mode("overwrite")
-            .parquet(s"$baseDir/pairs/ingest_batch=$batchId")
-          // merge the batch's keys into the snapshot (materialized first:
-          // it reads the directory being overwritten). distinct makes
-          // the merge idempotent under partial-failure replay — a batch
-          // whose bands already landed before the crash must not stack a
-          // second copy of every key into the snapshot forever
-          val merged = history.unionByName(fresh).distinct().localCheckpoint()
-          merged.write.mode("overwrite").parquet(snapDir)
+          deltaDedupBatch(b, batchId, snapDir, s"$baseDir/pairs")
 
           writeMarker(fs, marker, batchId)
         }

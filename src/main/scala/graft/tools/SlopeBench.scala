@@ -553,11 +553,11 @@ object SlopeBench {
           t(LLMOps.deltaDedupCandidates(s, batch, sdir)
             .write.format("noop").mode("overwrite").save()),
           t(MinhashSnapshot.append(s, batch, sdir, batchId = 0L)),
-          { // the pre-store baseline: bare mode-append of the same bands
-            LLMOps.minhashBands(LLMOps.shinglePostingsOf(hist))
-              .write.mode("overwrite").parquet(pdir)
-            t(LLMOps.minhashBands(LLMOps.shinglePostingsOf(batch))
-              .write.mode("append").parquet(pdir))
+          { // the pre-store baseline: bare mode-append of the same
+            // (doc_id, band_keys) rows the store lands
+            def rows(d: DataFrame) = LLMOps.minhashBandKeys(LLMOps.shingleSetsOf(d))
+            rows(hist).write.mode("overwrite").parquet(pdir)
+            t(rows(batch).write.mode("append").parquet(pdir))
           },
           t(MinhashSnapshot.compact(s, sdir)))
         rm(sdir); rm(pdir)

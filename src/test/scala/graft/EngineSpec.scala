@@ -1980,7 +1980,8 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
       spark.sparkContext.hadoopConfiguration)
     MinhashSnapshot.bootstrap(spark, docs, ref) // the expected end state
     def bandSet(d: String) = MinhashSnapshot.bands(spark, d)
-      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      .collect().map(r => (r.getLong(0), r.getSeq[String](1).mkString(" ")))
+      .sorted.toSeq
     val want = bandSet(ref)
 
     MinhashSnapshot.bootstrap(spark,
@@ -1993,7 +1994,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     // bare mode-append snapshot this store replaced stacked a second
     // copy of every band key here)
     fs.delete(new Path(s"$dir/_batch-7"), false)
-    val rem = fs.globStatus(new Path(s"$dir/bands/batch7-*"))
+    val rem = fs.globStatus(new Path(s"$dir/band_keys/batch7-*"))
     assert(rem.nonEmpty)
     fs.delete(rem.head.getPath, false) // half-landed: drop one file
     MinhashSnapshot.append(spark,
@@ -2019,8 +2020,8 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     MinhashSnapshot.compact(spark, dir)
     assert(bandSet(dir) == want, "compact must not move a row")
     assert(MinhashSnapshot.dataFileCount(spark, dir) < filesBefore)
-    assert(preplanned.collect().map(r => (r.getLong(0), r.getString(1)))
-      .sorted.toSeq == want,
+    assert(preplanned.collect()
+      .map(r => (r.getLong(0), r.getSeq[String](1).mkString(" "))).sorted.toSeq == want,
       "a reader planned before the compact must materialize after it")
     assert(MinhashSnapshot.batchCommitted(spark, dir, 7L),
       "rollup must keep committed batches committed")
@@ -2040,6 +2041,23 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(!MinhashSnapshot.batchCommitted(spark, dir, 7L),
       "bootstrap must start history fresh")
     assert(MinhashSnapshot.bands(spark, dir).isEmpty)
+    // OLD LAYOUT — exploded (doc_id, band_key) rows in bands/, no
+    // band_keys/: refused with a re-bootstrap message, and bootstrap
+    // over it replaces the layout
+    val old = java.nio.file.Files.createTempDirectory("graft-mhs-old").toString
+    import spark.implicits._
+    Seq((1L, "0:1:2:3:4")).toDF("doc_id", "band_key").write.parquet(s"$old/bands")
+    def refused(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage.contains("re-bootstrap"), e.getMessage)
+    }
+    refused(MinhashSnapshot.append(spark, docs.limit(3), old))
+    refused(MinhashSnapshot.bands(spark, old))
+    refused(MinhashSnapshot.compact(spark, old))
+    refused(MinhashSnapshot.vacuum(spark, old, docs))
+    MinhashSnapshot.bootstrap(spark, docs, old)
+    assert(!fs.exists(new Path(s"$old/bands")), "bands/ survived bootstrap")
+    assert(bandSet(old) == want)
   }
 
   test("delta dedup: new batch vs stored snapshot equals full recompute; " +
@@ -2049,7 +2067,8 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val cutoff = math.floor(
       (docs.agg(max(col("doc_id"))).head().getLong(0) + 1L) * 0.8).toLong
     val tmp = java.nio.file.Files.createTempDirectory("graft-l40").toString
-    LLMOps.writeMinhashSnapshot(docs.filter(col("doc_id") < cutoff), s"$tmp/snap")
+    graft.operators.MinhashSnapshot.bootstrap(spark,
+      docs.filter(col("doc_id") < cutoff), s"$tmp/snap")
     val delta = LLMOps.deltaDedupCandidates(spark,
       docs.filter(col("doc_id") >= cutoff), s"$tmp/snap")
       .orderBy("doc_a", "doc_b")
@@ -2071,7 +2090,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(fileScans(plan, "snap").size == 1)
     // and the band-build expression the operator checkpoints carries the
     // new-batch pushed filter: history text is never shingled
-    val bandPlan = LLMOps.minhashBands(LLMOps.shinglePostingsOf(
+    val bandPlan = LLMOps.minhashBandKeys(LLMOps.shingleSetsOf(
         docs.filter(col("doc_id") >= cutoff)))
       .queryExecution.executedPlan
     val docScans = fileScans(bandPlan, "documents.parquet")

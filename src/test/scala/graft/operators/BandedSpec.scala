@@ -84,6 +84,8 @@ class BandedSpec extends AnyFunSuite with SparkFixture
       LLMOps.minhashCandidates(LLMOps.shingleSets(spark, sfDir)))
     assertNoAggregateAboveBandJoin(TrainPrep.decontamCandidates(posts,
       posts.filter(col("doc_id") % 13 === 0)))
+    // the delta against the persisted snapshot (q_l40's path)
+    assertNoAggregateAboveBandJoin(LLMOps.qL40(spark, sfDir))
   }
 
   test("hammingNearDupPairs shuffles once, hash-partitioned, below its band join") {
@@ -114,7 +116,7 @@ class BandedSpec extends AnyFunSuite with SparkFixture
     assert(files.exists(_.endsWith(Paths.get("graft", "operators", "Banded.scala"))))
     val bad = offenders("FirstEqualIndex",
         Set("Banded.scala", "FirstEqualIndex.scala", "SimilarityJoinRewrite.scala")) ++
-      offenders("""Seq("band_key")""", Set("Banded.scala", "LLMOps.scala"))
+      offenders("\"band_key\"", Set("Banded.scala"))
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 }

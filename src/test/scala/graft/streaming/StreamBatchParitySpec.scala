@@ -190,7 +190,7 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
         dst.toFile.setLastModified(1000000000L + i * 60000L)
       }
     // empty seed snapshot: the run starts with no history
-    LLMOps.writeMinhashSnapshot(docs.limit(0), s"$base/snap")
+    graft.operators.MinhashSnapshot.bootstrap(spark, docs.limit(0), s"$base/snap")
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(landing.toString)
     val q = StreamOps.streamingDeltaDedup(stream, s"$base/snap",
@@ -209,7 +209,7 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
     // mode-append snapshot stacked duplicates under replay)
     import graft.operators.MinhashSnapshot
     val bands = MinhashSnapshot.bands(spark, s"$base/snap")
-    assert(bands.groupBy("doc_id", "band_key").count()
+    assert(bands.groupBy("doc_id").count()
       .where(col("count") > 1).isEmpty,
       "the band snapshot must never hold duplicate rows")
     // a committed stream batch replayed AFTER the run no-ops, even with
@@ -321,9 +321,11 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamedPairs.nonEmpty)
     assert(streamedPairs == batchPairs)
-    // and the snapshot now covers the whole corpus's band keys
-    assert(spark.read.parquet(s"$base/out/snapshot")
-      .select("doc_id").distinct().count() == docs.count())
+    // and the snapshot now holds exactly one band-key row per doc of
+    // the corpus
+    val snap = graft.operators.MinhashSnapshot.bands(spark, s"$base/out/snapshot")
+    assert(snap.count() == docs.count())
+    assert(snap.select("doc_id").distinct().count() == docs.count())
   }
 
   test("streaming ingest maintains the stats manifest: incremental append " +
