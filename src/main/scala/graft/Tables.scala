@@ -12,8 +12,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Schema from the table's footer on the driver ([[graft.io.Readers.parquet]]),
+    * so resolving a table runs no Spark job.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.io.Readers.parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

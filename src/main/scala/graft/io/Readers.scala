@@ -1,6 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.StructType
 
 /** Source readers (SURVEY §2.A A16, §2.C sources rows).
   *
@@ -13,7 +15,61 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Readers {
 
-  def parquet(s: SparkSession, path: String): DataFrame = s.read.parquet(path)
+  /** Parquet read whose schema comes from ONE footer, read on the driver.
+    *
+    * Spark's own (non-merging) inference reads one footer too, but in a
+    * Spark job per `read`. This picks the same file that inference would
+    * pick: `_common_metadata`, else `_metadata`, else the first data file
+    * by path. Other names starting with `_` or `.` are skipped. The footer
+    * is converted by Spark's `readSchemaFromFooter` with the session's
+    * conf, so flags such as `nanosAsLong` apply as they do in inference.
+    * The schema is then passed to the read, and no job runs until an
+    * action does.
+    *
+    * Fallback to plain `s.read.parquet(path)`: a path that is missing or
+    * a glob, a directory holding subdirectories (partition discovery), a
+    * directory with no data file (Spark raises its own error) and a
+    * session with `spark.sql.parquet.mergeSchema` on.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    footerSchema(s, path).fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
+
+  private def footerSchema(s: SparkSession, path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = PlanBridge.sqlConf(s)
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hadoop = PlanBridge.newHadoopConf(s)
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoop)
+    def hidden(f: FileStatus) =
+      f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith(".")
+    val leaves: Seq[FileStatus] =
+      try {
+        val top = fs.getFileStatus(root)
+        if (top.isFile) Seq(top)
+        else {
+          val kids = fs.listStatus(root).toSeq
+          if (kids.exists(k => k.isDirectory && !hidden(k))) Nil
+          else kids.filter(_.isFile)
+        }
+      } catch { case _: java.io.FileNotFoundException => Nil }
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(leaves.filterNot(hidden).sortBy(_.getPath.toString).headOption)
+      .map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoop),
+          HadoopReadOptions.builder(hadoop).withMetadataFilter(SKIP_ROW_GROUPS).build())
+        val footer = try reader.getFooter finally reader.close()
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(conf))
+      }
+  }
 
   /** Schema-evolution read: merge the footers of every file under `path`
     * into the union schema, so a directory whose older files predate an

@@ -19,9 +19,11 @@ import org.apache.spark.sql.functions._
   * `carry` column as `<name>_a` and `<name>_b`.
   *
   *  - First agreeing band: a pair agreeing in k bands meets in k rows of
-  *    the (pos, key) equi-join; the join keeps only the row at the first
-  *    agreeing position of the two key arrays it carries (codegen
-  *    [[graft.functions.FirstEqualIndex]]), not a pair-sized distinct.
+  *    the (pos, key) equi-join; the join keeps only the row whose two
+  *    carried key prefixes (the keys before `pos`) never agree (codegen
+  *    [[graft.functions.FirstEqualIndex]] = 0), not a pair-sized distinct.
+  *    The equi-join already gives agreement at `pos`, so each exploded
+  *    row ships only the prefix, not the whole key array.
   *  - Explicit spread: the exploded rows hash-repartition on (pos, key) to
   *    `defaultParallelism`. They are a few longs per band but each bucket
   *    fans out quadratically, and AQE, sizing from the pre-join bytes,
@@ -46,13 +48,14 @@ object Banded {
     def side(df: DataFrame, s: String) =
       df.select((col(id).as("id") +: col(keys).as("keys") +: carry.map(col)) :+
           posexplode(col(keys)).as(Seq("pos", "key")): _*)
+        .withColumn("keys", slice(col("keys"), lit(1), col("pos")))
         .repartition(df.sparkSession.sparkContext.defaultParallelism,
           col("pos"), col("key"))
         .select((Seq("pos", "key", "id", "keys") ++ carry)
           .map(c => col(c).as(s"${c}_$s")): _*)
     side(l, "a").join(side(r.getOrElse(l), "b"),
         col("pos_a") === col("pos_b") && col("key_a") === col("key_b") &&
-          FirstEqualIndex(col("keys_a"), col("keys_b")) === col("pos_a") + 1 &&
+          FirstEqualIndex(col("keys_a"), col("keys_b")) === 0 &&
           (if (r.isEmpty) col("id_a") < col("id_b") else lit(true)))
       .select(("id" +: carry).flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
   }

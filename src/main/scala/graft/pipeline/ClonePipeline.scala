@@ -2,8 +2,10 @@ package graft.pipeline
 
 import graft.{Par, Tables}
 import graft.ddl.DdlRenderer
-import graft.io.Writers
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.io.{Readers, Writers}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, sum, when}
+import org.apache.spark.sql.types.StructType
 
 /** Clone orchestration — the reference's `CloneDatabase`
   * (/root/reference/Program.cs:56-112) re-architected for Spark.
@@ -20,6 +22,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   - load-then-constrain ordering is preserved: constraint/index scripts
   *     are returned for application *after* the data phase, matching
   *     Program.cs:74-110.
+  *
+  * Metadata comes from work already done, not from re-reads: each source
+  * table's schema from one footer on the driver ([[graft.Tables.load]]),
+  * the DDL from those same schemas, a plain table's row count from an
+  * `Observation` on its write, and a laid-out table's from the `rows`
+  * column of the manifest built from its written footers.
   *
   * The target here is a directory of parquet tables (the corpus-native
   * sink); a JDBC target plugs in through graft.io.Writers.jdbc +
@@ -67,8 +75,14 @@ object ClonePipeline {
   def renderDdl(spark: SparkSession, srcDir: String,
       tables: Seq[String] = Tables.names, schema: String = "dbo",
       fullTextKeys: Map[String, String] = Map.empty): Map[String, String] =
-    tables.map { t =>
-      val st = Tables.table(spark, srcDir, t).schema
+    ddlOf(spark, srcDir, tables.map(t => t -> Tables.table(spark, srcDir, t).schema),
+      schema, fullTextKeys)
+
+  /** [[renderDdl]] over schemas the caller already holds. */
+  private def ddlOf(spark: SparkSession, srcDir: String,
+      schemas: Seq[(String, StructType)], schema: String = "dbo",
+      fullTextKeys: Map[String, String] = Map.empty): Map[String, String] =
+    schemas.map { case (t, st) =>
       // free-text columns get the full-text surface (A14): catalog
       // bootstrap + guarded CREATE FULLTEXT INDEX. CREATE FULLTEXT INDEX
       // requires its KEY INDEX to be a real unique index on the target
@@ -133,16 +147,14 @@ object ClonePipeline {
       val df = Tables.table(spark, srcDir, t)
       val path = s"$tgtDir/$t.parquet"
       // empty-table short circuit (Program.cs:612-616) is a no-op for
-      // parquet writes, so we just write; count is read from the
-      // written files' footers (no second scan of the source). The
-      // whole per-table layout decision lives in this ONE match: the
-      // clustered write AND the footer-only manifest (persisted NEXT
-      // TO the table, registered so this session's ManifestPruneRule
-      // prunes immediately) come from the same TableLayout.
-      val manifestDir = layouts.get(t) match {
-        case None =>
-          Writers.parquet(df, path)
-          None
+      // parquet writes, so we just write. The whole per-table layout
+      // decision lives in this ONE match: the clustered write AND the
+      // footer-only manifest (persisted NEXT TO the table, registered so
+      // this session's ManifestPruneRule prunes immediately) come from
+      // the same TableLayout. Neither branch re-reads the written table
+      // to count it.
+      val (rows, manifestDir) = layouts.get(t) match {
+        case None => (writeObserving(df, path, count(lit(1))), None)
         case Some(l) =>
           if (l.zOrder) Writers.zOrderedN(df, path, l.clusterCols, l.numFiles)
           else Writers.rangeClustered(df, path, l.clusterCols, l.numFiles)
@@ -152,33 +164,32 @@ object ClonePipeline {
             else l.clusterCols.filterNot(l.stringStatCols.contains)
           val m = graft.io.StatsManifest.build(spark, path, statCols,
             l.stringStatCols, l.bandWidth)
-          m.write.mode(SaveMode.Overwrite).parquet(mDir)
+          // the clustered write's range exchange samples (re-runs) its
+          // child, so an Observation there would count rows twice; the
+          // manifest's per-file footer row counts are summed by its write
+          val n = writeObserving(m, mDir, coalesce(sum(col("rows")), lit(0L)))
           graft.plans.ManifestRegistry.register(spark, path, m)
-          Some(mDir)
+          (n, Some(mDir))
       }
-      (t, spark.read.parquet(path).count(), manifestDir)
+      (t, rows, manifestDir, df.schema)
     })
     CloneReport(work, done.map(r => r._1 -> r._2).toMap,
-      renderDdl(spark, srcDir, work),
-      done.collect { case (t, _, Some(m)) => t -> m }.toMap)
+      ddlOf(spark, srcDir, done.map(r => r._1 -> r._4)),
+      done.collect { case (t, _, Some(m), _) => t -> m }.toMap)
+  }
+
+  /** Write `df` as parquet to `path` and return `metric` (a bigint
+    * aggregate) over the rows written, taken by an `Observation` on the
+    * write itself. Only for plans that run once per write.
+    */
+  private def writeObserving(df: DataFrame, path: String, metric: Column): Long = {
+    val obs = Observation()
+    Writers.parquet(df.observe(obs, metric.as("v")), path)
+    obs.get("v").asInstanceOf[Long]
   }
 
   final case class SyncReport(sourceRows: Long, deltaRows: Long, targetRows: Long)
 
-  /** Incremental sync — the capability the reference's full-copy clone
-    * (Program.cs:611: `SELECT * ... ToList()` every run) conspicuously
-    * lacks. Rows whose `versionCol` exceeds the target's high-water mark
-    * are the delta; the merge keeps the highest-version row per key
-    * (last-writer-wins upsert; ties on version keep one row arbitrarily,
-    * so use a monotone version — e.g. a modification timestamp).
-    *
-    * Scale shape: the delta scan is a pushed-down range filter on
-    * `versionCol` (prunes row groups / partitions at the source); the
-    * merge shuffles target ∪ delta once on the key — the standard
-    * merge-on-read compaction cost. The result lands in a fresh directory
-    * and replaces the target atomically-enough for a filesystem (write
-    * temp, delete old, rename), never reading and overwriting in place.
-    */
   /** MERGE-style last-writer-wins upsert — the set-based equivalent of
     * {{{
     * MERGE INTO target t USING updates u ON <keyCols equal>
@@ -189,11 +200,11 @@ object ClonePipeline {
     * source: Spark's actual `MERGE INTO` SQL requires a v2 catalog with
     * row-level-operation support (Delta/Iceberg — not in this build's
     * dependency set), so this API *is* the merge surface, and
-    * [[incrementalSync]] is its transactional wrapper. Deterministic on
-    * version ties: the updates side wins (matching the MERGE above),
-    * so re-merging the same batch is a no-op. One shuffle on the key
-    * columns; at scale the target should be bucketed by the same keys so
-    * successive merges reuse the layout.
+    * [[incrementalSync]] is its transactional wrapper. The highest
+    * `versionCol` per key wins; on a version tie the updates side wins
+    * (matching the MERGE above), so re-merging the same batch is a no-op.
+    * One shuffle on the key columns; at scale the target should be
+    * bucketed by the same keys so successive merges reuse the layout.
     */
   def merge(target: DataFrame, updates: DataFrame, keyCols: Seq[String],
       versionCol: String): DataFrame = {
@@ -208,27 +219,43 @@ object ClonePipeline {
       .drop("__graft_rn", "__graft_src")
   }
 
+  /** Incremental sync — the capability the reference's full-copy clone
+    * (Program.cs:611: `SELECT * ... ToList()` every run) conspicuously
+    * lacks. Rows whose `versionCol` exceeds the target's high-water mark
+    * are the delta (every source row when the target has no version, e.g.
+    * an empty target), upserted with [[merge]]'s last-writer-wins rule.
+    * A missing target is an initial load of the whole source.
+    *
+    * Scale shape: the delta scan is a pushed-down range filter on
+    * `versionCol` (prunes row groups / partitions at the source); the
+    * merge shuffles target ∪ delta once on the key — the standard
+    * merge-on-read compaction cost. The result lands in a fresh directory
+    * and replaces the target atomically-enough for a filesystem (write
+    * temp, delete old, rename), never reading and overwriting in place.
+    * Counts come from work the sync does anyway: the source is scanned
+    * once for both its row count and the delta's, the high-water mark
+    * aggregate also counts the target, and the written target is counted
+    * by an `Observation` on its write.
+    */
   def incrementalSync(spark: SparkSession, source: DataFrame, tgtPath: String,
       keyCols: Seq[String], versionCol: String): SyncReport = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val tgt = new org.apache.hadoop.fs.Path(tgtPath)
     if (!fs.exists(tgt)) {
-      Writers.parquet(source, tgtPath)
-      val n = spark.read.parquet(tgtPath).count()
+      val n = writeObserving(source, tgtPath, count(lit(1)))
       return SyncReport(n, n, n)
     }
-    val target = spark.read.parquet(tgtPath)
-    val hwm = target.agg(max(col(versionCol))).head().get(0)
-    val delta = source.filter(col(versionCol) > lit(hwm))
-    val deltaRows = delta.count()
+    val target = Readers.parquet(spark, tgtPath)
+    val t = target.agg(max(col(versionCol)), count(lit(1))).head()
+    val inDelta = if (t.isNullAt(0)) lit(true) else col(versionCol) > lit(t.get(0))
+    val c = source.agg(count(lit(1)), count(when(inDelta, true))).head()
+    val (sourceRows, deltaRows) = (c.getLong(0), c.getLong(1))
     if (deltaRows == 0)
-      return SyncReport(source.count(), 0, target.count())
-    val merged = merge(target, delta, keyCols, versionCol)
+      return SyncReport(sourceRows, 0, t.getLong(1))
+    val merged = merge(target, source.filter(inDelta), keyCols, versionCol)
     val tmp = new org.apache.hadoop.fs.Path(tgtPath + "__sync_tmp")
-    Writers.parquet(merged, tmp.toString)
+    val targetRows = writeObserving(merged, tmp.toString, count(lit(1)))
     // swap order matters for crash safety: park the live target aside
     // FIRST, then promote the new data, then drop the parked copy — a
     // crash at any point leaves either the old or the new target
@@ -243,7 +270,7 @@ object ClonePipeline {
       throw new java.io.IOException(s"rename $tmp -> $tgt failed")
     }
     fs.delete(old, true)
-    SyncReport(source.count(), deltaRows, spark.read.parquet(tgtPath).count())
+    SyncReport(sourceRows, deltaRows, targetRows)
   }
 
   /** Q-M01 — the clone-surface metadata query: corpus schemas rendered as

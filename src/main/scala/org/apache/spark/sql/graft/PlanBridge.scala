@@ -31,6 +31,17 @@ object PlanBridge {
   def planOf(df: DataFrame): LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
 
+  /** The session's SQL conf (classic `sessionState.conf`). */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  /** A Hadoop conf carrying the session's settings, as file sources build
+    * theirs (classic `sessionState.newHadoopConf`).
+    */
+  def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+      .newHadoopConf()
+
   /** Register a temp SQL function on a live session (the post-hoc
     * equivalent of `SparkSessionExtensions.injectFunction`, for sessions
     * the caller didn't build — Verify/Bench receive theirs ready-made).

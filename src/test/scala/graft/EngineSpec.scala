@@ -1740,6 +1740,18 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(r3.deltaRows == 0 && r3.targetRows == 4)
   }
 
+  test("incrementalSync into an existing empty target copies every source row") {
+    import spark.implicits._
+    val tgt = Files.createTempDirectory("graft-sync-empty").toString + "/t"
+    val v1 = Seq((1L, "a", 10L), (2L, "b", 10L), (3L, "c", 10L))
+      .toDF("id", "val", "version")
+    v1.filter(lit(false)).write.parquet(tgt)
+    // an empty target has no high-water mark: the whole source is the delta
+    val r = ClonePipeline.incrementalSync(spark, v1, tgt, Seq("id"), "version")
+    assert(r == ClonePipeline.SyncReport(3, 3, 3), r.toString)
+    assert(spark.read.parquet(tgt).count() == 3)
+  }
+
   test("bloom semi-filter: no false negatives, fp rate near design point") {
     import graft.operators.Scale
     val part = Tables.part(spark, sfDir).select(col("p_partkey"))

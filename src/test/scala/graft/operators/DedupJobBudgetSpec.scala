@@ -1,6 +1,9 @@
 package graft.operators
 
 import graft.{SparkFixture, Tables}
+import graft.io.Readers
+import graft.pipeline.ClonePipeline
+import graft.pipeline.ClonePipeline.TableLayout
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftSpecBridge
 import org.apache.spark.sql.functions._
@@ -8,10 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Spark-job ceilings for the dedup path's store and graph operators. At
-  * this size they are bound by job count (driver time between jobs), not
-  * by data, so a job added back is the regression to catch; counts are
-  * deterministic where wall time is not.
+/** Spark-job ceilings for the dedup path's store and graph operators and
+  * for the clone and sync path. At this size they are bound by job count
+  * (driver time between jobs), not by data, so a job added back is the
+  * regression to catch; counts are deterministic where wall time is not.
   */
 class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture {
 
@@ -50,5 +53,39 @@ class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture {
       val jobs = jobsOf(run())
       assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
     }
+  }
+
+  test("Readers.parquet, clone, layout clone and sync stay within their " +
+      "job ceilings") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    // a sync target at version 0 and a source re-versioning a tenth of
+    // its keys and adding ten more at version 1
+    spark.range(100).select(col("id"), (col("id") * 7).as("v"), lit(0L).as("version"))
+      .write.parquet(s"$dir/sync_v0")
+    spark.range(110).select(col("id"), (col("id") * 7 + 1).as("v"),
+        when(col("id") % 10 === 0 || col("id") >= 100, 1L).otherwise(0L).as("version"))
+      .write.parquet(s"$dir/sync_v1")
+    ClonePipeline.incrementalSync(spark, spark.read.parquet(s"$dir/sync_v0"),
+      s"$dir/synced", Seq("id"), "version")
+    val syncSource = spark.read.parquet(s"$dir/sync_v1")
+    val layouts = Map(
+      "lineitem" -> TableLayout(Seq("l_shipdate"), numFiles = 4),
+      "orders" -> TableLayout(Seq("o_custkey", "o_totalprice"), zOrder = true,
+        numFiles = 4))
+    // schemas and counts come from the read and the write already done:
+    // one job per plain table (its write), no re-read and no DDL job
+    try Seq[(String, Int, () => Unit)](
+      ("Readers.parquet", 0, () => Readers.parquet(spark, s"$dir/sync_v0").schema),
+      ("clone", 3, () => ClonePipeline.clone(spark, sfDir, s"$dir/clone",
+        Seq("region", "nation", "customer"))),
+      ("clone with layouts", 12, () => ClonePipeline.clone(spark, sfDir,
+        s"$dir/clone_layout", Seq("orders", "lineitem"), layouts = layouts)),
+      ("incrementalSync", 6, () => ClonePipeline.incrementalSync(spark,
+        syncSource, s"$dir/synced", Seq("id"), "version"))
+    ).foreach { case (op, ceiling, run) =>
+      val jobs = jobsOf(run())
+      assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
+    } finally layouts.keys.foreach(t => graft.plans.ManifestRegistry
+      .deregister(spark, s"$dir/clone_layout/$t.parquet"))
   }
 }
