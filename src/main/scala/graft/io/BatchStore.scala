@@ -6,20 +6,29 @@ import org.apache.spark.sql.types.StructType
 import graft.operators.TrainPrep.{pinTracked, unpinTracked}
 
 /** The exactly-once, snapshot-isolated commit discipline shared by every
-  * persisted incremental store in the engine — extracted from the media
-  * fingerprint store so the text-side stores (the MinHash band snapshot
-  * behind delta-dedup) run the SAME lifecycle instead of re-implementing
-  * it. One instance = one store root + its catalog subdirectories (all
-  * parquet, flat per catalog).
+  * persisted incremental store in the engine (the media fingerprint
+  * store, the MinHash band snapshot behind delta-dedup and the CDC chunk
+  * store). One instance = one store root + its catalog subdirectories
+  * (all parquet, flat per catalog).
+  *
+  * The lifecycle is written here once; a store supplies only its rows,
+  * through three entry points:
+  *   - [[bootstrap]]: one frame per catalog, written mode-overwrite and
+  *     published as snapshot 0 with the frames' schemas;
+  *   - [[append]]: a body that lands frames per catalog through the
+  *     lander it is handed, run exactly once per batch tag;
+  *   - [[vacuum]]: the live doc_ids, plus a key frame derived from them
+  *     for a catalog not keyed by doc_id; rows whose key is live stay.
+  * [[compact]], [[recover]] and [[reapRetired]] need no rows at all.
   *
   * == Append idempotence: namespaced batch flags ==
   *
   * Every append runs under a batch TAG, lands its rows as
   * `batch<tag>-*`-prefixed files in each catalog it touches, and commits
   * a root `_batch-<tag>` flag LAST. Committed tag → replay is a no-op;
-  * uncommitted tag → [[removeRemnants]] deletes the tag's files from
-  * every catalog, restoring the exactly-before-this-batch state, and the
-  * caller redoes the whole batch — replay rewrites, never duplicates.
+  * uncommitted tag → the append first deletes the tag's files from
+  * every catalog, restoring the exactly-before-this-batch state, and
+  * redoes the whole batch — replay rewrites, never duplicates.
   * Tags live in two DISJOINT namespaces: caller-supplied ids (a
   * streaming sink's checkpointed batch ids) use the bare numeric tag;
   * self-allocating callers draw `m<N>` MANUAL tags — so an ad-hoc append
@@ -31,7 +40,7 @@ import graft.operators.TrainPrep.{pinTracked, unpinTracked}
   * == Reader snapshot isolation: metadata-pointer commits ==
   *
   * Committed files are never renamed or deleted by a completing
-  * maintenance move. [[compact]]/[[vacuumByDocId]] land rewritten files
+  * maintenance move. [[compact]]/[[vacuum]] land rewritten files
   * under `fold-<token>-*` names ALONGSIDE the originals, then commit by
   * publishing a root snapshot (`_snapfiles-<k>` file list + `_snap-<k>`
   * flag, max wins — one file-create is the atomic commit point). Readers
@@ -88,10 +97,92 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
       .getFileSystem(s.sparkContext.hadoopConfiguration)
 
   // ------------------------------------------------------------------
+  // Bootstrap and append
+  // ------------------------------------------------------------------
+
+  /** Build the store from scratch: drop the root metadata a previous
+    * life left (see [[cleanRootMetadata]] for `dropBatchFlags`), write
+    * each catalog's frame mode-overwrite — concurrently, so one
+    * catalog's write back-fills the executors another's tail leaves
+    * idle — then publish snapshot 0 with the written frames' schemas,
+    * the commit point [[snapshotExists]] reads. A torn bootstrap re-runs
+    * idempotently.
+    */
+  def bootstrap(s: SparkSession, frames: Map[String, DataFrame],
+      dropBatchFlags: Boolean): Unit = {
+    require(frames.keySet == catalogs.toSet,
+      s"bootstrap of $dir: frames for ${frames.keys.mkString(", ")}, " +
+        s"catalogs ${catalogs.mkString(", ")}")
+    cleanRootMetadata(s, dropBatchFlags)
+    graft.Par.all(frames.toSeq.map { case (cat, df) =>
+      () => df.write.mode("overwrite").parquet(s"$dir/$cat") })
+    val live = catalogs.map(cat => cat ->
+      StatsManifest.listParquet(s, s"$dir/$cat").map(nameOf).toSet).toMap
+    // a parquet read sees every column nullable, so the line says so too
+    val ddl = frames.map { case (cat, df) =>
+      cat -> StructType(df.schema.fields.map(_.copy(nullable = true))).toDDL }
+    publishSnapshot(s, Snapshot(0L, "bootstrap", live,
+      catalogs.map(_ -> Map.empty[String, Long]).toMap, ddl))
+  }
+
+  /** Run one batch exactly once under `batchId` (≥ 0: the caller's
+    * stream-namespace id; −1: the next free MANUAL tag). A committed tag
+    * is a no-op. Otherwise a torn maintenance move is rolled back and a
+    * crashed attempt's `batch<tag>-*` remnants are deleted — restoring
+    * the exactly-before-this-batch state, so `body` sees no row of its
+    * own earlier attempt — then `body` lands its frames through the
+    * lander it is handed (`land(catalog, frame)`), and the flag commits
+    * LAST. A body that throws leaves only remnants its replay removes.
+    */
+  def append(s: SparkSession, batchId: Long)(
+      body: ((String, DataFrame) => Unit) => Unit): Unit = {
+    val flags = loadFlags(s)
+    val tag = if (batchId >= 0L) batchId.toString else s"m${flags.nextManualId}"
+    if (flags.committed(tag)) return
+    recover(s)
+    catalogs.foreach(cat => deleteGlob(s, s"$cat/batch$tag-*"))
+    body((cat, df) => landBatchFiles(s, df, cat, tag))
+    commitFlag(s, tag)
+  }
+
+  /** Land `df`'s rows in `$dir/$cat` as `batch<tag>-*`-named files: write
+    * to a staging dir, rename each data file in with the batch prefix,
+    * drop the stage. The prefix is what makes a crashed batch's remnants
+    * identifiable (and deletable) on replay — a bare mode("append")
+    * write scatters anonymous part files that no retry could take back.
+    */
+  private def landBatchFiles(s: SparkSession, df: DataFrame, cat: String,
+      tag: String): Unit = {
+    val stage = s"$dir/.append-staged-$cat"
+    df.write.mode("overwrite").parquet(stage)
+    renameStagedIn(s, stage, cat, s"batch$tag")
+  }
+
+  /** Rename a staged write's parquet files into `cat` as
+    * `<prefix>-<i>-<name>`, drop the stage, return the new names.
+    */
+  private def renameStagedIn(s: SparkSession, stage: String, cat: String,
+      prefix: String): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val fs = fsOf(s)
+    fs.mkdirs(new Path(s"$dir/$cat"))
+    val names = StatsManifest.listParquet(s, stage).zipWithIndex.map {
+      case (f, i) =>
+        val p = new Path(f)
+        val name = s"$prefix-$i-${p.getName}"
+        require(fs.rename(p, new Path(s"$dir/$cat", name)),
+          s"rename $f into $dir/$cat failed")
+        name
+    }
+    fs.delete(new Path(stage), true)
+    names
+  }
+
+  // ------------------------------------------------------------------
   // Batch flags
   // ------------------------------------------------------------------
 
-  private[graft] def loadFlags(s: SparkSession): Flags = {
+  private def loadFlags(s: SparkSession): Flags = {
     import org.apache.hadoop.fs.Path
     val fs = fsOf(s)
     val flags = fs.globStatus(new Path(s"$dir/_batch-*"))
@@ -118,54 +209,14 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
   def batchCommitted(s: SparkSession, batchId: Long): Boolean =
     loadFlags(s).committed(batchId.toString)
 
-  /** The tag an append under `batchId` runs as: ≥ 0 → the bare numeric
-    * stream-namespace tag; −1 → the next free MANUAL tag.
+  /** Commit a tag's flag — the LAST step of an append, and the whole
+    * of a streaming bootstrap leg's batch commit.
     */
-  private[graft] def resolveTag(flags: Flags, batchId: Long): String =
-    if (batchId >= 0L) batchId.toString else s"m${flags.nextManualId}"
-
-  /** Commit a tag's flag — the LAST step of an append. */
   def commitFlag(s: SparkSession, tag: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_batch-$tag")
     val fs = fsOf(s)
     fs.mkdirs(p.getParent)
     fs.create(p, true).close()
-  }
-
-  /** Delete a crashed attempt's `batch<tag>-*` remnants from every
-    * catalog — the replay's first move, restoring the exactly-before-
-    * this-batch state.
-    */
-  def removeRemnants(s: SparkSession, tag: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(s)
-    catalogs.foreach { cat =>
-      val hits = fs.globStatus(new Path(s"$dir/$cat/batch$tag-*"))
-      if (hits != null) hits.foreach(h => fs.delete(h.getPath, false))
-    }
-  }
-
-  /** Land `df`'s rows in `$dir/$cat` as `batch<tag>-*`-named files: write
-    * to a staging dir, rename each data file in with the batch prefix,
-    * drop the stage. The prefix is what makes a crashed batch's remnants
-    * identifiable (and deletable) on replay — a bare mode("append")
-    * write scatters anonymous part files that no retry could take back.
-    */
-  def landBatchFiles(s: SparkSession, df: DataFrame, cat: String,
-      tag: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(s)
-    val stage = s"$dir/.append-staged-$cat"
-    df.write.mode("overwrite").parquet(stage)
-    fs.mkdirs(new Path(s"$dir/$cat"))
-    StatsManifest.listParquet(s, stage).zipWithIndex.foreach {
-      case (f, i) =>
-        val p = new Path(f)
-        require(fs.rename(p,
-          new Path(s"$dir/$cat", s"batch$tag-$i-${p.getName}")),
-          s"append: rename $f into $dir/$cat failed")
-    }
-    fs.delete(new Path(stage), true)
   }
 
   // ------------------------------------------------------------------
@@ -216,10 +267,9 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     * before the publish can still open its `_snapfiles`; a reader
     * spanning TWO publishes is outside the grace contract anyway).
     */
-  private def publishSnapshot(s: SparkSession, snap0: Snapshot): Unit = {
+  private def publishSnapshot(s: SparkSession, snap: Snapshot): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = fsOf(s)
-    val snap = snap0.copy(schemas = fillSchemas(s, snap0))
     val sb = new StringBuilder
     sb.append("token\t").append(snap.token).append('\n')
     for (cat <- catalogs) {
@@ -245,59 +295,24 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     }
   }
 
-  /** Publish snapshot 0 over whatever the catalogs currently hold — the
-    * bootstrap's commit, after its mode-overwrite catalog writes.
-    * `schemas` are the written frames' schemas: a catalog given here
-    * publishes its `S` line without reading a footer (a Spark job).
-    */
-  def publishBootstrap(s: SparkSession,
-      schemas: Map[String, StructType] = Map.empty): Unit = {
-    val live = catalogs.map(cat => cat ->
-      StatsManifest.listParquet(s, s"$dir/$cat")
-        .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet).toMap
-    // a parquet read sees every column nullable, so the line says so too
-    val ddl = schemas.map { case (cat, st) =>
-      cat -> StructType(st.fields.map(_.copy(nullable = true))).toDDL }
-    publishSnapshot(s, Snapshot(0L, "bootstrap", live,
-      catalogs.map(_ -> Map.empty[String, Long]).toMap, ddl))
-  }
-
-  /** Fill any missing per-catalog schema line: carry the prior
-    * snapshot's (schemas never change within a store's life — appenders
-    * land the bootstrap's shape), else read ONE referenced file's
-    * footer. A catalog with neither (empty at bootstrap) publishes no
-    * line and keeps the legacy read behavior.
-    */
-  private def fillSchemas(s: SparkSession, snap: Snapshot)
-      : Map[String, String] = {
-    val prior = currentSnapshot(s).map(_.schemas).getOrElse(Map.empty)
-    catalogs.flatMap { cat =>
-      snap.schemas.get(cat).orElse(prior.get(cat)).orElse {
-        (snap.live.getOrElse(cat, Set.empty).headOption
-          orElse snap.retired.getOrElse(cat, Map.empty).keysIterator
-            .nextOption())
-          .map(n => s.read.parquet(s"$dir/$cat/$n").schema.toDDL)
-      }.map(cat -> _)
-    }.toMap
-  }
-
   /** Drop every piece of root maintenance metadata a PREVIOUS life of
     * this store left behind — the re-bootstrap pre-clean. `dropBatchFlags`
     * decides the fate of committed-batch history: a bootstrap that runs
     * INSIDE a live stream's lifetime (the fingerprint store's
     * first-non-empty-batch leg) keeps `_batch-*` flags — the same
     * checkpoint that committed them is still driving; an explicit
-    * START-FRESH seeding (the MinHash snapshot's bootstrap)
-    * drops them — a NEW stream with a new checkpoint restarts batch ids
-    * at 0, and stale flags would silently no-op its first batches.
+    * START-FRESH seeding (the MinHash snapshot's and chunk store's
+    * bootstraps) drops them — a NEW stream with a new checkpoint restarts
+    * batch ids at 0, and stale flags would silently no-op its first
+    * batches.
     *
     * NOTE there is deliberately no migration from the pre-snapshot
     * (r16 trash-dance) layout: stores live no longer than their
     * fixtures; a store written by the old scheme is re-bootstrapped,
     * not recovered.
     */
-  def cleanRootMetadata(s: SparkSession,
-      dropBatchFlags: Boolean = false): Unit = {
+  private def cleanRootMetadata(s: SparkSession,
+      dropBatchFlags: Boolean): Unit = {
     // flags and watermarks are ONE unit of committed-batch history:
     // compact rolls flags INTO watermarks, so keeping flags while
     // dropping marks would silently un-commit every rolled-up id
@@ -306,7 +321,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     (globs :+ ".append-staged-*").foreach(deleteGlob(s, _))
   }
 
-  /** Recursively delete every root entry matching `glob`. */
+  /** Recursively delete every entry matching `glob` under the root. */
   private def deleteGlob(s: SparkSession, glob: String): Unit = {
     val fs = fsOf(s)
     val hits = fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/$glob"))
@@ -351,32 +366,11 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
       case Some(snap) =>
         val (live, retired) = (snap.live(cat), snap.retired(cat))
         listing.filter { f =>
-          val n = new org.apache.hadoop.fs.Path(f).getName
+          val n = nameOf(f)
           live(n) || (n.startsWith("batch") && !retired.contains(n) &&
             flags.committed(tagOfBatchFile(n)))
         }
     }
-  }
-
-  /** Rename a staged rewrite's parquet files into `cat` under the
-    * maintenance token's `fold-<token>-*` names (invisible until the
-    * snapshot publishes), drop the stage, return the new NAMES — the
-    * landing half every maintenance rewrite shares.
-    */
-  private[graft] def foldStagedIn(s: SparkSession, staged: String,
-      cat: String, token: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(s)
-    val names = StatsManifest.listParquet(s, staged).zipWithIndex.map {
-      case (f, i) =>
-        val p = new Path(f)
-        val name = s"fold-$token-$i-${p.getName}"
-        require(fs.rename(p, new Path(s"$dir/$cat", name)),
-          s"maintenance: rename $f into $dir/$cat failed")
-        name
-    }
-    fs.delete(new Path(staged), true)
-    names
   }
 
   /** Has this store ever committed a snapshot — i.e. completed a
@@ -425,9 +419,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
               // schema unknowable: a raw-dir fallback here could
               // resurrect retired/torn junk as the catalog's "schema"
               s"$dir/$cat: snapshot ${sn.k} predates schema persistence " +
-                "and references no surviving file; run a maintenance move " +
-                "(compact/vacuum) to publish a schema-bearing snapshot, " +
-                "or re-bootstrap the store")
+                "and references no surviving file; re-bootstrap the store")
         }
       case None => s.read.parquet(s"$dir/$cat") // pre-snapshot/legacy
     }
@@ -446,17 +438,32 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
   // Maintenance
   // ------------------------------------------------------------------
 
-  /** Start a maintenance move: stake the marker, roll back any PRIOR
-    * torn maintenance, reap retired files whose grace has expired (one
+  /** One maintenance move. It starts by staking the
+    * `_maint-inprogress-<token>` marker, rolling back any PRIOR torn
+    * maintenance, reaping retired files whose grace has expired (one
     * full maintenance cycle AND `retainRetiredMs` of wall clock —
     * younger retirees survive and carry into the next snapshot, see
-    * class doc), and delete remnants of torn appends so an uncommitted
+    * class doc), and deleting remnants of torn appends so an uncommitted
     * batch's rows can never be folded into a snapshot its replay
-    * couldn't take back. Returns (token, prior snapshot id, live file
-    * lists).
+    * couldn't take back.
+    *
+    * Then, per catalog, `rewrite(cat, liveFiles, read)` returns the live
+    * files it replaces and the frame that replaces them (`read` scans
+    * files with the snapshot's schema), or None to leave the catalog
+    * alone. The frame lands as `fold-<token>-*` files, invisible until
+    * the new snapshot — published only IF some catalog retired files —
+    * references them. Newly retired names are stamped with the current
+    * time; prior retirees whose grace hasn't expired carry forward with
+    * their ORIGINAL stamp, so back-to-back maintenance rounds extend
+    * nobody's window and shrink nobody's. Committed batch flags then
+    * roll up into the per-namespace watermarks, crash-monotone: the new
+    * mark is created BEFORE the flags it covers (and the older mark) are
+    * deleted, so no crash point ever makes a committed batch look
+    * uncommitted. The marker is dropped last.
     */
-  private[graft] def beginMaintenance(s: SparkSession)
-      : (String, Long, Map[String, Seq[String]]) = {
+  private def maintain(s: SparkSession, kind: String)(
+      rewrite: (String, Seq[String], Seq[String] => DataFrame) =>
+        Option[(Seq[String], DataFrame)]): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = fsOf(s)
     recover(s)
@@ -472,52 +479,37 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
         }
       }
     }
-    val flags = loadFlags(s)
+    val before = loadFlags(s)
     catalogs.foreach { cat =>
       val hits = fs.globStatus(new Path(s"$dir/$cat/batch*"))
       if (hits != null) hits.foreach { h =>
-        if (!flags.committed(tagOfBatchFile(h.getPath.getName)))
+        if (!before.committed(tagOfBatchFile(h.getPath.getName)))
           fs.delete(h.getPath, false)
       }
     }
-    val k = prior.map(_.k).getOrElse(-1L)
-    val live =
-      catalogs.map(cat => cat -> liveFilesIn(s, prior, flags, cat)).toMap
-    (token, k, live)
-  }
-
-  /** Finish a maintenance move: publish the new snapshot (IF any catalog
-    * retired files), roll committed batch flags up into the
-    * per-namespace watermarks, and drop the marker. Newly retired names
-    * are stamped with the current time; prior retirees whose grace
-    * hasn't expired (their file survived [[beginMaintenance]]'s reap)
-    * carry forward with their ORIGINAL stamp, so back-to-back
-    * maintenance rounds extend nobody's window and shrink nobody's.
-    * Watermark order is crash-monotone: the new mark is created BEFORE
-    * the flags it covers (and the older mark) are deleted, so no crash
-    * point ever makes a committed batch look uncommitted.
-    */
-  private[graft] def finishMaintenance(s: SparkSession, token: String,
-      priorK: Long, newLive: Map[String, Set[String]],
-      newRetired: Map[String, Set[String]]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(s)
-    if (newRetired.valuesIterator.exists(_.nonEmpty)) {
-      val now = System.currentTimeMillis()
-      val priorRetired: Map[String, Map[String, Long]] = currentSnapshot(s)
-        .map(_.retired)
-        .getOrElse(Map.empty[String, Map[String, Long]]
-          .withDefaultValue(Map.empty))
+    val moves = catalogs.map { cat =>
+      val files = liveFilesIn(s, prior, before, cat)
+      val names = files.map(nameOf).toSet
+      cat -> rewrite(cat, files, scan(s, prior, cat, _)).fold(
+        (names, Set.empty[String])) { case (replaced, frame) =>
+        val stage = s"$dir/.$kind-staged-$cat"
+        frame.write.mode("overwrite").parquet(stage)
+        val gone = replaced.map(nameOf).toSet
+        (names -- gone ++ renameStagedIn(s, stage, cat, s"fold-$token"), gone)
+      }
+    }.toMap
+    if (moves.valuesIterator.exists(_._2.nonEmpty)) {
+      val stamped = System.currentTimeMillis()
       val retired = catalogs.map { cat =>
         // survived-the-reap = still on disk (exact regardless of clock
-        // drift between begin and finish)
-        val carried = priorRetired(cat).filter { case (n, _) =>
-          fs.exists(new Path(s"$dir/$cat/$n"))
-        }
-        cat -> (carried ++
-          newRetired.getOrElse(cat, Set.empty).map(_ -> now).toMap)
+        // drift between the reap and now)
+        val carried = prior.fold(Map.empty[String, Long])(_.retired(cat))
+          .filter { case (n, _) => fs.exists(new Path(s"$dir/$cat/$n")) }
+        cat -> (carried ++ moves(cat)._2.map(_ -> stamped))
       }.toMap
-      publishSnapshot(s, Snapshot(priorK + 1L, token, newLive, retired))
+      publishSnapshot(s, Snapshot(prior.fold(0L)(_.k + 1L), token,
+        moves.map { case (cat, m) => cat -> m._1 }, retired,
+        prior.fold(Map.empty[String, String])(_.schemas)))
     }
     val flags = loadFlags(s)
     Seq("", "m").foreach { ns =>
@@ -544,33 +536,18 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     * publishes; batch flags roll up into the watermark (see class doc).
     */
   def compact(s: SparkSession): Unit = {
-    import org.apache.hadoop.fs.Path
     val fs = fsOf(s)
-    val (token, k, live) = beginMaintenance(s)
-    val snap = currentSnapshot(s)
-    val newLive = scala.collection.mutable.Map[String, Set[String]]()
-    val newRetired = scala.collection.mutable.Map[String, Set[String]]()
-    catalogs.foreach { cat =>
-      val files = live(cat)
+    maintain(s, "compact") { (_, files, read) =>
       // fold to a BYTES-derived file count, not the scan's partitioning:
       // Spark splits a small-file read into defaultParallelism
       // partitions, so a bare rewrite would reproduce the sprawl it is
       // meant to fold
-      val bytes = files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
+      val bytes = files.map(f =>
+        fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
       val target = math.max(1, (bytes / (128L << 20)).toInt)
-      if (files.length > target) {
-        val staged = s"$dir/.compact-staged-$cat"
-        scan(s, snap, cat, files).coalesce(target)
-          .write.mode("overwrite").parquet(staged)
-        val folded = foldStagedIn(s, staged, cat, token)
-        newLive(cat) = folded.toSet
-        newRetired(cat) = files.map(f => new Path(f).getName).toSet
-      } else {
-        newLive(cat) = files.map(f => new Path(f).getName).toSet
-        newRetired(cat) = Set.empty
-      }
+      if (files.length > target) Some((files, read(files).coalesce(target)))
+      else None
     }
-    finishMaintenance(s, token, k, newLive.toMap, newRetired.toMap)
   }
 
   /** Roll back (or forward) a maintenance move that crashed mid-way.
@@ -593,83 +570,79 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     val committedToken = currentSnapshot(s).map(_.token)
     markers.foreach { m =>
       val token = m.getPath.getName.stripPrefix("_maint-inprogress-")
-      if (!committedToken.contains(token)) {
-        catalogs.foreach { cat =>
-          val hits = fs.globStatus(new Path(s"$dir/$cat/fold-$token-*"))
-          if (hits != null) hits.foreach(h => fs.delete(h.getPath, false))
-        }
-      }
+      if (!committedToken.contains(token))
+        catalogs.foreach(cat => deleteGlob(s, s"$cat/fold-$token-*"))
       fs.delete(m.getPath, false)
     }
     true
   }
 
-  /** Drop every catalog row whose doc_id is absent from `liveDocs` — the
-    * right-to-be-forgotten move, for stores whose catalogs all carry a
-    * `doc_id` column. Cost rides the DIRTY file set (the dead pass reads
-    * doc_id only; clean files are never read, never moved); the swap is
-    * the snapshot-pointer commit, so concurrent readers — including ones
-    * planned before the vacuum — are never broken mid-scan. NOTE the
-    * privacy consequence of grace: the forgotten rows' bytes leave disk
-    * one maintenance move later, not at vacuum return ([[reapRetired]]
-    * forces it eagerly when the deletion SLA demands).
+  /** Drop every row whose key is absent from the live set — the
+    * right-to-be-forgotten move. The live set is `liveDocs`' doc_ids;
+    * a catalog keyed otherwise gets its key frame from `keysFrom`,
+    * built from the pinned doc_id frame (the chunk store keeps the
+    * chunks its surviving manifest slots reference). Key frames are
+    * pinned for the move and released after it. Cost rides the DIRTY
+    * file set: one key-only pass per catalog yields the dead count and
+    * the dirty file list together, only dirty files are re-read (with
+    * the snapshot's schema) and rewritten, clean files are never moved.
+    * The swap is the snapshot-pointer commit, so concurrent readers —
+    * including ones planned before the vacuum — are never broken
+    * mid-scan. NOTE the privacy consequence of grace: the forgotten
+    * rows' bytes leave disk one maintenance move later, not at vacuum
+    * return ([[reapRetired]] forces it eagerly when the deletion SLA
+    * demands). Returns the counts per catalog.
     */
-  def vacuumByDocId(s: SparkSession, liveDocs: DataFrame): VacuumStats = {
-    val (live, liveIds) = pinTracked(liveDocs.select("doc_id").distinct())
-    try vacuumAgainst(s, live)
-    finally unpinTracked(s, liveIds)
+  def vacuum(s: SparkSession, liveDocs: DataFrame,
+      keysFrom: Map[String, DataFrame => DataFrame] = Map.empty)
+      : Map[String, VacuumStats] = {
+    var pins = Set.empty[Int]
+    def pinned(df: DataFrame): DataFrame = {
+      val (out, ids) = pinTracked(df)
+      pins ++= ids
+      out
+    }
+    try {
+      val ids = pinned(liveDocs.select("doc_id").distinct())
+      val keys = catalogs.map(cat =>
+        cat -> keysFrom.get(cat).fold(ids)(f => pinned(f(ids)))).toMap
+      val stats = scala.collection.mutable.Map[String, VacuumStats]()
+      maintain(s, "vacuum") { (cat, files, read) =>
+        val key = keys(cat)
+        val kc = key.columns.toSeq
+        val deadPerFile =
+          if (files.isEmpty) Map.empty[String, Long]
+          else read(files)
+            .withColumn("f", StatsManifest.normalizedInputFile())
+            .select((kc :+ "f").map(col): _*)
+            .join(key, kc, "left_anti")
+            .groupBy("f").count().collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val dirty = deadPerFile.keys.toSeq
+        stats(cat) = VacuumStats(deadPerFile.values.sum, dirty.size,
+          files.size - dirty.size)
+        // the staging scan opens ONLY the dirty files — a filter on the
+        // input_file_name-derived column over the full-store frame would
+        // read every clean file's pages too (UDF filters don't push down)
+        if (dirty.isEmpty) None
+        else Some((dirty, read(dirty).join(key, kc, "left_semi")))
+      }
+      stats.toMap
+    } finally unpinTracked(s, pins)
   }
 
-  private def vacuumAgainst(s: SparkSession, live: DataFrame): VacuumStats = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(s)
-    val (token, k, liveF) = beginMaintenance(s)
-    val snap = currentSnapshot(s)
-    var dropped = 0L
-    var rewritten = 0
-    var untouched = 0
-    val newLive = scala.collection.mutable.Map[String, Set[String]]()
-    val newRetired = scala.collection.mutable.Map[String, Set[String]]()
-    catalogs.foreach { cat =>
-      val allFiles = liveF(cat)
-      newLive(cat) = allFiles.map(f => new Path(f).getName).toSet
-      newRetired(cat) = Set.empty
-      if (allFiles.nonEmpty) {
-        // ONE ids-only pass yields the dead total and the dirty file
-        // list together (the ChunkStore.vacuum shape)
-        val deadPerFile = scan(s, snap, cat, allFiles)
-          .withColumn("f", StatsManifest.normalizedInputFile())
-          .select("doc_id", "f")
-          .join(live, Seq("doc_id"), "left_anti")
-          .groupBy("f").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val dirty = deadPerFile.keySet
-        dropped += deadPerFile.values.sum
-        untouched += allFiles.count(f => !dirty(f))
-        if (dirty.nonEmpty) {
-          val staged = s"$dir/.vacuum-staged-$cat"
-          // the staging scan opens ONLY the dirty files — a filter on
-          // the input_file_name-derived column over the full-store frame
-          // would read every clean file's pages too (UDF filters don't
-          // push down)
-          scan(s, snap, cat, dirty.toSeq)
-            .join(live, Seq("doc_id"), "left_semi")
-            .write.mode("overwrite").parquet(staged)
-          val folded = foldStagedIn(s, staged, cat, token)
-          val dirtyNames = dirty.map(f => new Path(f).getName)
-          newLive(cat) = (newLive(cat) -- dirtyNames) ++ folded
-          newRetired(cat) = dirtyNames
-          rewritten += dirty.size
-        }
-      }
-    }
-    finishMaintenance(s, token, k, newLive.toMap, newRetired.toMap)
-    VacuumStats(dropped, rewritten, untouched)
+  /** [[vacuum]] for a store whose catalogs all carry `doc_id`, its
+    * counts summed across catalogs.
+    */
+  def vacuumByDocId(s: SparkSession, liveDocs: DataFrame): VacuumStats = {
+    val byCat = vacuum(s, liveDocs).values
+    VacuumStats(byCat.map(_.droppedRows).sum, byCat.map(_.rewrittenFiles).sum,
+      byCat.map(_.untouchedFiles).sum)
   }
 
   /** Eagerly reap the CURRENT snapshot's retired files without waiting
     * for the next maintenance move — the hook a hard deletion SLA calls
-    * after [[vacuumByDocId]] returns, once in-flight readers planned
+    * after [[vacuum]] returns, once in-flight readers planned
     * before the vacuum have drained (the caller owns that quiesce).
     * Publishes a successor snapshot with an empty retired set so a later
     * maintenance doesn't re-reap.
@@ -700,7 +673,7 @@ object BatchStore {
   /** The committed-batch view: explicit flags plus the per-namespace
     * watermarks compact folds old flags into.
     */
-  private[graft] final case class Flags(explicit: Set[String],
+  private final case class Flags(explicit: Set[String],
       streamMark: Long, manualMark: Long) {
     def committed(tag: String): Boolean =
       explicit(tag) || {
@@ -735,11 +708,12 @@ object BatchStore {
       retired: Map[String, Map[String, Long]],
       schemas: Map[String, String] = Map.empty)
 
-  /** `batch<tag>-<i>-<orig>` → `<tag>` — the landing-name convention
-    * [[BatchStore.landBatchFiles]] writes.
-    */
-  private[graft] def tagOfBatchFile(name: String): String =
+  /** `batch<tag>-<i>-<orig>` → `<tag>` — the name an append lands. */
+  private def tagOfBatchFile(name: String): String =
     name.stripPrefix("batch").takeWhile(_ != '-')
+
+  private def nameOf(file: String): String =
+    new org.apache.hadoop.fs.Path(file).getName
 
   /** Vacuum report: rows dropped, files rewritten vs left untouched
     * (summed across catalogs).

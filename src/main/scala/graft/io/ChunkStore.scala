@@ -37,21 +37,11 @@ import org.apache.spark.sql.functions._
   * never re-read, never rewritten, exactly the q_l40 delta-dedup /
   * ingestWithManifest contract.
   *
-  * Since r17 the store rides the [[BatchStore]] lifecycle the
-  * fingerprint and MinHash stores share: appends land `batch<tag>-*`
-  * files under namespaced `_batch` flags (committed tag → replay
-  * no-ops; crashed tag → remnant-delete + rewrite), appends also
-  * anti-join the batch's doc_ids against the manifest so a replay
-  * after ANY crash point — including the bootstrap's own
-  * snapshot-landed/flag-lost window — never duplicates a manifest
-  * slot; vacuum commits through the snapshot pointer (dirty chunk AND
-  * manifest files rewritten as `fold-*` names, originals retired one
-  * grace round, readers snapshot-isolated — the old whole-manifest
-  * swap is gone); and [[compact]]/[[recover]]/[[reapRetired]] complete
-  * the maintenance surface. This closed [[graft.streaming.StreamOps
-  * .ingestChunkStore]]'s documented residual window (a crash between
-  * the append and its checkpoint-side marker used to re-apply the
-  * batch and duplicate manifest slots).
+  * The store's lifecycle (exactly-once appends, snapshot-isolated
+  * maintenance, recovery) is [[BatchStore]]'s; this object supplies the
+  * rows. Appends also anti-join the batch's doc_ids against the manifest,
+  * so a replay after the bootstrap's own snapshot-landed/flag-lost
+  * window never duplicates a manifest slot.
   */
 object ChunkStore {
 
@@ -82,32 +72,22 @@ object ChunkStore {
   /** Build the store from scratch: unique chunks + the per-doc manifest.
     * Null-text documents are excluded by contract (they have no chunks to
     * store); callers that must round-trip them keep them in a side table.
+    * START-FRESH seeding: stale batch flags are a previous stream's
+    * history (the MinhashSnapshot.bootstrap rationale).
     */
   def write(docs: DataFrame, dir: String): Unit = {
-    val st = store(dir)
-    val s = docs.sparkSession
-    // START-FRESH seeding: stale batch flags are a previous stream's
-    // history (the MinhashSnapshot.bootstrap rationale)
-    st.cleanRootMetadata(s, dropBatchFlags = true)
     val c = keyed(docs)
-    // the two catalog writes are independent jobs over the same chunk
-    // frame — submit them concurrently (guide §2.6) so the manifest
-    // write back-fills the executors the chunk-dedup's tail leaves
-    // idle. (Deliberately NOT localCheckpoint-ed to share the chunking
-    // pass: the chunk rows carry the corpus text, and pinning a
-    // corpus-sized block set trades a second chunking scan for executor
-    // storage pressure at 100 TB — the wrong side of §5.) REBALANCE
-    // sizes output files by bytes instead of landing one file per scan
-    // task (§6).
-    graft.Par.all(Seq(
-      () => c.groupBy("h", "len", "x")
-        .agg(first(col("chunk_text")).as("chunk_text"))
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$dir/chunks"),
-      () => c.select("doc_id", "idx", "h", "len", "x")
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$dir/manifest")))
-    st.publishBootstrap(s) // the commit point: [[bootstrapped]] flips here
+    // the two catalog writes run concurrently over the same chunk frame.
+    // (Deliberately NOT localCheckpoint-ed to share the chunking pass:
+    // the chunk rows carry the corpus text, and pinning a corpus-sized
+    // block set trades a second chunking scan for executor storage
+    // pressure at 100 TB — the wrong side of §5.) REBALANCE sizes output
+    // files by bytes instead of landing one file per scan task (§6).
+    store(dir).bootstrap(docs.sparkSession, Map(
+      "chunks" -> c.groupBy("h", "len", "x")
+        .agg(first(col("chunk_text")).as("chunk_text")).hint("rebalance"),
+      "manifest" -> c.select("doc_id", "idx", "h", "len", "x").hint("rebalance")),
+      dropBatchFlags = true)
   }
 
   private def store(dir: String) = BatchStore(dir, Seq("chunks", "manifest"))
@@ -159,33 +139,18 @@ object ChunkStore {
     * side of that join carries no chunk text, so the exchange is
     * key-sized, and history parquet is neither re-read for content nor
     * rewritten. Cross-batch repeats therefore cost one manifest row,
-    * not a second copy of the span.
-    *
-    * Idempotence is the [[BatchStore]] contract: `batchId` ≥ 0 = the
-    * caller's (stream-namespace) id, −1 self-allocates a MANUAL `m<N>`
-    * tag; committed tag → no-op, crashed tag → remnants deleted, batch
-    * redone, flag LAST.
+    * not a second copy of the span. `batchId` is the
+    * [[BatchStore.append]] tag (−1 self-allocates).
     */
   def append(s: SparkSession, docs: DataFrame, dir: String,
-      batchId: Long = -1L): Unit = {
-    val st = store(dir)
-    val flags = st.loadFlags(s)
-    val tag = st.resolveTag(flags, batchId)
-    if (flags.committed(tag)) return // committed batch replayed: no-op
-    st.recover(s)
-    st.removeRemnants(s, tag)
+      batchId: Long = -1L): Unit = store(dir).append(s, batchId) { land =>
     val seen = manifest(s, dir).select("doc_id").distinct()
-    val fresh = docs.join(seen, Seq("doc_id"), "left_anti")
-    val c = keyed(fresh)
-    val existing = chunks(s, dir).select("h", "len", "x")
-    st.landBatchFiles(s,
-      c.select("h", "len", "x", "chunk_text")
-        .dropDuplicates("h", "len", "x")
-        .join(existing, Seq("h", "len", "x"), "left_anti"),
-      "chunks", tag)
-    st.landBatchFiles(s, c.select("doc_id", "idx", "h", "len", "x"),
-      "manifest", tag)
-    st.commitFlag(s, tag)
+    val c = keyed(docs.join(seen, Seq("doc_id"), "left_anti"))
+    land("chunks", c.select("h", "len", "x", "chunk_text")
+      .dropDuplicates("h", "len", "x")
+      .join(chunks(s, dir).select("h", "len", "x"), Seq("h", "len", "x"),
+        "left_anti"))
+    land("manifest", c.select("doc_id", "idx", "h", "len", "x"))
   }
 
   /** Reference counts, derived from the manifest at read time (stored
@@ -221,86 +186,19 @@ object ChunkStore {
 
   /** Reclaim storage after document deletion: drop the manifest rows of
     * docs absent from `liveDocs` (a `doc_id` frame — the retention set),
-    * then delete every chunk whose derived reference count hits zero —
-    * q_l43's reclaim WORKLIST made actionable. BOTH catalogs follow the
-    * rewrite-dirty-files discipline: only manifest files holding a dead
-    * slot and chunk files holding a dead chunk are re-read and
-    * rewritten — clean files are never touched (the old implementation
-    * swapped the ENTIRE manifest every vacuum; now manifest cost rides
-    * its dirty set too). The swap is the [[BatchStore]]
-    * snapshot-pointer commit: survivors land as `fold-<token>-*` files,
-    * the new snapshot retires the dirty originals, and they stay on
-    * disk one maintenance round of grace — so concurrent readers,
-    * including ones planned before the vacuum, are never broken
-    * mid-scan, and recovery is deletion-only ([[recover]]).
-    *
-    * Concurrency: single maintainer, snapshot-isolated readers.
+    * then delete every chunk no surviving slot references — q_l43's
+    * reclaim WORKLIST made actionable. Both catalogs ride
+    * [[BatchStore.vacuum]]: the manifest keyed by doc_id, the chunks by
+    * the (h, len, x) keys of the surviving slots, so only files holding
+    * a dead slot or chunk are rewritten.
     */
   def vacuum(s: SparkSession, dir: String, liveDocs: DataFrame): VacuumStats = {
-    val st = store(dir)
-    val (token, k, liveF) = st.beginMaintenance(s)
-    def rd(files: Seq[String]): DataFrame = s.read.parquet(files: _*)
-    val live = liveDocs.select("doc_id").distinct().localCheckpoint(true)
-    val newLive = scala.collection.mutable.Map[String, Set[String]]()
-    val newRetired = scala.collection.mutable.Map[String, Set[String]]()
-    Seq("chunks", "manifest").foreach { cat =>
-      newLive(cat) = liveF(cat)
-        .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-      newRetired(cat) = Set.empty
-    }
-    val manFiles = liveF("manifest")
-    val chunkFiles = liveF("chunks")
-    if (manFiles.isEmpty || chunkFiles.isEmpty) {
-      st.finishMaintenance(s, token, k, newLive.toMap, newRetired.toMap)
-      return VacuumStats(0L, 0L, 0, chunkFiles.size)
-    }
-
-    // ONE ids-only pass over the manifest yields the dead-slot total and
-    // the dirty manifest files together
-    val deadSlotsPerFile = rd(manFiles)
-      .withColumn("f", StatsManifest.normalizedInputFile())
-      .select("doc_id", "f")
-      .join(live, Seq("doc_id"), "left_anti")
-      .groupBy("f").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val droppedSlots = deadSlotsPerFile.values.sum
-    // chunks still referenced by a surviving slot; the key set is
-    // consumed by the dead scan AND the dirty rewrite, so materialize it
-    val liveKeys = rd(manFiles).join(live, Seq("doc_id"), "left_semi")
-      .select("h", "len", "x").distinct().localCheckpoint(true)
-    val deadChunksPerFile = rd(chunkFiles)
-      .withColumn("f", StatsManifest.normalizedInputFile())
-      .select("h", "len", "x", "f")
-      .join(liveKeys, Seq("h", "len", "x"), "left_anti")
-      .groupBy("f").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val reclaimed = deadChunksPerFile.values.sum
-
-    if (droppedSlots == 0 && reclaimed == 0) {
-      st.finishMaintenance(s, token, k, newLive.toMap, newRetired.toMap)
-      return VacuumStats(0L, 0L, 0, chunkFiles.size)
-    }
-    def rewriteDirty(cat: String, dirty: Set[String],
-        survivors: DataFrame): Unit = if (dirty.nonEmpty) {
-      val staged = s"$dir/.vacuum-staged-$cat"
-      // the staging scan opens ONLY the dirty files (UDF filters on the
-      // input_file_name-derived column don't push down)
-      survivors.write.mode("overwrite").parquet(staged)
-      val folded = st.foldStagedIn(s, staged, cat, token)
-      val dirtyNames =
-        dirty.map(f => new org.apache.hadoop.fs.Path(f).getName)
-      newLive(cat) = (newLive(cat) -- dirtyNames) ++ folded
-      newRetired(cat) = dirtyNames
-    }
-    val dirtyChunks = deadChunksPerFile.keySet
-    rewriteDirty("chunks", dirtyChunks,
-      rd(dirtyChunks.toSeq).join(liveKeys, Seq("h", "len", "x"), "left_semi"))
-    val dirtyMan = deadSlotsPerFile.keySet
-    rewriteDirty("manifest", dirtyMan,
-      rd(dirtyMan.toSeq).join(live, Seq("doc_id"), "left_semi"))
-    st.finishMaintenance(s, token, k, newLive.toMap, newRetired.toMap)
-    VacuumStats(droppedSlots, reclaimed, dirtyChunks.size,
-      chunkFiles.size - dirtyChunks.size)
+    val byCat = store(dir).vacuum(s, liveDocs, Map("chunks" -> (ids =>
+      manifest(s, dir).join(ids, Seq("doc_id"), "left_semi")
+        .select("h", "len", "x").distinct())))
+    val (man, ch) = (byCat("manifest"), byCat("chunks"))
+    VacuumStats(man.droppedRows, ch.droppedRows, ch.rewrittenFiles,
+      ch.untouchedFiles)
   }
 
 }

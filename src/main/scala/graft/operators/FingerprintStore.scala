@@ -53,13 +53,10 @@ import graft.operators.TrainPrep.{pinCounted, unpinTracked}
   * [[append]] and the readers, and [[bootstrap]] over it removes the old
   * directories.
   *
-  * Concurrency, append idempotence (namespaced `_batch-<tag>` flags +
-  * the compact-maintained watermark), reader snapshot isolation
-  * (`fold-<token>-*` replacements + `_snap-<k>` metadata-pointer
-  * commits, retired originals reaped one maintenance round later) and
-  * crash recovery are ALL the [[graft.io.BatchStore]] contract — see its
-  * class doc; the spec legs for every crash window live in EngineSpec
-  * and StreamBatchParitySpec against THIS store.
+  * The store's lifecycle (exactly-once appends, snapshot isolation,
+  * maintenance, crash recovery) is [[graft.io.BatchStore]]'s; the spec
+  * legs for every crash window live in EngineSpec and
+  * StreamBatchParitySpec against THIS store.
   *
   * Scale shape of [[append]]: the new-id set is computed ids-only
   * (doc_id anti-join against the ledger — key-sized exchange), then the
@@ -97,14 +94,27 @@ object FingerprintStore {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** The store's fingerprint width for audio, from the root marker. */
-  def audioBitsOf(s: SparkSession, dir: String): Int = {
+  private def audioBitsMarks(s: SparkSession, dir: String): Seq[Int] = {
     val hits = fsOf(s, dir).globStatus(
       new org.apache.hadoop.fs.Path(s"$dir/_audiobits-*"))
-    require(hits != null && hits.nonEmpty,
-      s"fingerprint store at $dir has no _audiobits marker — not bootstrapped?")
-    hits.map(_.getPath.getName.stripPrefix("_audiobits-").toInt).max
+    if (hits == null) Nil
+    else hits.toSeq.map(_.getPath.getName.stripPrefix("_audiobits-").toInt)
   }
+
+  /** The store's fingerprint width for audio, from the root marker. */
+  def audioBitsOf(s: SparkSession, dir: String): Int = {
+    val marks = audioBitsMarks(s, dir)
+    require(marks.nonEmpty,
+      s"fingerprint store at $dir has no _audiobits marker — not bootstrapped?")
+    marks.max
+  }
+
+  /** Has a [[bootstrap]] COMMITTED here (its `_audiobits` marker, the
+    * last step, exists)? The bootstrap-or-append branch a streaming sink
+    * takes — a torn bootstrap reads false and re-runs idempotently.
+    */
+  def bootstrapped(s: SparkSession, dir: String): Boolean =
+    audioBitsMarks(s, dir).nonEmpty
 
   /** Is this caller-supplied (stream-namespace) batch id committed —
     * flag-or-watermark ([[graft.io.BatchStore.batchCommitted]])?
@@ -166,11 +176,11 @@ object FingerprintStore {
 
   /** Build the store from scratch over `media` ((doc_id, blob, meta) —
     * the [[graft.io.Readers.binaryMedia]] / [[Multimodal.withMedia]]
-    * shape): one decode pass, one write. Commits by publishing snapshot
-    * 0 and (LAST) the `_audiobits` marker — a crash anywhere before the
-    * marker re-runs bootstrap idempotently (the write is
-    * mode-overwrite). A legacy-layout store's per-kind directories are
-    * removed first.
+    * shape): one decode pass, one [[graft.io.BatchStore.bootstrap]]
+    * (keeping batch flags: a streaming sink bootstraps inside its own
+    * stream's lifetime), then (LAST) the `_audiobits` marker — a crash
+    * anywhere before the marker re-runs bootstrap idempotently. A
+    * legacy-layout store's per-kind directories are removed first.
     */
   def bootstrap(s: SparkSession, media: DataFrame, dir: String,
       audioBits: Int = 32): Unit = {
@@ -178,17 +188,16 @@ object FingerprintStore {
       s"audioBits $audioBits: the banded serving join needs a multiple " +
         "of 8 in [16,64]")
     val st = store(dir)
-    st.cleanRootMetadata(s)
     Legacy.drop(s, st)
-    val rows = fusedDigests(s, media, audioBits)
     // REBALANCE before the write: the digest rows inherit the media
     // scan's partitioning (one partition per ~file-listing split), so a
     // bare write lands one near-empty parquet file per scan task — the
     // small-files problem. The AQE rebalance exchange sizes output
     // partitions by bytes (advisoryPartitionSizeInBytes), so file count
     // follows data volume at any scale with no tuned constant.
-    byKind(rows.hint("rebalance")).write.mode("overwrite").parquet(s"$dir/$Digests")
-    st.publishBootstrap(s, Map(Digests -> rows.schema))
+    st.bootstrap(s, Map(Digests ->
+      byKind(fusedDigests(s, media, audioBits).hint("rebalance"))),
+      dropBatchFlags = false)
     fsOf(s, dir).create(new org.apache.hadoop.fs.Path(
       s"$dir/_audiobits-$audioBits"), true).close()
   }
@@ -197,47 +206,30 @@ object FingerprintStore {
     * ledger has never seen, and land their digest and ledger rows as one
     * batch. History is read ids-only (the ledger rows' doc_id) and never
     * rewritten; a batch overlapping already-ingested ids costs one
-    * key-sized anti-join, zero decodes for the overlap.
-    *
-    * Idempotence is the [[graft.io.BatchStore]] contract: callers with
-    * their own batch ids (a streaming sink's foreachBatch — see
-    * [[graft.streaming.StreamOps.ingestMedia]]) pass `batchId` ≥ 0 and
-    * get the bare numeric tag; the default −1 self-allocates the next
-    * MANUAL-namespace tag (`m<N>`), disjoint from stream ids by
-    * construction. Committed tag → no-op; uncommitted tag → remnants
-    * deleted, whole batch redone — replay at any crash point equals the
-    * rebuild (spec-pinned in EngineSpec).
+    * key-sized anti-join, zero decodes for the overlap. `batchId` is the
+    * [[graft.io.BatchStore.append]] tag: a streaming sink's batch id
+    * ([[graft.streaming.StreamOps.ingestMedia]]), or −1 to self-allocate
+    * one; replay at any crash point equals the rebuild (spec-pinned in
+    * EngineSpec).
     */
   def append(s: SparkSession, media: DataFrame, dir: String,
       batchId: Long = -1L): Unit = {
     val st = opened(s, dir)
-    val flags = st.loadFlags(s)
-    val tag = st.resolveTag(flags, batchId)
-    if (flags.committed(tag)) return // committed batch replayed: no-op
-    // a torn vacuum/compact left invisible junk and a marker — clean it
-    // so this batch's work can't interleave with a half-done swap
-    // (cheap glob when clean)
-    st.recover(s)
-    // a crashed attempt at this tag left identifiable remnants — take
-    // them back first, restoring the exactly-before-this-batch state
-    // (in particular the ledger's view of "seen"), so the re-run below
-    // neither duplicates digests nor skips re-decoding its own rows
-    st.removeRemnants(s, tag)
-    val audioBits = audioBitsOf(s, dir)
-    // materialized once, counted by the pinning job, reused below
-    val (newIds, newIdPins, n) = pinCounted(media.select("doc_id").distinct()
-      .join(kind(st, s, LedgerKind).select("doc_id"), Seq("doc_id"), "left_anti"))
-    try {
-      if (n > 0L) {
-        val fresh =
-          if (n <= BroadcastIdCap)
-            media.join(broadcast(newIds), Seq("doc_id"), "left_semi")
-          else media.join(newIds, Seq("doc_id"), "left_semi")
-        st.landBatchFiles(s, byKind(fusedDigests(s, fresh, audioBits)),
-          Digests, tag)
-      }
-    } finally unpinTracked(s, newIdPins)
-    st.commitFlag(s, tag) // the commit point — everything landed
+    st.append(s, batchId) { land =>
+      val audioBits = audioBitsOf(s, dir)
+      // materialized once, counted by the pinning job, reused below
+      val (newIds, newIdPins, n) = pinCounted(media.select("doc_id").distinct()
+        .join(kind(st, s, LedgerKind).select("doc_id"), Seq("doc_id"), "left_anti"))
+      try {
+        if (n > 0L) {
+          val fresh =
+            if (n <= BroadcastIdCap)
+              media.join(broadcast(newIds), Seq("doc_id"), "left_semi")
+            else media.join(newIds, Seq("doc_id"), "left_semi")
+          land(Digests, byKind(fusedDigests(s, fresh, audioBits)))
+        }
+      } finally unpinTracked(s, newIdPins)
+    }
   }
 
   /** The kind-`k` rows of the store's `digests` catalog. */
@@ -299,7 +291,7 @@ object FingerprintStore {
     * same id re-ingests it fresh (the ledger row is gone), which is
     * exactly right for a deletion followed by a legitimate re-upload.
     * Mechanics (dirty-file cost shape, snapshot-pointer swap, grace +
-    * reap): [[graft.io.BatchStore.vacuumByDocId]].
+    * reap): [[graft.io.BatchStore.vacuum]].
     */
   def vacuum(s: SparkSession, dir: String,
       liveDocs: DataFrame): VacuumStats =

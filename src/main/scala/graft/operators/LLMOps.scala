@@ -239,11 +239,13 @@ object LLMOps {
     * absent. Equals the full-corpus [[minhashCandidates]] restricted to
     * pairs with a new-batch endpoint — how the q_l40 oracle recomputes it.
     *
-    * Precondition: no id of `newDocs` is in the snapshot yet, which the
-    * [[MinhashSnapshot]] batch contract (`beginBatch` before the pairs,
-    * `append` after) guarantees. Then each side holds one row per id, and
-    * keeping a right row only when it is history (`hist`) or
-    * `id_a < id_b` emits each pair exactly once with no distinct.
+    * Precondition: no id of `newDocs` is in the snapshot yet, which
+    * computing the pairs inside the batch's own snapshot append
+    * ([[MinhashSnapshot.appendAfter]]: after a torn attempt's bands are
+    * removed, before this batch's land) guarantees. Then each side holds
+    * one row per id, and keeping a right row only when it is history
+    * (`hist`) or `id_a < id_b` emits each pair exactly once with no
+    * distinct.
     */
   def deltaDedupCandidates(s: SparkSession, newDocs: DataFrame,
       snapshotDir: String): DataFrame = {

@@ -6,12 +6,9 @@ import graft.io.BatchStore
 /** The persisted MinHash band-key snapshot behind incremental (delta)
   * text dedup — [[LLMOps.deltaDedupCandidates]] / q_l40, the streaming
   * sink [[graft.streaming.StreamOps.streamingDeltaDedup]] and the ingest
-  * pipeline — on the [[graft.io.BatchStore]] lifecycle: namespaced
-  * `_batch-<tag>` flags with remnant-delete on replay (a replayed batch
-  * lands exactly once, never a stacked second copy), snapshot-pointer
-  * compact with flag→watermark rollup, doc_id vacuum (dedup history is
-  * derived PII the right-to-be-forgotten path must also reclaim) and
-  * deletion-only recover. Single maintainer, snapshot-isolated readers.
+  * pipeline. Its lifecycle is [[graft.io.BatchStore]]'s; the doc_id
+  * vacuum matters here because dedup history is derived PII the
+  * right-to-be-forgotten path must also reclaim.
   *
   * One catalog: `band_keys/` — one (doc_id, band_keys: array<string>)
   * row per doc ([[LLMOps.minhashBandKeys]], position b holding band b's
@@ -38,8 +35,7 @@ object MinhashSnapshot {
     LLMOps.minhashBandKeys(LLMOps.shingleSetsOf(docs))
 
   /** Build the snapshot from scratch over `docs` (possibly empty — the
-    * seed a streaming run starts from). Mode-overwrite idempotent;
-    * commits by publishing snapshot 0. START-FRESH semantics: stale
+    * seed a streaming run starts from). START-FRESH semantics: stale
     * `_batch-*` flags from a PREVIOUS stream's lifetime are dropped —
     * a re-seeded dir is new history, and a new stream's checkpoint
     * restarts batch ids at 0, so a kept flag would silently no-op the
@@ -50,43 +46,29 @@ object MinhashSnapshot {
     */
   def bootstrap(s: SparkSession, docs: DataFrame, dir: String): Unit = {
     val st = store(dir)
-    st.cleanRootMetadata(s, dropBatchFlags = true)
     Legacy.drop(s, st)
-    val rows = bandsOf(docs)
-    rows.write.mode("overwrite").parquet(s"$dir/$BandKeys")
-    st.publishBootstrap(s, Map(BandKeys -> rows.schema))
+    st.bootstrap(s, Map(BandKeys -> bandsOf(docs)), dropBatchFlags = true)
   }
 
-  /** Exactly-once batch append of `newDocs`' band keys. `batchId` ≥ 0 =
-    * the caller's (stream-namespace) id; −1 self-allocates a MANUAL
-    * `m<N>` tag — the namespaces are disjoint, so an ad-hoc append can
-    * never shadow a restarted stream's next micro-batch (the BatchStore
-    * contract). Committed tag → no-op; uncommitted → remnants deleted,
-    * batch redone.
+  /** Exactly-once batch append of `newDocs`' band keys under `batchId`
+    * (the [[graft.io.BatchStore.append]] tag; −1 self-allocates).
     */
   def append(s: SparkSession, newDocs: DataFrame, dir: String,
-      batchId: Long = -1L): Unit = {
-    val st = opened(s, dir)
-    val flags = st.loadFlags(s)
-    val tag = st.resolveTag(flags, batchId)
-    if (flags.committed(tag)) return
-    st.recover(s)
-    st.removeRemnants(s, tag)
-    st.landBatchFiles(s, bandsOf(newDocs), BandKeys, tag)
-    st.commitFlag(s, tag)
-  }
+      batchId: Long = -1L): Unit =
+    appendAfter(s, newDocs, dir, batchId)(())
 
-  /** Clear a torn prior attempt of `batchId` (recover + remnant-delete)
-    * WITHOUT running the batch — the first move of a foreachBatch body
-    * that reads the snapshot (for its candidate pairs) before appending
-    * to it, so a crashed attempt's half-landed bands never feed the
-    * replay's own pair computation.
+  /** [[append]] that runs `first` inside the batch, after a torn prior
+    * attempt's bands are removed and before this batch's land — the
+    * slot for work that reads the snapshot as of strictly-earlier
+    * batches (the delta's candidate pairs). A committed batch skips it;
+    * a replayed one re-runs it, so it must be idempotent.
     */
-  def beginBatch(s: SparkSession, dir: String, batchId: Long): Unit = {
-    val st = store(dir)
-    st.recover(s)
-    st.removeRemnants(s, batchId.toString)
-  }
+  private[graft] def appendAfter(s: SparkSession, newDocs: DataFrame,
+      dir: String, batchId: Long)(first: => Unit): Unit =
+    opened(s, dir).append(s, batchId) { land =>
+      first
+      land(BandKeys, bandsOf(newDocs))
+    }
 
   /** The snapshot's (doc_id, band_keys) rows — snapshot-resolved
     * ([[BatchStore.readCat]]): retired files are invisible, post-snapshot
@@ -98,7 +80,7 @@ object MinhashSnapshot {
   def batchCommitted(s: SparkSession, dir: String, batchId: Long): Boolean =
     store(dir).batchCommitted(s, batchId)
 
-  /** Fold per-batch file sprawl + roll flags into the watermark. */
+  /** Fold per-batch file sprawl ([[BatchStore.compact]]). */
   def compact(s: SparkSession, dir: String): Unit = opened(s, dir).compact(s)
 
   def dataFileCount(s: SparkSession, dir: String): Int =

@@ -239,9 +239,8 @@ object ClonePipeline {
     */
   def incrementalSync(spark: SparkSession, source: DataFrame, tgtPath: String,
       keyCols: Seq[String], versionCol: String): SyncReport = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     val tgt = new org.apache.hadoop.fs.Path(tgtPath)
+    val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(tgt)) {
       val n = writeObserving(source, tgtPath, count(lit(1)))
       return SyncReport(n, n, n)

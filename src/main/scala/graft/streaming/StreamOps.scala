@@ -200,23 +200,21 @@ object StreamOps extends Serializable {
       }
 
   /** One [[streamingDeltaDedup]] micro-batch, also [[ingestPipeline]]'s
-    * step 3, exactly once under foreachBatch replay: a committed batch id
-    * no-ops; otherwise a torn attempt's half-landed bands are removed
-    * FIRST (they must not feed the replay's pairs), the pairs overwrite
-    * the batch's own `ingest_batch=<id>` partition, and the band keys
-    * land last, so the delta sees strictly-earlier docs (its
-    * precondition).
+    * step 3, exactly once under foreachBatch replay: the batch is one
+    * snapshot append, whose body overwrites the batch's own
+    * `ingest_batch=<id>` pairs partition before the band keys land. A
+    * committed batch id no-ops; a torn attempt's half-landed bands are
+    * removed before the pairs are computed, so the delta sees
+    * strictly-earlier docs (its precondition).
     */
   private def deltaDedupBatch(batch: DataFrame, batchId: Long,
       snapshotDir: String, pairsDir: String): Unit = {
     import graft.operators.{LLMOps, MinhashSnapshot}
     val s = batch.sparkSession
-    if (!MinhashSnapshot.batchCommitted(s, snapshotDir, batchId)) {
-      MinhashSnapshot.beginBatch(s, snapshotDir, batchId)
+    MinhashSnapshot.appendAfter(s, batch, snapshotDir, batchId) {
       LLMOps.deltaDedupCandidates(s, batch, snapshotDir)
         .write.mode("overwrite")
         .parquet(s"$pairsDir/ingest_batch=$batchId")
-      MinhashSnapshot.append(s, batch, snapshotDir, batchId)
     }
   }
 
@@ -531,26 +529,19 @@ object StreamOps extends Serializable {
       storeDir: String, audioBits: Int = 32, compactEvery: Int = 0): Unit = {
     import graft.operators.FingerprintStore
     val s = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     // completed batch replayed: no-op. The committed check is
     // flag-OR-watermark — compact may have rolled this id's flag up
     if (FingerprintStore.batchCommitted(s, storeDir, batchId)) return
-    val marker = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$storeDir/_audiobits-*"))
-    if (marker == null || marker.isEmpty) {
+    if (!FingerprintStore.bootstrapped(s, storeDir)) {
       if (!batch.isEmpty)
         FingerprintStore.bootstrap(s, batch, storeDir, audioBits)
       FingerprintStore.commitBatchFlag(s, storeDir, batchId)
     } else {
-      // append commits the _batch flag itself (after torn-maintenance
-      // recovery, remnant-delete, the batch's digest rows), including over an
+      // append commits the _batch flag itself, including over an
       // all-overlap or empty batch
       FingerprintStore.append(s, batch, storeDir, batchId)
     }
-    val bootstrapped = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$storeDir/_audiobits-*"))
-    if (compactEvery > 0 && bootstrapped != null && bootstrapped.nonEmpty &&
+    if (compactEvery > 0 && FingerprintStore.bootstrapped(s, storeDir) &&
         FingerprintStore.dataFileCount(s, storeDir) > compactEvery)
       FingerprintStore.compact(s, storeDir)
   }

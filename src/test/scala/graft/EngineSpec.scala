@@ -1752,6 +1752,28 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(tgt).count() == 3)
   }
 
+  test("incrementalSync into a target whose scheme is not the default " +
+      "file system's") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.${AltSchemeFileSystem.Scheme}.impl",
+      classOf[AltSchemeFileSystem].getName)
+    try {
+      val tgt = s"${AltSchemeFileSystem.Scheme}://" +
+        Files.createTempDirectory("graft-sync-alt").toString + "/t"
+      val v1 = Seq((1L, "a", 10L), (2L, "b", 10L)).toDF("id", "val", "version")
+      val v2 = Seq((1L, "a", 10L), (2L, "B2", 20L), (3L, "c", 20L))
+        .toDF("id", "val", "version")
+      // the initial load probes the target, the merge swaps it by renames
+      assert(ClonePipeline.incrementalSync(spark, v1, tgt, Seq("id"), "version")
+        == ClonePipeline.SyncReport(2, 2, 2))
+      assert(ClonePipeline.incrementalSync(spark, v2, tgt, Seq("id"), "version")
+        == ClonePipeline.SyncReport(3, 2, 3))
+      assert(spark.read.parquet(tgt).orderBy("id").as[(Long, String, Long)]
+        .collect().toSeq == Seq((1L, "a", 10L), (2L, "B2", 20L), (3L, "c", 20L)))
+    } finally conf.unset(s"fs.${AltSchemeFileSystem.Scheme}.impl")
+  }
+
   test("bloom semi-filter: no false negatives, fp rate near design point") {
     import graft.operators.Scale
     val part = Tables.part(spark, sfDir).select(col("p_partkey"))
@@ -5033,4 +5055,18 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
       assert(r.getLong(2) >= mn && r.getLong(3) <= mx)
     }
   }
+}
+
+/** The local file system under a second scheme, so a path can name a
+  * file system other than `fs.defaultFS`; registered per test through
+  * `fs.<scheme>.impl`.
+  */
+class AltSchemeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${AltSchemeFileSystem.Scheme}:///")
+  override def getScheme: String = AltSchemeFileSystem.Scheme
+}
+
+object AltSchemeFileSystem {
+  val Scheme = "graftalt"
 }

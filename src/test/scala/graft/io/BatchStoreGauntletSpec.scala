@@ -5,8 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Randomized model gauntlet for the [[BatchStore]] commit discipline —
-  * the Ivf-gauntlet idiom applied to the store core both persisted
-  * stores now ride: a seeded random walk over the store's whole op
+  * the Ivf-gauntlet idiom applied to the store core every persisted
+  * store rides: a seeded random walk over the store's whole op
   * surface (committed appends under stream AND manual tags, torn
   * appends crashed after a strict subset of catalogs landed, replays,
   * committed-tag replays with DIFFERENT rows, compact, torn compact
@@ -64,38 +64,34 @@ class BatchStoreGauntletSpec extends AnyFunSuite with SparkFixture {
         out
       }
 
-      /** The store-append discipline the two production stores run:
-        * committed tag → no-op; else recover, remnant-delete, land
-        * every catalog, flag LAST.
+      /** One [[BatchStore.append]] whose body lands the first
+        * `crashAfter` catalogs; a body that stops short of every catalog
+        * throws there, the torn append a crash leaves.
         */
       def append(batchId: Long, rows: Map[String, Seq[(Long, Long)]],
-          crashAfter: Int): Boolean = {
-        val flags = st.loadFlags(spark)
-        val tag = st.resolveTag(flags, batchId)
-        if (flags.committed(tag)) return true // replayed: no-op
-        st.recover(spark)
-        st.removeRemnants(spark, tag)
-        Cats.take(crashAfter).foreach(cat =>
-          st.landBatchFiles(spark, df(rows(cat)), cat, tag))
-        if (crashAfter < Cats.length) return false // crashed mid-land
-        st.commitFlag(spark, tag)
-        true
-      }
+          crashAfter: Int): Boolean =
+        try {
+          st.append(spark, batchId) { land =>
+            Cats.take(crashAfter).foreach(cat => land(cat, df(rows(cat))))
+            if (crashAfter < Cats.length) throw Torn
+          }
+          true
+        } catch { case Torn => false } // crashed mid-land
 
       def check(where: String): Unit = Cats.foreach { cat =>
         assert(readSet(st, cat) == model(cat),
           s"seed $seed, $where, catalog $cat diverged from the model")
       }
 
-      // open with one committed append so every catalog exists
+      // open with a bootstrap committed as stream batch 0 (the streaming
+      // bootstrap leg), so every catalog exists and snapshot 0 is
+      // published — readers resolve snapshots from here on
       val first = freshBatch()
-      assert(append(streamId, first, Cats.length))
+      st.bootstrap(spark, Cats.map(c => c -> df(first(c))).toMap,
+        dropBatchFlags = false)
+      st.commitFlag(spark, streamId.toString)
       Cats.foreach(c => model(c) = model(c) ++ first(c))
       streamId += 1
-      // snapshot 0, as both production stores publish at bootstrap —
-      // readers resolve snapshots from here on (pre-snapshot legacy
-      // mode would surface injected fold junk to the raw-listing read)
-      st.publishBootstrap(spark)
       check("opening append")
 
       (1 to 30).foreach { step =>
@@ -174,12 +170,17 @@ class BatchStoreGauntletSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  private object Torn extends RuntimeException("torn append")
+
   private def land(st: BatchStore, batchId: Long,
-      rows: Seq[(Long, Long)]): Unit = {
-    val tag = st.resolveTag(st.loadFlags(spark), batchId)
-    st.removeRemnants(spark, tag)
-    st.catalogs.foreach(cat => st.landBatchFiles(spark, df(rows), cat, tag))
-    st.commitFlag(spark, tag)
+      rows: Seq[(Long, Long)]): Unit =
+    st.append(spark, batchId)(land => st.catalogs.foreach(land(_, df(rows))))
+
+  /** A store bootstrapped over no rows (the frame only fixes the schema). */
+  private def bootstrapped(st: BatchStore): BatchStore = {
+    st.bootstrap(spark, st.catalogs.map(_ -> df(Nil)).toMap,
+      dropBatchFlags = false)
+    st
   }
 
   test("retainRetiredMs: retired files survive back-to-back maintenance " +
@@ -188,12 +189,12 @@ class BatchStoreGauntletSpec extends AnyFunSuite with SparkFixture {
     import org.apache.hadoop.fs.Path
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bs-retain").toString
-    val st = BatchStore(dir, Seq("alpha"), retainRetiredMs = 3600 * 1000L)
+    val st = bootstrapped(
+      BatchStore(dir, Seq("alpha"), retainRetiredMs = 3600 * 1000L))
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val rows = (1L to 12L).map(i => (i, i * 10))
     (0L to 2L).foreach(b => land(st, b, rows.slice(b.toInt * 4, b.toInt * 4 + 4)))
-    st.publishBootstrap(spark)
     val reader = st.readCat(spark, "alpha") // planned BEFORE round N
     def onDisk(glob: String): Int = {
       val hits = fs.globStatus(new Path(s"$dir/alpha/$glob"))
@@ -240,8 +241,8 @@ class BatchStoreGauntletSpec extends AnyFunSuite with SparkFixture {
     val st = BatchStore(dir, Seq("alpha"))
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    land(st, 0L, Seq((1L, 10L), (2L, 20L)))
-    st.publishBootstrap(spark)
+    st.bootstrap(spark, Map("alpha" -> df(Seq((1L, 10L), (2L, 20L)))),
+      dropBatchFlags = false)
     st.vacuumByDocId(spark, df(Nil).select("doc_id")) // kill every row
     st.compact(spark) // reaps the retirees
     // drop the (empty) live fold files too — the listing now holds
@@ -292,15 +293,14 @@ class BatchStoreGauntletSpec extends AnyFunSuite with SparkFixture {
       "drop-flags forgets both") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bs-clean").toString
-    val st = BatchStore(dir, Seq("alpha"))
+    val st = bootstrapped(BatchStore(dir, Seq("alpha")))
     (0L to 3L).foreach(b => land(st, b, Seq((b, b))))
-    st.publishBootstrap(spark)
     st.compact(spark) // rolls flags 0..3 into the stream watermark
     assert((0L to 3L).forall(st.batchCommitted(spark, _)))
-    st.cleanRootMetadata(spark) // keep committed-batch history
+    bootstrapped(st) // a re-bootstrap that keeps committed-batch history
     assert((0L to 3L).forall(st.batchCommitted(spark, _)),
       "keeping flags must keep watermark-rolled ids committed too")
-    st.cleanRootMetadata(spark, dropBatchFlags = true)
+    st.bootstrap(spark, Map("alpha" -> df(Nil)), dropBatchFlags = true)
     assert((0L to 3L).forall(b => !st.batchCommitted(spark, b)),
       "dropping flags must drop the watermarks with them")
   }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{SparkFixture, Tables}
-import graft.io.Readers
+import graft.io.{ChunkStore, Readers}
 import graft.pipeline.ClonePipeline
 import graft.pipeline.ClonePipeline.TableLayout
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -11,10 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Spark-job ceilings for the dedup path's store and graph operators and
-  * for the clone and sync path. At this size they are bound by job count
-  * (driver time between jobs), not by data, so a job added back is the
-  * regression to catch; counts are deterministic where wall time is not.
+/** Spark-job ceilings for the dedup path's store and graph operators, the
+  * chunk store, and the clone and sync path. At this size they are bound
+  * by job count (driver time between jobs), not by data, so a job added
+  * back is the regression to catch; counts are deterministic where wall
+  * time is not.
   */
 class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture {
 
@@ -49,6 +50,20 @@ class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture {
       ("connectedComponents", 4, () =>
         TrainPrep.connectedComponents(spark.read.parquet(s"$dir/pairs"))
           .write.parquet(s"$dir/cc"))
+    ).foreach { case (op, ceiling, run) =>
+      val jobs = jobsOf(run())
+      assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
+    }
+  }
+
+  test("ChunkStore write and vacuum stay within their job ceilings") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+      .where(col("text").isNotNull)
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    Seq[(String, Int, () => Unit)](
+      ("ChunkStore.write", 7, () => ChunkStore.write(docs, dir)),
+      ("ChunkStore.vacuum", 15, () => ChunkStore.vacuum(spark, dir,
+        docs.filter(col("doc_id") % 3 =!= 0).select("doc_id")))
     ).foreach { case (op, ceiling, run) =>
       val jobs = jobsOf(run())
       assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
