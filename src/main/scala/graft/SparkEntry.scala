@@ -1303,8 +1303,8 @@ object SparkEntry {
   // only appear where the SQL mirrors the twin's exact operation order.
 
   /** Spark spellings of the shared MinHash chain (the SQL twin of
-    * `LLMOps.minhashBandArray` over `shinglePostingsOf` postings, and of
-    * the pairs `minhashCandidates` bands from per-doc sets):
+    * `LLMOps.minhashBandKeys` and of the pairs `minhashCandidates` bands
+    * from per-doc sets):
     * distinct 3-shingle postings, 16 min-hash signature columns, 4 band
     * keys, banded candidate pairs.
     */

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{array, concat_ws, lit}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -16,14 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * bands of 4 and rendered `b:m0:m1:m2:m3` — position b holds band b's
   * key, the [[graft.operators.Banded]] input shape.
   *
-  * The band-key formula has two spellings, both built from this object:
-  * the kernel, evaluated row-locally on per-doc sets
-  * ([[graft.operators.LLMOps.minhashBandKeys]] — the candidates, the
-  * persisted snapshot and the delta — which never explodes postings),
-  * and [[bandArray]] over 16 `min` aggregates of [[hash]] for the
-  * callers that start from (doc_id, h) postings
-  * ([[graft.operators.LLMOps.minhashBandArray]]) — those mins combine
-  * map-side, where collecting each doc's postings would ship every one.
+  * The kernel is evaluated row-locally on per-doc sets
+  * ([[graft.operators.LLMOps.minhashBandKeys]], its one caller: the
+  * candidates, the persisted snapshot, the delta and decontamination),
+  * so no posting is exploded to compute it.
   * The DuckDB oracle spells the same math with `list_min`. Null
   * elements are skipped (as `min` skips them); a set with no hashes has
   * no band keys. The `transform`/`aggregate` lambda formulation of the
@@ -55,23 +50,11 @@ case class MinhashBands(child: Expression) extends UnaryExpression {
 }
 
 object MinhashBands {
-  final val Hashes = 16
+  private final val Hashes = 16
   private final val Rows = 4
 
   private def a(k: Int): Long = 31L + 17L * k
   private def b(k: Int): Long = 7L + 11L * k
-
-  /** Hash k of shingle hash `h`, as a column. */
-  def hash(k: Int, h: Column): Column = (lit(a(k)) * h + lit(b(k))) % PolyHash.Mod
-
-  /** The band-key array from the 16 per-doc minima of [[hash]], in k
-    * order.
-    */
-  def bandArray(mins: Seq[Column]): Column =
-    array((0 until Hashes / Rows).map { band =>
-      concat_ws(":", (lit(band) +: mins.slice(band * Rows, band * Rows + Rows))
-        .map(_.cast("string")): _*)
-    }: _*)
 
   /** Called from both interpreted eval and generated code. */
   def keys(hs: ArrayData): ArrayData = {

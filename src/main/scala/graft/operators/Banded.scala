@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** The banded near-duplicate kernel under every dedup surface: MinHash
   * bands for text ([[LLMOps.minhashCandidates]], the delta join of a new
   * batch against the persisted snapshot [[LLMOps.deltaDedupCandidates]],
-  * [[TrainPrep.fuzzyDecontam]]), LSH tables for embeddings
+  * [[TrainPrep.fuzzyDecontam]] — all three key per-doc shingle sets
+  * row-locally through [[LLMOps.minhashBandKeys]]), LSH tables for embeddings
   * ([[Similarity.nearDupPairs]]) and 8-bit hash bands for media
   * fingerprints ([[Multimodal.hammingNearDupPairs]]).
   *

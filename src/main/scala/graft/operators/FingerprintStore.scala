@@ -94,12 +94,12 @@ object FingerprintStore {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private def audioBitsMarks(s: SparkSession, dir: String): Seq[Int] = {
-    val hits = fsOf(s, dir).globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/_audiobits-*"))
-    if (hits == null) Nil
-    else hits.toSeq.map(_.getPath.getName.stripPrefix("_audiobits-").toInt)
-  }
+  private def audioBitsFiles(s: SparkSession, dir: String): Seq[org.apache.hadoop.fs.Path] =
+    Option(fsOf(s, dir).globStatus(new org.apache.hadoop.fs.Path(s"$dir/_audiobits-*")))
+      .toSeq.flatten.map(_.getPath)
+
+  private def audioBitsMarks(s: SparkSession, dir: String): Seq[Int] =
+    audioBitsFiles(s, dir).map(_.getName.stripPrefix("_audiobits-").toInt)
 
   /** The store's fingerprint width for audio, from the root marker. */
   def audioBitsOf(s: SparkSession, dir: String): Int = {
@@ -180,7 +180,10 @@ object FingerprintStore {
     * (keeping batch flags: a streaming sink bootstraps inside its own
     * stream's lifetime), then (LAST) the `_audiobits` marker — a crash
     * anywhere before the marker re-runs bootstrap idempotently. A
-    * legacy-layout store's per-kind directories are removed first.
+    * legacy-layout store's per-kind directories and any earlier
+    * bootstrap's `_audiobits` markers are removed first, so a
+    * re-bootstrap serves its own width and a torn one reads as not
+    * bootstrapped.
     */
   def bootstrap(s: SparkSession, media: DataFrame, dir: String,
       audioBits: Int = 32): Unit = {
@@ -189,6 +192,8 @@ object FingerprintStore {
         "of 8 in [16,64]")
     val st = store(dir)
     Legacy.drop(s, st)
+    val fs = fsOf(s, dir)
+    audioBitsFiles(s, dir).foreach(fs.delete(_, false))
     // REBALANCE before the write: the digest rows inherit the media
     // scan's partitioning (one partition per ~file-listing split), so a
     // bare write lands one near-empty parquet file per scan task — the
@@ -198,7 +203,7 @@ object FingerprintStore {
     st.bootstrap(s, Map(Digests ->
       byKind(fusedDigests(s, media, audioBits).hint("rebalance"))),
       dropBatchFlags = false)
-    fsOf(s, dir).create(new org.apache.hadoop.fs.Path(
+    fs.create(new org.apache.hadoop.fs.Path(
       s"$dir/_audiobits-$audioBits"), true).close()
   }
 

@@ -167,18 +167,6 @@ object LLMOps {
       .select("keeper_id", "copies")
       .orderBy("keeper_id")
 
-  /** Distinct (doc_id, shingle-hash) postings of the corpus. */
-  def shinglePostings(s: SparkSession, d: String): DataFrame =
-    shinglePostingsOf(Tables.documents(s, d))
-
-  /** [[shinglePostings(s,d)]] over an arbitrary document frame, for
-    * callers that pre-slice the corpus (incremental dedup shingles ONLY
-    * the new batch).
-    */
-  def shinglePostingsOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(ShingleHash(col("text"), 3)).as("h"))
-      .distinct()
-
   /** Per-doc distinct shingle-hash sets (doc_id, sh) — the
     * [[minhashCandidates]] input. `doc_id` is the documents key, so one
     * row per id, [[Banded]]'s precondition.
@@ -191,26 +179,6 @@ object LLMOps {
     */
   def shingleSetsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), array_distinct(ShingleHash(col("text"), 3)).as("sh"))
-
-  /** MinHash band-key array per doc (16 hashes, bands of 4) from (doc_id,
-    * h) postings: (doc_id, band_keys, n_sh), position b of band_keys
-    * holding band b's key — the [[Banded]] input shape — and n_sh the
-    * doc's posting count, free from the same aggregate. The signature is
-    * 16 `min` aggregates of [[graft.functions.MinhashBands.hash]], which
-    * combine map-side, so only per-doc minima cross the shuffle; for the
-    * callers that start from postings (decontamination). Equal to the
-    * kernel [[minhashBandKeys]] evaluates on per-doc sets (spec-pinned).
-    */
-  def minhashBandArray(postings: DataFrame): DataFrame = {
-    val mins = (0 until MinhashBands.Hashes).map { k =>
-      min(MinhashBands.hash(k, col("h"))).as(s"m$k")
-    }
-    postings.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_sh"), mins: _*)
-      .select(col("doc_id"),
-        MinhashBands.bandArray(mins.indices.map(k => col(s"m$k"))).as("band_keys"),
-        col("n_sh"))
-  }
 
   /** (doc_id, band_keys) of per-doc shingle sets ([[shingleSets]]):
     * the [[graft.functions.MinhashBands]] kernel, row-local, so no
@@ -228,6 +196,29 @@ object LLMOps {
   def minhashCandidates(sets: DataFrame): DataFrame =
     Banded.selfPairs(minhashBandKeys(sets), "doc_id", "band_keys")
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+
+  /** Exact Jaccard of candidate pairs over their shingle sets, the verify
+    * stage of [[qL05]] and [[TrainPrep.fuzzyDecontamAgainst]]: `cand`'s
+    * two id columns (a, b) rejoin `setsA` and `setsB` ((id, sh) frames,
+    * id first, one row per id) by id, and each pair's sets intersect in
+    * place, so no posting is exploded or shuffled. Output: (a, b,
+    * jaccard), with jaccard = |A∩B| / (|A| + |B| − |A∩B|) in doubles.
+    */
+  private[operators] def setJaccard(cand: DataFrame, setsA: DataFrame,
+      setsB: DataFrame): DataFrame = {
+    val Array(a, b) = cand.columns
+    def side(sets: DataFrame, id: String, x: String) =
+      sets.select(col(sets.columns(0)).as(id), col("sh").as(s"sh_$x"))
+    cand
+      .join(side(setsA, a, "a"), Seq(a))
+      .join(side(setsB, b, "b"), Seq(b))
+      .select(col(a), col(b),
+        size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"),
+        (size(col("sh_a")) + size(col("sh_b"))).as("n_ab"))
+      .select(col(a), col(b),
+        (col("inter").cast("double") / (col("n_ab") - col("inter")).cast("double"))
+          .as("jaccard"))
+  }
 
   // ------------------------------------------- incremental (delta) dedup
 
@@ -339,22 +330,12 @@ object LLMOps {
     *
     * Set-based, nothing shuffles postings: [[minhashCandidates]] bands
     * each doc's distinct shingle hashes, kept as one array on one row,
-    * and verification rejoins the two sets by id and intersects them in
-    * place.
+    * and verification ([[setJaccard]]) rejoins the two sets by id and
+    * intersects them in place.
     */
   def qL05(s: SparkSession, d: String): DataFrame = {
     val sets = shingleSets(s, d)
-    def side(x: String) =
-      sets.select(col("doc_id").as(s"doc_$x"), col("sh").as(s"sh_$x"))
-    minhashCandidates(sets)
-      .join(side("a"), Seq("doc_a"))
-      .join(side("b"), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"),
-        (size(col("sh_a")) + size(col("sh_b"))).as("n_ab"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("inter").cast("double") / (col("n_ab") - col("inter")).cast("double"))
-          .as("jaccard"))
+    setJaccard(minhashCandidates(sets), sets, sets)
       .filter(col("jaccard") >= 0.2)
       .orderBy("doc_a", "doc_b")
   }

@@ -532,57 +532,50 @@ object TrainPrep {
     * a crawl), which single-shingle overlap badly over-triggers on and
     * whole-doc exact hashes entirely miss.
     *
-    * Shape: the same two-stage discipline as the LLMOps dedup family —
-    * MinHash band keys on BOTH sides, candidates from the banded join
-    * ([[Banded.crossPairs]], never corpus × benchmark), then the exact
-    * shingle-intersection Jaccard confirms ≥ `threshold`; the verify join
-    * touches only candidate documents' postings.
+    * Shape: the same two-stage discipline as [[LLMOps.qL05]] — MinHash
+    * band keys on BOTH sides, computed row-locally from per-doc shingle
+    * sets ([[LLMOps.minhashBandKeys]]), candidates from one banded join
+    * ([[Banded.crossPairs]], ids only, never corpus × benchmark), then
+    * the exact Jaccard confirms ≥ `threshold`: the verify rejoins the
+    * candidates' two shingle sets by id and intersects them in place
+    * ([[LLMOps.setJaccard]]). No posting is exploded and nothing
+    * aggregates.
     *
-    * `docs` needs (doc_id, text); `bench` needs (bench_id, text). Returns
-    * (doc_id, bench_id, jaccard) for confirmed matches — the drop list a
-    * pipeline anti-joins against before training.
+    * `docs` needs (doc_id, text), one row per doc_id; `bench` needs
+    * (bench_id, text). Returns (doc_id, bench_id, jaccard) for confirmed
+    * matches — the drop list a pipeline anti-joins against before
+    * training.
     */
   def fuzzyDecontam(docs: DataFrame, bench: DataFrame,
       threshold: Double = 0.5): DataFrame =
-    fuzzyDecontamAgainst(docs,
-      LLMOps.shinglePostingsOf(
-        bench.select(col("bench_id").as("doc_id"), col("text")))
-        .select(col("doc_id").as("bench_id"), col("h")),
-      threshold)
+    fuzzyDecontamAgainst(docs, benchSetsOf(bench), threshold)
 
-  /** [[fuzzyDecontam]] against PRECOMPUTED benchmark postings
-    * (bench_id, h) — the shape a streaming gate needs: the static
-    * benchmark side is shingled once (and checkpointed by the caller),
-    * each arriving batch pays only its own shingling plus the banded
-    * join. Bands are derived from the postings on both sides, so the
-    * candidate discipline is identical to the one-shot path.
+  /** (bench_id, sh) shingle sets of a (bench_id, text) benchmark
+    * ([[LLMOps.shingleSetsOf]] keyed by bench_id): the
+    * [[fuzzyDecontamAgainst]] input.
     */
-  def fuzzyDecontamAgainst(docs: DataFrame, benchPosts: DataFrame,
+  private[graft] def benchSetsOf(bench: DataFrame): DataFrame =
+    LLMOps.shingleSetsOf(bench.select(col("bench_id").as("doc_id"), col("text")))
+      .withColumnRenamed("doc_id", "bench_id")
+
+  /** [[fuzzyDecontam]] against PRECOMPUTED benchmark shingle sets
+    * (bench_id, sh), one row per bench_id ([[benchSetsOf]]) — the shape a
+    * streaming gate needs: the static benchmark side is shingled once
+    * (and persisted by the caller), and each arriving batch pays only its
+    * own shingling, a row-local band-key pass over the bench sets and the
+    * banded join.
+    */
+  def fuzzyDecontamAgainst(docs: DataFrame, benchSets: DataFrame,
       threshold: Double = 0.5): DataFrame = {
-    val cp = LLMOps.shinglePostingsOf(docs)
-    val bp = benchPosts.select("bench_id", "h")
-    decontamCandidates(cp, bp.withColumnRenamed("bench_id", "doc_id"))
-      .join(cp, Seq("doc_id"))
-      .join(bp, Seq("bench_id", "h"))
-      .groupBy("doc_id", "bench_id", "n_c", "n_b")
-      .agg(count(lit(1)).as("inter"))
-      .select(col("doc_id"), col("bench_id"),
-        (col("inter").cast("double")
-          / (col("n_c") + col("n_b") - col("inter")).cast("double"))
-          .as("jaccard"))
+    val cs = LLMOps.shingleSetsOf(docs)
+    val bs = benchSets.select(col("bench_id").as("doc_id"), col("sh"))
+    val cand = Banded.crossPairs(LLMOps.minhashBandKeys(cs),
+        LLMOps.minhashBandKeys(bs), "doc_id", "band_keys")
+      .select(col("id_a").as("doc_id"), col("id_b").as("bench_id"))
+    LLMOps.setJaccard(cand, cs, bs)
       .filter(col("jaccard") >= threshold)
       .orderBy("doc_id", "bench_id")
   }
-
-  /** (doc_id, bench_id, n_c, n_b) MinHash candidates of two (doc_id, h)
-    * postings, with each side's posting count.
-    */
-  private[graft] def decontamCandidates(docPosts: DataFrame,
-      benchPosts: DataFrame): DataFrame =
-    Banded.crossPairs(LLMOps.minhashBandArray(docPosts),
-        LLMOps.minhashBandArray(benchPosts), "doc_id", "band_keys", Seq("n_sh"))
-      .select(col("id_a").as("doc_id"), col("id_b").as("bench_id"),
-        col("n_sh_a").as("n_c"), col("n_sh_b").as("n_b"))
 
   /** Q-L50 — fuzzy decontamination against a constructed benchmark: every
     * 13th document, with a fixed four-token suffix appended, stands in

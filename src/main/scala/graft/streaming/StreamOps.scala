@@ -249,45 +249,55 @@ object StreamOps extends Serializable {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.io.StatsManifest
-        val s = batch.sparkSession
-        // MIGRATION GUARD: a table written by the pre-partitioned version
-        // of this sink has parquet files flat at the tableDir root. Mixing
-        // those with `ingest_batch=<id>` subdirectories is silent data
-        // loss — Spark's partition discovery over a mixed-depth layout
-        // returns ONLY the subdirectory rows, so every pre-upgrade row
-        // would vanish from reads with no error. Fail loudly BEFORE the
-        // first partitioned write creates that state; the fix is a
-        // one-time relocation of the root files into a bootstrap
-        // partition (e.g. `ingest_batch=-1`). The guard can only ever
-        // fire before this sink's first partitioned write, so one clean
-        // pass memoizes it — not a root listing (a LIST call on object
-        // stores) per micro-batch for the stream's whole lifetime.
-        if (!migrationChecked.contains(tableDir)) {
-          val tPath = new org.apache.hadoop.fs.Path(tableDir)
-          val tFs = tPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (tFs.exists(tPath)) {
-            val rootParquet = tFs.listStatus(tPath)
-              .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            require(rootParquet.isEmpty,
-              s"$tableDir holds ${rootParquet.length} root-level parquet " +
-                "file(s) from a flat-layout ingest; writing ingest_batch=* " +
-                "partitions beside them would silently hide every " +
-                "root-level row from partition-discovery reads. Relocate " +
-                s"them into $tableDir/ingest_batch=-1/ first.")
-          }
-          migrationChecked.add(tableDir)
-        }
-        batch.write.mode("overwrite")
-          .parquet(s"$tableDir/ingest_batch=$batchId")
-        val mPath = new org.apache.hadoop.fs.Path(manifestDir)
-        val fs = mPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val updated =
-          if (fs.exists(mPath) && StatsManifest.listParquet(s, manifestDir).nonEmpty)
-            StatsManifest.append(s, tableDir, s.read.parquet(manifestDir), statCols)
-          else StatsManifest.build(s, tableDir, statCols)
-        updated.write.mode("overwrite").parquet(manifestDir)
+        manifestBatch(batch, batchId, tableDir, manifestDir, statCols)
       }
+
+  /** One batch of [[ingestWithManifest]], shared with [[ingestPipeline]]'s
+    * table step: write the batch's `ingest_batch=<id>` partition, then
+    * append it to the manifest (or build the manifest when there is none)
+    * and overwrite the manifest with the result.
+    */
+  private def manifestBatch(batch: DataFrame, batchId: Long,
+      tableDir: String, manifestDir: String, statCols: Seq[String]): Unit = {
+    import graft.io.{Readers, StatsManifest}
+    val s = batch.sparkSession
+    // MIGRATION GUARD: a table written by the pre-partitioned version
+    // of this sink has parquet files flat at the tableDir root. Mixing
+    // those with `ingest_batch=<id>` subdirectories is silent data
+    // loss — Spark's partition discovery over a mixed-depth layout
+    // returns ONLY the subdirectory rows, so every pre-upgrade row
+    // would vanish from reads with no error. Fail loudly BEFORE the
+    // first partitioned write creates that state; the fix is a
+    // one-time relocation of the root files into a bootstrap
+    // partition (e.g. `ingest_batch=-1`). The guard can only ever
+    // fire before this sink's first partitioned write, so one clean
+    // pass memoizes it — not a root listing (a LIST call on object
+    // stores) per micro-batch for the stream's whole lifetime.
+    if (!migrationChecked.contains(tableDir)) {
+      val tPath = new org.apache.hadoop.fs.Path(tableDir)
+      val tFs = tPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (tFs.exists(tPath)) {
+        val rootParquet = tFs.listStatus(tPath)
+          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        require(rootParquet.isEmpty,
+          s"$tableDir holds ${rootParquet.length} root-level parquet " +
+            "file(s) from a flat-layout ingest; writing ingest_batch=* " +
+            "partitions beside them would silently hide every " +
+            "root-level row from partition-discovery reads. Relocate " +
+            s"them into $tableDir/ingest_batch=-1/ first.")
+      }
+      migrationChecked.add(tableDir)
+    }
+    batch.write.mode("overwrite")
+      .parquet(s"$tableDir/ingest_batch=$batchId")
+    val mPath = new org.apache.hadoop.fs.Path(manifestDir)
+    val fs = mPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val updated =
+      if (fs.exists(mPath) && StatsManifest.listParquet(s, manifestDir).nonEmpty)
+        StatsManifest.append(s, tableDir, Readers.parquet(s, manifestDir), statCols)
+      else StatsManifest.build(s, tableDir, statCols)
+    updated.write.mode("overwrite").parquet(manifestDir)
+  }
 
   /** Streaming twin of the CDC chunk store ([[graft.io.ChunkStore]]):
     * each micro-batch of arriving documents is ingested incrementally —
@@ -555,57 +565,85 @@ object StreamOps extends Serializable {
     * `$baseDir/clean/`; dropped docs land in `$baseDir/dropped/` with
     * their match evidence (bench_id, jaccard) for audit.
     *
-    * The static benchmark side is shingled ONCE per stream lifetime and
-    * PERSISTED to `$baseDir/_bench_postings` (parquet): a restarted
-    * stream reloads the postings instead of silently re-shingling the
-    * benchmark — restart parity is pinned in StreamBatchParitySpec. Same
-    * `_graft_last_batch` marker contract as [[ingestChunkStore]]
-    * (documented there): replayed batches no-op. The marker alone only
-    * guards COMPLETED batches; a crash between the dropped/ and clean/
-    * appends would replay the batch, so each batch writes into its own
-    * `ingest_batch=<id>` partition subdirectory with OVERWRITE — the
-    * replay rewrites the same subdirectory and the sinks stay
-    * exactly-once under partial-failure replay too. Readers see
-    * `ingest_batch` as a trailing partition column.
+    * The static benchmark side is shingled ONCE per store and PERSISTED
+    * as per-doc shingle sets to `$baseDir/_bench_sets` (parquet,
+    * [[persistedBenchSets]]): a restarted stream reloads the sets instead
+    * of re-shingling the benchmark — restart parity is pinned in
+    * StreamBatchParitySpec. Each batch then bands its own docs against a
+    * scan of the sets through the row-local MinHash kernel
+    * ([[graft.operators.TrainPrep.fuzzyDecontamAgainst]]): no aggregate
+    * over the benchmark runs per batch. Same `_graft_last_batch` marker
+    * contract as [[ingestChunkStore]] (documented there): replayed
+    * batches no-op. The marker alone only guards COMPLETED batches; a
+    * crash between the dropped/ and clean/ appends would replay the
+    * batch, so each batch writes into its own `ingest_batch=<id>`
+    * partition subdirectory with OVERWRITE — the replay rewrites the
+    * same subdirectory and the sinks stay exactly-once under
+    * partial-failure replay too. Readers see `ingest_batch` as a
+    * trailing partition column.
     */
-  /** Benchmark shingle postings, computed once per STORE (not per stream
-    * lifetime): first start shingles the benchmark and persists the
-    * postings to parquet; every restart reloads them from disk. A
-    * localCheckpoint here would silently re-shingle the benchmark on
-    * every restart — harmless for a small eval suite but a contract
-    * violation once the gate guards many streams against a large
-    * benchmark union. Deterministic content, so a concurrent double
-    * start overwrites with identical bytes.
+  def decontamGate(docs: DataFrame, bench: DataFrame, baseDir: String,
+      checkpoint: String, threshold: Double = 0.5)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val benchSets = persistedBenchSets(bench, s"$baseDir/_bench_sets")
+    docs.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        decontamGateBatch(batch, batchId, benchSets, baseDir, checkpoint,
+          threshold)
+      }
+  }
+
+  /** Benchmark shingle sets (bench_id, sh) ([[graft.operators.TrainPrep
+    * .benchSetsOf]]), computed once per STORE (not per stream lifetime):
+    * first start shingles the benchmark and persists the sets to parquet;
+    * every restart reloads them from disk. A localCheckpoint here would
+    * silently re-shingle the benchmark on every restart — harmless for a
+    * small eval suite but a contract violation once the gate guards many
+    * streams against a large benchmark union. Deterministic content, so a
+    * concurrent double start overwrites with identical bytes.
+    *
+    * The banded join needs one row per bench_id, so a benchmark with a
+    * duplicate bench_id is refused here, once, before publication — not
+    * per batch. The result is read back through [[graft.io.Readers
+    * .parquet]] (schema from one footer, no inference job). Publishing
+    * removes a `_bench_postings` directory beside `dir`: the postings
+    * cache earlier versions of the gate kept, which nothing reads now.
     */
-  private[graft] def persistedBenchPostings(bench: DataFrame, dir: String): DataFrame = {
-    import graft.operators.LLMOps
+  private[graft] def persistedBenchSets(bench: DataFrame, dir: String): DataFrame = {
+    import graft.io.Readers
+    import graft.operators.TrainPrep
     import org.apache.hadoop.fs.Path
     val s = bench.sparkSession
     val p = new Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // STAGE-AND-RENAME publication: the old exists-then-overwrite was not
-    // concurrency-safe — parquet overwrite is delete-then-write, so two
-    // streams bootstrapping the same baseDir could interleave and a reader
-    // could list a half-written directory even though the content is
-    // deterministic. Now the postings are written COMPLETELY into a
-    // private staging directory (flag file last) and published with one
-    // atomic rename; a loser of the publish race discards its stage and
-    // reads the winner's copy. A directory WITHOUT the flag is a
-    // crashed/legacy write and is rebuilt.
+    // STAGE-AND-RENAME publication: parquet overwrite is delete-then-
+    // write, so two streams bootstrapping the same baseDir could
+    // interleave and a reader could list a half-written directory. The
+    // sets are written COMPLETELY into a private staging directory (flag
+    // file last) and published with one atomic rename; a loser of the
+    // publish race discards its stage and reads the winner's copy. A
+    // directory WITHOUT the flag is a crashed write and is rebuilt.
     val readyFlag = new Path(p, "_graft_ready")
     if (!fs.exists(readyFlag)) {
       val stage = new Path(
         dir + "__stage-" + java.util.UUID.randomUUID().toString)
-      LLMOps.shinglePostingsOf(
-          bench.select(col("bench_id").as("doc_id"), col("text")))
-        .select(col("doc_id").as("bench_id"), col("h"))
-        .write.mode("overwrite").parquet(stage.toString)
+      TrainPrep.benchSetsOf(bench).write.mode("overwrite").parquet(stage.toString)
+      val ids = Readers.parquet(s, stage.toString)
+        .agg(count(lit(1)), countDistinct(col("bench_id"))).head()
+      if (ids.getLong(0) != ids.getLong(1)) {
+        fs.delete(stage, true)
+        throw new IllegalArgumentException(s"benchmark for $dir has " +
+          s"${ids.getLong(0) - ids.getLong(1)} duplicate bench_id row(s); " +
+          "the banded join needs one row per bench_id")
+      }
       fs.create(new Path(stage, "_graft_ready"), true).close()
       if (fs.exists(p) && !fs.exists(readyFlag))
-        fs.delete(p, true) // crashed or pre-flag layout: replace wholesale
+        fs.delete(p, true) // crashed write: replace wholesale
       publishStagedDir(fs, stage, p)
+      fs.delete(new Path(p.getParent, "_bench_postings"), true)
     }
-    s.read.parquet(dir)
+    Readers.parquet(s, dir)
   }
 
   /** Publish a fully-staged directory to `dest` with rename semantics
@@ -632,19 +670,6 @@ object StreamOps extends Serializable {
     if (fs.exists(stage)) fs.delete(stage, true) // lost the race outright
   }
 
-  def decontamGate(docs: DataFrame, bench: DataFrame, baseDir: String,
-      checkpoint: String, threshold: Double = 0.5)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.{LLMOps, TrainPrep}
-    val benchPosts = persistedBenchPostings(bench, s"$baseDir/_bench_postings")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decontamGateBatch(batch, batchId, benchPosts, baseDir, checkpoint,
-          threshold)
-      }
-  }
-
   /** The per-batch body of [[decontamGate]], exposed for the replay pins
     * in StreamBatchParitySpec: a call with an already-committed batchId
     * must no-op, and a REPLAY of an uncommitted batch (crash before the
@@ -652,7 +677,7 @@ object StreamOps extends Serializable {
     * exactly one copy of the batch's rows.
     */
   private[graft] def decontamGateBatch(batch: DataFrame, batchId: Long,
-      benchPosts: DataFrame, baseDir: String, checkpoint: String,
+      benchSets: DataFrame, baseDir: String, checkpoint: String,
       threshold: Double): Unit = {
     import graft.operators.TrainPrep
     val s = batch.sparkSession
@@ -665,7 +690,7 @@ object StreamOps extends Serializable {
       // anti-join); pin it once so the source isn't re-read twice
       val b = batch.localCheckpoint()
       val matches = TrainPrep
-        .fuzzyDecontamAgainst(b, benchPosts, threshold)
+        .fuzzyDecontamAgainst(b, benchSets, threshold)
         .localCheckpoint() // evidence consumed twice (dropped + anti)
       matches.write.mode("overwrite")
         .parquet(s"$baseDir/dropped/ingest_batch=$batchId")
@@ -683,14 +708,18 @@ object StreamOps extends Serializable {
     * `baseDir`:
     *   0. `rejected/` — OPT-IN admission control: the map-side qL22
     *                    quality gate (`qualityGate = true`) and/or fuzzy
-    *                    benchmark decontamination (`decontamBench`) run
-    *                    FIRST; rejects land here with a `reason` column
-    *                    and never reach any other sink;
+    *                    benchmark decontamination (`decontamBench`, its
+    *                    shingle sets persisted once to `_bench_sets/` —
+    *                    [[decontamGate]]'s per-batch path) run FIRST;
+    *                    rejects land here with a `reason` column and
+    *                    never reach any other sink;
     *   1. `store/`    — chunk-store build/append (only never-seen chunks
     *                    land; [[ingestChunkStoreBatch]]'s logic);
     *   2. `table/`    — raw batch appended as parquet, and
     *      `manifest/`  — the stats manifest incrementally republished
-    *                    (only the new files get footer reads);
+    *                    (only the new files get footer reads):
+    *                    [[ingestWithManifest]]'s batch body, flat-layout
+    *                    migration guard included;
     *   3. `pairs/`    — near-dup candidate pairs touching this batch,
     *                    banded against the running snapshot, and
     *      `snapshot/` — a [[graft.operators.MinhashSnapshot]] the batch's
@@ -724,8 +753,8 @@ object StreamOps extends Serializable {
     // the static benchmark side is shingled ONCE and persisted, outside
     // the stream (the decontamGate contract): batches pay only their own
     // shingling, and a restarted stream reloads instead of re-shingling
-    val benchPosts = decontamBench.map(bench =>
-      persistedBenchPostings(bench, s"$baseDir/_bench_postings"))
+    val benchSets = decontamBench.map(bench =>
+      persistedBenchSets(bench, s"$baseDir/_bench_sets"))
     // seeded only when absent: a restarted stream keeps the history its
     // committed batches appended
     val snapDir = s"$baseDir/snapshot"
@@ -737,11 +766,8 @@ object StreamOps extends Serializable {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.io.StatsManifest
-        val s = batch.sparkSession
-        val conf = s.sparkContext.hadoopConfiguration
         val marker = new org.apache.hadoop.fs.Path(s"$checkpoint/_graft_last_batch")
-        val fs = marker.getFileSystem(conf)
+        val fs = marker.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
         if (batchId > readMarker(fs, marker)) {
           // the batch feeds three consumers (chunking, manifest write,
           // shingling) — materialize once instead of re-reading the
@@ -764,9 +790,9 @@ object StreamOps extends Serializable {
               .withColumn("reason", lit("quality"))
             b = ok
           }
-          benchPosts.foreach { bp =>
+          benchSets.foreach { bs =>
             val contaminated = TrainPrep
-              .fuzzyDecontamAgainst(b, bp, decontamThreshold)
+              .fuzzyDecontamAgainst(b, bs, decontamThreshold)
               .select("doc_id").distinct().localCheckpoint()
             rejects :+= b.join(contaminated, Seq("doc_id"), "left_semi")
               .withColumn("reason", lit("contaminated"))
@@ -777,34 +803,18 @@ object StreamOps extends Serializable {
             _.write.mode("overwrite")
               .parquet(s"$baseDir/rejected/ingest_batch=$batchId"))
 
-          // data-path probes use the DATA paths' own FileSystem — the
-          // checkpoint's fs (above) may be a different filesystem entirely
-          def dataExists(p: String): Boolean = {
-            val hp = new org.apache.hadoop.fs.Path(p)
-            hp.getFileSystem(conf).exists(hp)
-          }
-
           // 1) chunk store (shared bootstrap-or-append branch, the
           // stream's batch id — a replay no-ops at the store's own flag)
           writeOrAppendStore(b.select("doc_id", "text"),
             s"$baseDir/store", batchId)
 
-          // 2) raw table + incremental manifest
-          val tableDir = s"$baseDir/table"
-          val manifestDir = s"$baseDir/manifest"
-          // batch-stamped partition + overwrite: a partial-failure replay
-          // rewrites the SAME subdirectory instead of appending duplicate
-          // rows; the manifest's append (left-semi against the live file
-          // listing) drops any rows for files the overwrite removed
-          b.write.mode("overwrite")
-            .parquet(s"$tableDir/ingest_batch=$batchId")
-          val updated =
-            if (dataExists(manifestDir) &&
-                StatsManifest.listParquet(s, manifestDir).nonEmpty)
-              StatsManifest.append(s, tableDir, s.read.parquet(manifestDir),
-                Seq("doc_id"))
-            else StatsManifest.build(s, tableDir, Seq("doc_id"))
-          updated.write.mode("overwrite").parquet(manifestDir)
+          // 2) raw table + incremental manifest: batch-stamped partition
+          // + overwrite, so a partial-failure replay rewrites the SAME
+          // subdirectory instead of appending duplicate rows; the
+          // manifest's append (left-semi against the live file listing)
+          // drops any rows for files the overwrite removed
+          manifestBatch(b, batchId, s"$baseDir/table", s"$baseDir/manifest",
+            Seq("doc_id"))
 
           // 3) banded delta-dedup against the running snapshot
           deltaDedupBatch(b, batchId, snapDir, s"$baseDir/pairs")

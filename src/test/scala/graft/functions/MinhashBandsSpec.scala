@@ -18,10 +18,9 @@ class MinhashBandsSpec extends AnyFunSuite with SparkFixture
   private val sf001 =
     new java.io.File(sfDir).toPath.resolveSibling("sf0.01").toString
 
-  /** The band keys as 16 min-aggregates over the postings, spelled out
-    * with literal constants: the reference both spellings (the kernel on
-    * sets, `minhashBandArray` on postings) must equal, since persisted
-    * snapshots hold these keys.
+  /** The band keys as 16 min-aggregates over (doc_id, h) postings,
+    * spelled out with literal constants: the reference the kernel on
+    * per-doc sets must equal, since persisted snapshots hold these keys.
     */
   private def aggregateKeys(postings: DataFrame): DataFrame = {
     val mins = (0 until 16).map { k =>
@@ -50,20 +49,17 @@ class MinhashBandsSpec extends AnyFunSuite with SparkFixture
 
   test("minhash_bands equals the 16-min-aggregate band keys on every " +
       "sf0.01 doc, interpreted and codegen'd, on sets and on postings") {
-    val postings = LLMOps.shinglePostings(spark, sf001)
+    val postings = Tables.documents(spark, sf001)
+      .select(col("doc_id"), explode(ShingleHash(col("text"), 3)).as("h"))
     val nDocs = Tables.documents(spark, sf001).count()
     for (codegen <- Seq(true, false)) withCodegen(codegen) {
       val sets = Tables.documents(spark, sf001).select(col("doc_id"),
         MinhashBands(array_distinct(ShingleHash(col("text"), 3))).as("got"))
-      val viaPostings = LLMOps.minhashBandArray(postings)
-        .select(col("doc_id"), col("band_keys").as("got"))
       val want = aggregateKeys(postings)
       assert(want.count() == nDocs)
-      for (got <- Seq(sets, viaPostings)) {
-        val diff = got.join(want, Seq("doc_id"), "full_outer")
-          .filter(!(col("got") <=> col("want")))
-        assert(diff.isEmpty, s"codegen=$codegen: ${diff.take(3).mkString("; ")}")
-      }
+      val diff = sets.join(want, Seq("doc_id"), "full_outer")
+        .filter(!(col("got") <=> col("want")))
+      assert(diff.isEmpty, s"codegen=$codegen: ${diff.take(3).mkString("; ")}")
       val stages = sets.queryExecution.executedPlan.collect {
         case w: WholeStageCodegenExec => w
       }

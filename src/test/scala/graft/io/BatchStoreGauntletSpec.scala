@@ -28,9 +28,12 @@ class BatchStoreGauntletSpec extends AnyFunSuite with SparkFixture {
     rows.toDF("doc_id", "v").repartition(2)
   }
 
-  private def readSet(st: BatchStore, cat: String): Set[(Long, Long)] =
-    st.readCat(spark, cat).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+  /** A catalog's rows as a sorted multiset: a row landed twice shows. */
+  private def rowsOf(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  private def readRows(st: BatchStore, cat: String): Seq[(Long, Long)] =
+    rowsOf(st.readCat(spark, cat))
 
   test("randomized op-sequence gauntlet: store state equals the model " +
       "after every op, across torn appends, maintenance, replays, " +
@@ -40,7 +43,8 @@ class BatchStoreGauntletSpec extends AnyFunSuite with SparkFixture {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft-bsg-$seed").toString
       val st = BatchStore(dir, Cats)
-      // the model: per catalog, the committed row set
+      // the model: per catalog, the committed row set (rows are unique
+      // by construction, so a set is the model's multiset)
       val model = scala.collection.mutable.Map(
         Cats.map(_ -> Set.empty[(Long, Long)]): _*)
       var nextDoc = 0L
@@ -79,7 +83,7 @@ class BatchStoreGauntletSpec extends AnyFunSuite with SparkFixture {
         } catch { case Torn => false } // crashed mid-land
 
       def check(where: String): Unit = Cats.foreach { cat =>
-        assert(readSet(st, cat) == model(cat),
+        assert(readRows(st, cat) == model(cat).toSeq.sorted,
           s"seed $seed, $where, catalog $cat diverged from the model")
       }
 
@@ -213,12 +217,9 @@ class BatchStoreGauntletSpec extends AnyFunSuite with SparkFixture {
       df(rows ++ Seq((100L, 1L))).select("doc_id"))
     assert(onDisk("batch*") >= originals,
       "round N+1 must not reap round N's retirees inside the window")
-    assert(reader.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      == rows.toSet,
+    assert(rowsOf(reader) == rows.sorted,
       "a reader planned before round N must materialize after round N+1")
-    assert(st.readCat(spark, "alpha").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-      == (rows ++ Seq((100L, 1L))).toSet)
+    assert(readRows(st, "alpha") == (rows ++ Seq((100L, 1L))).sorted)
     // the deletion-SLA hook ignores the window by design
     assert(st.reapRetired(spark) > 0)
     assert(onDisk("batch*") == 0 ||

@@ -79,11 +79,22 @@ class BandedSpec extends AnyFunSuite with SparkFixture
   }
 
   test("minhash and decontam candidates have no aggregate above the band join") {
-    val posts = LLMOps.shinglePostings(spark, sfDir)
     assertNoAggregateAboveBandJoin(
       LLMOps.minhashCandidates(LLMOps.shingleSets(spark, sfDir)))
-    assertNoAggregateAboveBandJoin(TrainPrep.decontamCandidates(posts,
-      posts.filter(col("doc_id") % 13 === 0)))
+    // decontamination (q_l50's path, and the streaming gate's per-batch
+    // plan over persisted bench sets): no aggregate anywhere, so none
+    // over the benchmark's rows
+    val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
+    val bench = docs.filter(col("doc_id") % 13 === 0)
+      .select(col("doc_id").as("bench_id"), col("text"))
+    val dir = Files.createTempDirectory("graft-bsets").toString
+    for (df <- Seq(TrainPrep.qL50(spark, sfDir),
+        TrainPrep.fuzzyDecontamAgainst(docs,
+          graft.streaming.StreamOps.persistedBenchSets(bench, s"$dir/sets")))) {
+      assertNoAggregateAboveBandJoin(df)
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("Aggregate"), plan)
+    }
     // the delta against the persisted snapshot (q_l40's path)
     assertNoAggregateAboveBandJoin(LLMOps.qL40(spark, sfDir))
   }
@@ -118,5 +129,26 @@ class BandedSpec extends AnyFunSuite with SparkFixture
         Set("Banded.scala", "FirstEqualIndex.scala", "SimilarityJoinRewrite.scala")) ++
       offenders("\"band_key\"", Set("Banded.scala"))
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("src/main computes MinHash band keys in one place: " +
+      "LLMOps.minhashBandKeys") {
+    // a call `MinhashBands(` or a member `MinhashBands.` outside the
+    // kernel's own file: only minhashBandKeys' body may hold one
+    val use = "MinhashBands\\s*[.(]".r
+    val root = Paths.get("src/main/scala")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") &&
+        f.getFileName.toString != "MinhashBands.scala")
+      .flatMap(f => use.findAllMatchIn(Files.readString(f)).map(m => (f, m.start)))
+      .toSeq
+    val where = hits.map { case (f, at) => s"${root.relativize(f)}@$at" }
+    assert(where.size == 1, where.mkString(", "))
+    val (file, at) = hits.head
+    val src = Files.readString(file)
+    val body = src.indexOf("def minhashBandKeys(")
+    assert(file.endsWith(Paths.get("graft", "operators", "LLMOps.scala")) &&
+      body >= 0 && body < at && src.indexOf("def ", body + 1) > at,
+      s"MinhashBands used at ${where.head}, outside LLMOps.minhashBandKeys")
   }
 }

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Spark-job ceilings for the dedup path's store and graph operators, the
-  * chunk store, and the clone and sync path. At this size they are bound
+  * chunk store, the clone and sync path, and benchmark decontamination
+  * (one-shot and one streaming-gate batch). At this size they are bound
   * by job count (driver time between jobs), not by data, so a job added
   * back is the regression to catch; counts are deterministic where wall
   * time is not.
@@ -102,5 +103,25 @@ class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture {
       assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
     } finally layouts.keys.foreach(t => graft.plans.ManifestRegistry
       .deregister(spark, s"$dir/clone_layout/$t.parquet"))
+  }
+
+  test("fuzzy decontamination and one gate batch stay within their job " +
+      "ceilings") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val bench = docs.filter(col("doc_id") % 13 === 0)
+      .select(col("doc_id").as("bench_id"),
+        concat(col("text"), lit(" held out eval sample")).as("text"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val sets = graft.streaming.StreamOps.persistedBenchSets(bench,
+      s"$dir/out/_bench_sets")
+    val half = docs.filter(col("doc_id") % 2 === 0).localCheckpoint()
+    Seq[(String, Int, () => Unit)](
+      ("fuzzyDecontam", 8, () => TrainPrep.fuzzyDecontam(docs, bench).collect()),
+      ("decontamGateBatch", 14, () => graft.streaming.StreamOps
+        .decontamGateBatch(half, 0L, sets, s"$dir/out", s"$dir/ckpt", 0.5))
+    ).foreach { case (op, ceiling, run) =>
+      val jobs = jobsOf(run())
+      assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
+    }
   }
 }

@@ -49,4 +49,13 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkFixture {
     assert(FingerprintStore.imageHashes(spark, dir).columns.toSeq ==
       Seq("doc_id", "dhash"))
   }
+
+  test("a re-bootstrap into the same dir serves its own audio width") {
+    val dir = tmp("rebits")
+    val some = media.filter(col("doc_id") % 5 === 0)
+    FingerprintStore.bootstrap(spark, some, dir, audioBits = 32)
+    assert(FingerprintStore.audioBitsOf(spark, dir) == 32)
+    FingerprintStore.bootstrap(spark, some, dir, audioBits = 16)
+    assert(FingerprintStore.audioBitsOf(spark, dir) == 16)
+  }
 }

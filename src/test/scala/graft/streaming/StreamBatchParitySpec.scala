@@ -384,18 +384,20 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(s"$base/table").count() == docs.count())
   }
 
-  test("bench postings publication is staged: a published dir carries the " +
+  test("bench sets publication is staged: a published dir carries the " +
       "ready flag, and a flagless (crashed/legacy) dir is rebuilt whole") {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val bench = docs.filter(col("doc_id") % 17 === 0)
       .select(col("doc_id").as("bench_id"), col("text"))
     val base = java.nio.file.Files.createTempDirectory("graft-bp").toString
-    val dir = s"$base/_bench_postings"
-    val first = StreamOps.persistedBenchPostings(bench, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(first.nonEmpty)
+    val dir = s"$base/_bench_sets"
+    def setsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
+    val first = setsOf(StreamOps.persistedBenchSets(bench, dir))
+    assert(first.nonEmpty && first == setsOf(
+      graft.operators.LLMOps.shingleSetsOf(bench.withColumnRenamed("bench_id", "doc_id"))))
     assert(new java.io.File(s"$dir/_graft_ready").isFile,
-      "published postings must carry the staged-publication flag")
+      "published sets must carry the staged-publication flag")
     // a dir WITHOUT the flag is treated as torn: rebuilt wholesale, same
     // deterministic content (here we also corrupt it to prove the rebuild)
     val fs = new org.apache.hadoop.fs.Path(base)
@@ -404,17 +406,34 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
     val files = new java.io.File(dir).listFiles()
       .filter(f => f.getName.endsWith(".parquet"))
     files.tail.foreach(_.delete()) // half-written state a reader could list
-    val rebuilt = StreamOps.persistedBenchPostings(bench, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rebuilt = setsOf(StreamOps.persistedBenchSets(bench, dir))
     assert(rebuilt == first, "flagless dir must be rebuilt to full content")
     assert(new java.io.File(s"$dir/_graft_ready").isFile)
     // and a published dir RELOADS instead of rewriting: same files remain
     val inode = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    StreamOps.persistedBenchPostings(bench, dir).count()
+    StreamOps.persistedBenchSets(bench, dir).count()
     val after = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
     assert(after == inode, "a ready dir must be reloaded, not rewritten")
+  }
+
+  test("persistedBenchSets refuses a duplicate bench_id before publishing " +
+      "and replaces a leftover postings cache") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val bench = docs.filter(col("doc_id") % 17 === 0)
+      .select(col("doc_id").as("bench_id"), col("text"))
+    val base = java.nio.file.Files.createTempDirectory("graft-bs").toString
+    val e = intercept[IllegalArgumentException](StreamOps.persistedBenchSets(
+      bench.unionByName(bench.limit(1)), s"$base/_bench_sets"))
+    assert(e.getMessage.contains("duplicate bench_id"), e.getMessage)
+    assert(new java.io.File(base).list().isEmpty,
+      "a refused benchmark must leave neither a stage nor a published dir")
+    // an earlier gate's postings cache beside the sets goes on publication
+    bench.select(col("bench_id"), lit(1L).as("h"))
+      .write.parquet(s"$base/_bench_postings")
+    StreamOps.persistedBenchSets(bench, s"$base/_bench_sets")
+    assert(new java.io.File(base).list().toSeq == Seq("_bench_sets"))
   }
 
   test("admission-gated ingest pipeline: quality + decontam rejects match " +
@@ -665,16 +684,15 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
     assert(cleanIds.distinct.size == cleanIds.size)
     assert(cleanIds.toSet ==
       docs.collect().map(_.getLong(0)).toSet -- droppedIds)
-    // restart contract: the benchmark postings were persisted on first
-    // start, so a restarted gate must RELOAD them, not re-shingle —
-    // pinned by corrupting nothing and checking the file-backed postings
+    // restart contract: the benchmark shingle sets were persisted on
+    // first start, so a restarted gate must RELOAD them, not re-shingle —
+    // pinned by corrupting nothing and checking the file-backed sets
     // exist and match a fresh shingling
-    val persisted = spark.read.parquet(s"$base/out/_bench_postings")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val reshingled = graft.operators.LLMOps.shinglePostingsOf(
+    val persisted = spark.read.parquet(s"$base/out/_bench_sets")
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
+    val reshingled = graft.operators.LLMOps.shingleSetsOf(
         bench.select(col("bench_id").as("doc_id"), col("text")))
-      .select(col("doc_id"), col("h"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
     assert(persisted == reshingled && persisted.nonEmpty)
   }
 
@@ -685,11 +703,10 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
       .select(col("doc_id").as("bench_id"),
         concat(col("text"), lit(" held out eval sample")).as("text"))
     val base = java.nio.file.Files.createTempDirectory("graft-replay").toString
-    val posts = StreamOps.persistedBenchPostings(
-      bench, s"$base/out/_bench_postings")
+    val sets = StreamOps.persistedBenchSets(bench, s"$base/out/_bench_sets")
     val half = docs.agg(max("doc_id")).head().getLong(0) / 2
     val b0 = docs.filter(col("doc_id") <= half)
-    StreamOps.decontamGateBatch(b0, 0L, posts, s"$base/out", s"$base/ckpt", 0.5)
+    StreamOps.decontamGateBatch(b0, 0L, sets, s"$base/out", s"$base/ckpt", 0.5)
     val afterFirst = spark.read.parquet(s"$base/out/clean")
       .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
     // simulate the crash-before-marker replay: delete the marker (as if
@@ -700,15 +717,15 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt/_graft_last_batch"),
       false)
-    StreamOps.decontamGateBatch(b0, 0L, posts, s"$base/out", s"$base/ckpt", 0.5)
+    StreamOps.decontamGateBatch(b0, 0L, sets, s"$base/out", s"$base/ckpt", 0.5)
     val afterReplay = spark.read.parquet(s"$base/out/clean")
       .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
     assert(afterReplay == afterFirst)
     assert(afterReplay.distinct.size == afterReplay.size)
     // and a call with an already-committed id no-ops (marker guard)
-    StreamOps.decontamGateBatch(b0, 0L, posts, s"$base/out", s"$base/ckpt", 0.5)
+    StreamOps.decontamGateBatch(b0, 0L, sets, s"$base/out", s"$base/ckpt", 0.5)
     // second batch extends, first batch's partition is untouched
-    StreamOps.decontamGateBatch(docs.filter(col("doc_id") > half), 1L, posts,
+    StreamOps.decontamGateBatch(docs.filter(col("doc_id") > half), 1L, sets,
       s"$base/out", s"$base/ckpt", 0.5)
     val all = spark.read.parquet(s"$base/out/clean")
       .select("doc_id").collect().map(_.getLong(0)).toSeq
