@@ -73,7 +73,7 @@ object StatsManifest {
         // upgrades band pruning to metadata-ONLY answers — a file whose
         // band sits inside the query band still needs its nulls counted
         // before its `rows` can be credited without a scan. NULL =
-        // footer didn't say = the file stays scan-only for countPruned.
+        // footer didn't say = the file is never credited without a scan.
         StructField(s"nulls_$c", LongType, nullable = true))) ++
        stringCols.flatMap(c => Seq(
         StructField(s"smin_$c", StringType, nullable = true),
@@ -98,21 +98,23 @@ object StatsManifest {
     if (!isPrintableAscii(s)) None else Some(s.take(width))
 
   /** Truncated UPPER band of a string max: the value itself when short
-    * enough, else the 16-char prefix with its rightmost incrementable
-    * char bumped and the tail dropped — ≥ every string carrying the
-    * original prefix. None outside printable ASCII or when no char can
-    * bump (all '~').
+    * enough, else the [[bump]] of its 16-char prefix. None outside
+    * printable ASCII or when no char can bump.
     */
   private[graft] def bandHi(s: String,
       width: Int = StringBandWidth): Option[String] =
     if (!isPrintableAscii(s)) None
     else if (s.length <= width) Some(s)
-    else {
-      val p = s.substring(0, width)
-      val i = p.lastIndexWhere(_ < '~')
-      if (i < 0) None
-      else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
-    }
+    else bump(s.substring(0, width))
+
+  /** The rightmost incrementable char of the printable-ASCII prefix `p`
+    * bumped and the tail dropped: ≥ every string starting with `p`. None
+    * when no char can bump (all '~').
+    */
+  private[graft] def bump(p: String): Option[String] = {
+    val i = p.lastIndexWhere(_ < '~')
+    if (i < 0) None else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
+  }
 
   /** Per-file (min, max) of each of `cols` plus row count, from parquet
     * FOOTERS only — no data pages are read. Footer reads are distributed
@@ -193,7 +195,7 @@ object StatsManifest {
               .find(_.getPath.toDotString == col).orNull)
             // null-value count, independent of min/max usability: every
             // chunk must SAY its null count (isNumNullsSet) or the file's
-            // count is unknown (NULL) and countPruned falls back to a scan
+            // count is unknown (NULL) and countSplit puts it in the scan class
             val nulls: Any = {
               val counts = chunks.map(cc =>
                 if (cc == null || cc.getStatistics == null ||
@@ -458,84 +460,27 @@ object StatsManifest {
         }))
       .select("file").collect().map(_.getString(0)).toSeq
 
-  /** Manifest-pruned read: hand Spark ONLY the surviving files, then
-    * re-apply the full predicate. The manifest decides what to OPEN, the
-    * engine still decides what to RETURN — so NULL/lossy STATS can only
-    * cost speed. The manifest's FILE LIST, however, is the source of
-    * truth for what exists: a file the manifest has never seen is not
-    * read, so the snapshot a reader uses defines the data version it
-    * sees (exactly the Delta/Iceberg contract — readers pin a manifest
-    * version; writers publish a new one after the data lands, as
-    * `StreamOps.ingestWithManifest` does per batch).
-    *
-    * `basePath` keeps hive-style partition columns resolvable when the
-    * leaf files live under `key=value/` directories (footer stats never
-    * cover partition columns — bounds on them keep every file — but the
-    * columns themselves survive the pruned read).
-    */
-  def readPruned(s: SparkSession, dir: String, manifest: DataFrame,
-      bounds: Seq[(String, Long, Long)]): DataFrame = {
-    val keep = pruneFiles(manifest, bounds)
-    if (keep.isEmpty) Readers.parquet(s, dir).where(lit(false))
-    else {
-      val pred = bounds.map { case (c, lo, hi) => col(c).between(lo, hi) }
-        .reduceOption(_ && _).getOrElse(lit(true))
-      s.read.option("basePath", dir).parquet(keep: _*).where(pred)
-    }
-  }
-
-  /** The result of a [[countPruned]] metadata-first count: the exact
-    * `total`, how many rows were credited straight from manifest metadata
-    * (`metadataRows` over `fullFiles` files), and how many boundary files
-    * actually got scanned (`scannedFiles`).
-    */
-  final case class PrunedCount(total: Long, metadataRows: Long,
-      fullFiles: Int, scannedFiles: Int)
-
-  /** Metadata-first COUNT(*) under a conjunctive band predicate — the
-    * Iceberg/Delta "metadata-only query" answered from this manifest.
-    * On a clustered layout a band predicate splits the table's files into
-    * three classes: files the bands rule out (dropped by [[pruneFiles]]'s
-    * logic), files that sit WHOLLY inside the query band (for every bound:
-    * non-NULL stats, min ≥ lo, max ≤ hi, and ZERO nulls in the column —
-    * a NULL row satisfies no band, so the footer's null count is what
-    * licenses crediting the file's `rows` blind), and boundary files that
-    * genuinely straddle an edge. Only the third class is read; at 100 TB
-    * with range/Z-order clustering that is O(band surface), not O(band
-    * volume) — the difference between touching 2 files and 20 000 for a
-    * month-count on a year of data.
-    *
-    * Exactness is unconditional: fully-covered files contribute their
-    * footer row count (exact by parquet contract), scanned files are
-    * counted under the real predicate, and any file with missing/unknown
-    * stats or null counts lands in the scan class — metadata coverage is
-    * an optimization, never a correctness bet. Manifests persisted before
-    * the nulls channel existed (no `nulls_<c>` columns) simply scan
-    * every surviving file, same total.
-    */
-  def countPruned(s: SparkSession, dir: String, manifest: DataFrame,
-      bounds: Seq[(String, Long, Long)]): PrunedCount = {
-    val (metaRows, nFull, scanFiles) = countSplit(manifest, bounds)
-    val scanned =
-      if (scanFiles.isEmpty) 0L
-      else {
-        val pred = bounds.map { case (c, lo, hi) => col(c).between(lo, hi) }
-          .reduce(_ && _)
-        s.read.option("basePath", dir).parquet(scanFiles: _*).where(pred)
-          .count()
-      }
-    PrunedCount(metaRows + scanned, metaRows, nFull, scanFiles.size)
-  }
-
-  /** The metadata side of [[countPruned]], without executing the boundary
-    * scan: (metadata-credited rows, fully-covered file count, boundary
-    * file list). What [[graft.plans.MetaCountRule]] consults at planning
-    * time — manifest frames are file-count-sized eager checkpoints, so
-    * this is driver work of the same magnitude as any file listing.
+  /** The metadata-first split of a COUNT(*) under a conjunctive band
+    * predicate, the Iceberg/Delta "metadata-only query" that
+    * [[graft.plans.MetaCountRule]] plans: (metadata-credited rows,
+    * fully-covered file count, boundary file list). On a clustered layout
+    * a band predicate splits the table's files into three classes: files
+    * the bands rule out, files that sit WHOLLY inside the query band (for
+    * every bound: non-NULL stats, min ≥ lo, max ≤ hi, and ZERO nulls in
+    * the column — a NULL row satisfies no band, so the footer's null
+    * count is what licenses crediting the file's `rows` blind), and
+    * boundary files that genuinely straddle an edge. Only the third class
+    * needs a scan; at 100 TB with range/Z-order clustering that is
+    * O(band surface), not O(band volume). Any file with missing stats or
+    * null counts lands in the boundary class, so the answer stays exact;
+    * manifests persisted before the nulls channel existed (no
+    * `nulls_<c>` columns) credit nothing. Manifest frames are
+    * file-count-sized eager checkpoints, so this is driver work of the
+    * same magnitude as any file listing.
     */
   def countSplit(manifest: DataFrame, bounds: Seq[(String, Long, Long)])
       : (Long, Int, Seq[String]) = {
-    require(bounds.nonEmpty, "countPruned needs at least one band bound")
+    require(bounds.nonEmpty, "countSplit needs at least one band bound")
     val surviving = manifest.where(survives(bounds))
     val fullCov = coalesce(bounds.map { case (c, lo, hi) =>
       val nullsKnown =
@@ -550,60 +495,6 @@ object StatsManifest {
     val scanFiles = surviving.where(!fullCov)
       .select("file").collect().map(_.getString(0)).toSeq
     (full.getLong(0), full.getLong(1).toInt, scanFiles)
-  }
-
-  /** The result of a [[minMaxPruned]] metadata-first extreme scan. */
-  final case class PrunedMinMax(min: Option[Long], max: Option[Long],
-      scannedFiles: Int)
-
-  /** Metadata-first global MIN/MAX of an integral manifest column: files
-    * with usable footer stats contribute their (min, max) without being
-    * opened — on a fully-statted table the answer costs zero data reads
-    * at any table size — and only files whose stats degraded to NULL
-    * (binary-backed, missing, or all-NULL chunks) are scanned and folded
-    * in. MIN/MAX ignore NULL rows by SQL semantics, which is exactly why
-    * no null-count check is needed here (unlike [[countPruned]]).
-    * Integral (INT32/INT64) column domains only — the manifest's long
-    * domain IS the column domain there; DATE/TIMESTAMP callers should
-    * prune with bounds and aggregate through [[readPruned]], where the
-    * engine keeps the typed domain.
-    */
-  def minMaxPruned(s: SparkSession, dir: String, manifest: DataFrame,
-      c: String): PrunedMinMax = {
-    require(manifest.columns.contains(s"min_$c"),
-      s"manifest has no stats channel for column '$c'")
-    val rows = manifest.select(col("file"), col(s"min_$c"), col(s"max_$c"))
-      .collect() // file-count-sized, same magnitude as any planner listing
-    val known = rows.filter(r => !r.isNullAt(1) && !r.isNullAt(2))
-    val unknown = rows.filter(r => r.isNullAt(1) || r.isNullAt(2))
-      .map(_.getString(0)).toSeq
-    var mn = if (known.isEmpty) None else Some(known.map(_.getLong(1)).min)
-    var mx = if (known.isEmpty) None else Some(known.map(_.getLong(2)).max)
-    if (unknown.nonEmpty) {
-      val scan = s.read.option("basePath", dir).parquet(unknown: _*)
-      // The integral-only contract, ENFORCED: the manifest stores the stat
-      // domain's raw longs (decimal unscaled, DATE days, timestamp µs),
-      // while this fallback's cast("long") folds the column's LOGICAL
-      // value — for any non-integral type the two domains differ (DECIMAL
-      // truncates its scale, DATE fails the cast), so mixing them when
-      // only SOME files degraded would return silently-wrong extremes.
-      val dt = scan.schema.find(_.name == c).map(_.dataType)
-        .getOrElse(sys.error(s"minMaxPruned: column '$c' absent from $dir"))
-      require(Seq(org.apache.spark.sql.types.ByteType,
-          org.apache.spark.sql.types.ShortType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType).contains(dt),
-        s"minMaxPruned: column '$c' is ${dt.catalogString}; only integral " +
-          "columns have long domain == stat domain — aggregate " +
-          "DATE/TIMESTAMP/DECIMAL through readPruned instead")
-      val r = scan
-        .agg(min(col(c).cast("long")), max(col(c).cast("long"))).head()
-      if (!r.isNullAt(0)) {
-        mn = Some(mn.fold(r.getLong(0))(math.min(_, r.getLong(0))))
-        mx = Some(mx.fold(r.getLong(1))(math.max(_, r.getLong(1))))
-      }
-    }
-    PrunedMinMax(mn, mx, unknown.size)
   }
 
   /** Join-driven file pruning — Delta's "dynamic file pruning" shape as an

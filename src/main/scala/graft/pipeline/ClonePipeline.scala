@@ -236,6 +236,13 @@ object ClonePipeline {
     * once for both its row count and the delta's, the high-water mark
     * aggregate also counts the target, and the written target is counted
     * by an `Observation` on its write.
+    *
+    * Writing the target's files deregisters its root from
+    * [[graft.plans.ManifestRegistry]]: a manifest registered for it (as a
+    * laid-out [[clone]] does) lists the replaced files, and both manifest
+    * rules would answer from them. A persisted `<t>.manifest` beside the
+    * target describes the old files too, so it must be rebuilt
+    * (`StatsManifest.build`) before it is registered again.
     */
   def incrementalSync(spark: SparkSession, source: DataFrame, tgtPath: String,
       keyCols: Seq[String], versionCol: String): SyncReport = {
@@ -243,6 +250,7 @@ object ClonePipeline {
     val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(tgt)) {
       val n = writeObserving(source, tgtPath, count(lit(1)))
+      graft.plans.ManifestRegistry.deregister(spark, tgtPath)
       return SyncReport(n, n, n)
     }
     val target = Readers.parquet(spark, tgtPath)
@@ -268,6 +276,7 @@ object ClonePipeline {
       fs.rename(old, tgt) // restore the parked target before giving up
       throw new java.io.IOException(s"rename $tmp -> $tgt failed")
     }
+    graft.plans.ManifestRegistry.deregister(spark, tgtPath)
     fs.delete(old, true)
     SyncReport(sourceRows, deltaRows, targetRows)
   }

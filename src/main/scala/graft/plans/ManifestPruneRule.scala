@@ -3,17 +3,17 @@ package graft.plans
 import graft.io.StatsManifest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, Or}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Driver-side registry of stats manifests ([[graft.io.StatsManifest]])
   * keyed by the qualified table root path — what [[ManifestPruneRule]]
-  * consults. Registering is the caller's statement that the manifest is
-  * CURRENT for that directory (the same snapshot contract as
-  * `readPruned`: the file list is the data version readers see).
+  * and [[MetaCountRule]] consult. Registering is the caller's statement
+  * that the manifest is CURRENT for that directory: its file list is the
+  * data version readers see, so a writer that replaces the directory's
+  * files must deregister (or re-register) it.
   * Driver-sized state: one (path, manifest-frame) entry per table.
   */
 object ManifestRegistry {
@@ -33,25 +33,28 @@ object ManifestRegistry {
 
   private[plans] def isEmpty: Boolean = entries.isEmpty
 
-  /** The manifest for a scan whose (single) root path IS a registered
-    * table root. A pruned relation's index roots are leaf FILES, which
-    * never match a registered directory — that asymmetry is the rule's
-    * idempotence guard.
+  /** The manifest for a file scan whose (single) root path IS a
+    * registered table root. A pruned relation's index roots are leaf
+    * FILES, which never match a registered directory — that asymmetry is
+    * the rules' idempotence guard.
     */
-  private[plans] def lookup(rootPaths: Seq[Path]): Option[(String, DataFrame)] =
-    rootPaths match {
-      case Seq(only) => Option(entries.get(only.toString)).map(only.toString -> _)
-      case _         => None
+  private[plans] def lookup(lr: LogicalRelation): Option[(String, DataFrame)] =
+    lr.relation match {
+      case fs: HadoopFsRelation => fs.location.rootPaths match {
+        case Seq(only) => Option(entries.get(only.toString)).map(only.toString -> _)
+        case _         => None
+      }
+      case _ => None
     }
 }
 
 /** Opt-in optimizer rule (`spark.graft.manifest.prune = true`): a filter
   * over a parquet table whose root is registered in [[ManifestRegistry]]
   * is rewritten to scan ONLY the files the manifest's per-file min/max
-  * cannot rule out — `StatsManifest.readPruned` made transparent, the
-  * way a table format's planner integration works. The predicate itself
-  * is untouched (the engine still decides what to RETURN), so lossy or
-  * NULL stats only cost skipping; bounds are extracted conservatively
+  * cannot rule out, the way a table format's planner integration works.
+  * The predicate itself is untouched (the engine still decides what to
+  * RETURN), so lossy or NULL stats only cost skipping; bounds are folded
+  * conservatively
   * (bare attribute-vs-literal comparison conjuncts only — an
   * expression-wrapped column contributes nothing and the file keeps).
   * Disjunctions prune set-algebraically (r11): OR keeps the UNION of its
@@ -59,10 +62,9 @@ object ManifestRegistry {
   * extractable stats keeps everything — so `d BETWEEN a AND b OR d
   * BETWEEN c AND e` (the classic two-period report) scans only the two
   * bands' files, while `x = 1 OR unknowable(y)` soundly keeps all.
-  * Literal domains mirror what [[StatsManifest]] records: integrals as-is,
-  * DATE as Catalyst epoch days, TIMESTAMP/TIMESTAMP_NTZ as Catalyst epoch
-  * micros, ≤18-digit DECIMAL as its unscaled long — so `o_orderdate >=
-  * DATE '1995-01-01'`, the #1 real skipping predicate, now prunes.
+  * Conjuncts are read by [[ManifestPredicate]], whose value domains
+  * mirror what [[StatsManifest]] records — so `o_orderdate >=
+  * DATE '1995-01-01'`, the #1 real skipping predicate, prunes.
   * IN-lists (both the `In` form and the optimizer's `InSet`) contribute
   * their [min, max] envelope — the #2 skipping shape (dimension-key and
   * partition-date lists). When the manifest carries bloom sidecars
@@ -81,233 +83,43 @@ object ManifestPruneRule extends Rule[LogicalPlan] {
   private def enabled: Boolean =
     conf.getConfString("spark.graft.manifest.prune", "false").toBoolean
 
-  /** The literal's value in the manifest's Long stat domain. Post-analysis
-    * a bare-attribute comparison has identical types on both sides, so the
-    * literal's Catalyst representation IS the parquet stats domain:
-    * DateType = epoch-day Int (parquet DATE INT32), Timestamp(NTZ)Type =
-    * epoch-µs Long (TIMESTAMP_MICROS; MILLIS files are µs-normalized at
-    * manifest build), DecimalType ≤ 18 digits = unscaled long (the
-    * INT32/INT64 layout Spark writes at those precisions; wider decimals
-    * are binary-backed → NULL stats → never pruned, so skipping them here
-    * is consistency, not just caution).
-    */
-  private def litLong(e: Expression): Option[Long] = e match {
-    case Literal(v: Long, LongType)             => Some(v)
-    case Literal(v: Int, IntegerType)           => Some(v.toLong)
-    case Literal(v: Short, ShortType)           => Some(v.toLong)
-    case Literal(v: Byte, ByteType)             => Some(v.toLong)
-    case Literal(v: Int, DateType)              => Some(v.toLong)
-    case Literal(v: Long, TimestampType)        => Some(v)
-    case Literal(v: Long, TimestampNTZType)     => Some(v)
-    case Literal(d: Decimal, dt: DecimalType)
-        if dt.precision <= Decimal.MAX_LONG_DIGITS => Some(d.toUnscaledLong)
-    case _                                      => None
-  }
+  import ManifestPredicate._
 
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case x         => Seq(x)
-  }
-
-  /** The literal in the bloom probe's string-canonical domain (see
-    * [[graft.io.StatsManifest.withBlooms]] — build casts values through
-    * `string`, so probes must render identically; only types whose cast
-    * is a plain decimal rendering participate).
+  /** Conservative long band of one comparison: `>`/`>=` both widen to
+    * `>=` and `<`/`<=` to `<=` (a superset of matching files is always
+    * sound); IN lists bound to [min, max] of their members, lossy between
+    * the extremes, which only costs skipping.
     */
-  private def litString(e: Expression): Option[String] = e match {
-    case Literal(s: org.apache.spark.unsafe.types.UTF8String, StringType) =>
-      Some(s.toString)
-    case Literal(v: Long, LongType)   => Some(v.toString)
-    case Literal(v: Int, IntegerType) => Some(v.toString)
-    case Literal(v: Short, ShortType) => Some(v.toString)
-    case Literal(v: Byte, ByteType)   => Some(v.toString)
-    case _                            => None
-  }
-
-  /** Equality/IN point sets per bloom-covered column. Each entry ANDs in
-    * [[graft.io.StatsManifest.pruneFiles]]; points within an entry OR. A
-    * single unconvertible member abandons its predicate's contribution
-    * (keeping more files — sound) rather than probing a partial set.
-    */
-  private def extractPoints(cond: Expression,
-      bloomCovered: Set[String]): Seq[(String, Seq[String])] =
-    conjuncts(cond).flatMap {
-      case EqualTo(a: AttributeReference, l) if bloomCovered(a.name) =>
-        litString(l).map(v => a.name -> Seq(v))
-      case EqualTo(l, a: AttributeReference) if bloomCovered(a.name) =>
-        litString(l).map(v => a.name -> Seq(v))
-      case EqualNullSafe(a: AttributeReference, l) if bloomCovered(a.name) =>
-        litString(l).map(v => a.name -> Seq(v))
-      case EqualNullSafe(l, a: AttributeReference) if bloomCovered(a.name) =>
-        litString(l).map(v => a.name -> Seq(v))
-      case In(a: AttributeReference, values)
-          if bloomCovered(a.name) && values.nonEmpty =>
-        val vs = values.map(litString)
-        if (vs.forall(_.isDefined)) Some(a.name -> vs.flatten) else None
-      case InSet(a: AttributeReference, hset)
-          if bloomCovered(a.name) && hset.nonEmpty =>
-        val conv: Any => Option[String] = a.dataType match {
-          case LongType | IntegerType | ShortType | ByteType =>
-            v => Option(v).map(_.toString)
-          case StringType => { case s: org.apache.spark.unsafe.types.UTF8String =>
-            Some(s.toString); case _ => None }
-          case _ => _ => None
-        }
-        val vs = hset.toSeq.map(conv)
-        if (vs.forall(_.isDefined)) Some(a.name -> vs.flatten) else None
-      case _ => None
-    }
-
-  /** (column, lo, hi) bounds implied by the predicate, conservatively:
-    * `>`/`>=` both widen to `>=` and `<`/`<=` to `<=` (a superset of
-    * matching files is always sound), only bare attribute-vs-literal
-    * conjuncts participate, and only for columns the manifest covers.
-    */
-  private def extractBounds(cond: Expression,
-      covered: Set[String]): Seq[(String, Long, Long)] = {
-    val per = collection.mutable.Map.empty[String, (Long, Long)]
-    def tighten(name: String, lo: Long, hi: Long): Unit =
-      if (covered(name)) {
-        val (l0, h0) = per.getOrElse(name, (Long.MinValue, Long.MaxValue))
-        per(name) = (math.max(l0, lo), math.min(h0, hi))
+  private def longBand(c: Comparison): Option[(Long, Long)] =
+    c.longs.flatMap { vs =>
+      c.op match {
+        case AtLeast | Above => Some((vs.head, Long.MaxValue))
+        case AtMost | Below  => Some((Long.MinValue, vs.head))
+        case Equal | NullSafeEqual | InList | InHashSet =>
+          Some((vs.min, vs.max))
+        case _ => None
       }
-    conjuncts(cond).foreach {
-      case GreaterThanOrEqual(a: AttributeReference, l) =>
-        litLong(l).foreach(v => tighten(a.name, v, Long.MaxValue))
-      case GreaterThan(a: AttributeReference, l) =>
-        litLong(l).foreach(v => tighten(a.name, v, Long.MaxValue))
-      case LessThanOrEqual(a: AttributeReference, l) =>
-        litLong(l).foreach(v => tighten(a.name, Long.MinValue, v))
-      case LessThan(a: AttributeReference, l) =>
-        litLong(l).foreach(v => tighten(a.name, Long.MinValue, v))
-      case EqualTo(a: AttributeReference, l) =>
-        litLong(l).foreach(v => tighten(a.name, v, v))
-      case GreaterThanOrEqual(l, a: AttributeReference) =>
-        litLong(l).foreach(v => tighten(a.name, Long.MinValue, v))
-      case GreaterThan(l, a: AttributeReference) =>
-        litLong(l).foreach(v => tighten(a.name, Long.MinValue, v))
-      case LessThanOrEqual(l, a: AttributeReference) =>
-        litLong(l).foreach(v => tighten(a.name, v, Long.MaxValue))
-      case LessThan(l, a: AttributeReference) =>
-        litLong(l).foreach(v => tighten(a.name, v, Long.MaxValue))
-      case EqualTo(l, a: AttributeReference) =>
-        litLong(l).foreach(v => tighten(a.name, v, v))
-      case EqualNullSafe(a: AttributeReference, l) =>
-        litLong(l).foreach(v => tighten(a.name, v, v))
-      case EqualNullSafe(l, a: AttributeReference) =>
-        litLong(l).foreach(v => tighten(a.name, v, v))
-      // IN-lists bound to [min, max] of their members — lossy between the
-      // extremes (a file inside the band but missing every member still
-      // survives), which only costs skipping, never correctness. All
-      // members must convert; one unconvertible literal abandons the
-      // bound rather than narrowing it unsoundly.
-      case In(a: AttributeReference, values) if values.nonEmpty =>
-        val vs = values.map(litLong)
-        if (vs.forall(_.isDefined)) {
-          val longs = vs.flatten
-          tighten(a.name, longs.min, longs.max)
-        }
-      // the optimizer's large-list form: raw Catalyst values, convertible
-      // only when the attribute's type maps 1:1 onto the stat domain
-      case InSet(a: AttributeReference, hset) if hset.nonEmpty =>
-        val conv: Any => Option[Long] = a.dataType match {
-          case LongType | TimestampType | TimestampNTZType =>
-            { case v: Long => Some(v); case _ => None }
-          case IntegerType | DateType =>
-            { case v: Int => Some(v.toLong); case _ => None }
-          case ShortType => { case v: Short => Some(v.toLong); case _ => None }
-          case ByteType  => { case v: Byte => Some(v.toLong); case _ => None }
-          case dt: DecimalType if dt.precision <= Decimal.MAX_LONG_DIGITS =>
-            { case d: Decimal => Some(d.toUnscaledLong); case _ => None }
-          case _ => _ => None
-        }
-        val vs = hset.toSeq.map(conv)
-        if (vs.forall(_.isDefined)) {
-          val longs = vs.flatten
-          tighten(a.name, longs.min, longs.max)
-        }
-      case _ => ()
     }
-    per.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) }
-      .filter { case (_, lo, hi) => lo != Long.MinValue || hi != Long.MaxValue }
-      .sortBy(_._1)
-  }
 
-  /** A printable-ASCII string literal — the only domain where UTF-8 byte
-    * order, UTF8String order and Java char order provably coincide (see
-    * [[graft.io.StatsManifest]]'s string-band contract). Anything else
-    * contributes no string bound (keep-the-file).
-    */
-  private def litAscii(e: Expression): Option[String] = e match {
-    case Literal(s: org.apache.spark.unsafe.types.UTF8String, StringType)
-        if StatsManifest.isPrintableAscii(s.toString) => Some(s.toString)
-    case _ => None
-  }
-
-  /** Exclusive-ish upper bound of a prefix match: the rightmost
-    * incrementable char bumps and the tail drops, so every string
-    * starting with `p` is ≤ the result. None when nothing can bump.
-    */
-  private def prefixUpper(p: String): Option[String] = {
-    val i = p.lastIndexWhere(_ < '~')
-    if (i < 0) None else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
-  }
-
-  /** (column, lo, hi) STRING bands implied by the predicate, same
-    * conservative discipline as [[extractBounds]]: strict and non-strict
-    * comparisons widen to inclusive, only bare attribute-vs-literal
-    * conjuncts participate, IN-lists contribute their envelope, and
+  /** String band of one comparison, same conservative discipline;
     * `StartsWith` (what `LIKE 'p%'` simplifies to by this point in the
     * optimizer) contributes [p, bump(p)].
     */
-  private def extractStrBounds(cond: Expression, covered: Set[String])
-      : Seq[(String, Option[String], Option[String])] = {
-    val per = collection.mutable.Map.empty[String, (Option[String], Option[String])]
-    def tighten(name: String, lo: Option[String], hi: Option[String]): Unit =
-      if (covered(name)) {
-        val (l0, h0) = per.getOrElse(name, (None, None))
-        val l = (l0 ++ lo).reduceOption((a, b) => if (a >= b) a else b)
-        val h = (h0 ++ hi).reduceOption((a, b) => if (a <= b) a else b)
-        per(name) = (l, h)
+  private def strBand(c: Comparison): Option[(Option[String], Option[String])] =
+    c.asciis.flatMap { vs =>
+      c.op match {
+        case AtLeast | Above => Some((Some(vs.head), None))
+        case AtMost | Below  => Some((None, Some(vs.head)))
+        case Equal | NullSafeEqual | InList => Some((Some(vs.min), Some(vs.max)))
+        case Prefix => Some((Some(vs.head), StatsManifest.bump(vs.head)))
+        case _      => None
       }
-    conjuncts(cond).foreach {
-      case GreaterThanOrEqual(a: AttributeReference, l) =>
-        litAscii(l).foreach(v => tighten(a.name, Some(v), None))
-      case GreaterThan(a: AttributeReference, l) =>
-        litAscii(l).foreach(v => tighten(a.name, Some(v), None))
-      case LessThanOrEqual(a: AttributeReference, l) =>
-        litAscii(l).foreach(v => tighten(a.name, None, Some(v)))
-      case LessThan(a: AttributeReference, l) =>
-        litAscii(l).foreach(v => tighten(a.name, None, Some(v)))
-      case GreaterThanOrEqual(l, a: AttributeReference) =>
-        litAscii(l).foreach(v => tighten(a.name, None, Some(v)))
-      case GreaterThan(l, a: AttributeReference) =>
-        litAscii(l).foreach(v => tighten(a.name, None, Some(v)))
-      case LessThanOrEqual(l, a: AttributeReference) =>
-        litAscii(l).foreach(v => tighten(a.name, Some(v), None))
-      case LessThan(l, a: AttributeReference) =>
-        litAscii(l).foreach(v => tighten(a.name, Some(v), None))
-      case EqualTo(a: AttributeReference, l) =>
-        litAscii(l).foreach(v => tighten(a.name, Some(v), Some(v)))
-      case EqualTo(l, a: AttributeReference) =>
-        litAscii(l).foreach(v => tighten(a.name, Some(v), Some(v)))
-      case EqualNullSafe(a: AttributeReference, l) =>
-        litAscii(l).foreach(v => tighten(a.name, Some(v), Some(v)))
-      case EqualNullSafe(l, a: AttributeReference) =>
-        litAscii(l).foreach(v => tighten(a.name, Some(v), Some(v)))
-      case StartsWith(a: AttributeReference, l) =>
-        litAscii(l).foreach(p => tighten(a.name, Some(p), prefixUpper(p)))
-      case In(a: AttributeReference, values) if values.nonEmpty =>
-        val vs = values.map(litAscii)
-        if (vs.forall(_.isDefined)) {
-          val strs = vs.flatten
-          tighten(a.name, Some(strs.min), Some(strs.max))
-        }
-      case _ => ()
     }
-    per.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) }
-      .filter { case (_, lo, hi) => lo.nonEmpty || hi.nonEmpty }
-      .sortBy(_._1)
+
+  /** Equality/IN point set of one comparison for the bloom probes. */
+  private def points(c: Comparison): Option[Seq[String]] = c.op match {
+    case Equal | NullSafeEqual | InList | InHashSet => c.strings
+    case _                                          => None
   }
 
   /** Surviving-file set of `cond`, or None when the predicate carries no
@@ -320,64 +132,51 @@ object ManifestPruneRule extends Rule[LogicalPlan] {
     * OR branches, not the conjunct count.
     */
   private def keptFiles(cond: Expression, manifest: DataFrame,
-      covered: Set[String], bloomCovered: Set[String],
-      strCovered: Set[String]): Option[Seq[String]] = {
+      rangeCols: Set[String], bloomCols: Set[String],
+      strCols: Set[String]): Option[Seq[String]] = {
     def hasOr(e: Expression): Boolean = e.exists(_.isInstanceOf[Or])
     cond match {
       case Or(l, r) =>
         for {
-          a <- keptFiles(l, manifest, covered, bloomCovered, strCovered)
-          b <- keptFiles(r, manifest, covered, bloomCovered, strCovered)
+          a <- keptFiles(l, manifest, rangeCols, bloomCols, strCols)
+          b <- keptFiles(r, manifest, rangeCols, bloomCols, strCols)
         } yield (a ++ b).distinct
       case And(l, r) if hasOr(cond) =>
-        (keptFiles(l, manifest, covered, bloomCovered, strCovered),
-          keptFiles(r, manifest, covered, bloomCovered, strCovered)) match {
+        (keptFiles(l, manifest, rangeCols, bloomCols, strCols),
+          keptFiles(r, manifest, rangeCols, bloomCols, strCols)) match {
           case (Some(a), Some(b)) => Some(a.intersect(b))
           case (a, None)          => a
           case (None, b)          => b
         }
       case _ if hasOr(cond) => None
       case leaf =>
-        val bounds = extractBounds(leaf, covered)
-        val points = extractPoints(leaf, bloomCovered)
-        val strBounds = extractStrBounds(leaf, strCovered)
-        if (bounds.isEmpty && points.isEmpty && strBounds.isEmpty) None
-        else Some(StatsManifest.pruneFiles(manifest, bounds, points, strBounds))
+        val read = ManifestPredicate.read(leaf).flatten
+        val bounds = intersect(read.filter(c => rangeCols(c.column))
+          .flatMap(c => longBand(c).map { case (lo, hi) => (c.column, lo, hi) }))
+          .filter { case (_, lo, hi) => lo != Long.MinValue || hi != Long.MaxValue }
+        val pts = read.filter(c => bloomCols(c.column))
+          .flatMap(c => points(c).map(c.column -> _))
+        val strBounds = read.filter(c => strCols(c.column))
+          .flatMap(c => strBand(c).map(c.column -> _))
+          .groupBy(_._1).toSeq.map { case (c, bs) =>
+            (c, bs.flatMap(_._2._1).maxOption, bs.flatMap(_._2._2).minOption)
+          }.sortBy(_._1)
+        if (bounds.isEmpty && pts.isEmpty && strBounds.isEmpty) None
+        else Some(StatsManifest.pruneFiles(manifest, bounds, pts, strBounds))
     }
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled || ManifestRegistry.isEmpty) plan
     else plan.transformUp {
-      case f @ Filter(cond, lr: LogicalRelation)
-          if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
-        ManifestRegistry.lookup(fsRel.location.rootPaths) match {
-          case None => f
-          case Some((root, manifest)) =>
-            val covered = manifest.columns
-              .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSet
-            val bloomCovered = manifest.columns
-              .filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")).toSet
-            val strCovered = manifest.columns
-              .filter(_.startsWith("smin_")).map(_.stripPrefix("smin_")).toSet
-            keptFiles(cond, manifest, covered, bloomCovered, strCovered) match {
-              case None => f
-              case Some(kept) if kept.size >= fsRel.location.inputFiles.length => f
-              case Some(kept) =>
-                {
-                val session = fsRel.sparkSession
-                // basePath keeps hive partition columns resolvable, as in
-                // StatsManifest.readPruned
-                val prunedIndex = new InMemoryFileIndex(session,
-                  kept.map(new Path(_)), Map("basePath" -> root),
-                  Some(fsRel.dataSchema))
-                val prunedRel = fsRel.copy(location = prunedIndex)(session)
-                // same output attributes, so `cond` and every parent
-                // resolve unchanged; the predicate is re-applied in full
-                Filter(cond, lr.copy(relation = prunedRel))
-              }
-            }
-        }
+      case f @ Filter(cond, lr: LogicalRelation) =>
+        ManifestRegistry.lookup(lr).flatMap { case (root, manifest) =>
+          keptFiles(cond, manifest, covered(manifest, "min_"),
+            covered(manifest, "bloom_"), covered(manifest, "smin_"))
+            .filter(_.size < lr.relation.asInstanceOf[HadoopFsRelation]
+              .location.inputFiles.length)
+            // the predicate is re-applied in full
+            .map(kept => Filter(cond, restrictTo(lr, root, kept)))
+        }.getOrElse(f)
     }
 }

@@ -1,13 +1,12 @@
 package graft.plans
 
 import graft.io.StatsManifest
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, AttributeReference, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Opt-in optimizer rule (`spark.graft.manifest.metacount = true`) for
   * the METADATA-ONLY aggregate shapes over [[ManifestRegistry]]-registered
@@ -18,7 +17,7 @@ import org.apache.spark.sql.types._
   * answers from footer stats alone (stats exclude NULLs — exactly the
   * aggregate's semantics — and any NULL stat declines); and a global
   * `COUNT(*)` under a band predicate is rewritten to the metadata-first
-  * shape [[StatsManifest.countPruned]] computes imperatively:
+  * shape [[StatsManifest.countSplit]] plans:
   *
   * {{{ (boundary-file count under the ORIGINAL predicate) + metaRows }}}
   *
@@ -33,9 +32,9 @@ import org.apache.spark.sql.types._
   * Exactness discipline — the crucial difference from
   * [[ManifestPruneRule]]: pruning may extract bounds CONSERVATIVELY
   * (keeping extra files only costs speed), but counting from metadata is
-  * only sound when the extracted bands are EXACTLY the predicate. So the
-  * rewrite fires only when EVERY conjunct is a bare attribute-vs-literal
-  * comparison on a stats-covered column, converted exactly: strict
+  * only sound when the folded bands are EXACTLY the predicate. So the
+  * rewrite fires only when [[ManifestPredicate]] reads EVERY conjunct as
+  * a comparison on a stats-covered column, folded exactly: strict
   * bounds tighten by one on the integral stat domains (`x > v` ⇔
   * `x ≥ v+1` — every manifest domain is integral), equality becomes
   * [v, v], and anything else (IN-list gaps, OR, expression-wrapped
@@ -48,27 +47,7 @@ object MetaCountRule extends Rule[LogicalPlan] {
   private def enabled: Boolean =
     conf.getConfString("spark.graft.manifest.metacount", "false").toBoolean
 
-  /** Literal → Long in the manifest stat domain ([[ManifestPruneRule]]'s
-    * table, duplicated here because that one is private and the two rules
-    * deliberately do not share extraction discipline).
-    */
-  private def litLong(e: Expression): Option[Long] = e match {
-    case Literal(v: Long, LongType)         => Some(v)
-    case Literal(v: Int, IntegerType)       => Some(v.toLong)
-    case Literal(v: Short, ShortType)       => Some(v.toLong)
-    case Literal(v: Byte, ByteType)         => Some(v.toLong)
-    case Literal(v: Int, DateType)          => Some(v.toLong)
-    case Literal(v: Long, TimestampType)    => Some(v)
-    case Literal(v: Long, TimestampNTZType) => Some(v)
-    case Literal(d: Decimal, dt: DecimalType)
-        if dt.precision <= Decimal.MAX_LONG_DIGITS => Some(d.toUnscaledLong)
-    case _ => None
-  }
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case x         => Seq(x)
-  }
+  import ManifestPredicate._
 
   /** EXACT per-column bands, or None when any conjunct cannot be
     * represented exactly. Strict comparisons tighten by one (integral
@@ -76,50 +55,24 @@ object MetaCountRule extends Rule[LogicalPlan] {
     * abandon the rewrite (no silent wrap).
     */
   private def exactBounds(cond: Expression,
-      covered: Set[String]): Option[Seq[(String, Long, Long)]] = {
-    val per = collection.mutable.Map.empty[String, (Long, Long)]
-    def tighten(name: String, lo: Long, hi: Long): Boolean =
-      covered(name) && {
-        val (l0, h0) = per.getOrElse(name, (Long.MinValue, Long.MaxValue))
-        per(name) = (math.max(l0, lo), math.min(h0, hi))
-        true
-      }
-    val ok = conjuncts(cond).forall {
-      case GreaterThanOrEqual(a: AttributeReference, l) =>
-        litLong(l).exists(v => tighten(a.name, v, Long.MaxValue))
-      case GreaterThan(a: AttributeReference, l) =>
-        litLong(l).exists(v => v < Long.MaxValue &&
-          tighten(a.name, v + 1, Long.MaxValue))
-      case LessThanOrEqual(a: AttributeReference, l) =>
-        litLong(l).exists(v => tighten(a.name, Long.MinValue, v))
-      case LessThan(a: AttributeReference, l) =>
-        litLong(l).exists(v => v > Long.MinValue &&
-          tighten(a.name, Long.MinValue, v - 1))
-      case EqualTo(a: AttributeReference, l) =>
-        litLong(l).exists(v => tighten(a.name, v, v))
-      case GreaterThanOrEqual(l, a: AttributeReference) =>
-        litLong(l).exists(v => tighten(a.name, Long.MinValue, v))
-      case GreaterThan(l, a: AttributeReference) =>
-        litLong(l).exists(v => v > Long.MinValue &&
-          tighten(a.name, Long.MinValue, v - 1))
-      case LessThanOrEqual(l, a: AttributeReference) =>
-        litLong(l).exists(v => tighten(a.name, v, Long.MaxValue))
-      case LessThan(l, a: AttributeReference) =>
-        litLong(l).exists(v => v < Long.MaxValue &&
-          tighten(a.name, v + 1, Long.MaxValue))
-      case EqualTo(l, a: AttributeReference) =>
-        litLong(l).exists(v => tighten(a.name, v, v))
-      // the optimizer infers IsNotNull from every band conjunct; as a
-      // FULL-RANGE band it is exact — the countSplit coverage check then
-      // requires nulls_<col> == 0 before crediting a file blind, which
-      // is precisely the IsNotNull semantics (and it makes a bare
-      // `WHERE x IS NOT NULL` count itself metadata-answerable)
-      case IsNotNull(a: AttributeReference) =>
-        tighten(a.name, Long.MinValue, Long.MaxValue)
-      case _ => false // anything else: the band would be lossy — no rewrite
-    }
-    if (!ok || per.isEmpty) None
-    else Some(per.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) }.sortBy(_._1))
+      statCols: Set[String]): Option[Seq[(String, Long, Long)]] = {
+    val bands = read(cond).map(_.filter(c => statCols(c.column)).flatMap { c =>
+      c.longs.flatMap(vs => (c.op, vs) match {
+        case (AtLeast, Seq(v)) => Some((v, Long.MaxValue))
+        case (Above, Seq(v)) if v < Long.MaxValue => Some((v + 1, Long.MaxValue))
+        case (AtMost, Seq(v)) => Some((Long.MinValue, v))
+        case (Below, Seq(v)) if v > Long.MinValue => Some((Long.MinValue, v - 1))
+        case (Equal, Seq(v)) => Some((v, v))
+        // the optimizer infers IsNotNull from every band conjunct; as a
+        // FULL-RANGE band it is exact — the countSplit coverage check then
+        // requires nulls_<col> == 0 before crediting a file blind, which
+        // is precisely the IsNotNull semantics (and it makes a bare
+        // `WHERE x IS NOT NULL` count itself metadata-answerable)
+        case (NotNull, _) => Some((Long.MinValue, Long.MaxValue))
+        case _ => None // IN-list gaps, <=>, prefixes: lossy — no rewrite
+      }).map { case (lo, hi) => (c.column, lo, hi) }
+    })
+    if (bands.forall(_.isDefined)) Some(intersect(bands.flatten)) else None
   }
 
   /** A global COUNT(1) aggregate: Seq(alias of the bare count). */
@@ -181,45 +134,19 @@ object MetaCountRule extends Rule[LogicalPlan] {
     }
   }
 
-  /** The stat long rendered back as a literal of the column's type — the
-    * inverse of the manifest's stat normalization, defined exactly for
-    * every domain the manifest covers.
-    */
-  private def statLiteral(v: Long, dt: DataType): Option[Literal] = dt match {
-    case LongType         => Some(Literal(v, LongType))
-    case IntegerType      => Some(Literal(v.toInt, IntegerType))
-    case ShortType        => Some(Literal(v.toShort, ShortType))
-    case ByteType         => Some(Literal(v.toByte, ByteType))
-    case DateType         => Some(Literal(v.toInt, DateType))
-    case TimestampType    => Some(Literal(v, TimestampType))
-    case TimestampNTZType => Some(Literal(v, TimestampNTZType))
-    case d: DecimalType if d.precision <= Decimal.MAX_LONG_DIGITS =>
-      Some(Literal(Decimal(v, d.precision, d.scale), d))
-    case _ => None
-  }
-
-  private def lookup(lr: LogicalRelation) = ManifestRegistry.lookup(
-    lr.relation.asInstanceOf[HadoopFsRelation].location.rootPaths)
-
-  private def coveredOf(manifest: org.apache.spark.sql.DataFrame): Set[String] =
-    manifest.columns.filter(_.startsWith("min_"))
-      .map(_.stripPrefix("min_")).toSet
-
   /** COUNT under an exact band: metadata-credited rows + a lazy
     * boundary-file count fragment re-applying the original predicate.
     */
   private def rewriteFilteredCount(agg: Aggregate, alias: Alias,
       cond: Expression, lr: LogicalRelation): LogicalPlan = {
-    val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
-    lookup(lr) match {
+    ManifestRegistry.lookup(lr) match {
       case None => agg
       case Some((root, manifest)) =>
-        exactBounds(cond, coveredOf(manifest)) match {
+        exactBounds(cond, covered(manifest, "min_")) match {
           case None => agg
           case Some(bounds) =>
             val (metaRows, _, boundary) =
               StatsManifest.countSplit(manifest, bounds)
-            val session = fsRel.sparkSession
             // the original output attribute survives verbatim so every
             // parent resolves unchanged
             def out(e: Expression): NamedExpression =
@@ -227,15 +154,11 @@ object MetaCountRule extends Rule[LogicalPlan] {
             if (boundary.isEmpty)
               Project(Seq(out(Literal(metaRows, LongType))), OneRowRelation())
             else {
-              val prunedIndex = new InMemoryFileIndex(session,
-                boundary.map(new Path(_)), Map("basePath" -> root),
-                Some(fsRel.dataSchema))
-              val prunedRel = fsRel.copy(location = prunedIndex)(session)
               val bcnt = Alias(AggregateExpression(
                 Count(Seq(Literal(1))), Complete, isDistinct = false),
                 "graft_boundary_count")()
               val inner = Aggregate(Nil, Seq(bcnt),
-                Filter(cond, lr.copy(relation = prunedRel)))
+                Filter(cond, restrictTo(lr, root, boundary)))
               Project(Seq(out(Add(bcnt.toAttribute,
                 Literal(metaRows, LongType)))), inner)
             }
@@ -248,7 +171,7 @@ object MetaCountRule extends Rule[LogicalPlan] {
     */
   private def rewriteBareCount(agg: Aggregate, alias: Alias,
       lr: LogicalRelation): LogicalPlan =
-    lookup(lr) match {
+    ManifestRegistry.lookup(lr) match {
       case None => agg
       case Some((_, manifest)) =>
         import org.apache.spark.sql.{functions => fn}
@@ -268,14 +191,13 @@ object MetaCountRule extends Rule[LogicalPlan] {
   private def rewriteMinMax(agg: Aggregate,
       parts: Seq[(Alias, AttributeReference, Boolean)],
       lr: LogicalRelation): LogicalPlan =
-    lookup(lr) match {
+    ManifestRegistry.lookup(lr) match {
       case None => agg
       case Some((_, manifest)) =>
-        val covered = coveredOf(manifest)
         val names = parts.map(_._2.name).distinct
         val reconstructible = parts.forall { case (_, attr, _) =>
           statLiteral(0L, attr.dataType).isDefined }
-        if (!names.forall(covered) || !reconstructible) agg
+        if (!names.forall(covered(manifest, "min_")) || !reconstructible) agg
         else {
           import org.apache.spark.sql.{functions => fn}
           val sel = names.flatMap(c =>

@@ -227,7 +227,8 @@ object StreamOps extends Serializable {
     * table (overwrite is delete-then-write, not atomic — a concurrent
     * manifest reader should retry, or the manifest should live in a
     * table format with atomic swap; the DATA table is append-only and
-    * never at risk). The manifest is the reader's snapshot: `readPruned`
+    * never at risk). The manifest is the reader's snapshot: a scan the
+    * prune rule ([[graft.plans.ManifestPruneRule]]) rewrites against it
     * opens ONLY manifest-listed files, so a reader on the N−1 manifest
     * sees the table as of batch N−1 — consistent, but batch N's rows
     * arrive only when its manifest publishes (the Delta/Iceberg version

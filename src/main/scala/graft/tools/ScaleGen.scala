@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.operators.Multimodal.mix64
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,13 +34,6 @@ object ScaleGen {
     "query", "big", "data", "column", "join", "small", "group", "stream",
     "order", "filter", "vector", "the", "a", "index", "shuffle", "broadcast",
     "cache", "stage", "task", "plan", "codegen", "parquet", "footer")
-
-  private def mix64(z0: Long): Long = {
-    var z = z0
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   /** Stream draw k of the (seed, id) chain: uniform non-negative long. */
   private def draw(seed: Long, id: Long, k: Long): Long =

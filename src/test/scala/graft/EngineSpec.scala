@@ -4,6 +4,9 @@ import graft.functions.PolyHash
 import graft.io.Writers
 import graft.operators.Multimodal
 import graft.pipeline.ClonePipeline
+import graft.plans.ManifestRegistry
+import graft.plans.ManifestRuleSupport.{MetaCount, Prune, scanFiles, sessionWith}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +16,12 @@ import java.nio.file.Files
   * date-clamp normalizer, the clone round-trip and the multimodal plumbing.
   */
 class EngineSpec extends AnyFunSuite with SparkFixture {
+
+  /** `body` with `m` registered as the manifest of the table at `dir`. */
+  private def withManifest[T](dir: String, m: DataFrame)(body: => T): T = {
+    ManifestRegistry.register(spark, dir, m)
+    try body finally ManifestRegistry.deregister(spark, dir)
+  }
 
   /** Collect every DISTINCT FileSourceScanExec whose location matches
     * `pathPart`, walking through AQE wrappers (AdaptiveSparkPlanExec and
@@ -714,6 +723,30 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("incrementalSync deregisters the target's manifest, so neither " +
+      "manifest rule answers from the replaced files") {
+    val base = Files.createTempDirectory("graft-sync-manifest").toString
+    def orders(lo: Long, hi: Long, version: Long) = spark.range(lo, hi)
+      .select(col("id").as("o_orderkey"), (col("id") % 97).as("o_custkey"),
+        lit(version).as("o_version"))
+    orders(0, 2000, 0).write.parquet(s"$base/src/orders.parquet")
+    val tgt = s"$base/clone/orders.parquet"
+    // a laid-out clone registers the target's manifest in this session
+    ClonePipeline.clone(spark, s"$base/src", s"$base/clone", Seq("orders"),
+      layouts = Map("orders" ->
+        ClonePipeline.TableLayout(Seq("o_orderkey"), numFiles = 8)))
+    try {
+      ClonePipeline.incrementalSync(spark,
+        orders(0, 2000, 0).unionByName(orders(2000, 3000, 1)), tgt,
+        Seq("o_orderkey"), "o_version")
+      def band(s: SparkSession) =
+        s.read.parquet(tgt).where(col("o_orderkey") >= 2500).count()
+      assert(band(spark) == 500)
+      assert(band(sessionWith(spark, Prune)) == 500)
+      assert(sessionWith(spark, MetaCount).read.parquet(tgt).count() == 3000)
+    } finally ManifestRegistry.deregister(spark, tgt)
+  }
+
   test("stats manifest: footer-only stats equal a data-scan recount; " +
       "range pruning opens fewer files and returns exactly the full-scan rows") {
     import graft.io.StatsManifest
@@ -743,12 +776,15 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val keep = StatsManifest.pruneFiles(m, bounds)
     assert(keep.nonEmpty && keep.size <= 4,
       s"range clustering should confine a 1/8th band to ~2 of 16 files, kept ${keep.size}")
-    val pruned = StatsManifest.readPruned(spark, dir, m, bounds)
-      .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity").collect()
-    val full = spark.read.parquet(dir)
+    // the prune rule opens exactly those files and returns the full-scan rows
+    def band(s: SparkSession) = s.read.parquet(dir)
       .where(col("l_orderkey").between(bounds.head._2, bounds.head._3))
-      .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity").collect()
-    assert(pruned.sameElements(full))
+      .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
+    withManifest(dir, m) {
+      val pruned = band(sessionWith(spark, Prune))
+      assert(scanFiles(pruned) == keep.size)
+      assert(pruned.collect().sameElements(band(spark).collect()))
+    }
   }
 
   test("metadata-first count: interior files credit footer rows without a " +
@@ -765,26 +801,34 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     // only the two edge-straddling files may need data pages
     val bounds = Seq(("l_orderkey", kLo + (kHi - kLo) / 4,
       kLo + 3 * (kHi - kLo) / 4))
-    val r = StatsManifest.countPruned(spark, dir, m, bounds)
-    val expected = spark.read.parquet(dir)
-      .where(col("l_orderkey").between(bounds.head._2, bounds.head._3)).count()
-    assert(r.total == expected)
-    assert(r.metadataRows > 0 && r.fullFiles >= 4,
-      s"interior files should credit from metadata: $r")
-    assert(r.scannedFiles <= 2, s"only boundary files may scan: $r")
+    def bandCount(s: SparkSession) = s.read.parquet(dir)
+      .where(col("l_orderkey").between(bounds.head._2, bounds.head._3))
+      .groupBy().count()
+    val (metaRows, fullFiles, boundary) = StatsManifest.countSplit(m, bounds)
+    assert(metaRows > 0 && fullFiles >= 4,
+      s"interior files should credit from metadata: $metaRows rows, $fullFiles files")
+    assert(boundary.size <= 2, s"only boundary files may scan: ${boundary.size}")
+    withManifest(dir, m) {
+      val r = bandCount(sessionWith(spark, MetaCount))
+      assert(r.head().getLong(0) == bandCount(spark).head().getLong(0))
+      assert(scanFiles(r, allowEmpty = true) == boundary.size)
+    }
     // a column CONTAINING nulls: the null-bearing file must fall into the
     // scan class (footer rows include null rows, which satisfy no band)
     val ndir = Files.createTempDirectory("graft-metacount-null").toString
     import spark.implicits._
     Seq[(java.lang.Long, Long)]((1L, 1L), (2L, 2L), (3L, 3L))
-      .toDF("k", "pay").coalesce(1).write.parquet(s"$ndir/clean")
+      .toDF("k", "pay").coalesce(1).write.mode("append").parquet(ndir)
     Seq[(java.lang.Long, Long)]((4L, 4L), (null, 5L), (null, 6L))
-      .toDF("k", "pay").coalesce(1).write.parquet(s"$ndir/nully")
+      .toDF("k", "pay").coalesce(1).write.mode("append").parquet(ndir)
     val nm = StatsManifest.build(spark, ndir, Seq("k"))
-    val nr = StatsManifest.countPruned(spark, ndir, nm, Seq(("k", 0L, 10L)))
-    assert(nr.total == 4L, s"null rows must not be counted: $nr")
-    assert(nr.metadataRows == 3L && nr.scannedFiles >= 1,
-      s"the null-bearing file must scan, the clean file credits blind: $nr")
+    withManifest(ndir, nm) {
+      val nr = sessionWith(spark, MetaCount).read.parquet(ndir)
+        .where(col("k").between(0L, 10L)).groupBy().count()
+      assert(nr.head().getLong(0) == 4L, "null rows must not be counted")
+      assert(scanFiles(nr) == 1,
+        "the null-bearing file must scan, the clean file credits blind")
+    }
   }
 
   test("metadata-first min/max: zero data reads on a fully-statted table; " +
@@ -794,23 +838,29 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_partkey")
     Writers.rangeClustered(li, dir, Seq("l_orderkey"), numFiles = 8)
     val m = StatsManifest.build(spark, dir, Seq("l_orderkey"))
-    val r = StatsManifest.minMaxPruned(spark, dir, m, "l_orderkey")
-    val exact = li.agg(min("l_orderkey"), max("l_orderkey")).head()
-    assert(r.min.contains(exact.getLong(0)) && r.max.contains(exact.getLong(1)))
-    assert(r.scannedFiles == 0, s"fully-statted table must not scan: $r")
-    // an ALL-NULL column file degrades to NULL stats -> lands in the scan
-    // class; its scan yields no non-null values and must not poison the
-    // metadata answer from the clean file
+    withManifest(dir, m) {
+      val r = sessionWith(spark, MetaCount).read.parquet(dir)
+        .agg(min("l_orderkey"), max("l_orderkey"))
+      assert(r.head() == li.agg(min("l_orderkey"), max("l_orderkey")).head())
+      assert(scanFiles(r, allowEmpty = true) == 0,
+        "fully-statted table must not scan")
+    }
+    // an ALL-NULL column file degrades to NULL stats, so metadata cannot
+    // answer: the rule declines and the scan folds every file in; the
+    // all-null file yields no non-null value and must not poison it
     val ndir = Files.createTempDirectory("graft-metaminmax-null").toString
     import spark.implicits._
     Seq[(java.lang.Long, Long)]((5L, 1L), (9L, 2L))
-      .toDF("k", "pay").coalesce(1).write.parquet(s"$ndir/clean")
+      .toDF("k", "pay").coalesce(1).write.mode("append").parquet(ndir)
     Seq[(java.lang.Long, Long)]((null, 3L), (null, 4L))
-      .toDF("k", "pay").coalesce(1).write.parquet(s"$ndir/nullonly")
+      .toDF("k", "pay").coalesce(1).write.mode("append").parquet(ndir)
     val nm = StatsManifest.build(spark, ndir, Seq("k"))
-    val nr = StatsManifest.minMaxPruned(spark, ndir, nm, "k")
-    assert(nr.min.contains(5L) && nr.max.contains(9L), s"got $nr")
-    assert(nr.scannedFiles == 1, s"the all-null file must be the one scan: $nr")
+    withManifest(ndir, nm) {
+      val nr = sessionWith(spark, MetaCount).read.parquet(ndir)
+        .agg(min("k"), max("k"))
+      assert(nr.head() == Row(5L, 9L))
+      assert(scanFiles(nr) == 2, "a NULL stat must decline the metadata answer")
+    }
   }
 
   test("join-driven file pruning: a selective dim key set opens few fact " +
@@ -1107,12 +1157,14 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(keptP < nFiles, s"partkey band kept all $nFiles files")
     assert(keptS < nFiles, s"suppkey band kept all $nFiles files")
     // and pruned reads stay exact on the non-leading dimension
-    val got = StatsManifest.readPruned(spark, dir, m, suppBand)
-      .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity").collect()
-    val want = spark.read.parquet(dir)
+    def q(s: SparkSession) = s.read.parquet(dir)
       .where(col("l_suppkey").between(suppBand.head._2, suppBand.head._3))
-      .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity").collect()
-    assert(got.sameElements(want))
+      .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
+    withManifest(dir, m) {
+      val got = q(sessionWith(spark, Prune))
+      assert(scanFiles(got) == keptS)
+      assert(got.collect().sameElements(q(spark).collect()))
+    }
   }
 
   test("zValueN matches a reference 3-D Morton interleave; the 3-D layout " +
@@ -1142,19 +1194,21 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val m = StatsManifest.build(spark, dir,
       Seq("l_orderkey", "l_partkey", "l_suppkey"))
     val nFiles = m.count()
-    for (c <- Seq("l_orderkey", "l_partkey", "l_suppkey")) {
-      val lo = li.agg(min(c)).head().getLong(0)
-      val hi = li.agg(max(c)).head().getLong(0)
-      val band = Seq((c, lo, lo + (hi - lo) / 8))
-      val kept = StatsManifest.pruneFiles(m, band).size
-      assert(kept < nFiles, s"$c band kept all $nFiles files")
-      // pruned read stays exact
-      val got = StatsManifest.readPruned(spark, dir, m, band)
-        .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity").collect()
-      val want = spark.read.parquet(dir)
-        .where(col(c).between(band.head._2, band.head._3))
-        .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity").collect()
-      assert(got.sameElements(want))
+    val pruning = sessionWith(spark, Prune)
+    withManifest(dir, m) {
+      for (c <- Seq("l_orderkey", "l_partkey", "l_suppkey")) {
+        val lo = li.agg(min(c)).head().getLong(0)
+        val hi = li.agg(max(c)).head().getLong(0)
+        val band = Seq((c, lo, lo + (hi - lo) / 8))
+        val kept = StatsManifest.pruneFiles(m, band).size
+        assert(kept < nFiles, s"$c band kept all $nFiles files")
+        // pruned read stays exact
+        def q(s: SparkSession) = s.read.parquet(dir)
+          .where(col(c).between(band.head._2, band.head._3))
+          .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
+        assert(scanFiles(q(pruning)) == kept)
+        assert(q(pruning).collect().sameElements(q(spark).collect()))
+      }
     }
   }
 
@@ -1169,16 +1223,18 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val (kLo, kHi) = (o.agg(min("o_orderkey")).head().getLong(0),
       o.agg(max("o_orderkey")).head().getLong(0))
     val bounds = Seq(("o_orderkey", kLo, kLo + (kHi - kLo) / 4))
-    val pruned = StatsManifest.readPruned(spark, dir, m, bounds)
     // the partition column is still resolvable (basePath), so the pruned
-    // frame answers the same query the full read does
-    val got = pruned.groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n")).orderBy("o_orderpriority").collect()
-    val want = spark.read.parquet(dir)
+    // read answers the same query the full read does
+    def q(s: SparkSession) = s.read.parquet(dir)
       .where(col("o_orderkey").between(bounds.head._2, bounds.head._3))
       .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n")).orderBy("o_orderpriority").collect()
-    assert(got.sameElements(want) && got.nonEmpty)
+      .agg(count(lit(1)).as("n")).orderBy("o_orderpriority")
+    withManifest(dir, m) {
+      val pruned = q(sessionWith(spark, Prune))
+      assert(scanFiles(pruned) == StatsManifest.pruneFiles(m, bounds).size)
+      val got = pruned.collect()
+      assert(got.sameElements(q(spark).collect()) && got.nonEmpty)
+    }
     // bounds on the PARTITION column have no footer stats: every file
     // survives (skipping never bets on absent stats) — and empty bounds
     // are the no-op, not a crash

@@ -1,9 +1,11 @@
 package graft.operators
 
 import graft.{SparkFixture, Tables}
-import graft.io.{ChunkStore, Readers}
+import graft.io.{ChunkStore, Readers, StatsManifest, Writers}
 import graft.pipeline.ClonePipeline
 import graft.pipeline.ClonePipeline.TableLayout
+import graft.plans.ManifestRegistry
+import graft.plans.ManifestRuleSupport.{MetaCount, Prune, sessionWith}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftSpecBridge
 import org.apache.spark.sql.functions._
@@ -12,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Spark-job ceilings for the dedup path's store and graph operators, the
-  * chunk store, the clone and sync path, and benchmark decontamination
-  * (one-shot and one streaming-gate batch). At this size they are bound
+  * chunk store, the clone and sync path, benchmark decontamination
+  * (one-shot and one streaming-gate batch) and the manifest rules'
+  * planning. At this size they are bound
   * by job count (driver time between jobs), not by data, so a job added
   * back is the regression to catch; counts are deterministic where wall
   * time is not.
@@ -123,5 +126,34 @@ class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture {
       val jobs = jobsOf(run())
       assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
     }
+  }
+
+  test("the manifest rules plan a banded filter and a banded COUNT(*) " +
+      "within their job ceilings") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val li = Tables.lineitem(spark, sfDir)
+      .select("l_orderkey", "l_partkey", "l_quantity")
+    Writers.rangeClustered(li, dir, Seq("l_orderkey"), numFiles = 16)
+    ManifestRegistry.register(spark, dir,
+      StatsManifest.build(spark, dir, Seq("l_orderkey")))
+    try {
+      val k = li.agg(min("l_orderkey"), max("l_orderkey")).head()
+      val (lo, hi) = (k.getLong(0) + (k.getLong(1) - k.getLong(0)) / 4,
+        k.getLong(0) + 3 * (k.getLong(1) - k.getLong(0)) / 4)
+      val (prune, metacount) = (sessionWith(spark, Prune), sessionWith(spark, MetaCount))
+      // planning reads the manifest once per OR-free filter, not once per
+      // conjunct (this filter has five after IsNotNull inference)
+      Seq[(String, Int, () => Unit)](
+        ("prune planning", 2, () => prune.read.parquet(dir)
+          .where(col("l_orderkey").between(lo, hi) && col("l_quantity") > 0)
+          .queryExecution.optimizedPlan),
+        ("metacount planning", 4, () => metacount.read.parquet(dir)
+          .where(col("l_orderkey").between(lo, hi)).groupBy().count()
+          .queryExecution.optimizedPlan)
+      ).foreach { case (op, ceiling, run) =>
+        val jobs = jobsOf(run())
+        assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
+      }
+    } finally ManifestRegistry.deregister(spark, dir)
   }
 }

@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.{SparkFixture, Tables}
 import graft.operators.ExtensionShowcase
+import graft.plans.ManifestRuleSupport.{MetaCount, Prune, scanFiles, sessionWith}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
@@ -506,31 +507,6 @@ class ExtensionSpec extends AnyFunSuite with SparkFixture {
     assert(r.getInt(2) == 8)
   }
 
-  /** Files actually fed to the (possibly AQE-wrapped) parquet scan. */
-  private def scanFiles(df: org.apache.spark.sql.DataFrame,
-      allowEmpty: Boolean): Int = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val extra = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec        => Seq(q.plan)
-        case _                        => Nil
-      }
-      p +: (extra ++ p.children).flatMap(walk)
-    }
-    val n = walk(df.queryExecution.executedPlan).collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.relation.location.inputFiles.length
-    }
-    // a metadata-answered count legitimately has NO file scan at all
-    if (!allowEmpty) assert(n.nonEmpty)
-    n.sum
-  }
-
-  private def scanFiles(df: org.apache.spark.sql.DataFrame): Int =
-    scanFiles(df, allowEmpty = false)
-
   test("manifest-prune rule: a filter over a registered table scans only " +
       "manifest-surviving files, with full result parity") {
     import graft.io.{StatsManifest, Writers}
@@ -1014,5 +990,100 @@ class ExtensionSpec extends AnyFunSuite with SparkFixture {
       assert(pinned.select("doc_id").collect().toSeq ==
         expected.select("doc_id").collect().toSeq)
     } finally ManifestRegistry.deregister(spark, s"$base/table")
+  }
+
+  test("manifest rules read every comparison shape the same way in both " +
+      "operand orders and in every stat domain, with parity") {
+    import graft.io.{StatsManifest, Writers}
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.types.{DecimalType, TimestampType}
+    // one key-clustered table covering every stat domain: long, DATE,
+    // TIMESTAMP, TIMESTAMP_NTZ, <=18-digit DECIMAL and a string band
+    val o = Tables.orders(spark, sfDir).select(
+      col("o_orderkey").as("k"),
+      to_date(col("o_orderdate")).as("d"),
+      col("o_orderdate").cast(TimestampType).as("ts"),
+      col("o_orderdate").as("ntz"),
+      col("o_totalprice").cast(DecimalType(12, 2)).as("p"),
+      format_string("k%08d", col("o_orderkey")).as("s"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-mshapes").toString
+    val prevEnc = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try Writers.rangeClustered(o, dir, Seq("k"), numFiles = 8)
+    finally prevEnc match {
+      case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
+      case None    => spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    }
+    ManifestRegistry.register(spark, dir, StatsManifest.build(spark, dir,
+      Seq("k", "d", "ts", "ntz", "p"), stringCols = Seq("s")))
+    try {
+      val (prune, metacount) = (sessionWith(spark, Prune), sessionWith(spark, MetaCount))
+      // a key inside a file, not on a file edge, so a firing count
+      // rewrite keeps a boundary scan
+      val mid = o.orderBy("k").collect()(o.count().toInt / 2 + 37)
+      val (k, d, ts, ntz, p) = (mid.getLong(0), mid.getDate(1),
+        mid.getTimestamp(2), mid.get(3), mid.getDecimal(4))
+      val kc = col("k")
+      val many = (k until k + 40).toSeq // > 10 members: the optimizer's InSet
+      // (shape, predicate, what the meta-count rule makes of its COUNT(*):
+      // a "boundary" scan plus metadata rows, "metadata" alone, or
+      // "declined" — pinned as the rule has always planned them)
+      val rows = Seq[(String, Column, String)](
+        ("col >= lit", kc >= k, "boundary"), ("lit <= col", lit(k) <= kc, "boundary"),
+        ("col > lit", kc > k, "boundary"), ("lit < col", lit(k) < kc, "boundary"),
+        ("col <= lit", kc <= k, "boundary"), ("lit >= col", lit(k) >= kc, "boundary"),
+        ("col < lit", kc < k, "boundary"), ("lit > col", lit(k) > kc, "boundary"),
+        ("col = lit", kc === k, "boundary"), ("lit = col", lit(k) === kc, "boundary"),
+        ("col <=> lit", kc <=> k, "declined"), ("lit <=> col", lit(k) <=> kc, "declined"),
+        ("IN", kc.isin(k, k + 3, k + 7), "declined"),
+        ("IN as InSet", kc.isin(many: _*), "declined"),
+        ("DATE", col("d") >= lit(d) && lit(d) >= col("d"), "boundary"),
+        ("TIMESTAMP", lit(ts) < col("ts"), "boundary"),
+        ("TIMESTAMP_NTZ", col("ntz") > lit(ntz), "boundary"),
+        ("DECIMAL", lit(p) >= col("p"), "boundary"),
+        ("StartsWith", col("s").startsWith(f"k${k / 100}%06d"), "declined"),
+        ("string lit <= col", lit(f"k$k%08d") <= col("s"), "declined"),
+        ("col > Long.MaxValue", kc > Long.MaxValue, "declined"),
+        ("lit(Long.MaxValue) < col", lit(Long.MaxValue) < kc, "declined"),
+        ("col < Long.MinValue", kc < Long.MinValue, "declined"),
+        ("lit(Long.MinValue) > col", lit(Long.MinValue) > kc, "declined"),
+        ("col < Long.MaxValue", kc < Long.MaxValue, "metadata"),
+        ("col > Long.MinValue", kc > Long.MinValue, "metadata"))
+      rows.foreach { case (shape, pred, countPlan) =>
+        def rowsOf(s: org.apache.spark.sql.SparkSession) =
+          s.read.parquet(dir).where(pred).orderBy("k").collect().toSeq
+        val plain = rowsOf(spark)
+        assert(rowsOf(prune) == plain, s"$shape: prune rule rows")
+        val mc = metacount.read.parquet(dir).where(pred).groupBy().count()
+        assert(mc.head().getLong(0) == plain.size, s"$shape: meta-count")
+        val plan = mc.queryExecution.optimizedPlan
+        val planned =
+          if (plan.toString.contains("graft_boundary_count")) "boundary"
+          else if (plan.collect { case r: LogicalRelation => r }.isEmpty) "metadata"
+          else "declined"
+        assert(planned == countPlan, s"$shape: meta-count plan")
+      }
+    } finally ManifestRegistry.deregister(spark, dir)
+  }
+
+  test("the manifest rules hold no comparison matcher or literal " +
+      "conversion of their own: ManifestPredicate reads every filter") {
+    import java.nio.file.{Files, Paths}
+    // one reader of filters against a manifest: a comparison node or a
+    // typed literal pattern in a rule file would be a second reading
+    val banned = Seq("""\b(GreaterThan|GreaterThanOrEqual|LessThan|""" +
+        """LessThanOrEqual|EqualTo|EqualNullSafe|In|InSet|StartsWith|""" +
+        """IsNotNull)\s*\(""",
+      """\bLiteral\s*\(\s*\w+\s*:""", """\bDecimal\b""",
+      """toUnscaledLong""", """UTF8String""").map(_.r)
+    val dir = Paths.get("src/main/scala/graft/plans")
+    val offenders = for {
+      f <- Seq("ManifestPruneRule.scala", "MetaCountRule.scala")
+      text = Files.readString(dir.resolve(f))
+      b <- banned
+      m <- b.findAllMatchIn(text)
+    } yield s"$f: ${m.matched}"
+    assert(offenders.isEmpty, offenders.distinct.mkString("\n"))
   }
 }

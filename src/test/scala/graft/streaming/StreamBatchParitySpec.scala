@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.{SparkFixture, Tables}
 import graft.operators.Temporal
+import graft.plans.ManifestRegistry
+import graft.plans.ManifestRuleSupport.{Prune, sessionWith}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -353,9 +355,11 @@ class StreamBatchParitySpec extends AnyFunSuite with SparkFixture {
     // maintained manifest
     assert(maintained.toSeq.map(_._2).sum == docs.count())
     val lo = docs.agg(min("doc_id")).head().getLong(0)
-    val pruned = StatsManifest.readPruned(spark, s"$base/table",
-      spark.read.parquet(s"$base/manifest"), Seq(("doc_id", lo, lo)))
-    assert(pruned.count() == 1)
+    ManifestRegistry.register(spark, s"$base/table",
+      spark.read.parquet(s"$base/manifest"))
+    try assert(sessionWith(spark, Prune).read.parquet(s"$base/table")
+      .where(col("doc_id") === lo).count() == 1)
+    finally ManifestRegistry.deregister(spark, s"$base/table")
   }
 
   test("ingest migration guard: a flat-layout table from the pre-" +
