@@ -271,16 +271,23 @@ object StatsManifest {
     */
   def append(s: SparkSession, dir: String, existing: DataFrame,
       cols: Seq[String], stringCols: Seq[String] = Nil,
-      bandWidth: Int = StringBandWidth): DataFrame = {
+      bandWidth: Int = StringBandWidth): DataFrame =
+    appendNew(s, dir, existing)(
+      buildForFiles(s, _, cols, stringCols, bandWidth))
+
+  /** The shared [[append]]/[[appendWithBlooms]] body: `freshRows` builds
+    * the manifest rows of the files absent from `existing`; the rows of
+    * files no longer listed fall out.
+    */
+  private def appendNew(s: SparkSession, dir: String, existing: DataFrame)(
+      freshRows: Seq[String] => DataFrame): DataFrame = {
     // both file lists are driver-sized (one path per file — the same
     // order as any planner's file listing), so the set difference is
     // plain driver code; only the kept-rows filter runs as a join
     val current = listParquet(s, dir)
     val known = existing.select("file").collect().map(_.getString(0)).toSet
     val newFiles = current.filterNot(known)
-    val fresh =
-      if (newFiles.isEmpty) existing.limit(0)
-      else buildForFiles(s, newFiles, cols, stringCols, bandWidth)
+    val fresh = if (newFiles.isEmpty) existing.limit(0) else freshRows(newFiles)
     val currentDf = s.createDataFrame(
       s.sparkContext.parallelize(current.map(Row(_)),
         math.max(1, math.min(current.size, s.sparkContext.defaultParallelism))),
@@ -290,16 +297,16 @@ object StatsManifest {
     // counts (= unknown, the scan-class semantics countSplit already
     // assigns them), not an AnalysisException that kills the ingest stream.
     // That tolerance is for the nulls channel ONLY: any other divergence
-    // (a different `cols`/`stringCols` list than the manifest was built
-    // with) would silently degrade the mismatched stats columns to NULL —
-    // fail loudly instead, as a plain unionByName always did.
+    // (a different `cols`/`stringCols`/`bloomCols` list than the manifest
+    // was built with) would silently degrade the mismatched stats columns
+    // to NULL — fail loudly instead, as a plain unionByName always did.
     val nonNullsDiff =
       (fresh.columns.toSet diff existing.columns.toSet) ++
         (existing.columns.toSet diff fresh.columns.toSet)
     require(nonNullsDiff.forall(_.startsWith("nulls_")),
       s"manifest append schema mismatch beyond the nulls channel: " +
         s"${nonNullsDiff.filterNot(_.startsWith("nulls_")).toSeq.sorted.mkString(", ")} " +
-        "— append must use the same cols/stringCols the manifest was built with")
+        "— append must use the same columns the manifest was built with")
     existing.join(currentDf, Seq("file"), "left_semi")
       .unionByName(fresh, allowMissingColumns = true)
       .localCheckpoint(eager = true) // same snapshot semantics as build()
@@ -339,25 +346,11 @@ object StatsManifest {
       cols: Seq[String], bloomCols: Seq[String],
       expectedItems: Long = 100000L, fpp: Double = 0.03,
       stringCols: Seq[String] = Nil,
-      bandWidth: Int = StringBandWidth): DataFrame = {
-    val current = listParquet(s, dir)
-    val known = existing.select("file").collect().map(_.getString(0)).toSet
-    val newFiles = current.filterNot(known)
-    val fresh =
-      if (newFiles.isEmpty) existing.limit(0)
-      else buildForFiles(s, newFiles, cols, stringCols, bandWidth)
+      bandWidth: Int = StringBandWidth): DataFrame =
+    appendNew(s, dir, existing)(newFiles =>
+      buildForFiles(s, newFiles, cols, stringCols, bandWidth)
         .join(bloomsForFiles(s, newFiles, bloomCols, expectedItems, fpp),
-          Seq("file"), "left_outer")
-    val currentDf = s.createDataFrame(
-      s.sparkContext.parallelize(current.map(Row(_)),
-        math.max(1, math.min(current.size, s.sparkContext.defaultParallelism))),
-      StructType(Seq(StructField("file", StringType, nullable = false))))
-    // allowMissingColumns: pre-nulls-channel manifests keep appending (see
-    // the append note above)
-    existing.join(currentDf, Seq("file"), "left_semi")
-      .unionByName(fresh, allowMissingColumns = true)
-      .localCheckpoint(eager = true)
-  }
+          Seq("file"), "left_outer"))
 
   /** One distributed pass over exactly `files`: (file, bloom_<c>...) —
     * the per-file value sets a file's writer already held in memory.

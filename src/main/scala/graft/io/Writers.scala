@@ -197,12 +197,6 @@ object Writers {
       .write.mode(mode).parquet(path)
   }
 
-  /** JDBC append with the reference's batch/timeout profile
-    * (batchsize 1000|3000, queryTimeout 600 — Program.cs:631,695,662,703).
-    * For identity tables use [[jdbcWithSessionSetup]] — Spark's writer has
-    * no per-connection init hook (`sessionInitStatement` is a *read-path*
-    * option), so the ON/OFF wrap needs the explicit partition writer.
-    */
   /** Small-file compaction — the table-maintenance pass every large lake
     * needs: streaming/ingest jobs leave directories of KB-sized files
     * whose per-file open/footer cost eventually dominates scans (and
@@ -211,9 +205,7 @@ object Writers {
     * in-place: the caller swaps directories after validating, so a
     * failed compaction can't destroy the source). Uses coalesce — a
     * partition-merge with NO shuffle — because compaction must not pay
-    * a corpus-wide exchange; pass `repartitionInstead = true` only when
-    * the input's partition sizes are so skewed that merged files would
-    * be too. Returns (filesBefore, filesAfter).
+    * a corpus-wide exchange. Returns (filesBefore, filesAfter).
     *
     * File walking goes through the Hadoop `FileSystem` API resolved from
     * the path's own scheme — a 100 TB table lives on HDFS/S3, where a
@@ -221,8 +213,7 @@ object Writers {
     * bare local paths) resolve to the local FS and behave identically.
     */
   def compactParquet(s: org.apache.spark.sql.SparkSession, src: String,
-      dst: String, targetFileBytes: Long = 128L << 20,
-      repartitionInstead: Boolean = false): (Int, Int) = {
+      dst: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
     import org.apache.hadoop.fs.Path
     val conf = s.sparkContext.hadoopConfiguration
     def parquetFiles(dir: String): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
@@ -239,12 +230,16 @@ object Writers {
     val before = parquetFiles(src)
     val totalBytes = before.map(_.getLen).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val df = s.read.parquet(src)
-    val sliced = if (repartitionInstead) df.repartition(n) else df.coalesce(n)
-    sliced.write.mode(SaveMode.Overwrite).parquet(dst)
+    s.read.parquet(src).coalesce(n).write.mode(SaveMode.Overwrite).parquet(dst)
     (before.size, parquetFiles(dst).size)
   }
 
+  /** JDBC append with the reference's batch/timeout profile
+    * (batchsize 1000|3000, queryTimeout 600 — Program.cs:631,695,662,703).
+    * For identity tables use [[jdbcWithSessionSetup]] — Spark's writer has
+    * no per-connection init hook (`sessionInitStatement` is a *read-path*
+    * option), so the ON/OFF wrap needs the explicit partition writer.
+    */
   def jdbc(df: DataFrame, url: String, table: String,
       props: java.util.Properties,
       batchSize: Int = 3000,

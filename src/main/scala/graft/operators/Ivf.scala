@@ -362,8 +362,8 @@ object Ivf {
     // partitions carry `orig_batch` provenance (and `codes` once PQ is
     // on) that appended batch partitions lack; a single-file schema
     // pick could silently HIDE orig_batch and degrade tombstone masking
-    // to the coarse watermark rule. Footer-merge cost is planning-time
-    // metadata, the same trade probedLiveAt already makes for codes.
+    // to the coarse watermark rule, and a mid-enablePq append could hide
+    // `codes`. Footer-merge cost is planning-time metadata.
     try s.read.option("mergeSchema", "true").parquet(path)
     catch {
       case e: org.apache.spark.sql.AnalysisException
@@ -570,38 +570,9 @@ object Ivf {
     // centroids with v+1's index/tombstones — a torn cross-version read
     // that ranks probe cells with stale centroids against the re-assigned
     // index, silently degrading top-k
-    val v = readVersion(s, dir)
-    val cents = s.read.parquet(s"$dir/v$v/centroids").collect()
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val probeCells = cents
-      .map(r => (r.getString(0), cos(qEmb, r.getSeq[Float](1).toArray)))
-      .sortBy { case (cell, sim) => (-sim, cell) }
-      .take(nprobe).map(_._1).toSeq
-    val q = typedLit(qEmb)
-    // filter the RAW partition column, not the string-normalized view: a
-    // predicate under cast(cell as string) does not reach
-    // PartitionFilters, and the whole point of the layout is that the
-    // non-probed cells' files never enter the scan. The literals are
-    // cast to the column's discovered type so constant folding leaves a
-    // plain partition-column IN-list.
-    val raw = readIndexRaw(s, s"$dir/v$v/index")
-    val cellType = raw.schema("cell").dataType
-    val pruned = raw.filter(probeCells
-      .map(c => col("cell") === lit(c).cast(cellType))
-      .reduceOption(_ || _).getOrElse(lit(false)))
-    // tombstones apply AFTER the cell prune: the anti-join sits on top of
-    // the partition-pruned scan, so a delete never widens what gets read
-    val live = tombstones(s, dir, v) match {
-      case Some(t) => antiTombstones(pruned, t, watermarkOf(s, dir, v))
-      case None    => pruned
-    }
-    live
+    probedLiveAt(s, dir, readVersion(s, dir), qEmb, nprobe)
       .select(col("vec_id"),
-        Similarity.cosineSafe(col("embedding"), q).as("sim"))
+        Similarity.cosineSafe(col("embedding"), typedLit(qEmb)).as("sim"))
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(k)
   }
@@ -752,13 +723,14 @@ object Ivf {
       .limit(k)
   }
 
-  /** The shared probe read of version `v`: centroid ranking on O(cells)
-    * driver metadata, partition-column prune to the `nprobe` best
-    * cells, tombstone anti-join on top. mergeSchema because a transient
-    * mid-enablePq append may lack the codes column in one partition — a
-    * single-file schema pick could hide codes everywhere (ADC would
-    * return nothing); the per-row isNotNull filter scopes what ADC can
-    * rank.
+  /** The shared probe read of version `v` ([[annFromStore]] and the PQ
+    * paths): centroid ranking on O(cells) driver metadata,
+    * partition-column prune to the `nprobe` best cells, tombstone
+    * anti-join on top. The index is read by [[readIndexRaw]], whose
+    * mergeSchema also covers a transient mid-enablePq append that lacks
+    * the codes column in one partition — a single-file schema pick could
+    * hide codes everywhere (ADC would return nothing); the per-row
+    * isNotNull filter scopes what ADC can rank.
     */
   private def probedLiveAt(s: SparkSession, dir: String, v: Long,
       qEmb: Array[Float], nprobe: Int): DataFrame = {
@@ -772,18 +744,19 @@ object Ivf {
       .map(r => (r.getString(0), cos(qEmb, r.getSeq[Float](1).toArray)))
       .sortBy { case (cell, sim) => (-sim, cell) }
       .take(nprobe).map(_._1).toSeq
-    val raw =
-      try s.read.option("mergeSchema", "true").parquet(s"$dir/v$v/index")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if Option(e.getCondition).contains("UNABLE_TO_INFER_SCHEMA") =>
-          s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], indexRawSchema)
-      }
+    // filter the RAW partition column, not the string-normalized view: a
+    // predicate under cast(cell as string) does not reach
+    // PartitionFilters, and the whole point of the layout is that the
+    // non-probed cells' files never enter the scan. The literals are
+    // cast to the column's discovered type so constant folding leaves a
+    // plain partition-column IN-list.
+    val raw = readIndexRaw(s, s"$dir/v$v/index")
     val cellType = raw.schema("cell").dataType
     val pruned = raw.filter(probeCells
       .map(c => col("cell") === lit(c).cast(cellType))
       .reduceOption(_ || _).getOrElse(lit(false)))
+    // tombstones apply AFTER the cell prune: the anti-join sits on top of
+    // the partition-pruned scan, so a delete never widens what gets read
     tombstones(s, dir, v) match {
       case Some(t) => antiTombstones(pruned, t, watermarkOf(s, dir, v))
       case None    => pruned

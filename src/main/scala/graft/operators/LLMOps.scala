@@ -107,35 +107,31 @@ object LLMOps {
 
   /** Shared (keep..., token `t`) postings: the corpus tokenize pass that
     * qL34/qL35's pair generation and the marginal counts all start from.
-    * `persist` is OPT-IN: at 100 TB a materialized postings table is
-    * larger than the corpus text, so the default stays
-    * recompute-per-consumer (each pass prunes to the two columns it
-    * needs); a pipeline running several postings consumers back to back
-    * opts in — ONE tokenize stage feeds every consumer from the cache —
-    * and owns the unpersist.
+    * Not persisted: at 100 TB a materialized postings table is larger
+    * than the corpus text, so each consumer recomputes it (each pass
+    * prunes to the two columns it needs); a pipeline running several
+    * postings consumers back to back persists the returned frame — ONE
+    * tokenize stage then feeds every consumer from the cache — and owns
+    * the unpersist.
     */
   def tokenPostings(docs: DataFrame, keep: Seq[String] = Seq("doc_id"),
-      distinctPerDoc: Boolean = true, persist: Boolean = false): DataFrame = {
+      distinctPerDoc: Boolean = true): DataFrame = {
     val arr = if (distinctPerDoc) array_distinct(tokens(col("text")))
               else tokens(col("text"))
-    val out = docs.select(keep.map(col) :+ explode(arr).as("t"): _*)
-    if (persist) out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else out
+    docs.select(keep.map(col) :+ explode(arr).as("t"): _*)
   }
 
   /** Shingle-hash twin of [[tokenPostings]]: (keep..., shingle hash `h`)
     * rows for the n-word shingles — the shared scan under qL24's
     * contamination semi-join and qL27's boilerplate flag join. Same
-    * opt-in-persist contract.
+    * caller-persists contract.
     */
   def shinglePostings(docs: DataFrame, n: Int = 3,
       keep: Seq[String] = Seq("doc_id"),
-      distinctPerDoc: Boolean = true, persist: Boolean = false): DataFrame = {
+      distinctPerDoc: Boolean = true): DataFrame = {
     val arr0 = graft.functions.ShingleHash(col("text"), n)
     val arr = if (distinctPerDoc) array_distinct(arr0) else arr0
-    val out = docs.select(keep.map(col) :+ explode(arr).as("h"): _*)
-    if (persist) out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else out
+    docs.select(keep.map(col) :+ explode(arr).as("h"): _*)
   }
 
   // ---------------------------------------------------------------- queries
@@ -1041,220 +1037,56 @@ object LLMOps {
 
   // ------------------------------------------------ BPE tokenizer training
 
-  /** One BPE merge application over a symbol array: leftmost-first,
-    * non-overlapping replacement of adjacent (a, b) by their
-    * concatenation — the Sennrich merge step as a single codegen fold
-    * (acc = (out, pend): pend holds the symbol that may still start a
-    * pair; a merged symbol is emitted closed, so "aaa" under (a,a)
-    * becomes [aa, a], the classic left-to-right semantics).
+  /** The most distinct words [[bpeMerges]] trains on: the collected
+    * word-frequency table is driver memory.
     */
-  private[graft] def mergePair(syms: Column, a: String, b: String): Column =
-    aggregate(
-      syms,
-      struct(array().cast("array<string>").as("out"),
-        lit(null).cast("string").as("pend")),
-      (acc, x) => {
-        val merged = acc("pend") === lit(a) && x === lit(b)
-        struct(
-          when(acc("pend").isNull, acc("out"))
-            .when(merged, concat(acc("out"), array(lit(a + b))))
-            .otherwise(concat(acc("out"), array(acc("pend")))).as("out"),
-          when(acc("pend").isNull, x)
-            .when(merged, lit(null).cast("string"))
-            .otherwise(x).as("pend")
-      )},
-      acc => when(acc("pend").isNull, acc("out"))
-        .otherwise(concat(acc("out"), array(acc("pend")))))
+  private val MaxLocalVocab = 2000000
 
   /** BPE tokenizer TRAINING (Sennrich et al., "Neural Machine Translation
     * of Rare Words with Subword Units"): learn `numMerges` merge rules
     * from the corpus. Returns (rank, left, right, pair_count) in merge
     * order — the artifact a tokenizer ships.
     *
-    * Scale shape — the boundaries are what make this distributable:
-    * the ONLY corpus-sized work is the initial word count (one
-    * map-side-combined aggregate); every training round then runs on the
-    * word-FREQUENCY table (vocabulary-sized, the same reduction every
-    * production BPE trainer exploits). When that table fits in driver
-    * memory (`maxLocalVocab`), the loop runs LOCAL with pair-count delta
-    * maintenance ([[bpeMergesLocal]]) — zero Spark jobs per merge, the
-    * r11 O(merges)-jobs caveat closed outright (measured: 1,000 merges
-    * over a 10k-word vocabulary in ~5 s vs ~218 s for the sequential
-    * distributed loop). Above the threshold, rounds are BATCHED: one job
-    * ranks the candidate pairs, the driver greedily accepts the longest
-    * ranked PREFIX that provably merges like the one-at-a-time loop
-    * (conditions below), and ONE fold-rewrite applies the whole batch —
-    * O(merges / batch) Spark jobs. State per round is localCheckpointed
-    * so the loop's lineage stays flat.
-    *
-    * EXACT sequential equivalence (spec-pinned batched-vs-one-at-a-time
-    * on randomized corpora): candidate k in the ranked prefix is safe to
-    * batch with ranks 1..k−1 iff
-    *   (a) it shares no symbol with any earlier accepted pair — then
-    *       merging them cannot create or destroy any of its occurrences
-    *       (new adjacencies always involve the freshly minted symbol),
-    *       so its count at sequential step k is unchanged; and
-    *   (b) every earlier accepted pair's new-pair UPPER BOUND is
-    *       STRICTLY below the candidate's count — a merge of (a,b) can
-    *       only create pairs whose every occurrence maps to a pre-merge
-    *       triple (x,a,b) or (a,b,y) occurrence (a pair of merged
-    *       symbols (ab,ab) maps to the interior triple (b,a,b)), so
-    *       max-triple counts bound every newcomer; strict inequality
-    *       keeps ties conservative, because a tied newcomer could win
-    *       the lexicographic tiebreak;
-    *   (c) no earlier accepted merge MINTS a string that already exists
-    *       as a symbol with adjacencies — such a merge boosts
-    *       PRE-EXISTING pair keys whose prior counts the ub does not
-    *       cover; and
-    *   (d) the candidate's own minted string differs from every earlier
-    *       accepted merge's — two merges minting the same string stack
-    *       their new-pair counts past both individual bounds.
-    * Acceptance stops at the first rejection, so the batch is exactly
-    * the rounds a sequential run would perform. Determinism: the argmax
-    * tiebreak is (count DESC, left, right) — lexicographic smallest
-    * pair — so every run learns the same rules.
+    * Scale shape: the ONLY corpus-sized work is the word count (one
+    * map-side-combined aggregate). The merge loop runs on the
+    * word-FREQUENCY table — vocabulary-sized, sublinear in the corpus
+    * (Heaps' law) — collected once and trained driver-side by
+    * [[bpeMergesLocal]], the in-memory stage every production BPE trainer
+    * runs after distributed counting: zero Spark jobs per merge
+    * (measured: 1,000 merges over a 10k-word vocabulary in ~5 s, vs
+    * ~218 s for a loop that ran one distributed round per merge). A
+    * vocabulary above `MaxLocalVocab` distinct words is refused.
+    * Determinism: the argmax tiebreak is (count DESC, left, right) —
+    * lexicographic smallest pair — so every run learns the same rules.
     */
-  def bpeMerges(docs: DataFrame, numMerges: Int = 20,
-      batch: Int = 16, maxLocalVocab: Long = 2000000L): DataFrame = {
+  def bpeMerges(docs: DataFrame, numMerges: Int = 20): DataFrame = {
     val s = docs.sparkSession
-    require(batch >= 1, s"bpeMerges: batch must be >= 1, got $batch")
+    import s.implicits._
     val wordFreq = docs
       .select(explode(tokens(col("text"))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("n"))
-    // The merge loop runs on the word-FREQUENCY table — VOCABULARY-sized,
-    // sublinear in the corpus (Heaps' law), and the reduction every
-    // production BPE trainer exploits by running the merges IN MEMORY
-    // after distributed counting. When the vocabulary fits
-    // (`maxLocalVocab`), collect it and run the exact loop driver-side
-    // with pair-count delta maintenance: zero Spark jobs per merge, a
-    // 32k-merge production vocabulary trains in seconds (the batched
-    // distributed loop below pays ~2 jobs per round, and on
-    // shared-alphabet corpora its provable batches stay small). The two
-    // paths learn IDENTICAL rules — pinned on randomized corpora.
-    // probe with count() — a row count, never a 2M-row driver transfer
-    // on the over-threshold path (where the collected sample would be
-    // discarded); the under-threshold path then collects the real table
-    if (wordFreq.count() <= maxLocalVocab) {
-      import s.implicits._
-      return bpeMergesLocal(
-        wordFreq.collect().map(r => (r.getString(0), r.getLong(1))), numMerges)
-        .toDF("rank", "left", "right", "pair_count")
-    }
-    var words = wordFreq
-      .select(split(col("word"), "").as("syms"), col("n"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var rank = 0
-    var done = false
-    while (rank < numMerges && !done) {
-      val m = math.min(batch, numMerges - rank)
-      val pairCnt = words
-        .select(col("n"), explode(arrays_zip(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1))).as("p"))
-        .groupBy(col("p.0").as("l"), col("p.1").as("r"))
-        .agg(sum(col("n")).as("cnt"))
-      // triple counts feed the per-pair new-pair upper bounds: ubl is the
-      // heaviest triple ENDING in the pair, ubr the heaviest STARTING
-      // with it (vocabulary-sized work, same explode discipline)
-      // greatest(…, 0): a 1- or 2-symbol word has no triple and slice
-      // rejects negative lengths outright
-      val tripleLen = greatest(size(col("syms")) - 2, lit(0))
-      val tripleCnt = words
-        .select(col("n"), explode(arrays_zip(
-          slice(col("syms"), lit(1), tripleLen),
-          slice(col("syms"), lit(2), tripleLen),
-          slice(col("syms"), lit(3), tripleLen))).as("t"))
-        .groupBy(col("t.0").as("t1"), col("t.1").as("t2"), col("t.2").as("t3"))
-        .agg(sum(col("n")).as("tc"))
-      // minted-symbol collision guard: if the string a merge MINTS (l+r)
-      // already exists as a symbol with adjacencies, the merge ADDS
-      // occurrences to PRE-EXISTING pair keys — their post-merge count is
-      // c0 + delta where only delta is triple-bounded, so the ub proof
-      // no longer covers them and batching past that merge is unsound
-      val symbols = pairCnt.select(col("l").as("minted"))
-        .union(pairCnt.select(col("r").as("minted"))).distinct()
-        .withColumn("minted_exists", lit(true))
-      val ranked = pairCnt
-        .join(tripleCnt.groupBy(col("t2").as("l"), col("t3").as("r"))
-          .agg(max("tc").as("ubl")), Seq("l", "r"), "left_outer")
-        .join(tripleCnt.groupBy(col("t1").as("l"), col("t2").as("r"))
-          .agg(max("tc").as("ubr")), Seq("l", "r"), "left_outer")
-        .join(symbols, concat(col("l"), col("r")) === col("minted"),
-          "left_outer")
-        .select(col("l"), col("r"), col("cnt"),
-          greatest(coalesce(col("ubl"), lit(0L)),
-            coalesce(col("ubr"), lit(0L))).as("ub"),
-          coalesce(col("minted_exists"), lit(false)).as("minted_exists"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(m).collect() // batch-sized, the round's learned rules
-      if (ranked.isEmpty) done = true
-      else {
-        // greedy prefix under (a) symbol-disjointness and (b) strict
-        // ub-below-count — the first candidate is the true argmax and
-        // always accepted (a singleton batch IS the sequential round)
-        val accepted = Seq.newBuilder[(String, String, Long, Long)]
-        val used = scala.collection.mutable.Set.empty[String]
-        val minted = scala.collection.mutable.Set.empty[String]
-        var maxUb = Long.MinValue
-        var mintedCollision = false
-        var n = 0
-        var stop = false
-        ranked.foreach { row =>
-          if (!stop) {
-            val (l, r, cnt, ub, exists) = (row.getString(0), row.getString(1),
-              row.getLong(2), row.getLong(3), row.getBoolean(4))
-            // (d) a candidate minting a string an EARLIER accepted merge
-            // already minted would stack new-pair counts past both ubs
-            if (n == 0 || (!used(l) && !used(r) && maxUb < cnt &&
-                !mintedCollision && !minted(l + r))) {
-              accepted += ((l, r, cnt, ub))
-              used += l; used += r
-              minted += (l + r)
-              // (c) once an accepted merge mints a PRE-EXISTING symbol,
-              // its boosts land on pair keys with unknown prior counts —
-              // nothing after it can be proven safe this round
-              mintedCollision ||= exists
-              maxUb = math.max(maxUb, ub)
-              n += 1
-            } else stop = true
-          }
-        }
-        val batchRules = accepted.result()
-        batchRules.foreach { case (l, r, cnt, _) =>
-          merges += ((rank, l, r, cnt)); rank += 1
-        }
-        // ONE rewrite pass for the whole batch: projection collapse fuses
-        // the chained folds; superseded checkpoints are vocab-sized and
-        // age out with the session
-        words = batchRules
-          .foldLeft(words) { case (w, (l, r, _, _)) =>
-            w.select(mergePair(col("syms"), l, r).as("syms"), col("n"))
-          }
-          .localCheckpoint()
-      }
-    }
-    import s.implicits._
-    merges.result().toDF("rank", "left", "right", "pair_count")
+      .limit(MaxLocalVocab + 1)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    require(wordFreq.length <= MaxLocalVocab,
+      s"bpeMerges: the vocabulary exceeds $MaxLocalVocab distinct words")
+    bpeMergesLocal(wordFreq, numMerges)
+      .toDF("rank", "left", "right", "pair_count")
   }
 
   /** The driver-local BPE merge loop: the EXACT sequential algorithm
-    * (same adjacency counts with overlap semantics, same (count DESC,
-    * left, right) tiebreak, same leftmost-first non-overlapping merge
-    * fold as [[mergePair]]) with pair-count DELTA maintenance — each
-    * round rewrites only the words containing the merged pair and
-    * adjusts counts by removing/re-adding just those words'
-    * contributions, so a merge costs O(words containing the pair), not
-    * O(vocabulary). This is the in-memory stage every production BPE
-    * trainer runs after distributed counting; local-vs-distributed rule
-    * equality is spec-pinned on randomized corpora.
+    * (adjacency counts with overlap semantics, the (count DESC, left,
+    * right) tiebreak, the [[mergeLocal]] merge step) with pair-count
+    * DELTA maintenance — each round rewrites only the words containing
+    * the merged pair and adjusts counts by removing/re-adding just those
+    * words' contributions, so a merge costs O(words containing the
+    * pair), not O(vocabulary). Rule equality with a naive
+    * recount-every-round trainer is spec-pinned on randomized corpora.
     */
   private[graft] def bpeMergesLocal(wordFreq: Array[(String, Long)],
       numMerges: Int): Seq[(Int, String, String, Long)] = {
     import scala.collection.mutable
-    val words: Array[Array[String]] =
-      wordFreq.map(_._1.split("").filter(_.nonEmpty))
+    val words: Array[Array[String]] = wordFreq.map(w => symbols(w._1))
     val freq = wordFreq.map(_._2)
     val pairCount = mutable.HashMap.empty[(String, String), Long]
     val pairWords = mutable.HashMap.empty[(String, String), mutable.BitSet]
@@ -1265,11 +1097,11 @@ object LLMOps {
     // the surviving top IS the scan argmax, at O(log P) per update
     // instead of O(P) per round (the difference between minutes and
     // hours at a 32k-merge production vocabulary).
-    // lexicographic tiebreak in UTF-8 BYTE order — what the distributed
-    // loop's orderBy on StringType compares (UTF8String binary order).
-    // Java String.compareTo is UTF-16 code-unit order, which DISAGREES
-    // for supplementary-plane characters (U+FFFF vs emoji) and would let
-    // the two paths learn different rules on tied counts.
+    // lexicographic tiebreak in UTF-8 BYTE order — Spark's StringType
+    // order (UTF8String binary order), so an `orderBy` over the pairs
+    // ranks them the same way. Java String.compareTo is UTF-16 code-unit
+    // order, which DISAGREES for supplementary-plane characters (U+FFFF
+    // vs emoji).
     def utf8Compare(a: String, b: String): Int = {
       val (x, y) = (a.getBytes("UTF-8"), b.getBytes("UTF-8"))
       var i = 0
@@ -1330,11 +1162,20 @@ object LLMOps {
     merges.result()
   }
 
-  /** Leftmost-first non-overlapping merge of (a,b) — the driver-side twin
-    * of the [[mergePair]] fold (both pinned against the same reference
-    * implementation in EngineSpec).
+  /** A word's initial BPE symbols: one per Unicode code point, the way
+    * Spark's `split(word, "")` splits. `String.split("")` would cut a
+    * supplementary-plane character into two lone UTF-16 surrogates.
     */
-  private def mergeLocal(syms: Array[String], a: String,
+  private def symbols(word: String): Array[String] =
+    word.codePoints.toArray.map(cp => new String(Character.toChars(cp)))
+
+  /** The BPE merge step: leftmost-first, non-overlapping replacement of
+    * adjacent (a, b) by their concatenation. A merged symbol is emitted
+    * closed, so "aaa" under (a,a) becomes [aa, a] — the classic
+    * left-to-right semantics. Both [[bpeMergesLocal]] and [[applyBpe]]
+    * merge through it.
+    */
+  private[graft] def mergeLocal(syms: Array[String], a: String,
       b: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var pend: String = null
@@ -1347,65 +1188,54 @@ object LLMOps {
     out.toArray
   }
 
-  /** Apply learned [[bpeMerges]] rules to a word-frequency table:
-    * (word, n) → (word, n, pieces array<string>) with every rule applied
-    * in rank order — the ENCODE side of the trained tokenizer, run once
-    * per DISTINCT word (vocabulary-sized, then joined back to the corpus
-    * by key at any scale). Rules chain as iterative column rewrites with
-    * periodic lineage truncation, not one numMerges-deep codegen
-    * expression.
+  /** Apply [[bpeMerges]] rules to a word-frequency table: (word, n) →
+    * (word, n, pieces array<string>) — the ENCODE side of the trained
+    * tokenizer, run once per DISTINCT word (vocabulary-sized, then joined
+    * back to the corpus by key at any scale). The rule table rides to
+    * executors once, in the UDF closure (rule-table-sized).
+    *
+    * The encoding is rank-ordered exhaustive application — every rule,
+    * in rank order, applied to the whole word by [[mergeLocal]] — done
+    * as a rank-cursor sweep: from cursor −1, take the lowest rank above
+    * the cursor whose pair is adjacent in the word, apply it and move the
+    * cursor there; stop when no such rank is left. A rule whose pair is
+    * absent is a no-op in the exhaustive order, so skipping it changes
+    * nothing: the sweep equals rank-ordered application on ANY rule
+    * table with distinct non-negative ranks, trained or not, at O(len²)
+    * rule lookups per word. A null word encodes to null pieces.
     */
   def applyBpe(words: DataFrame, merges: DataFrame): DataFrame = {
-    val rules = merges.orderBy("rank")
-      .collect().map(r => (r.getString(1), r.getString(2))) // rule-table-sized
-    var cur = words.withColumn("pieces", split(col("word"), ""))
-    rules.zipWithIndex.foreach { case ((l, r), i) =>
-      cur = cur.withColumn("pieces", mergePair(col("pieces"), l, r))
-      if ((i + 1) % 8 == 0) cur = cur.localCheckpoint() // flatten lineage
-    }
-    cur
-  }
-
-  /** The ENCODE side at production rule depth: [[applyBpe]] chains one
-    * column rewrite per rule — transparent and plan-visible at the
-    * 10–20-rule demo scale, impossible at a 32k-rule vocabulary. This is
-    * the standard greedy encoder every production tokenizer ships
-    * instead: the rank map rides to executors once (broadcast via UDF
-    * closure, rule-table-sized), and each word repeatedly merges the
-    * LOWEST-RANK adjacent pair present (leftmost on rank ties) until
-    * none of its pairs is a rule.
-    *
-    * Greedy-lowest-rank is EXACTLY rank-ordered exhaustive application
-    * (spec-pinned on randomized corpora): merging rule k can only mint
-    * pairs that contain rule k's new symbol, and every rule involving
-    * that symbol was learned AFTER k (higher rank) — so no lower-rank
-    * occurrence is ever created, and the rank-order sweep and the greedy
-    * loop perform the same merges. Within one rule, repeatedly merging
-    * the leftmost occurrence reproduces [[mergePair]]'s leftmost-first
-    * non-overlapping fold.
-    */
-  def applyBpeFast(words: DataFrame, merges: DataFrame): DataFrame = {
-    val ranks: Map[(String, String), Int] = merges
-      .select("left", "right", "rank").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
-    val encode = udf((word: String) => {
-      var pieces = word.split("").filter(_.nonEmpty)
-      var done = false
-      while (!done && pieces.length > 1) {
-        var bestRank = Int.MaxValue
-        var bestAt = -1
-        var i = 0
-        while (i < pieces.length - 1) {
-          val rk = ranks.getOrElse((pieces(i), pieces(i + 1)), Int.MaxValue)
-          if (rk < bestRank) { bestRank = rk; bestAt = i }
-          i += 1
+    val rules = merges.select("rank", "left", "right").collect()
+      .map(r => (r.getInt(0), (r.getString(1), r.getString(2))))
+    require(rules.forall(_._1 >= 0) &&
+      rules.map(_._1).distinct.length == rules.length,
+      "applyBpe: rule ranks must be distinct and non-negative")
+    // pair → its ranks ascending (an untrained table may repeat a pair)
+    val ranks: Map[(String, String), Array[Int]] =
+      rules.groupBy(_._2).map { case (p, rs) => p -> rs.map(_._1).sorted }
+    val encode = udf((word: String) =>
+      if (word == null) null
+      else {
+        var pieces = symbols(word)
+        var cur = -1
+        var done = false
+        while (!done) {
+          var best = Int.MaxValue
+          var bestAt = -1
+          var i = 0
+          while (i < pieces.length - 1) {
+            ranks.get((pieces(i), pieces(i + 1))).flatMap(_.find(_ > cur))
+              .foreach(r => if (r < best) { best = r; bestAt = i })
+            i += 1
+          }
+          if (bestAt < 0) done = true
+          else {
+            pieces = mergeLocal(pieces, pieces(bestAt), pieces(bestAt + 1))
+            cur = best
+          }
         }
-        if (bestAt < 0) done = true
-        else pieces = (pieces.take(bestAt) :+
-          (pieces(bestAt) + pieces(bestAt + 1))) ++ pieces.drop(bestAt + 2)
-      }
-      pieces
-    })
+        pieces
+      })
     words.withColumn("pieces", encode(col("word")))
   }
 

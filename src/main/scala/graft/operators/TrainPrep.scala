@@ -111,27 +111,25 @@ object TrainPrep {
     }
   }
 
-  /** Checkpoint `df` (local unless `reliable`) plus the persistent-RDD
-    * registry diff that identifies its blocks, so [[unpinTracked]] can
-    * drop a bounded-lifetime pin (`Dataset.unpersist` can't reach a
+  /** Local-checkpoint `df` plus the persistent-RDD registry diff that
+    * identifies its blocks, so [[unpinTracked]] can drop a
+    * bounded-lifetime pin (`Dataset.unpersist` can't reach a
     * LogicalRDD's blocks). Caveat: no OTHER thread may persist RDDs
     * during the eager checkpoint, or its blocks could be dropped too.
     */
-  private[graft] def pinTracked(df: DataFrame,
-      reliable: Boolean = false): (DataFrame, Set[Int]) = {
+  private[graft] def pinTracked(df: DataFrame): (DataFrame, Set[Int]) = {
     val sc = df.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
-    val out = if (reliable) df.checkpoint() else df.localCheckpoint()
+    val out = df.localCheckpoint()
     (out, sc.getPersistentRDDs.keySet.toSet -- before)
   }
 
   /** [[pinTracked]] plus the pinned row count, taken by an `Observation`
     * on the pinning job itself instead of a count job over the blocks.
     */
-  private[graft] def pinCounted(df: DataFrame,
-      reliable: Boolean = false): (DataFrame, Set[Int], Long) = {
+  private[graft] def pinCounted(df: DataFrame): (DataFrame, Set[Int], Long) = {
     val obs = org.apache.spark.sql.Observation()
-    val (out, ids) = pinTracked(df.observe(obs, count(lit(1)).as("n")), reliable)
+    val (out, ids) = pinTracked(df.observe(obs, count(lit(1)).as("n")))
     (out, ids, obs.get("n").asInstanceOf[Long])
   }
 

@@ -240,15 +240,23 @@ object ClonePipeline {
     * Writing the target's files deregisters its root from
     * [[graft.plans.ManifestRegistry]]: a manifest registered for it (as a
     * laid-out [[clone]] does) lists the replaced files, and both manifest
-    * rules would answer from them. A persisted `<t>.manifest` beside the
-    * target describes the old files too, so it must be rebuilt
-    * (`StatsManifest.build`) before it is registered again.
+    * rules would answer from them. The persisted `<t>.manifest` a
+    * laid-out clone writes beside a `<t>.parquet` target describes the
+    * old files too, so it is deleted BEFORE the new files are written: a
+    * crash leaves old files without a manifest, never new files with an
+    * old one, and registering the deleted manifest fails loudly instead
+    * of pruning wrongly. Rebuild it with `StatsManifest.build`.
     */
   def incrementalSync(spark: SparkSession, source: DataFrame, tgtPath: String,
       keyCols: Seq[String], versionCol: String): SyncReport = {
     val tgt = new org.apache.hadoop.fs.Path(tgtPath)
     val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dropPersistedManifest(): Unit =
+      if (tgtPath.endsWith(".parquet"))
+        fs.delete(new org.apache.hadoop.fs.Path(
+          tgtPath.stripSuffix(".parquet") + ".manifest"), true)
     if (!fs.exists(tgt)) {
+      dropPersistedManifest()
       val n = writeObserving(source, tgtPath, count(lit(1)))
       graft.plans.ManifestRegistry.deregister(spark, tgtPath)
       return SyncReport(n, n, n)
@@ -260,6 +268,7 @@ object ClonePipeline {
     val (sourceRows, deltaRows) = (c.getLong(0), c.getLong(1))
     if (deltaRows == 0)
       return SyncReport(sourceRows, 0, t.getLong(1))
+    dropPersistedManifest()
     val merged = merge(target, source.filter(inDelta), keyCols, versionCol)
     val tmp = new org.apache.hadoop.fs.Path(tgtPath + "__sync_tmp")
     val targetRows = writeObserving(merged, tmp.toString, count(lit(1)))

@@ -110,7 +110,8 @@ object ManifestPruneRule extends Rule[LogicalPlan] {
       c.op match {
         case AtLeast | Above => Some((Some(vs.head), None))
         case AtMost | Below  => Some((None, Some(vs.head)))
-        case Equal | NullSafeEqual | InList => Some((Some(vs.min), Some(vs.max)))
+        case Equal | NullSafeEqual | InList | InHashSet =>
+          Some((Some(vs.min), Some(vs.max)))
         case Prefix => Some((Some(vs.head), StatsManifest.bump(vs.head)))
         case _      => None
       }

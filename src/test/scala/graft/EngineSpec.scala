@@ -747,6 +747,33 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     } finally ManifestRegistry.deregister(spark, tgt)
   }
 
+  test("incrementalSync deletes the target's persisted manifest, so a " +
+      "later registration fails instead of pruning wrongly") {
+    val base = Files.createTempDirectory("graft-sync-persisted").toString
+    def orders(lo: Long, hi: Long, version: Long) = spark.range(lo, hi)
+      .select(col("id").as("o_orderkey"), (col("id") % 97).as("o_custkey"),
+        lit(version).as("o_version"))
+    orders(0, 2000, 0).write.parquet(s"$base/src/orders.parquet")
+    val tgt = s"$base/clone/orders.parquet"
+    val report = ClonePipeline.clone(spark, s"$base/src", s"$base/clone",
+      Seq("orders"), layouts = Map("orders" ->
+        ClonePipeline.TableLayout(Seq("o_orderkey"), numFiles = 8)))
+    try {
+      val manifestDir = report.manifests("orders")
+      assert(new java.io.File(manifestDir).exists())
+      ClonePipeline.incrementalSync(spark,
+        orders(0, 2000, 0).unionByName(orders(2000, 3000, 1)), tgt,
+        Seq("o_orderkey"), "o_version")
+      // the persisted manifest lists the replaced files: registering it
+      // would prune the new keys away, so it is gone
+      assert(!new java.io.File(manifestDir).exists())
+      intercept[org.apache.spark.sql.AnalysisException](
+        graft.plans.Graft.registerManifest(spark, tgt, manifestDir))
+      assert(sessionWith(spark, Prune).read.parquet(tgt)
+        .where(col("o_orderkey") >= 2500).count() == 500)
+    } finally ManifestRegistry.deregister(spark, tgt)
+  }
+
   test("stats manifest: footer-only stats equal a data-scan recount; " +
       "range pruning opens fewer files and returns exactly the full-scan rows") {
     import graft.io.StatsManifest
@@ -2227,6 +2254,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
   test("cached token postings tokenize the corpus once across qL35's " +
       "three consumers, with identical results") {
     import graft.operators.LLMOps
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docs = Tables.documents(spark, sfDir)
     // baseline BEFORE persisting: Spark substitutes a cached plan into any
     // query containing the matching subtree, so the uncached scan count
@@ -2235,7 +2263,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val baseRows = base.collect().toSeq
     // both pair sides + the marginals + the N aggregate each scan documents
     assert(fileScans(base.queryExecution.executedPlan, "documents.parquet").size == 4)
-    val posts = LLMOps.tokenPostings(docs, persist = true)
+    val posts = LLMOps.tokenPostings(docs).persist(MEMORY_AND_DISK)
     try {
       val cached = LLMOps.qL35(spark, sfDir, postings = Some(posts))
       assert(cached.collect().toSeq == baseRows)
@@ -2244,7 +2272,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
       assert(fileScans(cached.queryExecution.executedPlan, "documents.parquet").size == 1)
       // shingle twin: qL27 over a persisted postings frame matches default
       val l27Base = LLMOps.qL27(spark, sfDir).collect().toSeq
-      val sposts = LLMOps.shinglePostings(docs, persist = true)
+      val sposts = LLMOps.shinglePostings(docs).persist(MEMORY_AND_DISK)
       try {
         assert(LLMOps.qL27(spark, sfDir, postings = Some(sposts)).collect().toSeq ==
           l27Base)
@@ -4903,6 +4931,29 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  /** Test-side BPE references, independent of `LLMOps`: a word's
+    * code-point symbols, the leftmost-first non-overlapping merge, and
+    * the UTF-8 byte order that ranks tied pairs (Latin-1 decoding of the
+    * UTF-8 bytes makes String order unsigned-byte order).
+    */
+  private def bpeSymbols(w: String): Seq[String] =
+    w.codePoints.toArray.toSeq.map(cp => new String(Character.toChars(cp)))
+
+  private def refMerge(syms: Seq[String], a: String, b: String): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    var pend: String = null
+    syms.foreach { x =>
+      if (pend == null) pend = x
+      else if (pend == a && x == b) { out += (a + b); pend = null }
+      else { out += pend; pend = x }
+    }
+    if (pend != null) out += pend
+    out.toSeq
+  }
+
+  private def utf8Key(s: String): String =
+    new String(s.getBytes("UTF-8"), "ISO-8859-1")
+
   test("bpe training: hand-computed Sennrich merges on a constructed " +
       "corpus, deterministic re-run, and encode round-trips every word") {
     import graft.operators.LLMOps
@@ -4972,67 +5023,105 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(inter == 3 && union == 3 && jac == 1.0)
   }
 
-  test("bpe batched rounds learn exactly the one-at-a-time merge sequence " +
-      "on randomized corpora") {
+  test("bpe trainer equals a naive recount-every-round trainer on " +
+      "randomized corpora") {
     import graft.operators.LLMOps
     import spark.implicits._
+    // the reference recounts every adjacent pair each round, takes the
+    // argmax by (count DESC, left, right) in UTF-8 byte order and merges
+    // it everywhere
+    def naive(words: Seq[String], numMerges: Int): Seq[(Int, String, String, Long)] = {
+      var vocab = words.groupBy(identity).toSeq
+        .map { case (w, ws) => (bpeSymbols(w), ws.size.toLong) }
+      (0 until numMerges).flatMap { rank =>
+        val counts = vocab
+          .flatMap { case (syms, n) =>
+            syms.sliding(2).collect { case Seq(a, b) => (a, b) -> n } }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        if (counts.isEmpty) None
+        else {
+          val ((a, b), c) = counts.toSeq
+            .minBy { case ((a, b), c) => (-c, utf8Key(a), utf8Key(b)) }
+          vocab = vocab.map { case (syms, n) => (refMerge(syms, a, b), n) }
+          Some((rank, a, b, c))
+        }
+      }
+    }
     // small alphabets force the adversarial regimes: count ties resolved
-    // lexicographically, self-pairs over runs, and batch candidates whose
-    // new-pair upper bounds must demote them to the next round
+    // lexicographically, self-pairs over runs, deep nested symbols; the
+    // last alphabet mixes a BMP character with a supplementary-plane one,
+    // whose UTF-16 order is the reverse of their UTF-8 order
+    val alphabets = (0 until 6).map(t => "abcd".take(2 + t % 3).map(_.toString)) :+
+      Seq("a", "\uFF41", "\uD83D\uDE00")
     val rnd = new scala.util.Random(23)
-    (0 until 6).foreach { trial =>
-      // dense 2-letter trials drive DEEP nested symbols ("ab" → "aba" →
-      // ...) where two rules can MINT the same string — the collision
-      // regime acceptance conditions (c)/(d) exist for
-      val alpha = "abcd".take(2 + trial % 3)
+    alphabets.zipWithIndex.foreach { case (alpha, trial) =>
       val docs = (0 until 30).map { i =>
         (i.toLong, Seq.fill(rnd.nextInt(6) + 1)(
           Seq.fill(rnd.nextInt(10) + 1)(alpha(rnd.nextInt(alpha.length)))
             .mkString).mkString(" "))
       }.toDF("doc_id", "text")
-      // maxLocalVocab = 0 forces the DISTRIBUTED loop (the tiny spec
-      // vocabulary would otherwise route every call driver-local)
-      def rules(b: Int, localVocab: Long = 0L) =
-        LLMOps.bpeMerges(docs, numMerges = 22, batch = b,
-          maxLocalVocab = localVocab)
-          .collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-          .toSeq
-      val sequential = rules(1)
-      val batched = rules(8)
-      assert(batched == sequential,
-        s"trial $trial: batched $batched != sequential $sequential")
-      // and the driver-local delta-maintenance loop learns the SAME rules
-      val local = rules(8, localVocab = 1000000L)
-      assert(local == sequential,
-        s"trial $trial: local $local != sequential $sequential")
+      val words = docs.select(explode(LLMOps.tokens(col("text"))))
+        .collect().map(_.getString(0)).filter(_.nonEmpty).toSeq
+      val got = LLMOps.bpeMerges(docs, numMerges = 22).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq
+      val want = naive(words, 22)
+      assert(got == want, s"trial $trial: got $got, want $want")
     }
   }
 
-  test("bpe greedy encoder equals rank-ordered exhaustive application on " +
-      "randomized corpora") {
+  test("bpe encoder equals rank-ordered exhaustive application on any " +
+      "rule table") {
     import graft.operators.LLMOps
     import spark.implicits._
+    // the reference: every rule, in rank order, merged over the whole word
+    def exhaustive(rules: Seq[(Int, String, String)], w: String): Seq[String] =
+      rules.sortBy(_._1).foldLeft(bpeSymbols(w)) { case (syms, (_, a, b)) =>
+        refMerge(syms, a, b) }
+    def check(label: String, rules: Seq[(Int, String, String)],
+        words: DataFrame): Unit = {
+      val merges = rules.toDF("rank", "left", "right")
+      val got = LLMOps.applyBpe(words, merges).select("word", "pieces")
+        .collect().map(r => r.getString(0) -> r.getSeq[String](1))
+      assert(got.nonEmpty, label)
+      got.foreach { case (w, ps) =>
+        assert(ps == exhaustive(rules, w), s"$label: word $w")
+        assert(ps.mkString("") == w, s"$label: word $w lost characters")
+      }
+    }
     val rnd = new scala.util.Random(41)
+    def randomDocs(alpha: String) = (0 until 40).map { i =>
+      (i.toLong, Seq.fill(rnd.nextInt(5) + 1)(
+        Seq.fill(rnd.nextInt(8) + 1)(alpha(rnd.nextInt(alpha.length)))
+          .mkString).mkString(" "))
+    }.toDF("doc_id", "text")
+    def wordsOf(docs: DataFrame) = docs
+      .select(explode(LLMOps.tokens(col("text"))).as("word"))
+      .filter(length(col("word")) > 0)
+      .groupBy("word").agg(count(lit(1)).as("n"))
+    // trained tables
     (0 until 3).foreach { trial =>
-      val alpha = "abcd".take(2 + trial)
-      val docs = (0 until 40).map { i =>
-        (i.toLong, Seq.fill(rnd.nextInt(5) + 1)(
-          Seq.fill(rnd.nextInt(8) + 1)(alpha(rnd.nextInt(alpha.length)))
-            .mkString).mkString(" "))
-      }.toDF("doc_id", "text")
-      val merges = LLMOps.bpeMerges(docs, numMerges = 15)
-      val words = docs
-        .select(explode(LLMOps.tokens(col("text"))).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy("word").agg(count(lit(1)).as("n"))
-      def enc(df: org.apache.spark.sql.DataFrame) = df
-        .select("word", "pieces").collect()
-        .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-      val exhaustive = enc(LLMOps.applyBpe(words, merges))
-      val greedy = enc(LLMOps.applyBpeFast(words, merges))
-      assert(greedy == exhaustive, s"trial $trial")
-      greedy.foreach { case (w, ps) => assert(ps.mkString("") == w) }
+      val docs = randomDocs("abcd".take(2 + trial))
+      val rules = LLMOps.bpeMerges(docs, numMerges = 15).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
+      check(s"trained trial $trial", rules, wordsOf(docs))
+    }
+    // arbitrary tables: 1-8 rules over single and merged symbols at
+    // sparse, shuffled ranks — pairs trained tables never hold, in orders
+    // no trainer learns (a rule can precede the rule that mints its symbol)
+    val syms = Vector("a", "b", "c", "aa", "ab", "ba", "bc", "abc")
+    val words = wordsOf(randomDocs("abc")).localCheckpoint()
+    (0 until 20).foreach { trial =>
+      val n = rnd.nextInt(8) + 1
+      val ranks = rnd.shuffle((0 until 3 * n).toList).take(n)
+      val rules = ranks.map(r =>
+        (r, syms(rnd.nextInt(syms.size)), syms(rnd.nextInt(syms.size))))
+      check(s"arbitrary trial $trial ($rules)", rules, words)
+    }
+    // rank order is undefined on a tie and the sweep starts at rank 0
+    Seq(Seq((0, "a", "b"), (0, "b", "c")), Seq((-1, "a", "b"))).foreach { bad =>
+      intercept[IllegalArgumentException](
+        LLMOps.applyBpe(words, bad.toDF("rank", "left", "right")))
     }
   }
 
@@ -5062,18 +5151,6 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
   test("bpe merge fold: randomized equivalence with a reference leftmost-" +
       "first merge, including self-pair runs and adjacent-rule overlaps") {
     import graft.operators.LLMOps
-    import spark.implicits._
-    def ref(syms: Seq[String], a: String, b: String): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var pend: String = null
-      syms.foreach { x =>
-        if (pend == null) pend = x
-        else if (pend == a && x == b) { out += (a + b); pend = null }
-        else { out += pend; pend = x }
-      }
-      if (pend != null) out += pend
-      out.toSeq
-    }
     val rnd = new scala.util.Random(11)
     // a small overlapping alphabet forces self-pairs (a,a) over runs and
     // merged-symbol lookalikes ("ab" vs a+b) — the tricky merge cases
@@ -5083,11 +5160,10 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
       val cases = (0 until 60).map { i =>
         (i.toLong, Seq.fill(rnd.nextInt(9))(alphabet(rnd.nextInt(4))))
       }
-      val got = cases.toDF("id", "syms")
-        .select(col("id"), LLMOps.mergePair(col("syms"), a, b).as("m"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      val got = cases.map { case (id, syms) =>
+        id -> LLMOps.mergeLocal(syms.toArray, a, b).toSeq }.toMap
       cases.foreach { case (id, syms) =>
-        val expect = ref(syms, a, b)
+        val expect = refMerge(syms, a, b)
         assert(got(id) == expect,
           s"rule ($a,$b) on $syms: got ${got(id)}, want $expect")
         assert(got(id).mkString("") == syms.mkString(""),

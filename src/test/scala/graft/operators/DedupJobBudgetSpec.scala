@@ -13,10 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Spark-job ceilings for the dedup path's store and graph operators, the
-  * chunk store, the clone and sync path, benchmark decontamination
-  * (one-shot and one streaming-gate batch) and the manifest rules'
-  * planning. At this size they are bound
+/** Spark-job ceilings for the dedup path's store and graph operators, BPE
+  * training, the chunk store, the clone and sync path, benchmark
+  * decontamination (one-shot and one streaming-gate batch) and the
+  * manifest rules' planning. At this size they are bound
   * by job count (driver time between jobs), not by data, so a job added
   * back is the regression to catch; counts are deterministic where wall
   * time is not.
@@ -58,6 +58,16 @@ class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture {
       val jobs = jobsOf(run())
       assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
     }
+  }
+
+  test("bpeMerges runs the same Spark jobs for 5 merges as for 50") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+      .limit(40).localCheckpoint()
+    // the merge loop runs driver-side: only the word count is a job
+    val jobs = Seq(5, 50).map(m =>
+      jobsOf(LLMOps.bpeMerges(docs, numMerges = m).collect()))
+    assert(jobs.head == jobs.last, s"jobs for 5 vs 50 merges: $jobs")
+    assert(jobs.last <= 1, s"bpeMerges ran ${jobs.last} jobs, ceiling 1")
   }
 
   test("ChunkStore write and vacuum stay within their job ceilings") {

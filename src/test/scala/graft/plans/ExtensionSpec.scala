@@ -726,6 +726,20 @@ class ExtensionSpec extends AnyFunSuite with SparkFixture {
         s"string range should skip files, read $filesRange of 16")
       assert(prunedR.collect().sameElements(rangeQ(spark).collect()),
         "string range prune: parity")
+      // both IN forms contribute their [min, max] envelope: 3 members
+      // stay an In, 20 over the same envelope become the optimizer's InSet
+      val run = names.slice(names.length / 2, names.length / 2 + 20)
+      def inQ(s: org.apache.spark.sql.SparkSession, members: Seq[String]) =
+        s.read.parquet(dir).where(col("c_name").isin(members: _*))
+          .orderBy("c_custkey")
+      val (few, many) = (Seq(run.head, run(10), run.last), run.toSeq)
+      val filesIn = scanFiles(inQ(iso, few))
+      val filesInSet = scanFiles(inQ(iso, many))
+      assert(filesIn < 16, s"IN should skip files, read $filesIn of 16")
+      assert(filesInSet <= filesIn,
+        s"InSet read $filesInSet files, In over the same envelope $filesIn")
+      assert(inQ(iso, many).collect().sameElements(inQ(spark, many).collect()),
+        "InSet prune: parity")
       // a non-ASCII literal contributes nothing: all files kept (sound)
       assert(scanFiles(iso.read.parquet(dir)
         .where(col("c_name") <= "Customer#café")) == 16)
@@ -925,6 +939,11 @@ class ExtensionSpec extends AnyFunSuite with SparkFixture {
           Seq("o_custkey" -> Seq(rare.toString))).toSet
       assert(surviving(appended) == surviving(rebuilt),
         "incrementally-appended blooms prune differently from a rebuild")
+      // stats columns other than the manifest's would land as NULL stats
+      // for the new files: the append refuses them, as plain append does
+      intercept[IllegalArgumentException](StatsManifest.appendWithBlooms(
+        spark, dir, manifest, Seq("o_custkey"), Seq("o_custkey"),
+        expectedItems = 10000L))
     } finally ManifestRegistry.deregister(spark, dir)
   }
 
