@@ -34,13 +34,9 @@ object Verify {
         // a stale dump from a previous run would make the compare silently
         // PASS a query that no longer runs — remove it, recursively (an
         // interrupted write can leave a nested _temporary dir)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          if (!f.delete() && f.exists())
-            System.err.println(s"[verify] could not delete stale $f")
-        }
         val dir = new java.io.File(s"$outDir/$name")
-        if (dir.exists()) rm(dir)
+        if (!org.apache.hadoop.fs.FileUtil.fullyDelete(dir) && dir.exists())
+          System.err.println(s"[verify] could not delete stale $dir")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

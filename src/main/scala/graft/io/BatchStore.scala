@@ -117,7 +117,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     graft.Par.all(frames.toSeq.map { case (cat, df) =>
       () => df.write.mode("overwrite").parquet(s"$dir/$cat") })
     val live = catalogs.map(cat => cat ->
-      StatsManifest.listParquet(s, s"$dir/$cat").map(nameOf).toSet).toMap
+      Readers.parquetFiles(s, s"$dir/$cat").map(_.getPath.getName).toSet).toMap
     // a parquet read sees every column nullable, so the line says so too
     val ddl = frames.map { case (cat, df) =>
       cat -> StructType(df.schema.fields.map(_.copy(nullable = true))).toDDL }
@@ -166,12 +166,11 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     import org.apache.hadoop.fs.Path
     val fs = fsOf(s)
     fs.mkdirs(new Path(s"$dir/$cat"))
-    val names = StatsManifest.listParquet(s, stage).zipWithIndex.map {
-      case (f, i) =>
-        val p = new Path(f)
+    val names = Readers.parquetFiles(s, stage).map(_.getPath).zipWithIndex.map {
+      case (p, i) =>
         val name = s"$prefix-$i-${p.getName}"
         require(fs.rename(p, new Path(s"$dir/$cat", name)),
-          s"rename $f into $dir/$cat failed")
+          s"rename $p into $dir/$cat failed")
         name
     }
     fs.delete(new Path(stage), true)
@@ -329,13 +328,11 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
   }
 
   /** Read `files` of `cat` with the persisted `S` schema when the
-    * snapshot has one — inferring it would cost a footer-reading job.
+    * snapshot has one, else with the schema of one footer.
     */
   private def scan(s: SparkSession, snap: Option[Snapshot], cat: String,
       files: Seq[String]): DataFrame =
-    snap.flatMap(_.schemas.get(cat))
-      .fold(s.read)(ddl => s.read.schema(StructType.fromDDL(ddl)))
-      .parquet(files: _*)
+    Readers.parquet(s, files, snap.flatMap(_.schemas.get(cat)).map(StructType.fromDDL))
 
   /** The files a fresh read of `cat` scans: the current snapshot's live
     * list, plus `batch<tag>-*` files appended after it whose tag's flag
@@ -360,7 +357,7 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
     val catDir = s"$dir/$cat"
     if (!fsOf(s).exists(new org.apache.hadoop.fs.Path(catDir)))
       return Nil
-    val listing = StatsManifest.listParquet(s, catDir)
+    val listing = Readers.parquetFiles(s, catDir).map(_.getPath.toString)
     snapshot match {
       case None => listing
       case Some(snap) =>
@@ -414,14 +411,14 @@ final case class BatchStore(dir: String, catalogs: Seq[String],
               .map(n => s"$dir/$cat/$n")
               .filter(f =>
                 fsOf(s).exists(new org.apache.hadoop.fs.Path(f)))
-            if (refd.nonEmpty) s.read.parquet(refd: _*).limit(0)
+            if (refd.nonEmpty) Readers.parquet(s, refd).limit(0)
             else sys.error(
               // schema unknowable: a raw-dir fallback here could
               // resurrect retired/torn junk as the catalog's "schema"
               s"$dir/$cat: snapshot ${sn.k} predates schema persistence " +
                 "and references no surviving file; re-bootstrap the store")
         }
-      case None => s.read.parquet(s"$dir/$cat") // pre-snapshot/legacy
+      case None => Readers.parquet(s, s"$dir/$cat") // pre-snapshot/legacy
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.StructType
@@ -34,8 +35,37 @@ object Readers {
   def parquet(s: SparkSession, path: String): DataFrame =
     footerSchema(s, path).fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
 
+  /** [[parquet]] over named files. With `schema` the read takes it and
+    * no footer is read; without, the schema comes from the footer of the
+    * first file by path, the pick the directory form makes. An empty
+    * list falls back to `s.read.parquet`, as a directory with no data
+    * file does.
+    */
+  def parquet(s: SparkSession, files: Seq[String],
+      schema: Option[StructType] = None): DataFrame =
+    schema.orElse(files.minOption.flatMap(footerSchema(s, _)))
+      .fold(s.read.parquet(files: _*))(s.read.schema(_).parquet(files: _*))
+
+  /** The parquet files under `dir` (recursive, names ending `.parquet`)
+    * with their lengths, through the path's own `FileSystem` — listing
+    * only, no footer touched. The walk uses plain `listStatus`:
+    * `listFiles` builds a `LocatedFileStatus` per file, whose
+    * constructor loads permissions, one `ls -ld` subprocess per file on
+    * the local file system. Spark's own leaf listing avoids it the same
+    * way. A missing `dir` throws `FileNotFoundException`.
+    */
+  def parquetFiles(s: SparkSession, dir: String): Seq[FileStatus] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def walk(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else if (f.getPath.getName.endsWith(".parquet")) Seq(f)
+      else Nil
+    }
+    walk(root)
+  }
+
   private def footerSchema(s: SparkSession, path: String): Option[StructType] = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
     import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
     import org.apache.parquet.hadoop.{Footer, ParquetFileReader}

@@ -127,23 +127,10 @@ object StatsManifest {
   def build(s: SparkSession, dir: String, cols: Seq[String],
       stringCols: Seq[String] = Nil,
       bandWidth: Int = StringBandWidth): DataFrame =
-    buildForFiles(s, listParquet(s, dir), cols, stringCols, bandWidth)
+    buildForFiles(s, parquetPaths(s, dir), cols, stringCols, bandWidth)
 
-  /** The parquet files under `dir` (recursive), via the path's own
-    * `FileSystem` — listing only, no footers touched.
-    */
-  def listParquet(s: SparkSession, dir: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(root, /* recursive = */ true)
-    val paths = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) paths += f.getPath.toString
-    }
-    paths.result()
-  }
+  private def parquetPaths(s: SparkSession, dir: String): Seq[String] =
+    Readers.parquetFiles(s, dir).map(_.getPath.toString)
 
   private def buildForFiles(s: SparkSession, paths: Seq[String],
       cols: Seq[String], stringCols: Seq[String] = Nil,
@@ -284,7 +271,7 @@ object StatsManifest {
     // both file lists are driver-sized (one path per file — the same
     // order as any planner's file listing), so the set difference is
     // plain driver code; only the kept-rows filter runs as a join
-    val current = listParquet(s, dir)
+    val current = parquetPaths(s, dir)
     val known = existing.select("file").collect().map(_.getString(0)).toSet
     val newFiles = current.filterNot(known)
     val fresh = if (newFiles.isEmpty) existing.limit(0) else freshRows(newFiles)
@@ -332,7 +319,7 @@ object StatsManifest {
       bloomCols: Seq[String], expectedItems: Long = 100000L,
       fpp: Double = 0.03): DataFrame =
     manifest
-      .join(bloomsForFiles(s, listParquet(s, dir), bloomCols, expectedItems,
+      .join(bloomsForFiles(s, parquetPaths(s, dir), bloomCols, expectedItems,
         fpp), Seq("file"), "left_outer")
       .localCheckpoint(eager = true) // same snapshot semantics as build()
 
@@ -367,7 +354,7 @@ object StatsManifest {
       bf.writeTo(bos)
       bos.toByteArray
     }
-    s.read.parquet(files: _*)
+    Readers.parquet(s, files)
       .select(normalizedInputFile().as("file") +:
         bloomCols.map(c => col(c).cast("string").as(c)): _*)
       .groupBy("file")

@@ -206,32 +206,14 @@ object Writers {
     * failed compaction can't destroy the source). Uses coalesce — a
     * partition-merge with NO shuffle — because compaction must not pay
     * a corpus-wide exchange. Returns (filesBefore, filesAfter).
-    *
-    * File walking goes through the Hadoop `FileSystem` API resolved from
-    * the path's own scheme — a 100 TB table lives on HDFS/S3, where a
-    * `java.io.File` walk would silently see nothing; `file:` paths (and
-    * bare local paths) resolve to the local FS and behave identically.
     */
   def compactParquet(s: org.apache.spark.sql.SparkSession, src: String,
       dst: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val conf = s.sparkContext.hadoopConfiguration
-    def parquetFiles(dir: String): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(conf)
-      val it = fs.listFiles(p, /* recursive = */ true)
-      val buf = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) buf += f
-      }
-      buf.result()
-    }
-    val before = parquetFiles(src)
+    val before = Readers.parquetFiles(s, src)
     val totalBytes = before.map(_.getLen).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    s.read.parquet(src).coalesce(n).write.mode(SaveMode.Overwrite).parquet(dst)
-    (before.size, parquetFiles(dst).size)
+    Readers.parquet(s, src).coalesce(n).write.mode(SaveMode.Overwrite).parquet(dst)
+    (before.size, Readers.parquetFiles(s, dst).size)
   }
 
   /** JDBC append with the reference's batch/timeout profile

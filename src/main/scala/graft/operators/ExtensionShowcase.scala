@@ -157,7 +157,7 @@ object ExtensionShowcase {
     * oracle tier.
     */
   def qX05(s: SparkSession, d: String): DataFrame = {
-    import graft.io.{StatsManifest, Writers}
+    import graft.io.{Readers, StatsManifest, Writers}
     import graft.plans.ManifestRegistry
     val dir = Multimodal.stageFixtureOnce("x05li", d) { out =>
       Writers.rangeClustered(
@@ -170,7 +170,7 @@ object ExtensionShowcase {
       StatsManifest.build(iso, dir, Seq("l_orderkey")))
     iso.conf.set("spark.graft.manifest.prune", "true")
     iso.conf.set("spark.graft.manifest.metacount", "true")
-    val t = iso.read.parquet(dir)
+    val t = Readers.parquet(iso, dir)
     // footer-stats MIN/MAX (zero files read) seed the band bounds —
     // integer-division arithmetic the oracle reproduces exactly
     val mm = t.agg(min("l_orderkey"), max("l_orderkey")).head()

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.VectorCentroid
+import graft.io.Readers
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -313,7 +314,7 @@ object Ivf {
     */
   private[graft] def incrementalMaxDrift(s: SparkSession, dir: String,
       v: Long): Double = {
-    val stats = s.read.parquet(s"$dir/v$v/cellstats")
+    val stats = Readers.parquet(s, s"$dir/v$v/cellstats")
       .select(col("cell").cast("string").as("cell"), col("n"), col("mean"))
     val current = stats
       .select(col("cell"), col("n"), posexplode(col("mean")).as(Seq("pos", "x")))
@@ -327,7 +328,7 @@ object Ivf {
         array_sort(collect_list(struct(col("pos"),
           (col("wx") / col("wn")).cast("float").as("x")))),
         e => e("x")).as("current"))
-    val frozen = s.read.parquet(s"$dir/v$v/centroids")
+    val frozen = Readers.parquet(s, s"$dir/v$v/centroids")
     broadcast(frozen).join(current, Seq("cell"), "left_outer")
       .select(when(col("current").isNull, lit(null).cast("double"))
         .otherwise(lit(1.0)
@@ -531,7 +532,7 @@ object Ivf {
 
   /** The serving centroid set / index of the CURRENT version. */
   def servingCentroids(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/v${readVersion(s, dir)}/centroids")
+    Readers.parquet(s, s"$dir/v${readVersion(s, dir)}/centroids")
   def servingIndex(s: SparkSession, dir: String): DataFrame =
     servingView(s, dir, readVersion(s, dir))
 
@@ -586,7 +587,7 @@ object Ivf {
     val p = new org.apache.hadoop.fs.Path(s"$dir/v$v/pqcodebook")
     if (!fsOf(s, dir).exists(p)) None
     else {
-      val rows = s.read.parquet(p.toString)
+      val rows = Readers.parquet(s, p.toString)
         .select(col("sub").cast("int"), col("code").cast("int"),
           col("centroid"))
         .collect()
@@ -647,7 +648,7 @@ object Ivf {
     val cb = Pq.trainCodebook(s, view.select(col("vec_id"), col("embedding")),
       m, ksub, iters)
     writeCodebook(s, cb, s"$dir/v${v + 1}/pqcodebook")
-    s.read.parquet(s"$dir/v$v/centroids")
+    Readers.parquet(s, s"$dir/v$v/centroids")
       .write.mode("overwrite").parquet(s"$dir/v${v + 1}/centroids")
     writeIndex(
       view.repartition(col("cell"), pmod(hash(col("vec_id")), lit(filesPerCell))),
@@ -734,7 +735,7 @@ object Ivf {
     */
   private def probedLiveAt(s: SparkSession, dir: String, v: Long,
       qEmb: Array[Float], nprobe: Int): DataFrame = {
-    val cents = s.read.parquet(s"$dir/v$v/centroids").collect()
+    val cents = Readers.parquet(s, s"$dir/v$v/centroids").collect()
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
@@ -938,7 +939,7 @@ object Ivf {
       else if (!fs.exists(new org.apache.hadoop.fs.Path(tombPath))) None
       else {
         val prior =
-          try Some(s.read.parquet(tombPath))
+          try Some(Readers.parquet(s, tombPath))
           catch {
             case e: org.apache.spark.sql.AnalysisException
                 if Option(e.getCondition).contains("UNABLE_TO_INFER_SCHEMA") =>
@@ -988,7 +989,7 @@ object Ivf {
         val collapsed = s"$dir/v$n/index/ingest_batch=$BootstrapBatch"
         val legacyCollapsed =
           fs.exists(new org.apache.hadoop.fs.Path(collapsed)) &&
-            (try !s.read.parquet(collapsed).columns.contains("orig_batch")
+            (try !Readers.parquet(s, collapsed).columns.contains("orig_batch")
             catch {
               case e: org.apache.spark.sql.AnalysisException
                   if Option(e.getCondition)
@@ -1068,7 +1069,7 @@ object Ivf {
     */
   private[graft] def finishRewrite(s: SparkSession, dir: String, v: Long,
       ticket: RewriteTicket): Unit = {
-    val centroids = s.read.parquet(s"$dir/v${v + 1}/centroids")
+    val centroids = Readers.parquet(s, s"$dir/v${v + 1}/centroids")
     val cb = codebookOf(s, dir, v + 1)
     (ingestBatchesOf(s, dir, v) -- ticket.ingestBatches)
       .filter(_ > ticket.wm).toSeq.sorted.foreach { b =>
@@ -1127,7 +1128,7 @@ object Ivf {
     // the corpus write so racing appenders encode against it
     val cb = codebookOf(s, dir, v)
     cb.foreach(writeCodebook(s, _, s"$dir/v${v + 1}/pqcodebook"))
-    s.read.parquet(s"$dir/v$v/centroids")
+    Readers.parquet(s, s"$dir/v$v/centroids")
       .write.mode("overwrite").parquet(s"$dir/v${v + 1}/centroids")
     writeIndex(
       view.repartition(col("cell"), pmod(hash(col("vec_id")), lit(filesPerCell))),
@@ -1171,19 +1172,10 @@ object Ivf {
       if (vDirs == null) Seq.empty[Long]
       else vDirs.filter(_.isDirectory)
         .map(_.getPath.getName.stripPrefix("v").toLong).toSeq.sorted
-    def fileCount(path: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      if (!fs.exists(p)) 0L
-      else {
-        var n = 0L
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val f = it.next().getPath.getName
-          if (!f.startsWith("_") && !f.startsWith(".")) n += 1
-        }
-        n
-      }
-    }
+    def fileCount(path: String): Long =
+      if (!fs.exists(new org.apache.hadoop.fs.Path(path))) 0L
+      else Readers.parquetFiles(s, path).map(_.getPath.getName)
+        .count(f => !f.startsWith("_") && !f.startsWith(".")).toLong
     versions.map { v =>
       (v, ready.contains(v), staging.contains(v), watermarkOf(s, dir, v),
         ingestBatchesOf(s, dir, v).size.toLong,
@@ -1295,7 +1287,7 @@ object Ivf {
     val fs = fsOf(s, dir)
     if (fs.exists(batchFlag)) // completed round replayed: no-op
       return IvfMaintenance(v, 0.0, retrained = false)
-    val frozen = s.read.parquet(s"$dir/v$v/centroids")
+    val frozen = Readers.parquet(s, s"$dir/v$v/centroids")
     // SELF-HEAL before the append: a store from before the cellstats
     // sidecar existed gets its stats seeded from the current index — one
     // corpus scan, once, never again. The health probe is the BOOTSTRAP
@@ -1355,7 +1347,7 @@ object Ivf {
         // if the rewrite's carry listing already ran, the published
         // version drops the batch forever while every replay no-ops.
         val staged =
-          try Some((s.read.parquet(s"$dir/v$n/centroids"),
+          try Some((Readers.parquet(s, s"$dir/v$n/centroids"),
             codebookOf(s, dir, n)))
           catch {
             case _: org.apache.spark.sql.AnalysisException => None

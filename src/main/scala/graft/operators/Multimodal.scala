@@ -976,8 +976,7 @@ object Multimodal {
   def videoNearDupPairs(spark: SparkSession, media: DataFrame,
       minJaccard: Double = 0.8, maxVideosPerFrame: Int = 0,
       ordered: Boolean = true): DataFrame =
-    // localCheckpoint (the qL19 pattern): the postings feed both self-join
-    // sides AND the per-video size aggregate — pinning the (doc_id, frame,
+    // localCheckpoint (the qL19 pattern): pinning the (doc_id, frame,
     // dhash) longs runs the demux + per-frame PNG decode ONCE instead of
     // once per consumer exchange
     videoJaccardPairs(videoFrameDHash(spark, media).localCheckpoint(),
@@ -990,23 +989,7 @@ object Multimodal {
   private[operators] def videoJaccardPairs(postings: DataFrame,
       minJaccard: Double, maxVideosPerFrame: Int,
       ordered: Boolean = true): DataFrame = {
-    val raw = postings.select("doc_id", "dhash").distinct()
-    // BOILERPLATE-FRAME cap (the sourceOverlap(maxSourcesPerShingle)
-    // discipline, applied to the video family): a frame hash shared by
-    // thousands of videos — black frames, channel intros, logo cards at
-    // a real crawl — turns the hash self-join's per-key fan-out
-    // quadratic. With a cap K, such hashes are excluded from BOTH the
-    // intersection and the per-video sizes (Jaccard stays a true ratio
-    // over the surviving frame universe) via one keys-only pre-count,
-    // bounding fan-out at K² per hash at any corpus size. 0 = uncapped
-    // (the spec-pinned exact semantics).
-    val posts =
-      if (maxVideosPerFrame <= 0) raw
-      else raw.join(
-        raw.groupBy("dhash").agg(count(lit(1)).as("n_vids"))
-          .where(col("n_vids") <= maxVideosPerFrame)
-          .select("dhash"),
-        Seq("dhash"))
+    import org.apache.spark.sql.expressions.Window
     // PROBE-SIDE LOCALITY + EXPLOSION PARALLELISM: hash the postings by
     // doc_id so that every posting of a video sits in ONE task. The
     // hash self-join streams the probe side in this partitioning, so
@@ -1021,19 +1004,35 @@ object Multimodal {
     // the saturated hash buckets, and AQE — sizing from the PRE-join
     // bytes — would coalesce the exchange to one partition and run the
     // entire quadratic bucket scan single-threaded (measured 5.4 s in
-    // 1 task vs 0.4 s across 32 at sf0.1).
-    val local = posts.repartition(
-      posts.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-    val sizes = local.groupBy("doc_id").agg(count(lit(1)).as("n_fr"))
-    // Sizes ride WITH the postings through the hash self-join (one
-    // posting-sized join against the per-video counts) instead of being
-    // re-attached to the PAIR set afterwards: under frame-hash
+    // 1 task vs 0.4 s across 32 at sf0.1). The doc_id partitioning also
+    // satisfies the distinct, so the postings cross one exchange.
+    val parts = postings.sparkSession.sparkContext.defaultParallelism
+    val raw = postings.select("doc_id", "dhash")
+      .repartition(parts, col("doc_id")).distinct()
+    // BOILERPLATE-FRAME cap (the sourceOverlap(maxSourcesPerShingle)
+    // discipline, applied to the video family): a frame hash shared by
+    // thousands of videos — black frames, channel intros, logo cards at
+    // a real crawl — turns the hash self-join's per-key fan-out
+    // quadratic. With a cap K, such hashes are excluded from BOTH the
+    // intersection and the per-video sizes (Jaccard stays a true ratio
+    // over the surviving frame universe) via one keys-only pre-count,
+    // bounding fan-out at K² per hash at any corpus size. 0 = uncapped
+    // (the spec-pinned exact semantics).
+    val local =
+      if (maxVideosPerFrame <= 0) raw
+      else raw.join(
+        raw.groupBy("dhash").agg(count(lit(1)).as("n_vids"))
+          .where(col("n_vids") <= maxVideosPerFrame)
+          .select("dhash"),
+        Seq("dhash")).repartition(parts, col("doc_id"))
+    // Sizes ride WITH the postings through the hash self-join instead of
+    // being re-attached to the PAIR set afterwards: under frame-hash
     // saturation the candidate pair set is far larger than the postings,
-    // so the two former pair-sized size-joins (2 exchanges of the pair
-    // aggregate) collapse into one postings-sized join, and the group
-    // key (doc_a, doc_b, n_a, n_b) adds no rows — sizes are functionally
-    // determined by the ids.
-    val withN = local.join(sizes, Seq("doc_id"))
+    // and the group key (doc_a, doc_b, n_a, n_b) adds no rows — sizes
+    // are functionally determined by the ids. A window count over the
+    // doc_id partitioning adds no exchange and no second postings scan.
+    val withN = local.withColumn("n_fr",
+      count(lit(1)).over(Window.partitionBy("doc_id")))
     // LENGTH-BOUND candidate filter (the set-similarity-join size filter):
     // J(A,B) ≥ t forces |A∩B| ≥ t·|A∪B| with |A∩B| ≤ min(n_a,n_b) and
     // |A∪B| ≥ max(n_a,n_b), so a pair can only survive the final Jaccard
@@ -1362,14 +1361,8 @@ object Multimodal {
     * under java.io.tmpdir.
     */
   private[graft] def deleteOnExit(path: String): String = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(path)): Unit))
     path
   }
 

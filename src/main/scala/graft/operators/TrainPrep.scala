@@ -345,7 +345,7 @@ object TrainPrep {
       .withColumn("shard", expr(s"bin div $binsPerShard"))
     bins.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("source", "shard").parquet(outDir)
-    val out = s.read.parquet(outDir)
+    val out = graft.io.Readers.parquet(s, outDir)
     (out.count(), out.select("source", "shard").distinct().count())
   }
 
@@ -537,12 +537,12 @@ object TrainPrep {
     * the exact Jaccard confirms ≥ `threshold`: the verify rejoins the
     * candidates' two shingle sets by id and intersects them in place
     * ([[LLMOps.setJaccard]]). No posting is exploded and nothing
-    * aggregates.
+    * aggregates; a match-sized window keeps one row per (doc_id,
+    * bench_id), so a doc_id that `docs` repeats matches once.
     *
-    * `docs` needs (doc_id, text), one row per doc_id; `bench` needs
-    * (bench_id, text). Returns (doc_id, bench_id, jaccard) for confirmed
-    * matches — the drop list a pipeline anti-joins against before
-    * training.
+    * `docs` needs (doc_id, text); `bench` needs (bench_id, text).
+    * Returns (doc_id, bench_id, jaccard) for confirmed matches — the
+    * drop list a pipeline anti-joins against before training.
     */
   def fuzzyDecontam(docs: DataFrame, bench: DataFrame,
       threshold: Double = 0.5): DataFrame =
@@ -570,9 +570,17 @@ object TrainPrep {
     val cand = Banded.crossPairs(LLMOps.minhashBandKeys(cs),
         LLMOps.minhashBandKeys(bs), "doc_id", "band_keys")
       .select(col("id_a").as("doc_id"), col("id_b").as("bench_id"))
+    // one row per pair, the best one: a doc_id that `docs` repeats
+    // repeats its band and verify rows. One range exchange serves the
+    // pair window (a range on its keys clusters them) and the total
+    // order (the partitions come out in key order, so sorting within
+    // each sorts the whole)
+    val best = Window.partitionBy("doc_id", "bench_id").orderBy(col("jaccard").desc)
     LLMOps.setJaccard(cand, cs, bs)
       .filter(col("jaccard") >= threshold)
-      .orderBy("doc_id", "bench_id")
+      .repartitionByRange(col("doc_id"), col("bench_id"))
+      .withColumn("rn", row_number().over(best)).where(col("rn") === 1).drop("rn")
+      .sortWithinPartitions("doc_id", "bench_id")
   }
 
   /** Q-L50 — fuzzy decontamination against a constructed benchmark: every

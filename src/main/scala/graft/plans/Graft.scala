@@ -120,7 +120,7 @@ object Graft {
   def registerManifest(spark: SparkSession, tableDir: String,
       manifestDir: String): DataFrame = {
     ensureRegistered(spark)
-    val m = spark.read.parquet(manifestDir).localCheckpoint(eager = true)
+    val m = graft.io.Readers.parquet(spark, manifestDir).localCheckpoint(eager = true)
     ManifestRegistry.register(spark, tableDir, m)
     m
   }

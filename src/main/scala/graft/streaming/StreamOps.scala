@@ -294,7 +294,7 @@ object StreamOps extends Serializable {
     val mPath = new org.apache.hadoop.fs.Path(manifestDir)
     val fs = mPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     val updated =
-      if (fs.exists(mPath) && StatsManifest.listParquet(s, manifestDir).nonEmpty)
+      if (fs.exists(mPath) && Readers.parquetFiles(s, manifestDir).nonEmpty)
         StatsManifest.append(s, tableDir, Readers.parquet(s, manifestDir), statCols)
       else StatsManifest.build(s, tableDir, statCols)
     updated.write.mode("overwrite").parquet(manifestDir)

@@ -1092,9 +1092,8 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     // GRACE + REAP: the second vacuum reaped the first's retired files;
     // an eager reap then converges the raw listing on the live set
     ChunkStore.reapRetired(spark, dir)
-    val rawFiles = graft.io.StatsManifest
-      .listParquet(spark, s"$dir/chunks").length +
-      graft.io.StatsManifest.listParquet(spark, s"$dir/manifest").length
+    val rawFiles = graft.io.Readers.parquetFiles(spark, s"$dir/chunks").length +
+      graft.io.Readers.parquetFiles(spark, s"$dir/manifest").length
     assert(rawFiles == ChunkStore.dataFileCount(spark, dir),
       "reap must converge the raw listing on the live set")
     // batch appends are exactly-once under the store's flag discipline:
@@ -1855,6 +1854,40 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
       assert(spark.read.parquet(tgt).orderBy("id").as[(Long, String, Long)]
         .collect().toSeq == Seq((1L, "a", 10L), (2L, "B2", 20L), (3L, "c", 20L)))
     } finally conf.unset(s"fs.${AltSchemeFileSystem.Scheme}.impl")
+  }
+
+  test("manifest build, compaction, the fingerprint store and the ivf " +
+      "readout list files without building a LocatedFileStatus") {
+    import graft.io.StatsManifest
+    import graft.operators.{FingerprintStore, Ivf}
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val scheme = NoLocatedStatusFileSystem.Scheme
+    conf.set(s"fs.$scheme.impl", classOf[NoLocatedStatusFileSystem].getName)
+    try {
+      val local = Files.createTempDirectory("graft-noloc").toString
+      val root = s"$scheme://$local"
+      def parquetCount(sub: String): Int = Files.walk(java.nio.file.Paths
+        .get(local, sub)).iterator().asScala.count(_.toString.endsWith(".parquet"))
+      Writers.rangeClustered(Tables.orders(spark, sfDir)
+        .select("o_orderkey", "o_custkey"), s"$root/t", Seq("o_orderkey"),
+        numFiles = 4)
+      assert(StatsManifest.build(spark, s"$root/t", Seq("o_orderkey")).count()
+        == parquetCount("t"))
+      assert(Writers.compactParquet(spark, s"$root/t", s"$root/t1")
+        == (parquetCount("t"), 1))
+      val media = Multimodal.withMedia(Tables.documents(spark, sfDir))
+        .localCheckpoint()
+      FingerprintStore.bootstrap(spark, media.filter(col("doc_id") % 4 =!= 0),
+        s"$root/store")
+      FingerprintStore.append(spark, media, s"$root/store")
+      assert(FingerprintStore.ledger(spark, s"$root/store")
+        .select("doc_id").distinct().count() == media.count())
+      Ivf.bootstrapStore(spark, Tables.embeddings(spark, sfDir)
+        .select("vec_id", "label", "embedding"), s"$root/ivf")
+      assert(Ivf.describeStore(spark, s"$root/ivf").collect().map(_.getLong(6))
+        .toSeq == Seq(parquetCount("ivf/v0/index").toLong))
+    } finally conf.unset(s"fs.$scheme.impl")
   }
 
   test("bloom semi-filter: no false negatives, fp rate near design point") {
@@ -2891,7 +2924,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     // what isolated the pre-planned reader); an eager reap deletes them
     // and the raw listing converges on the live set
     def rawCount() =
-      graft.io.StatsManifest.listParquet(spark, s"$dir/digests").length
+      graft.io.Readers.parquetFiles(spark, s"$dir/digests").length
     assert(rawCount() > filesAfter,
       "displaced originals must be retained through the grace window")
     assert(FingerprintStore.reapRetired(spark, dir) > 0)
@@ -2935,7 +2968,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val dir = java.nio.file.Files.createTempDirectory("graft-fps-vac").toString
     FingerprintStore.bootstrap(spark, half, dir)
     val bootFiles =
-      graft.io.StatsManifest.listParquet(spark, s"$dir/digests").toSet
+      graft.io.Readers.parquetFiles(spark, s"$dir/digests").map(_.getPath).toSet
     FingerprintStore.append(spark, rest, dir)
 
     // forget every odd id (the appended batch): the bootstrap-era files
@@ -2962,7 +2995,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     }
     // clean (bootstrap-era) files never moved, never rewritten
     val after =
-      graft.io.StatsManifest.listParquet(spark, s"$dir/digests").toSet
+      graft.io.Readers.parquetFiles(spark, s"$dir/digests").map(_.getPath).toSet
     assert(bootFiles.subsetOf(after),
       "vacuum must not touch files holding only live rows")
     assert(stats.untouchedFiles >= bootFiles.size, stats.toString)
@@ -3642,6 +3675,20 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val strict = TrainPrep.fuzzyDecontam(docs, bench, threshold = j(2L) + 0.01)
       .collect().map(_.getLong(0)).toSeq
     assert(strict == Seq(1L))
+  }
+
+  test("fuzzy decontamination reports a doc_id that docs repeats as one " +
+      "match") {
+    import graft.operators.TrainPrep
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val bench = docs.filter(col("doc_id") === 13L)
+      .select(col("doc_id").as("bench_id"),
+        concat(col("text"), lit(" held out eval sample")).as("text"))
+    val once = TrainPrep.fuzzyDecontam(docs, bench).collect().toSeq
+    val repeated = TrainPrep.fuzzyDecontam(
+      docs.union(docs.filter(col("doc_id") === 13L)), bench).collect().toSeq
+    assert(once.map(_.getLong(0)).contains(13L), once.mkString(","))
+    assert(repeated == once, s"repeated doc: ${repeated.mkString(",")}")
   }
 
   test("rrf fusion: exact integer scores, union of lists, rank-monotone") {
@@ -5201,4 +5248,23 @@ class AltSchemeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object AltSchemeFileSystem {
   val Scheme = "graftalt"
+}
+
+/** The local file system under its own scheme with `listLocatedStatus`
+  * refused: `FileSystem.listFiles` goes through it and builds a
+  * `LocatedFileStatus` per file, whose constructor loads permissions
+  * (one `ls -ld` subprocess per file on the local file system).
+  */
+class NoLocatedStatusFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${NoLocatedStatusFileSystem.Scheme}:///")
+  override def getScheme: String = NoLocatedStatusFileSystem.Scheme
+  override protected def listLocatedStatus(f: org.apache.hadoop.fs.Path,
+      filter: org.apache.hadoop.fs.PathFilter)
+      : org.apache.hadoop.fs.RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] =
+    throw new UnsupportedOperationException(s"listLocatedStatus($f)")
+}
+
+object NoLocatedStatusFileSystem {
+  val Scheme = "graftnoloc"
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** `Readers.parquet` takes its schema from one footer on the driver; it
   * must read exactly what `spark.read.parquet` reads (schema, including
@@ -63,5 +64,56 @@ class ReadersSpec extends AnyFunSuite with SparkFixture {
     val (ours, theirs) = (failure(Readers.parquet(spark, dir)),
       failure(spark.read.parquet(dir)))
     assert(ours.getCondition == theirs.getCondition, ours.getMessage)
+  }
+
+  test("the file-list form reads what Spark reads, and takes a given schema " +
+      "without reading a footer") {
+    val dir = Files.createTempDirectory("graft-readers-files").toString + "/t"
+    Tables.orders(spark, sfDir).repartition(3).write.parquet(dir)
+    val files = Readers.parquetFiles(spark, dir).map(_.getPath.toString)
+    assert(files.size == 3, files)
+    assertParity(Readers.parquet(spark, files), spark.read.parquet(files: _*), "files")
+    val narrow = org.apache.spark.sql.types.StructType(
+      Seq(spark.read.parquet(dir).schema("o_orderkey")))
+    assert(Readers.parquet(spark, files, Some(narrow)).schema == narrow)
+  }
+
+  test("parquetFiles lists what a listFiles walk lists, in its order, with " +
+      "the lengths") {
+    val dir = Files.createTempDirectory("graft-readers-list").toString + "/t"
+    Tables.nation(spark, sfDir).write.partitionBy("n_regionkey").parquet(dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(root, true)
+    val walked = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(f => (f.getPath.toString, f.getLen)).toSeq
+    assert(walked.nonEmpty)
+    assert(Readers.parquetFiles(spark, dir).map(f => (f.getPath.toString, f.getLen))
+      == walked)
+  }
+
+  test("src/main lists and reads parquet only through Readers") {
+    // one way to list and read parquet: a raw directory read runs a
+    // schema-inference job, and a listFiles walk builds a
+    // LocatedFileStatus per file (one permission subprocess each on the
+    // local file system). Ivf's union-schema reads spell
+    // option("mergeSchema", "true") and stay outside on purpose, as do
+    // the tools.
+    val banned = Seq("""listFiles\(""", """listLocatedStatus\(""",
+      """\.read\s*\.\s*(parquet|schema)\(""").map(_.r)
+    val root = Paths.get("src/main/scala")
+    val readers = Paths.get("graft", "io", "Readers.scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith(readers)))
+    val offenders = for {
+      f <- files
+      rel = root.relativize(f)
+      if rel != readers && !rel.startsWith(Paths.get("graft", "tools"))
+      text = Files.readString(f)
+      b <- banned if b.findFirstIn(text).nonEmpty
+    } yield s"$rel: $b"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -51,6 +51,8 @@ class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture {
         media.filter(col("doc_id") % 4 =!= 0), s"$dir/store")),
       ("append", 8, () => FingerprintStore.append(spark, media, s"$dir/store")),
       ("compact", 2, () => FingerprintStore.compact(spark, s"$dir/store")),
+      ("videoNearDupPairs", 3, () => FingerprintStore.videoNearDupPairs(spark,
+        s"$dir/store", ordered = false).collect()),
       ("connectedComponents", 4, () =>
         TrainPrep.connectedComponents(spark.read.parquet(s"$dir/pairs"))
           .write.parquet(s"$dir/cc"))
@@ -136,6 +138,28 @@ class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture {
       val jobs = jobsOf(run())
       assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
     }
+  }
+
+  test("registerManifest and the ivf serving centroids stay within their " +
+      "job ceilings") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    Writers.rangeClustered(Tables.orders(spark, sfDir).select("o_orderkey"),
+      s"$dir/t", Seq("o_orderkey"), numFiles = 4)
+    StatsManifest.build(spark, s"$dir/t", Seq("o_orderkey"))
+      .write.parquet(s"$dir/manifest")
+    Ivf.bootstrapStore(spark, Tables.embeddings(spark, sfDir)
+      .select("vec_id", "label", "embedding"), s"$dir/ivf")
+    // the manifest's schema comes from one footer, so its eager
+    // checkpoint is the one job; the centroid frame runs none until an
+    // action does
+    try Seq[(String, Int, () => Unit)](
+      ("registerManifest", 1, () =>
+        graft.plans.Graft.registerManifest(spark, s"$dir/t", s"$dir/manifest")),
+      ("servingCentroids", 0, () => Ivf.servingCentroids(spark, s"$dir/ivf"))
+    ).foreach { case (op, ceiling, run) =>
+      val jobs = jobsOf(run())
+      assert(jobs <= ceiling, s"$op ran $jobs jobs, ceiling $ceiling")
+    } finally ManifestRegistry.deregister(spark, s"$dir/t")
   }
 
   test("the manifest rules plan a banded filter and a banded COUNT(*) " +
